@@ -303,7 +303,7 @@ def main() -> None:
         (
             q
             for q, r in ratios.items()
-            if r * host_factor < 1 / 1.3 and baseline[q] - timings[q] >= 0.3
+            if r / host_factor < 1 / 1.3 and baseline[q] - timings[q] >= 0.3
         ),
         key=lambda q: ratios[q],
     )

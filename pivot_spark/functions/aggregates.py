@@ -12,14 +12,18 @@ the form ``AGG(CASE WHEN cond THEN field END)`` — semantically identical to
 DuckDB/ANSI ``AGG(field) FILTER (WHERE cond)``, which is what the oracle SQL
 uses. Rows whose pivot value is not in the declared list simply match no
 cell, reproducing the reference's "undeclared value → excluded from all
-aggregates" rule (``Pivot.java:337-344``).
+aggregates" rule (``Pivot.java:337-344``). The routed pivot plan groups
+rows by their cell first and calls each builder once, with an always-true
+condition.
 
 Empty-cell identities: the reference pre-initializes every cell of the
 cartesian product, so functions with a non-null initial value yield it for
 empty cells (COUNT→0, LOGICALAND→true, CONCAT→"", SUMOFSQUARES→0.0, ...),
 where a naive Spark pivot yields NULL (SURVEY.md §2.2, "Empty cell"
 column). We restore those identities with ``coalesce`` inside the aggregate
-expression itself — still pure Catalyst.
+expression itself — still pure Catalyst — and record each as
+``AggregateBuilder.empty`` for the routed plan, whose empty cells never
+reach an aggregate.
 
 Semantics notes (file:line cites into the reference):
 * COUNTDISTINCT counts null as a distinct value (``CountDistinct.java:45-47``)
@@ -54,7 +58,7 @@ Semantics notes (file:line cites into the reference):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -118,9 +122,18 @@ class AggregateBuilder:
     output_type: Callable[[Optional[T.DataType]], T.DataType]
     requires_numeric: bool = False
     requires_field: bool = True
-    # True if empty cells produce a non-null identity (so default_value
-    # fill never applies to them — it only fills nulls, Pivot.java:229-235).
-    non_null_identity: bool = False
+    # What an empty cell yields: the reference's initial value (0, True,
+    # "", [] — cast to ``output_type``), or None when it yields NULL, which
+    # ``default_value`` then fills (Pivot.java:229-235).
+    empty: Any = None
+    # Pivot plans rows to their cell before aggregating when any aggregate
+    # of a config is routed (operators/pivot.py has the measurements): for
+    # these functions one aggregate per group beats one per cell.
+    routed: bool = False
+
+    @property
+    def non_null_identity(self) -> bool:
+        return self.empty is not None
 
 
 def _b_count(cond, col, order, t):
@@ -348,12 +361,12 @@ def _t_array(t):
 
 
 AGGREGATES: dict[str, AggregateBuilder] = {
-    "COUNT": AggregateBuilder("COUNT", _b_count, _t_long, non_null_identity=True),
+    "COUNT": AggregateBuilder("COUNT", _b_count, _t_long, empty=0),
     "COUNTALL": AggregateBuilder(
-        "COUNTALL", _b_countall, _t_long, requires_field=False, non_null_identity=True
+        "COUNTALL", _b_countall, _t_long, requires_field=False, empty=0
     ),
     "COUNTDISTINCT": AggregateBuilder(
-        "COUNTDISTINCT", _b_countdistinct, _t_int, non_null_identity=True
+        "COUNTDISTINCT", _b_countdistinct, _t_int, empty=0, routed=True
     ),
     "SUM": AggregateBuilder("SUM", _b_sum, _t_same, requires_numeric=True),
     "AVG": AggregateBuilder("AVG", _b_avg, _t_double, requires_numeric=True),
@@ -363,32 +376,21 @@ AGGREGATES: dict[str, AggregateBuilder] = {
     "LAST": AggregateBuilder("LAST", _b_last, _t_same),
     "STDDEV": AggregateBuilder("STDDEV", _b_stddev, _t_double, requires_numeric=True),
     "VARIANCE": AggregateBuilder("VARIANCE", _b_variance, _t_double, requires_numeric=True),
-    "COLLECTLIST": AggregateBuilder(
-        "COLLECTLIST", _b_collectlist, _t_array, non_null_identity=True
-    ),
-    "COLLECTSET": AggregateBuilder(
-        "COLLECTSET", _b_collectset, _t_array, non_null_identity=True
-    ),
+    "COLLECTLIST": AggregateBuilder("COLLECTLIST", _b_collectlist, _t_array, empty=[]),
+    "COLLECTSET": AggregateBuilder("COLLECTSET", _b_collectset, _t_array, empty=[]),
     "LONGESTSTRING": AggregateBuilder(
-        "LONGESTSTRING", _b_longeststring, _t_string, non_null_identity=True
+        "LONGESTSTRING", _b_longeststring, _t_string, empty=""
     ),
     "SHORTESTSTRING": AggregateBuilder("SHORTESTSTRING", _b_shorteststring, _t_string),
-    "COUNTNULLS": AggregateBuilder(
-        "COUNTNULLS", _b_countnulls, _t_long, non_null_identity=True
-    ),
-    "CONCAT": AggregateBuilder("CONCAT", _b_concat, _t_string, non_null_identity=True),
+    "COUNTNULLS": AggregateBuilder("COUNTNULLS", _b_countnulls, _t_long, empty=0),
+    "CONCAT": AggregateBuilder("CONCAT", _b_concat, _t_string, empty=""),
     "CONCATDISTINCT": AggregateBuilder(
-        "CONCATDISTINCT", _b_concatdistinct, _t_string, non_null_identity=True
+        "CONCATDISTINCT", _b_concatdistinct, _t_string, empty=""
     ),
-    "LOGICALAND": AggregateBuilder(
-        "LOGICALAND", _b_logicaland, _t_bool, non_null_identity=True
-    ),
-    "LOGICALOR": AggregateBuilder(
-        "LOGICALOR", _b_logicalor, _t_bool, non_null_identity=True
-    ),
+    "LOGICALAND": AggregateBuilder("LOGICALAND", _b_logicaland, _t_bool, empty=True),
+    "LOGICALOR": AggregateBuilder("LOGICALOR", _b_logicalor, _t_bool, empty=False),
     "SUMOFSQUARES": AggregateBuilder(
-        "SUMOFSQUARES", _b_sumofsquares, _t_double, requires_numeric=True,
-        non_null_identity=True,
+        "SUMOFSQUARES", _b_sumofsquares, _t_double, requires_numeric=True, empty=0.0
     ),
     "CORRECTEDSUMOFSQUARES": AggregateBuilder(
         "CORRECTEDSUMOFSQUARES", _b_correctedsumofsquares, _t_double,
@@ -401,14 +403,13 @@ AGGREGATES: dict[str, AggregateBuilder] = {
         "APPROXMEDIAN", _b_approxmedian, _t_double, requires_numeric=True
     ),
     "APPROXCOUNTDISTINCT": AggregateBuilder(
-        "APPROXCOUNTDISTINCT", _b_approxcountdistinct, _t_long,
-        non_null_identity=True,
+        "APPROXCOUNTDISTINCT", _b_approxcountdistinct, _t_long, empty=0
     ),
     "SKEWNESS": AggregateBuilder(
-        "SKEWNESS", _b_skewness, _t_double, requires_numeric=True
+        "SKEWNESS", _b_skewness, _t_double, requires_numeric=True, routed=True
     ),
     "KURTOSIS": AggregateBuilder(
-        "KURTOSIS", _b_kurtosis, _t_double, requires_numeric=True
+        "KURTOSIS", _b_kurtosis, _t_double, requires_numeric=True, routed=True
     ),
 }
 

@@ -32,18 +32,33 @@ def test_pivot_single_exchange_and_pruned_scan(spark, tmp_path, sales_df):
     assert "Brand" not in read and "ShopID" not in read
 
 
-def test_error_port_anti_join_broadcasts(spark, sales_df):
+def test_error_port_folds_into_the_one_scan(spark, tmp_path, sales_df):
+    """send-to-error-port adds a per-group flag to the pivot's own
+    aggregation: one scan of the input, no join, one hash exchange."""
+    path = str(tmp_path / "sales_pq_err")
+    sales_df.write.parquet(path)
     cfg = PivotConfig(
         pivot_columns="Quarter=Q1,Q2",
         pivot_rows="Product",
         aggregates="s:sum(Sales)",
         on_error=OnError.ERROR_PORT,
     )
-    res = pivot(sales_df, cfg)
-    plan = plan_of(res.output)
-    # bad-group-key side is tiny: must be a broadcast join, never SMJ
-    assert "Broadcast" in plan
-    assert "SortMergeJoin" not in plan
+    plan = plan_of(pivot(spark.read.parquet(path), cfg).output)
+    assert plan.count("FileScan") == 1
+    assert "Join" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_countdistinct_pivot_has_no_expand(spark, sales_df):
+    """COUNTDISTINCT routes rows to their cell before aggregating: one
+    distinct aggregate per group, so no multi-distinct Expand that copies
+    every row once per cell."""
+    cfg = PivotConfig(
+        pivot_columns="Quarter=Q1,Q2,Q3",
+        pivot_rows="Product",
+        aggregates="cd:countdistinct(Brand)",
+    )
+    assert "Expand" not in plan_of(pivot(sales_df, cfg).output)
 
 
 @pytest.fixture()

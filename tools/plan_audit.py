@@ -16,10 +16,10 @@ and report the operators that decide 100 TB behavior:
   ``df.explain("codegen")`` for a live view);
 * scans with pushed filters vs bare scans.
 
-Writes PLANS.json next to the repo root and prints a summary. The
-hard invariants (no CartesianProduct anywhere; every query's shuffle
-count within its declared budget) are enforced by
-tests/test_plan_audit.py; this tool is the full report for humans.
+Writes PLANS.json next to the repo root and prints a summary. It exits
+1 if any query plans a CartesianProduct; no test runs it. The plan
+shapes a refactor must not regress are pinned per operator in
+tests/test_plans.py; this tool is the full report for humans.
 
 Streaming queries (s01-s13) execute their drain inside the query fn,
 so they are skipped here — their plan shape is covered by the
