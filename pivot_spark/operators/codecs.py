@@ -1,60 +1,44 @@
-"""Real uncompressed image codecs in pure Catalyst byte arithmetic —
-no PIL, no Python row loop.
+"""Real media codecs (PPM, PGM, BMP, WAV, PNG), no media library needed.
 
-Two public formats whose pixel data is raw bytes are decodable with
-nothing but ``substring``/``hex``/``conv`` expressions:
+Formats: P6 PPM, P5 PGM, 24-bit uncompressed BMP, canonical PCM-16 WAV
+and truecolor 8-bit PNG. Two kinds of code live here:
 
-* **PPM (P6)** — ASCII header ``P6 <w> <h> <maxval>`` followed by
-  ``w*h*3`` RGB bytes (Netpbm spec). Header comments (``#``) are not
-  supported — declared limitation, they are rare in machine-written
-  files.
-* **BMP (BITMAPINFOHEADER, 24-bit uncompressed)** — little-endian
-  header fields, BGR pixel order, rows bottom-up and padded to 4-byte
-  boundaries.
+* **File emitters and header parses in Catalyst.** ``make_ppm`` /
+  ``make_bmp`` / ``make_wav`` / ``make_png`` fabricate REAL files from
+  testdata columns, so every decoder is oracle-checkable end to end:
+  DuckDB replays the same bytes from the source text. ``sniff_media``,
+  ``ppm_resize_nn`` and ``ppm_crop`` need only header fields and byte
+  slices, so they stay scan-stage expressions over ``_pnm_header`` /
+  ``_bmp_header`` / ``_wav_header``.
+* **Pixel and sample work in Arrow ``mapInPandas`` kernels.** The
+  decoders (``decode_*``), the audio features and transforms
+  (``wav_*``, ``audio_fingerprint``) and the image screens and
+  transforms (``ppm_*``, ``pgm_equalize``, ``pgm_binarize_otsu``)
+  decode a whole Arrow batch per Python call with ``np.frombuffer``
+  views. Plan shape: one ``MapInPandas`` node over the scan, zero
+  shuffles. The arithmetic is exact integer (BIGINT sums, integer
+  half-up rounding, one final float division), so the oracles match
+  cell for cell at any payload size.
 
-``decode_ppm`` / ``decode_bmp`` parse width/height/etc. from the bytes
-and compute exact per-channel means — the whole pipeline stays inside
-whole-stage codegen, so metadata extraction over millions of thumbnails
-is a scan-stage column, not a Python UDF. For megapixel images the
-per-byte expression fold should hand off to an Arrow ``mapInPandas``
-kernel (same contract as ``multimodal.decode_image``); the expression
-path is sized for thumbnail/sprite-scale payloads.
-
-Builders (``make_ppm``, ``make_bmp``) fabricate REAL files from
-testdata columns so decode is oracle-checkable end-to-end: DuckDB
-replays the same bytes from the source text.
+Poison-pill safety: every parse checks the header against the physical
+length (``_pnm_parse``, ``_bmp_parse``, ``_wav_parse``, ``_png_parse``
+and their Catalyst twins), so a malformed blob yields NULL output,
+never a crashed job or a loop sized by a lying header.
 """
 
 from __future__ import annotations
 
-import os
+import binascii
+import math
+import re
+import struct
+import zlib
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _arrow_engine(engine: str) -> bool:
-    """Resolve the decode-engine switch shared by the heavy codec
-    operators: "expr" keeps the pure-Catalyst byte-fold path (oracle
-    development, plan pinning), "arrow" hands off to the
-    ``codecs_arrow`` mapInPandas kernels (the corpus-scale path —
-    vectorized numpy instead of one interpreted lambda step per byte),
-    and "auto" (the default everywhere) reads $SPARK_GRAFT_CODEC_ENGINE
-    and falls back to "arrow". Both paths are output-identical
-    (tests/test_codecs_arrow_parity.py)."""
-    if engine == "expr":
-        return False
-    if engine == "arrow":
-        return True
-    if engine != "auto":
-        raise ValueError(f"engine must be expr|arrow|auto, got {engine!r}")
-    return os.environ.get("SPARK_GRAFT_CODEC_ENGINE", "arrow") != "expr"
-
-
-def _u8(raw: Column, pos: Column) -> Column:
-    """Byte value (0..255) at 1-based position ``pos`` of a binary col."""
-    return F.conv(F.hex(F.substring(raw, pos.cast("int"), 1)), 16, 10).cast("long")
 
 
 def _u8h(hx: Column, pos: Column) -> Column:
@@ -79,8 +63,9 @@ def _lam(names: str, body):
     same-named variables but different bodies end up in one projection
     (chained withColumn + CollapseProject), the merged plan mis-binds
     the variables — observed as one lambda's body evaluated with the
-    other's indices (wrong values / NULL tails). Every per-channel
-    lambda below therefore gets channel-suffixed names."""
+    other's indices (wrong values / NULL tails). Every fold built with
+    it (``make_png``'s Adler-32, the declared queries' decode-back
+    transforms) therefore gets its own names."""
     ns = {"body": body}
     exec(f"f = lambda {names}: body({names})", ns)  # noqa: S102
     return ns["f"]
@@ -88,6 +73,41 @@ def _lam(names: str, body):
 
 def _int_le(value: int, n: int) -> bytes:
     return int(value).to_bytes(n, "little")
+
+
+# ---------------------------------------------------------------------------
+# Arrow kernel scaffold
+# ---------------------------------------------------------------------------
+
+def _append_kernel(df: DataFrame, binary_col: str, new_fields, per_blob):
+    """mapInPandas appending ``new_fields`` computed by ``per_blob``
+    (bytes-or-None -> tuple of len(new_fields) values) to every row.
+    Input columns pass through untouched, in order; the new fields
+    follow them (an input column of the same name is replaced)."""
+    base = [f for f in df.schema.fields if f.name not in {g.name for g in new_fields}]
+    schema = T.StructType(base + list(new_fields))
+    names = [f.name for f in schema.fields]
+    new_names = [f.name for f in new_fields]
+
+    def gen(batches):
+        for pdf in batches:
+            cols = {n: [] for n in new_names}
+            for b in pdf[binary_col]:
+                vals = per_blob(None if b is None else bytes(b))
+                for n, v in zip(new_names, vals):
+                    cols[n].append(v)
+            for n in new_names:
+                pdf[n] = pd.Series(cols[n], dtype=object, index=pdf.index)
+            yield pdf[names]
+
+    return df.mapInPandas(gen, schema=schema)
+
+
+def _i64(x: int) -> int:
+    """Wrap a Python int to signed 64-bit, as non-ANSI Spark BIGINT
+    arithmetic wraps: the exact-integer contracts below are stated in
+    BIGINT."""
+    return ((x + (1 << 63)) % (1 << 64)) - (1 << 63)
 
 
 # ---------------------------------------------------------------------------
@@ -165,71 +185,75 @@ def _ppm_header(raw: Column) -> "tuple[Column, Column, Column, Column, Column]":
     return _pnm_header(raw, "P6", bpp=3)
 
 
+# Java's \s is ASCII-only: spell it out so this matches _pnm_header's regex
+_PNM_RE = {
+    magic: re.compile(
+        rf"^{magic}[ \t\n\x0b\f\r]+(\d{{1,7}})[ \t\n\x0b\f\r]+"
+        r"(\d{1,7})[ \t\n\x0b\f\r]+(\d{1,3})[ \t\n\x0b\f\r]"
+    )
+    for magic in ("P6", "P5")
+}
+
+
+def _pnm_parse(b: "bytes | None", magic: str = "P6", bpp: int = 3):
+    """Python twin of ``_pnm_header`` (the Catalyst parse that
+    ``sniff_media``, ``ppm_resize_nn`` and ``ppm_crop`` use): returns
+    (width, height, maxval, hdr_len) or None, with the same gates, so
+    a blob is a valid image to every operator or to none. The header
+    region of any accepted file is pure ASCII, so the byte length of
+    the match equals the Catalyst side's character length."""
+    if b is None:
+        return None
+    m = _PNM_RE[magic].match(b[:32].decode("utf-8", errors="replace"))
+    if not m:
+        return None
+    w, h, mx = int(m.group(1)), int(m.group(2)), int(m.group(3))
+    hdr = len(m.group(0))
+    if mx > 255 or len(b) != hdr + w * h * bpp:
+        return None
+    return w, h, mx, hdr
+
+
+def _luma1000(b: bytes, w: int, h: int, hdr: int) -> np.ndarray:
+    """(h, w) int64 Rec.601 integer lumas (299R + 587G + 114B)."""
+    px = np.frombuffer(b, dtype=np.uint8, offset=hdr).reshape(h, w, 3)
+    px = px.astype(np.int64)
+    return 299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
+
+
 def decode_ppm(
     df: DataFrame,
     binary_col: str = "image",
     meta_col: str = "meta",
     channel_means: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Parse real P6 headers and (optionally) exact per-channel means.
 
     Adds ``meta`` (width, height, maxval, format, n_bytes — NULL for
     non-PPM bytes) and, with ``channel_means``, ``mean_r``/``mean_g``/
-    ``mean_b`` DOUBLE columns averaging every pixel's channel byte.
-    engine="expr" is all scan-stage Catalyst; the default resolves to
-    the output-identical Arrow kernel (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    ``mean_b`` DOUBLE columns averaging every pixel's channel byte
+    (NULL for a zero-area image)."""
+    fields = [T.StructField(meta_col, PPM_META_SCHEMA)]
+    if channel_means:
+        fields += [T.StructField(f"mean_{c}", T.DoubleType()) for c in "rgb"]
 
-        return codecs_arrow.decode_ppm(df, binary_col, meta_col, channel_means)
-    raw = F.col(binary_col)
-    ok, w, h, mx, hdr_len = _ppm_header(raw)
-    # materialize the validity gate ONCE: projections containing
-    # higher-order functions are interpreted (no whole-stage codegen,
-    # no subexpression elimination), so every reference to the raw ok
-    # tree would re-run the full header/length validation per use
-    df = df.withColumn("__ok", ok)
-    ok = F.col("__ok")
-    meta = F.when(
-        ok,
-        F.struct(
-            w.alias("width"),
-            h.alias("height"),
-            mx.alias("maxval"),
-            F.lit("ppm").alias("format"),
-            F.length(raw).cast("long").alias("n_bytes"),
-        ),
-    )
-    out = df.withColumn(meta_col, meta)
-    if not channel_means:
-        return out.drop("__ok")
-    # materialize the hexed blob and header length as COLUMNS: trees
-    # referenced inside a fold lambda are re-evaluated PER ELEMENT (no
-    # CSE across the lambda boundary), so the inline form re-hexed the
-    # whole blob and re-ran the header regexp once per pixel — O(n^2)
-    # per image
-    out = out.withColumns({"__hx": F.hex(raw), "__hdr": hdr_len})
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    n_px = (w * h).cast("long")
-    idx = F.sequence(F.lit(0).cast("long"), n_px - 1)
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None:
+            return (None,) * len(fields)
+        w, h, mx, hdr = p
+        meta = {"width": w, "height": h, "maxval": mx, "format": "ppm",
+                "n_bytes": len(b)}
+        if not channel_means:
+            return (meta,)
+        if w * h == 0:
+            return (meta, None, None, None)
+        px = np.frombuffer(b, dtype=np.uint8, offset=hdr)
+        px = px.reshape(-1, 3).astype(np.int64)
+        s = px.sum(axis=0)
+        return (meta, *[int(s[c]) / float(w * h) for c in range(3)])
 
-    def chan_mean(c: int) -> Column:
-        total = F.aggregate(
-            idx,
-            F.lit(0).cast("long"),
-            _lam(
-                f"acc{c}, i{c}",
-                lambda acc, i: acc + _u8h(hxc, hdrc + i * 3 + F.lit(c + 1)),
-            ),
-        )
-        return F.when(ok & (n_px > 0), total / n_px.cast("double"))
-
-    # one withColumns call (see decode_bmp: chained withColumn
-    # re-analyzes the accumulated plan per link)
-    return out.withColumns(
-        {"mean_r": chan_mean(0), "mean_g": chan_mean(1), "mean_b": chan_mean(2)}
-    ).drop("__hx", "__hdr", "__ok")
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
@@ -280,20 +304,13 @@ BMP_META_SCHEMA = T.StructType(
 )
 
 
-def _le(raw: Column, pos: int, n: int) -> Column:
-    """Little-endian unsigned int of ``n`` bytes at 1-based ``pos``."""
-    total = F.lit(0).cast("long")
-    for i in range(n):
-        total = total + _u8(raw, F.lit(pos + i)) * F.lit(1 << (8 * i)).cast("long")
-    return total
-
-
 def _le_sql(name: str, pos: int, n: int) -> str:
-    """SQL-string twin of ``_le`` over a NAMED column.
+    """Little-endian unsigned int of ``n`` bytes at 1-based ``pos`` of
+    a NAMED binary column, as one SQL string.
 
     Every Column operation is one py4j round-trip (~0.3ms); a header
-    parse made of dozens of ``_le`` calls costs real DRIVER seconds per
-    query build. The public codec APIs take the binary column by name,
+    parse made of dozens of per-byte Column reads costs real DRIVER
+    seconds per query build. The public codec APIs take the binary column by name,
     so the whole header parse can be one ``F.expr`` string — one
     round-trip for the identical Catalyst tree."""
     return (
@@ -341,84 +358,57 @@ def _bmp_header(name: str) -> "tuple[Column, Column, Column, Column]":
     return ok, w, h, off
 
 
+def _bmp_parse(b: "bytes | None"):
+    """Python twin of ``_bmp_header``: (width, height, data_offset)
+    or None, with the same gates."""
+    if b is None or len(b) < 54:
+        return None
+    if b[0:2] != b"BM":
+        return None
+    le = lambda o, k: int.from_bytes(b[o : o + k], "little")  # noqa: E731
+    if le(28, 2) != 24 or le(30, 4) != 0:
+        return None
+    w, h, off = le(18, 4), le(22, 4), le(10, 4)
+    if not (1 <= w <= 1048575) or not (1 <= h <= 1048575):
+        return None
+    if not (54 <= off <= len(b)):
+        return None
+    stride = (w * 3 + 3) // 4 * 4
+    if len(b) != off + stride * h:
+        return None
+    return w, h, off
+
+
 def decode_bmp(
     df: DataFrame,
     binary_col: str = "image",
     meta_col: str = "meta",
     channel_means: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Parse real BMP headers (24-bit uncompressed) and exact
     per-channel means, honoring bottom-up rows and 4-byte row padding.
     Adds ``meta`` (NULL for non-BMP bytes) and ``mean_b``/``mean_g``/
-    ``mean_r`` (BMP stores BGR). Default engine: the Arrow kernel
-    (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    ``mean_r`` (BMP stores BGR)."""
+    fields = [T.StructField(meta_col, BMP_META_SCHEMA)]
+    if channel_means:
+        fields += [T.StructField(f"mean_{c}", T.DoubleType()) for c in "bgr"]
 
-        return codecs_arrow.decode_bmp(df, binary_col, meta_col, channel_means)
-    raw = F.col(binary_col)
-    ok, w, h, off = _bmp_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    meta = F.when(
-        ok,
-        F.struct(
-            w.alias("width"),
-            h.alias("height"),
-            F.expr(f"CAST({_le_sql(binary_col, 29, 2)} AS INT)").alias("bpp"),
-            off.alias("data_offset"),
-            F.lit("bmp").alias("format"),
-            F.length(raw).cast("long").alias("n_bytes"),
-        ),
-    )
-    out = df.withColumn(meta_col, meta)
-    if not channel_means:
-        return out.drop("__ok")
-    # hexed blob / offset / stride materialized as COLUMNS — trees
-    # referenced inside fold lambdas are re-evaluated per element (no
-    # CSE across the lambda boundary); the inline `hx` re-hexed the
-    # whole blob once per pixel
-    # gated with `ok`: these evaluate unconditionally as columns, and a
-    # garbage header's w would overflow the ANSI int multiply (the old
-    # inline form was lazy inside the CASE WHEN branches)
-    out = out.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__off": F.when(ok, off.cast("long")),
-            "__stride": F.when(
-                ok, (F.floor((w.cast("long") * 3 + 3) / 4) * 4).cast("long")
-            ),
-        }
-    )
-    hxc = F.col("__hx")
-    n_px = (w * h).cast("long")
-    ys = F.sequence(F.lit(0).cast("long"), h.cast("long") - 1)
-    xs = F.sequence(F.lit(0).cast("long"), w.cast("long") - 1)
+    def per_blob(b):
+        hdr = _bmp_parse(b)
+        if hdr is None:
+            return (None,) * len(fields)
+        w, h, off = hdr
+        meta = {"width": w, "height": h, "bpp": 24, "data_offset": off,
+                "format": "bmp", "n_bytes": len(b)}
+        if not channel_means:
+            return (meta,)
+        stride = (w * 3 + 3) // 4 * 4
+        rows = np.frombuffer(b, dtype=np.uint8, offset=off).reshape(h, stride)
+        px = rows[:, : 3 * w].reshape(-1, 3).astype(np.int64)
+        s = px.sum(axis=0)
+        return (meta, *[int(s[c]) / float(w * h) for c in range(3)])
 
-    def chan_mean(c: int) -> Column:
-        # nested row/col fold: the per-pixel position is straight-line
-        # arithmetic (no per-pixel division), honoring row stride so
-        # padding bytes are skipped; all lambda names channel-suffixed
-        # AND nesting-level-distinct (see _lam)
-        def row_sum(y: Column) -> Column:
-            base = F.col("__off") + y * F.col("__stride") + F.lit(c + 1)
-            return F.aggregate(
-                xs, F.lit(0).cast("long"),
-                _lam(f"ai{c}, x{c}", lambda a, x: a + _u8h(hxc, base + x * 3)),
-            )
-
-        total = F.aggregate(
-            ys, F.lit(0).cast("long"),
-            _lam(f"ao{c}, y{c}", lambda a, y: a + row_sum(y)),
-        )
-        return F.when(ok & (n_px > 0), total / n_px.cast("double"))
-
-    # one withColumns call: chained withColumn re-analyzes the whole
-    # accumulated plan per link (driver milliseconds on trees this size)
-    return out.withColumns(
-        {"mean_b": chan_mean(0), "mean_g": chan_mean(1), "mean_r": chan_mean(2)}
-    ).drop("__hx", "__off", "__stride", "__ok")
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
@@ -501,115 +491,104 @@ def _wav_header(name: str) -> "tuple[Column, Column, Column, Column]":
     return ok, n_ch, rate, n_samp
 
 
+def _wav_parse(b: "bytes | None"):
+    """Python twin of ``_wav_header``'s gate (the Catalyst parse that
+    ``sniff_media`` uses): returns (n_channels, sample_rate,
+    n_samples) or None. Every check matches term for term, so a blob
+    is a WAV to every operator or to none."""
+    if b is None or len(b) < 44:
+        return None
+    if b[0:4] != b"RIFF" or b[8:16] != b"WAVEfmt ":
+        return None
+    le = lambda o, k: int.from_bytes(b[o : o + k], "little")  # noqa: E731
+    if le(20, 2) != 1 or le(34, 2) != 16:
+        return None
+    if b[36:40] != b"data":
+        return None
+    nch, rate, dsz = le(22, 2), le(24, 4), le(40, 4)
+    if not (1 <= nch <= 64) or not (1 <= rate <= 1_000_000_000):
+        return None
+    if len(b) != 44 + dsz or dsz % (2 * nch) != 0:
+        return None
+    return nch, rate, dsz // (2 * nch)
+
+
+def _samples(b: bytes) -> np.ndarray:
+    """All interleaved signed 16-bit words as int64."""
+    return np.frombuffer(b, dtype="<i2", offset=44).astype(np.int64)
+
+
+def _wav_header_bytes(nch: int, rate: int, dsz: int) -> bytes:
+    """Canonical 44-byte PCM-16 header (the ``make_wav`` layout:
+    byte_rate = rate * block, block = 2 * nch)."""
+    blk = 2 * nch
+    return (
+        b"RIFF"
+        + (dsz + 36).to_bytes(4, "little")
+        + b"WAVEfmt "
+        + (16).to_bytes(4, "little")
+        + (1).to_bytes(2, "little")
+        + nch.to_bytes(2, "little")
+        + rate.to_bytes(4, "little")
+        + (rate * blk).to_bytes(4, "little")
+        + blk.to_bytes(2, "little")
+        + (16).to_bytes(2, "little")
+        + b"data"
+        + dsz.to_bytes(4, "little")
+    )
+
+
 def decode_wav(
     df: DataFrame,
     binary_col: str = "audio",
     meta_col: str = "meta",
     channel_stats: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Parse canonical PCM-16 WAV headers (RIFF | fmt@12 | data@36 —
     the stdlib ``wave``-writer layout; files with extra chunks before
     ``data`` are returned as NULL meta, declared limitation) and exact
     per-channel mean / RMS over the signed samples. Channels beyond the
     second are parsed in meta but not aggregated (``mean_ch1``/
-    ``rms_ch1`` are NULL for mono). engine="expr" is scan-stage
-    Catalyst; the default resolves to the output-identical Arrow
-    kernel (see ``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    ``rms_ch1`` are NULL for mono; all four are NULL for a zero-sample
+    file)."""
+    fields = [T.StructField(meta_col, WAV_META_SCHEMA)]
+    if channel_stats:
+        fields += [
+            T.StructField("mean_ch0", T.DoubleType()),
+            T.StructField("rms_ch0", T.DoubleType()),
+            T.StructField("mean_ch1", T.DoubleType()),
+            T.StructField("rms_ch1", T.DoubleType()),
+        ]
 
-        return codecs_arrow.decode_wav(df, binary_col, meta_col, channel_stats)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    meta = F.when(
-        ok,
-        F.struct(
-            n_ch.alias("n_channels"),
-            rate.alias("sample_rate"),
-            F.lit(16).alias("bits"),
-            n_samp.alias("n_samples"),
-            (n_samp / rate.cast("double")).alias("duration_s"),
-            F.lit("wav").alias("format"),
-            F.length(raw).cast("long").alias("n_bytes"),
-        ),
-    )
-    out = df.withColumn(meta_col, meta)
-    if not channel_stats:
-        return out.drop("__ok")
-    # hexed blob and channel count materialized as COLUMNS — trees
-    # referenced inside an HOF lambda are re-evaluated per element, so
-    # the inline `hx` re-hexed the whole blob once per SAMPLE. The
-    # per-channel (sum, sum-of-squares) pair is ONE single-pass fold
-    # per channel, stored as a scalar struct column (do NOT materialize
-    # the sample ARRAY and reference it from another fold: the
-    # optimizer inlines the column back into the consuming HOF's
-    # argument and the merged nested lambdas mis-bind — observed
-    # wrong/NULL tails). Each struct is gated with `have` because a
-    # standalone column evaluates unconditionally and a garbage
-    # header's sizes would overflow ANSI arithmetic (the old inline
-    # form was lazy inside the CASE WHEN branches).
-    out = out.withColumns(
-        {"__hx": F.when(ok, F.hex(raw)), "__nch": F.when(ok, n_ch.cast("long"))}
-    )
-    hxc = F.col("__hx")
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,) * len(fields)
+        nch, rate, n = hdr
+        meta = {
+            "n_channels": nch,
+            "sample_rate": rate,
+            "bits": 16,
+            "n_samples": n,
+            "duration_s": n / rate,
+            "format": "wav",
+            "n_bytes": len(b),
+        }
+        if not channel_stats:
+            return (meta,)
+        stats = [None, None, None, None]
+        if n > 0:
+            v = _samples(b)
+            for ch in (0, 1):
+                if nch > ch:
+                    c = v[ch::nch]
+                    s = int(c.sum())
+                    q = int((c * c).sum())
+                    stats[2 * ch] = s / float(n)
+                    stats[2 * ch + 1] = float(np.sqrt(q / float(n)))
+        return (meta, *stats)
 
-    def sample(i: Column, ch: int) -> Column:
-        # signed 16-bit LE sample i of channel ch; PCM starts at byte 45
-        pos = F.lit(45).cast("long") + (i * F.col("__nch") + ch) * 2
-        v = _u8h(hxc, pos) + _u8h(hxc, pos + 1) * 256
-        return F.when(v >= 32768, v - 65536).otherwise(v)
-
-    idx = F.sequence(F.lit(0).cast("long"), n_samp - 1)
-    acc0 = F.struct(
-        F.lit(0).cast("long").alias("s"), F.lit(0).cast("long").alias("q")
-    )
-
-    def have(ch: int) -> Column:
-        return ok & (n_ch > ch) & (n_samp > 0)
-
-    def st_expr(ch: int) -> Column:
-        return F.when(
-            have(ch),
-            F.aggregate(
-                F.transform(idx, _lam(f"i{ch}", lambda i, _c=ch: sample(i, _c))),
-                acc0,
-                _lam(
-                    f"a{ch}, v{ch}",
-                    lambda a, v: F.struct(
-                        (a["s"] + v).alias("s"), (a["q"] + v * v).alias("q")
-                    ),
-                ),
-            ),
-        )
-
-    # both channels in ONE projection (see _lam note)
-    out = out.select("*", st_expr(0).alias("__st0"), st_expr(1).alias("__st1"))
-
-    def stats(ch: int):
-        st = F.col(f"__st{ch}")
-        mean = F.when(have(ch), st["s"] / n_samp.cast("double"))
-        rms = F.when(have(ch), F.sqrt(st["q"] / n_samp.cast("double")))
-        return mean, rms
-
-    m0, r0 = stats(0)
-    m1, r1 = stats(1)
-    # one projection for all four stats (chained withColumn re-analyzes
-    # the whole accumulated plan each time — real driver milliseconds on
-    # trees this size)
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__nch", "__st0", "__st1", "__ok")
-    ]
-    return out.select(
-        *keep,
-        m0.alias("mean_ch0"),
-        r0.alias("rms_ch0"),
-        m1.alias("mean_ch1"),
-        r1.alias("rms_ch1"),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
@@ -620,7 +599,6 @@ def wav_features(
     df: DataFrame,
     binary_col: str = "audio",
     silence_abs: int = 4096,
-    engine: str = "auto",
 ) -> DataFrame:
     """Audio screening features over channel 0 of canonical PCM-16 WAVs:
     ``n_samples``, ``zcr`` (zero-crossing rate, crossings/(n-1)),
@@ -630,162 +608,80 @@ def wav_features(
     cheap screens a speech/audio curation pipeline runs before any
     model: drop silent clips, flag clipped ones.
 
-    Single fold per row carrying a (prev, crossings, peak, sum-sq,
-    silent) accumulator struct — one pass over the samples, scan-stage
-    Catalyst, no shuffle, no Python. Columns for the hexed blob and
-    channel count are materialized and gated with ``ok`` (hoisted
-    columns evaluate unconditionally; see decode_wav notes), and all
-    lambda argument names are unique per this function (CollapseProject
-    lambda-name mis-binding). Default engine: the Arrow kernel
-    (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    A zero-sample file has ``n_samples`` 0 and NULL features; ``zcr``
+    is 0.0 for a one-sample file and ``crest`` is NULL for an all-zero
+    one. Malformed blobs -> all NULL."""
+    fields = [
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("zcr", T.DoubleType()),
+        T.StructField("peak", T.LongType()),
+        T.StructField("crest", T.DoubleType()),
+        T.StructField("silence_frac", T.DoubleType()),
+    ]
 
-        return codecs_arrow.wav_features(df, binary_col, silence_abs)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {"__hx": F.when(ok, F.hex(raw)), "__nch": F.when(ok, n_ch.cast("long"))}
-    )
-    hxc = F.col("__hx")
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,) * 5
+        nch, _rate, n = hdr
+        if n == 0:
+            return (0, None, None, None, None)
+        v = _samples(b)[::nch]
+        a, c = v[:-1], v[1:]
+        z = int((((a < 0) & (c > 0)) | ((a > 0) & (c < 0))).sum())
+        mx = int(np.abs(v).max())
+        q = int((v * v).sum())
+        sil = int((np.abs(v) < int(silence_abs)).sum())
+        zcr = z / float(n - 1) if n > 1 else 0.0
+        crest = mx / float(np.sqrt(q / float(n))) if q > 0 else None
+        return (n, zcr, mx, crest, sil / float(n))
 
-    def sample0(i: Column) -> Column:
-        # signed 16-bit LE sample i of channel 0; PCM starts at byte 45
-        pos = F.lit(45).cast("long") + i * F.col("__nch") * 2
-        v = _u8h(hxc, pos) + _u8h(hxc, pos + 1) * 256
-        return F.when(v >= 32768, v - 65536).otherwise(v)
-
-    idx = F.sequence(F.lit(0).cast("long"), n_samp - 1)
-    zl = F.lit(0).cast("long")
-    acc0 = F.struct(
-        zl.alias("f"), zl.alias("p"), zl.alias("z"),
-        zl.alias("mx"), zl.alias("q"), zl.alias("sil"),
-    )
-
-    def step(a: Column, v: Column) -> Column:
-        cross = (
-            (a["f"] == 1)
-            & (((a["p"] < 0) & (v > 0)) | ((a["p"] > 0) & (v < 0)))
-        ).cast("long")
-        return F.struct(
-            F.lit(1).cast("long").alias("f"),
-            v.alias("p"),
-            (a["z"] + cross).alias("z"),
-            F.greatest(a["mx"], F.abs(v)).alias("mx"),
-            (a["q"] + v * v).alias("q"),
-            (a["sil"] + (F.abs(v) < F.lit(int(silence_abs))).cast("long")).alias("sil"),
-        )
-
-    st = F.when(
-        ok & (n_samp > 0),
-        F.aggregate(
-            F.transform(idx, _lam("iwf", lambda i: sample0(i))),
-            acc0,
-            _lam("awf, vwf", step),
-        ),
-    )
-    out = out.select("*", st.alias("__wf"))
-    a = F.col("__wf")
-    n = n_samp.cast("double")
-    rms = F.sqrt(a["q"] / n)
-    keep = [c for c in out.columns if c not in ("__hx", "__nch", "__wf", "__ok")]
-    return out.select(
-        *keep,
-        F.when(ok, n_samp).alias("n_samples"),
-        F.when(ok & (n_samp > 1), a["z"] / (n - 1))
-        .otherwise(F.when(ok & (n_samp > 0), F.lit(0.0)))
-        .alias("zcr"),
-        F.when(ok, a["mx"]).alias("peak"),
-        F.when(ok & (a["q"] > 0), a["mx"] / rms).alias("crest"),
-        F.when(ok & (n_samp > 0), a["sil"] / n).alias("silence_frac"),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def ppm_luma_stats(
     df: DataFrame,
     binary_col: str = "image",
     blank_std: float = 5.0,
-    engine: str = "auto",
 ) -> DataFrame:
     """Blank/low-information image screen over real P6 pixels: Rec.601
     luma per pixel in INTEGER space (``luma1000 = 299 R + 587 G +
-    114 B`` — integer sums keep both engines bit-identical), reduced to
+    114 B`` — integer sums keep the result exact), reduced to
     ``luma_mean`` / ``luma_std`` (population) / ``luma_min`` /
     ``luma_max`` (all on the 0..255 scale) and ``is_blank``
     (``luma_std < blank_std`` on the 4-decimal-rounded std, the screen
     a thumbnail-curation pipeline uses to drop solid/near-solid
-    frames). One fold per row with engine="expr"; the default resolves
-    to the output-identical Arrow kernel (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    frames). The std rounds half-up as ``floor(x*1e4 + 0.5)/1e4`` in
+    IEEE doubles, which an oracle replays bit-identically (Spark's
+    ``round()`` re-reads the double's shortest decimal repr, which
+    disagrees on exact .5 ties). Zero-area or malformed images ->
+    NULL."""
+    fields = [
+        T.StructField("luma_mean", T.DoubleType()),
+        T.StructField("luma_std", T.DoubleType()),
+        T.StructField("luma_min", T.DoubleType()),
+        T.StructField("luma_max", T.DoubleType()),
+        T.StructField("is_blank", T.BooleanType()),
+    ]
 
-        return codecs_arrow.ppm_luma_stats(df, binary_col, blank_std)
-    raw = F.col(binary_col)
-    ok, w, h, mxv, hdr_len = _ppm_header(raw)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    n_px = (w * h).cast("long")
-    idx = F.sequence(F.lit(0).cast("long"), n_px - 1)
-    zl = F.lit(0).cast("long")
-    acc0 = F.struct(
-        zl.alias("s"), zl.alias("q"),
-        F.lit(1 << 40).cast("long").alias("mn"), F.lit(-1).cast("long").alias("mx"),
-    )
-
-    def luma(i: Column) -> Column:
-        base = hdrc + i * 3
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None or p[0] * p[1] == 0:
+            return (None,) * 5
+        w, h, _mx, hdr = p
+        lm = _luma1000(b, w, h, hdr).ravel()
+        n = float(w * h)
+        s, q = int(lm.sum()), int((lm * lm).sum())
+        mean1000 = s / n
+        var = max(0.0, q / n - mean1000 * mean1000)
+        std_r = math.floor(math.sqrt(var) / 1000.0 * 10000 + 0.5) / 10000
         return (
-            _u8h(hxc, base + 1) * 299
-            + _u8h(hxc, base + 2) * 587
-            + _u8h(hxc, base + 3) * 114
+            mean1000 / 1000.0, std_r,
+            int(lm.min()) / 1000.0, int(lm.max()) / 1000.0,
+            std_r < float(blank_std),
         )
 
-    def step(a: Column, v: Column) -> Column:
-        return F.struct(
-            (a["s"] + v).alias("s"),
-            (a["q"] + v * v).alias("q"),
-            F.least(a["mn"], v).alias("mn"),
-            F.greatest(a["mx"], v).alias("mx"),
-        )
-
-    st = F.when(
-        ok & (n_px > 0),
-        F.aggregate(
-            F.transform(idx, _lam("ils", lambda i: luma(i))),
-            acc0,
-            _lam("als, vls", step),
-        ),
-    )
-    out = out.select("*", st.alias("__ls"))
-    a = F.col("__ls")
-    n = n_px.cast("double")
-    mean1000 = a["s"] / n
-    var = F.greatest(F.lit(0.0), a["q"] / n - mean1000 * mean1000)
-    # half-up at 4 decimals via floor(x*1e4 + 0.5)/1e4 in IEEE doubles:
-    # any engine replays it bit-identically (Spark's round() re-reads the
-    # double's shortest decimal repr and HALF_UPs it, which disagrees
-    # with C-style double rounding on exact .5 ties — observed 2/500)
-    std_r = F.floor(F.sqrt(var) / 1000.0 * 10000 + 0.5) / 10000
-    # one withColumns call (see decode_bmp: chained withColumn
-    # re-analyzes the accumulated plan per link)
-    return out.withColumns(
-        {
-            "luma_mean": F.when(ok & (n_px > 0), mean1000 / 1000.0),
-            "luma_std": F.when(ok & (n_px > 0), std_r),
-            "luma_min": F.when(ok & (n_px > 0), a["mn"] / 1000.0),
-            "luma_max": F.when(ok & (n_px > 0), a["mx"] / 1000.0),
-            "is_blank": F.when(ok & (n_px > 0), std_r < float(blank_std)),
-        }
-    ).drop("__hx", "__hdr", "__ls", "__ok")
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def ppm_resize_nn(
@@ -800,8 +696,7 @@ def ppm_resize_nn(
     — the left/top-anchored NN convention, documented so the byte-replay
     oracle and any downstream decoder agree. ``out_w``/``out_h`` are
     Python ints (the output-pixel loop is unrolled into the expression;
-    sized for thumbnail targets — for megapixel TARGETS hand off to an
-    Arrow ``mapInPandas`` kernel, same contract as ``decode_image``).
+    sized for thumbnail targets).
     Source dimensions stay data-dependent columns, so one expression
     resizes a mixed-size corpus. The result column is a genuine P6 file
     (``decode_ppm``/``ppm_luma_stats`` can consume it directly); maxval
@@ -830,105 +725,36 @@ def ppm_resize_nn(
 # Media transforms emitting REAL files (downsample / format conversion)
 # ---------------------------------------------------------------------------
 
-def _le_bytes(col: Column, n: int) -> Column:
-    """Little-endian byte string of ``n`` bytes from a non-negative
-    integer COLUMN (builder-side twin of ``_le``)."""
-    c = col.cast("long")
-    return F.concat(
-        *[_byte(F.pmod(F.shiftright(c, 8 * i), F.lit(256))) for i in range(n)]
-    )
-
-
 def wav_downsample(
     df: DataFrame,
     factor: int,
     binary_col: str = "audio",
     out_col: str = "downsampled",
-    engine: str = "auto",
 ) -> DataFrame:
     """Integer-decimation downsample emitting REAL WAV bytes: keep every
     ``factor``-th frame (ALL channels of it), sample rate becomes
     ``floor(rate/factor)``, and the output is a genuine canonical PCM-16
     file (``decode_wav`` consumes it directly). Plain decimation, no
     anti-aliasing filter — documented; the use case is cheap rate
-    normalization of already-band-limited speech corpora, and a filtered
-    variant belongs in an Arrow ``mapInPandas`` kernel.
-
-    The frame copy is one interpreted ``transform`` over output-frame
-    indices slicing ``block*2`` hex chars each from the hexed source
-    (hex once per row — the HOF-lambda CSE pitfall), then one
-    ``unhex``; header fields are rebuilt with little-endian byte
-    arithmetic from the parsed source header. Default engine: the
-    Arrow kernel (``_arrow_engine``)."""
+    normalization of already-band-limited speech corpora. Zero-sample
+    or malformed input -> NULL."""
     if factor < 1:
         raise ValueError(f"factor must be >= 1, got {factor}")
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(out_col, T.BinaryType())]
 
-        return codecs_arrow.wav_downsample(df, factor, binary_col, out_col)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    block = (F.lit(2) * n_ch).cast("long")
-    out_n = F.when(n_samp > 0, F.floor((n_samp - 1) / factor) + 1).otherwise(
-        F.lit(0)
-    ).cast("long")
-    new_rate = F.floor(rate / factor).cast("long")
-    # header fields as gated named columns, header bytes as ONE expr
-    # string over them (the _le_bytes Column form made ~200 py4j
-    # round-trips per build — see _le_sql)
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__blk": F.when(ok, block),
-            "__nch": F.when(ok, n_ch.cast("long")),
-            "__nrate": F.when(ok, new_rate),
-            "__dsz": F.when(ok, out_n * block),
-        }
-    )
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,)
+        nch, rate, n = hdr
+        if n == 0:
+            return (None,)
+        blk = 2 * nch
+        frames = np.frombuffer(b, dtype=np.uint8, offset=44).reshape(n, blk)
+        payload = frames[::factor].tobytes()
+        return (_wav_header_bytes(nch, rate // factor, len(payload)) + payload,)
 
-    def le_sql(expr: str, n: int) -> str:
-        return "concat(" + ", ".join(
-            f"unhex(lpad(hex(pmod(shiftright(CAST({expr} AS BIGINT), {8 * i}),"
-            f" 256)), 2, '0'))"
-            for i in range(n)
-        ) + ")"
-
-    header = F.expr(
-        "concat(X'52494646', "                      # RIFF
-        + le_sql("__dsz + 36", 4)
-        + ", X'57415645666D7420', "                  # WAVEfmt\x20
-        + le_sql("16", 4) + ", " + le_sql("1", 2) + ", "
-        + le_sql("__nch", 2) + ", " + le_sql("__nrate", 4) + ", "
-        + le_sql("__nrate * __blk", 4) + ", "
-        + le_sql("__blk", 2) + ", " + le_sql("16", 2)
-        + ", X'64617461', "                          # data
-        + le_sql("__dsz", 4)
-        + ")"
-    )
-    hxc, blkc = F.col("__hx"), F.col("__blk")
-    idx = F.sequence(F.lit(0).cast("long"), out_n - 1)
-    frames = F.transform(
-        idx,
-        _lam(
-            "ids",
-            lambda i: F.substring(
-                hxc,
-                ((F.lit(44).cast("long") + i * factor * blkc) * 2 + 1).cast("int"),
-                (blkc * 2).cast("int"),
-            ),
-        ),
-    )
-    payload = F.unhex(F.array_join(frames, ""))
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__blk", "__nch", "__nrate", "__dsz", "__ok")
-    ]
-    return out.select(
-        *keep,
-        F.when(ok & (out_n > 0), F.concat(header, payload)).alias(out_col),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
@@ -950,59 +776,27 @@ def ppm_to_pgm(
     df: DataFrame,
     binary_col: str = "image",
     out_col: str = "gray",
-    engine: str = "auto",
 ) -> DataFrame:
     """Grayscale conversion emitting REAL P5 PGM bytes from P6 PPM
     input: per pixel ``gray = (299 R + 587 G + 114 B + 500) // 1000``
-    (Rec.601 luma, integer half-up — exact in any engine). The output
-    is a genuine binary PGM (``P5\\n<w> <h>\\n<maxval>\\n`` + ``w*h``
-    gray bytes) that ``decode_pgm`` parses back. One interpreted
-    ``transform`` over pixel indices emitting 2 hex chars each, one
-    ``unhex``; maxval is preserved from the source. Default engine:
-    the Arrow kernel (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    (Rec.601 luma, integer half-up — exact). The output is a genuine
+    binary PGM (``P5\\n<w> <h>\\n<maxval>\\n`` + ``w*h`` gray bytes)
+    that ``decode_pgm`` parses back; maxval is preserved from the
+    source. Zero-area or malformed input -> NULL."""
+    fields = [T.StructField(out_col, T.BinaryType())]
 
-        return codecs_arrow.ppm_to_pgm(df, binary_col, out_col)
-    raw = F.col(binary_col)
-    ok, w, h, mxv, hdr_len = _ppm_header(raw)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    n_px = (w * h).cast("long")
-    idx = F.sequence(F.lit(0).cast("long"), n_px - 1)
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None or p[0] * p[1] == 0:
+            return (None,)
+        w, h, mx, hdr = p
+        px = np.frombuffer(b, dtype=np.uint8, offset=hdr)
+        px = px.reshape(-1, 3).astype(np.int64)
+        gray = (299 * px[:, 0] + 587 * px[:, 1] + 114 * px[:, 2] + 500) // 1000
+        header = f"P5\n{w} {h}\n{mx}\n".encode()
+        return (header + gray.astype(np.uint8).tobytes(),)
 
-    def gray(i: Column) -> Column:
-        base = hdrc + i * 3
-        g = F.floor(
-            (
-                _u8h(hxc, base + 1) * 299
-                + _u8h(hxc, base + 2) * 587
-                + _u8h(hxc, base + 3) * 114
-                + 500
-            )
-            / 1000
-        ).cast("long")
-        return F.lpad(F.hex(g), 2, "0")
-
-    header = F.concat(
-        F.lit("P5\n"), w.cast("string"), F.lit(" "), h.cast("string"),
-        F.lit("\n"), mxv.cast("string"), F.lit("\n"),
-    )
-    payload = F.unhex(F.array_join(F.transform(idx, _lam("ipg", gray)), ""))
-    keep = [c for c in out.columns if c not in ("__hx", "__hdr", "__ok")]
-    return out.select(
-        *keep,
-        F.when(
-            ok & (n_px > 0), F.concat(F.encode(header, "UTF-8"), payload)
-        ).alias(out_col),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def decode_pgm(
@@ -1010,51 +804,30 @@ def decode_pgm(
     binary_col: str = "image",
     meta_col: str = "meta",
     gray_mean: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Parse real P5 PGM headers and (optionally) the exact mean gray
     level. Adds ``meta`` (width, height, maxval, format, n_bytes —
-    NULL for non-PGM bytes) and ``mean_gray`` DOUBLE. Default engine:
-    the Arrow kernel (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    NULL for non-PGM bytes) and ``mean_gray`` DOUBLE (NULL for a
+    zero-area image)."""
+    fields = [T.StructField(meta_col, PGM_META_SCHEMA)]
+    if gray_mean:
+        fields.append(T.StructField("mean_gray", T.DoubleType()))
 
-        return codecs_arrow.decode_pgm(df, binary_col, meta_col, gray_mean)
-    raw = F.col(binary_col)
-    ok, w, h, mx, hdr_len = _pnm_header(raw, "P5", bpp=1)
-    meta = F.when(
-        ok,
-        F.struct(
-            w.alias("width"),
-            h.alias("height"),
-            mx.alias("maxval"),
-            F.lit("pgm").alias("format"),
-            F.length(raw).cast("long").alias("n_bytes"),
-        ),
-    )
-    out = df.withColumn("__ok", ok).withColumn(meta_col, meta)
-    ok = F.col("__ok")   # see decode_ppm: one gate eval
-    if not gray_mean:
-        return out.drop("__ok")
-    out = out.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    n_px = (w * h).cast("long")
-    idx = F.sequence(F.lit(0).cast("long"), n_px - 1)
-    total = F.aggregate(
-        idx,
-        F.lit(0).cast("long"),
-        _lam("agm, igm", lambda a, i: a + _u8h(hxc, hdrc + i + 1)),
-    )
-    keep = [c for c in out.columns if c not in ("__hx", "__hdr", "__ok")]
-    return out.select(
-        *keep,
-        F.when(ok & (n_px > 0), total / n_px.cast("double")).alias("mean_gray"),
-    )
+    def per_blob(b):
+        p = _pnm_parse(b, "P5", 1)
+        if p is None:
+            return (None,) * len(fields)
+        w, h, mx, hdr = p
+        meta = {"width": w, "height": h, "maxval": mx, "format": "pgm",
+                "n_bytes": len(b)}
+        if not gray_mean:
+            return (meta,)
+        if w * h == 0:
+            return (meta, None)
+        v = np.frombuffer(b, dtype=np.uint8, offset=hdr).astype(np.int64)
+        return (meta, int(v.sum()) / float(w * h))
+
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
@@ -1118,88 +891,29 @@ def wav_mixdown(
     df: DataFrame,
     binary_col: str = "audio",
     out_col: str = "mono",
-    engine: str = "auto",
 ) -> DataFrame:
     """Stereo→mono mixdown emitting REAL WAV bytes: each output sample
     is ``floor((L + R) / 2)`` (floor division of the SIGNED sum — the
     convention documented for the byte-replay oracle), at the source
     sample rate. Mono inputs pass through byte-identically (header
     rebuilt, same payload); >2-channel files average the first two
-    channels — declared limitation.
+    channels — declared limitation. Zero-sample or malformed input ->
+    NULL."""
+    fields = [T.StructField(out_col, T.BinaryType())]
 
-    Same plan shape as ``wav_downsample``: header fields as gated named
-    columns + one expr-string header, one interpreted ``transform``
-    over output samples (each reading 2 or 4 source bytes from the
-    hexed blob), one ``unhex``. Default engine: the Arrow kernel
-    (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,)
+        nch, rate, n = hdr
+        if n == 0:
+            return (None,)
+        v = _samples(b)
+        mono = (v[0::nch] + v[1::nch]) >> 1 if nch >= 2 else v[0::nch]
+        payload = (mono % 65536).astype("<u2").tobytes()
+        return (_wav_header_bytes(1, rate, n * 2) + payload,)
 
-        return codecs_arrow.wav_mixdown(df, binary_col, out_col)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    # ONE withColumns call: each chained withColumn re-analyzes the
-    # whole accumulated plan (which carries the caller's corpus-builder
-    # tree) — batching the gated columns cut e182's driver build ~2x
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__nch": F.when(ok, n_ch.cast("long")),
-            "__mrate": F.when(ok, rate.cast("long")),
-            "__msz": F.when(ok, n_samp * 2),
-        }
-    )
-
-    def le_sql(expr: str, n: int) -> str:
-        return "concat(" + ", ".join(
-            f"unhex(lpad(hex(pmod(shiftright(CAST({expr} AS BIGINT), {8 * i}),"
-            f" 256)), 2, '0'))"
-            for i in range(n)
-        ) + ")"
-
-    header = F.expr(
-        "concat(X'52494646', "
-        + le_sql("__msz + 36", 4)
-        + ", X'57415645666D7420', "
-        + le_sql("16", 4) + ", " + le_sql("1", 2) + ", " + le_sql("1", 2)
-        + ", " + le_sql("__mrate", 4) + ", " + le_sql("__mrate * 2", 4)
-        + ", " + le_sql("2", 2) + ", " + le_sql("16", 2)
-        + ", X'64617461', "
-        + le_sql("__msz", 4)
-        + ")"
-    )
-    hxc, nchc = F.col("__hx"), F.col("__nch")
-
-    def sample(i: Column, ch: Column) -> Column:
-        pos = F.lit(45).cast("long") + (i * nchc + ch) * 2
-        v = _u8h(hxc, pos) + _u8h(hxc, pos + 1) * 256
-        return F.when(v >= 32768, v - 65536).otherwise(v)
-
-    def mono(i: Column) -> Column:
-        mixed = F.when(
-            nchc >= 2,
-            F.floor((sample(i, F.lit(0)) + sample(i, F.lit(1))) / 2).cast("long"),
-        ).otherwise(sample(i, F.lit(0)))
-        stored = F.pmod(mixed, F.lit(65536).cast("long"))
-        return F.concat(
-            F.lpad(F.hex(F.pmod(stored, F.lit(256))), 2, "0"),
-            F.lpad(F.hex(F.floor(stored / 256).cast("long")), 2, "0"),
-        )
-
-    idx = F.sequence(F.lit(0).cast("long"), n_samp - 1)
-    payload = F.unhex(
-        F.array_join(F.transform(idx, _lam("imx", mono)), "")
-    )
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__nch", "__mrate", "__msz", "__ok")
-    ]
-    return out.select(
-        *keep,
-        F.when(ok & (n_samp > 0), F.concat(header, payload)).alias(out_col),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def wav_trim_silence(
@@ -1207,7 +921,6 @@ def wav_trim_silence(
     binary_col: str = "audio",
     threshold_abs: int = 4096,
     out_col: str = "trimmed",
-    engine: str = "auto",
 ) -> DataFrame:
     """Leading/trailing-silence trim emitting REAL WAV bytes — the
     VAD-lite first pass of a speech-curation pipeline. A sample is
@@ -1216,91 +929,30 @@ def wav_trim_silence(
     frame are copied; interior quiet spans are preserved). A fully
     silent or empty file becomes a valid 44-byte zero-sample WAV, so
     downstream ``decode_wav`` still parses it (``n_samples = 0``)
-    rather than hitting a poison NULL.
-
-    One fold finds (first, last) active indices, one interpreted
-    ``transform`` copies the kept frames from the hexed blob, the
-    header is rebuilt as ONE expr string. Malformed input -> NULL via
-    the shared header gate. Default engine: the Arrow kernel
-    (``_arrow_engine``)."""
+    rather than hitting a poison NULL. Malformed input -> NULL via the
+    shared header gate."""
     if threshold_abs < 0:
         raise ValueError(f"threshold_abs must be >= 0, got {threshold_abs}")
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(out_col, T.BinaryType())]
+    thr = int(threshold_abs)
 
-        return codecs_arrow.wav_trim_silence(
-            df, binary_col, threshold_abs, out_col
-        )
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__nch": F.when(ok, n_ch.cast("long")),
-            "__nsmp": F.when(ok, n_samp),
-            "__trate": F.when(ok, rate.cast("long")),
-        }
-    )
-    # (first, last) active channel-0 sample index in ONE pass; {-1,-1}
-    # when nothing clears the threshold
-    bounds_sql = (
-        f"aggregate(sequence(CAST(0 AS BIGINT), __nsmp - 1),"
-        f" named_struct('lo', CAST(-1 AS BIGINT), 'hi', CAST(-1 AS BIGINT)),"
-        f" (ats, its) -> CASE WHEN abs({_wav_sample0_sql('its')}) >= {int(threshold_abs)}"
-        f" THEN named_struct('lo', CASE WHEN ats.lo < 0 THEN its ELSE ats.lo END,"
-        f" 'hi', its) ELSE ats END)"
-    )
-    out = out.withColumn(
-        "__tb", F.when(ok & (F.col("__nsmp") > 0), F.expr(bounds_sql))
-    )
-    m = F.when(
-        ok & (F.col("__nsmp") > 0) & (F.col("__tb")["lo"] >= 0),
-        F.col("__tb")["hi"] - F.col("__tb")["lo"] + 1,
-    ).otherwise(F.lit(0).cast("long"))
-    out = out.withColumn("__tm", F.when(ok, m)).withColumn(
-        "__tdsz", F.when(ok, F.col("__tm") * 2 * F.col("__nch"))
-    )
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,)
+        nch, rate, n = hdr
+        blk = 2 * nch
+        if n > 0:
+            active = np.nonzero(np.abs(_samples(b)[::nch]) >= thr)[0]
+        else:
+            active = np.empty(0, dtype=np.int64)
+        if active.size == 0:
+            return (_wav_header_bytes(nch, rate, 0),)
+        lo, hi = int(active[0]), int(active[-1])
+        payload = b[44 + lo * blk : 44 + (hi + 1) * blk]
+        return (_wav_header_bytes(nch, rate, len(payload)) + payload,)
 
-    def le_sql(expr: str, n: int) -> str:
-        return "concat(" + ", ".join(
-            f"unhex(lpad(hex(pmod(shiftright(CAST({expr} AS BIGINT), {8 * i}),"
-            f" 256)), 2, '0'))"
-            for i in range(n)
-        ) + ")"
-
-    header = F.expr(
-        "concat(X'52494646', "
-        + le_sql("__tdsz + 36", 4)
-        + ", X'57415645666D7420', "
-        + le_sql("16", 4) + ", " + le_sql("1", 2) + ", "
-        + le_sql("__nch", 2) + ", " + le_sql("__trate", 4) + ", "
-        + le_sql("__trate * 2 * __nch", 4) + ", "
-        + le_sql("2 * __nch", 2) + ", " + le_sql("16", 2)
-        + ", X'64617461', "
-        + le_sql("__tdsz", 4)
-        + ")"
-    )
-    # frame copies: 2*nch bytes per kept sample, starting at frame lo+j
-    frames_sql = (
-        "transform(sequence(CAST(0 AS BIGINT), __tm - 1),"
-        " jtr -> substring(__hx,"
-        " CAST((44 + (__tb.lo + jtr) * 2 * __nch) * 2 + 1 AS INT),"
-        " CAST(2 * __nch * 2 AS INT)))"
-    )
-    payload = F.when(
-        F.col("__tm") > 0,
-        F.unhex(F.expr(f"array_join({frames_sql}, '')")),
-    ).otherwise(F.lit(b""))
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__nch", "__nsmp", "__trate", "__tb", "__tm",
-                     "__tdsz", "__ok")
-    ]
-    return out.select(
-        *keep, F.when(ok, F.concat(header, payload)).alias(out_col)
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def ppm_crop(
@@ -1322,8 +974,7 @@ def ppm_crop(
     row-slices of ``3*out_w`` contiguous bytes — crops copy whole
     scanline segments, so this is ``out_h`` substrings, not
     ``out_w*out_h``), concatenated after the rebuilt header. Scan-stage
-    Catalyst, no Python; sized for thumbnail-scale payloads like the
-    rest of the expression codecs."""
+    Catalyst, no Python."""
     if x < 0 or y < 0 or out_w <= 0 or out_h <= 0:
         raise ValueError("need x, y >= 0 and out_w, out_h > 0")
     raw = F.col(binary_col)
@@ -1350,29 +1001,11 @@ def ppm_crop(
 # dHash) — the hash step of the near-dup family run on REAL codec output
 # ---------------------------------------------------------------------------
 
-def _wav_sample0_sql(idx: str) -> str:
-    """SQL fragment: signed 16-bit LE channel-0 sample at index ``idx``
-    (an expression string), reading hex column ``__hx`` with channel
-    count ``__nch``. PCM starts at 1-based byte 45."""
-    pos = f"(CAST(45 AS BIGINT) + ({idx}) * __nch * 2)"
-    b0 = (
-        f"CAST(conv(substring(__hx, CAST(({pos}) * 2 - 1 AS INT), 2),"
-        f" 16, 10) AS BIGINT)"
-    )
-    b1 = (
-        f"CAST(conv(substring(__hx, CAST(({pos}) * 2 + 1 AS INT), 2),"
-        f" 16, 10) AS BIGINT)"
-    )
-    v = f"({b0} + 256 * {b1})"
-    return f"(CASE WHEN {v} >= 32768 THEN {v} - 65536 ELSE {v} END)"
-
-
 def audio_fingerprint(
     df: DataFrame,
     binary_col: str = "audio",
     out_col: str = "afp",
     n_frames: int = 17,
-    engine: str = "auto",
 ) -> DataFrame:
     """Energy-delta acoustic fingerprint over channel 0 of canonical
     PCM-16 WAVs: the samples are split into ``n_frames`` equal frames
@@ -1383,55 +1016,34 @@ def audio_fingerprint(
     the time axis): robust to gain (monotone) and small edits, so equal
     or near-equal fingerprints are near-duplicate clips.
 
-    Whole thing is scan-stage Catalyst: one nested fold reads each
-    sample exactly once (outer transform over frames, inner aggregate
-    over that frame's index range), built as ONE ``F.expr`` string (the
-    Column-object form costs real driver seconds in py4j round-trips —
-    see ``_le_sql``). Malformed blobs -> NULL fingerprint via the
-    shared poison-pill header gate. Pair mining over the fingerprint
-    is ``neardup.hamming_pairs`` (banded, never n²). Default engine:
-    the Arrow kernel (``_arrow_engine``)."""
+    One cumulative sum of squared samples per file gives every frame
+    energy. Malformed blobs and zero-sample files -> NULL fingerprint
+    via the shared poison-pill header gate. Pair mining over the
+    fingerprint is ``neardup.hamming_pairs`` (banded, never n²)."""
     if not 2 <= n_frames <= 64:
         raise ValueError(f"n_frames must be in [2, 64], got {n_frames}")
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(out_col, T.LongType())]
+    nf = int(n_frames)
 
-        return codecs_arrow.audio_fingerprint(df, binary_col, out_col, n_frames)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__nch": F.when(ok, n_ch.cast("long")),
-            "__nsmp": F.when(ok, n_samp),
-        }
-    )
-    nf = n_frames
-    fs = f"((fqaf * __nsmp) DIV {nf})"
-    fe = f"(((fqaf + 1) * __nsmp) DIV {nf})"
-    en_sql = (
-        f"transform(sequence(CAST(0 AS BIGINT), CAST({nf - 1} AS BIGINT)),"
-        f" fqaf -> CASE WHEN {fe} > {fs} THEN"
-        f" aggregate(transform(sequence({fs}, {fe} - 1),"
-        f" iaf -> {_wav_sample0_sql('iaf')}),"
-        f" CAST(0 AS BIGINT), (aaf, vaf) -> aaf + vaf * vaf)"
-        f" ELSE CAST(0 AS BIGINT) END)"
-    )
-    out = out.withColumn(
-        "__en", F.when(ok & (F.col("__nsmp") > 0), F.expr(en_sql))
-    )
-    pack_sql = " + ".join(
-        f"(CASE WHEN element_at(__en, {i + 2}) > element_at(__en, {i + 1})"
-        f" THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i in range(nf - 1)
-    )
-    keep = [c for c in out.columns if c not in ("__hx", "__nch", "__nsmp", "__en", "__ok")]
-    return out.select(
-        *keep,
-        F.when(ok & (F.col("__nsmp") > 0), F.expr(pack_sql)).alias(out_col),
-    )
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,)
+        nch, _rate, n = hdr
+        if n == 0:
+            return (None,)
+        v = _samples(b)[::nch]
+        cs = np.concatenate(([0], np.cumsum(v * v)))
+        en = [
+            int(cs[(f + 1) * n // nf] - cs[f * n // nf]) for f in range(nf)
+        ]
+        sig = 0
+        for f in range(nf - 1):
+            if en[f + 1] > en[f]:
+                sig |= 1 << f
+        return (_i64(sig),)
+
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def audio_fingerprint_pairs(
@@ -1465,7 +1077,6 @@ def ppm_dhash(
     out_col: str = "dhash",
     grid_w: int = 8,
     grid_h: int = 7,
-    engine: str = "auto",
 ) -> DataFrame:
     """Difference-hash (dHash — the classic public gradient image
     fingerprint) over REAL P6 pixels: nearest-neighbor-sample a
@@ -1476,71 +1087,45 @@ def ppm_dhash(
     threshold, so the two hashes are complementary screens.
 
     Grid positions replay ``ppm_resize_nn``'s NN mapping
-    (``src = (dst * src_dim) DIV dst_dim``); the luma array is ONE
-    interpreted transform over ``(grid_w+1)*grid_h`` points (each
-    reading 3 bytes from the hexed blob), the packing is a scalar
-    projection — scan-stage, no shuffle, no Python. Sized for
-    thumbnail-scale payloads like the rest of the expression codecs;
-    the default engine resolves to the Arrow ``mapInPandas`` kernel
-    (``_arrow_engine``), which reuses the same NN-grid/threshold/pack
-    arithmetic at any payload size. Malformed blobs -> NULL hash via
-    the poison-pill header gate. Pair mining is
-    ``neardup.hamming_pairs``."""
+    (``src = (dst * src_dim) DIV dst_dim``); only the grid's pixels
+    are read. A zero-area image hashes to 0 (no gradient sets a bit);
+    malformed blobs -> NULL hash via the poison-pill header gate. Pair
+    mining is ``neardup.hamming_pairs``."""
     bits = grid_w * grid_h
     if not (grid_w >= 1 and grid_h >= 1 and bits <= 63):
         raise ValueError(
             f"need grid_w, grid_h >= 1 and grid_w*grid_h <= 63, got "
             f"{grid_w}x{grid_h}"
         )
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
-
-        return codecs_arrow.ppm_dhash(df, binary_col, out_col, grid_w, grid_h)
-    raw = F.col(binary_col)
-    ok, w, h, mx, hdr_len = _ppm_header(raw)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__w": F.when(ok, w.cast("long")),
-            "__h": F.when(ok, h.cast("long")),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
+    fields = [T.StructField(out_col, T.LongType())]
     gw1 = grid_w + 1
-    sr = f"(((kdh DIV {gw1}) * __h) DIV {grid_h})"
-    sc = f"(((kdh % {gw1}) * __w) DIV {gw1})"
-    base = f"(__hdr + ({sr} * __w + {sc}) * 3)"
 
-    def byte(ch: int) -> str:
-        return (
-            f"CAST(conv(substring(__hx, CAST(({base} + {ch + 1}) * 2 - 1"
-            f" AS INT), 2), 16, 10) AS BIGINT)"
-        )
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None:
+            return (None,)
+        w, h, _mx, hdr = p
+        if w * h == 0:
+            return (0,)
+        px = np.frombuffer(b, dtype=np.uint8, offset=hdr).astype(np.int64)
+        rows = (np.arange(grid_h, dtype=np.int64) * h) // grid_h
+        cols = (np.arange(gw1, dtype=np.int64) * w) // gw1
+        base = (rows[:, None] * w + cols[None, :]) * 3
+        lm = 299 * px[base] + 587 * px[base + 1] + 114 * px[base + 2]
+        sig = 0
+        for r in range(grid_h):
+            for c in range(grid_w):
+                if lm[r, c + 1] > lm[r, c]:
+                    sig |= 1 << (r * grid_w + c)
+        return (_i64(sig),)
 
-    lm_sql = (
-        f"transform(sequence(CAST(0 AS BIGINT), CAST({gw1 * grid_h - 1} AS BIGINT)),"
-        f" kdh -> 299 * {byte(0)} + 587 * {byte(1)} + 114 * {byte(2)})"
-    )
-    out = out.withColumn("__lm", F.when(ok, F.expr(lm_sql)))
-    pack_sql = " + ".join(
-        f"(CASE WHEN element_at(__lm, {r * gw1 + c + 2})"
-        f" > element_at(__lm, {r * gw1 + c + 1})"
-        f" THEN CAST({1 << (r * grid_w + c)} AS BIGINT)"
-        f" ELSE CAST(0 AS BIGINT) END)"
-        for r in range(grid_h)
-        for c in range(grid_w)
-    )
-    keep = [c for c in out.columns if c not in ("__hx", "__w", "__h", "__hdr", "__lm", "__ok")]
-    return out.select(*keep, F.when(ok, F.expr(pack_sql)).alias(out_col))
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def ppm_blur_score(
     df: DataFrame,
     binary_col: str = "image",
     out_col: str = "lap_var",
-    engine: str = "auto",
 ) -> DataFrame:
     """Blur / focus screen over real P6 pixels — the variance-of-
     Laplacian detector (Pech-Pacheco et al., the standard OpenCV
@@ -1555,95 +1140,35 @@ def ppm_blur_score(
 
     and the score is the population variance of ``lap`` over the
     interior, computed from exact BIGINT (sum, sum-of-squares) — the
-    single float step is the final division, so any engine replays the
-    bytes bit-identically. Reported on the 0..255 luma scale
-    (divided by 1000^2). Sharp/textured images score high, defocused
-    or solid ones near 0.
+    single float step is the final division, so an oracle replays it
+    bit-identically. Reported on the 0..255 luma scale (divided by
+    1000^2). Sharp/textured images score high, defocused or solid ones
+    near 0. Images with no interior (w < 3 or h < 3) and malformed
+    blobs -> NULL.
 
-    One fold per row (each element reads 15 bytes from the hexed blob
-    — neighbour lumas are computed inline, never via a materialized
-    array another lambda would mis-bind, see decode_wav notes);
-    scan-stage Catalyst, no shuffle, no Python. Images with no
-    interior (w < 3 or h < 3) and malformed blobs -> NULL.
-
-    Output: input columns + (n_interior, ``out_col``). Default engine:
-    the Arrow kernel (``_arrow_engine``)."""
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
-
-        return codecs_arrow.ppm_blur_score(df, binary_col, out_col)
-    raw = F.col(binary_col)
-    ok, w, h, mx, hdr_len = _ppm_header(raw)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__bw": F.when(ok, w.cast("long")),
-            "__bh": F.when(ok, h.cast("long")),
-            "__bhdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
-    hxc = F.col("__hx")
-    wl, hl = F.col("__bw"), F.col("__bh")
-    iw = wl - 2
-    n_int = (wl - 2) * (hl - 2)
-    has_interior = ok & (wl >= 3) & (hl >= 3)
-
-    def luma_at(x: Column, y: Column) -> Column:
-        base = F.col("__bhdr") + (y * wl + x) * 3
-        return (
-            _u8h(hxc, base + 1) * 299
-            + _u8h(hxc, base + 2) * 587
-            + _u8h(hxc, base + 3) * 114
-        )
-
-    def lap(i: Column) -> Column:
-        x = F.pmod(i, iw) + 1
-        y = (i - F.pmod(i, iw)) / iw + 1
-        yl = y.cast("long")
-        return (
-            4 * luma_at(x, yl)
-            - luma_at(x - 1, yl)
-            - luma_at(x + 1, yl)
-            - luma_at(x, yl - 1)
-            - luma_at(x, yl + 1)
-        )
-
-    idx = F.sequence(F.lit(0).cast("long"), n_int - 1)
-    zl = F.lit(0).cast("long")
-    acc0 = F.struct(zl.alias("s"), zl.alias("q"))
-    st = F.when(
-        has_interior,
-        F.aggregate(
-            F.transform(idx, _lam("ibl", lambda i: lap(i))),
-            acc0,
-            _lam(
-                "abl, vbl",
-                lambda a, v: F.struct(
-                    (a["s"] + v).alias("s"), (a["q"] + v * v).alias("q")
-                ),
-            ),
-        ),
-    )
-    out = out.select("*", st.alias("__bl"))
-    a = F.col("__bl")
-    # exact integer numerator n*q - s^2, one double division; back to
-    # the 0..255 luma scale (the 1000x integer luma squares under var)
-    var = (
-        (n_int * a["q"] - a["s"] * a["s"]).cast("double")
-        / (n_int * n_int).cast("double")
-        / 1.0e6
-    )
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__bw", "__bh", "__bhdr", "__bl", "__ok")
+    Output: input columns + (n_interior, ``out_col``)."""
+    fields = [
+        T.StructField("n_interior", T.LongType()),
+        T.StructField(out_col, T.DoubleType()),
     ]
-    return out.select(
-        *keep,
-        F.when(has_interior, n_int).alias("n_interior"),
-        F.when(has_interior, var).alias(out_col),
-    )
+
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None or p[0] < 3 or p[1] < 3:
+            return (None, None)
+        w, h, _mx, hdr = p
+        lm = _luma1000(b, w, h, hdr)
+        lap = (
+            4 * lm[1:-1, 1:-1] - lm[1:-1, :-2] - lm[1:-1, 2:]
+            - lm[:-2, 1:-1] - lm[2:, 1:-1]
+        )
+        n = (w - 2) * (h - 2)
+        s, q = int(lap.sum()), int((lap * lap).sum())
+        num = _i64(_i64(n * q) - _i64(s * s))
+        var = float(num) / float(_i64(n * n)) / 1.0e6
+        return (n, var)
+
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def dft_coeffs(
@@ -1651,12 +1176,10 @@ def dft_coeffs(
 ) -> "dict[int, tuple[list[int], list[int]]]":
     """Integer-quantized DFT basis shared by ``wav_spectral`` and its
     byte-replay oracle: for each bin k, (cos row, sin row) with
-    ``row[n] = round(scale * cos/sin(2 pi k n / n_samples))``. Both
-    engines consume the SAME literals, so the correlation sums are
-    exact BIGINT — the engine-portable determinism contract (a float
-    trig chain would differ in ulps)."""
-    import math
-
+    ``row[n] = round(scale * cos/sin(2 pi k n / n_samples))``. The
+    operator and the oracle consume the SAME literals, so the
+    correlation sums are exact BIGINT on both sides (a float trig chain
+    would differ in ulps)."""
     out = {}
     for k in bins:
         out[k] = (
@@ -1678,7 +1201,6 @@ def wav_spectral(
     bins: "tuple[int, ...]" = (1, 2, 3, 6),
     binary_col: str = "audio",
     coef_scale: int = 1000,
-    engine: str = "auto",
 ) -> DataFrame:
     """Spectral-energy screen over the leading ``n_samples`` channel-0
     samples of canonical PCM-16 WAVs: per DFT bin k the normalized
@@ -1689,13 +1211,10 @@ def wav_spectral(
 
     where the trig basis is integer-quantized at ``coef_scale``
     (``dft_coeffs``) so the correlations are exact BIGINT and the only
-    float step is the final division — deterministic across engines
-    and partitionings. The audio twin of ``ppm_blur_score``'s quality
-    screen: tone/hum detection (one dominant bin), bandwidth checks,
-    narrowband-vs-broadband triage — without leaving whole-stage
-    codegen (the per-bin sums are UNROLLED scalar reads of one
-    materialized sample array — the dHash pack pattern — so there is
-    no higher-order fold in the hot path at all).
+    float step is the final division — deterministic across
+    partitionings and replayable by an oracle. The audio counterpart
+    of ``ppm_blur_score``'s quality screen: tone/hum detection (one
+    dominant bin), bandwidth checks, narrowband-vs-broadband triage.
 
     Declared quantization divergence: basis values carry
     ``1/coef_scale`` rounding, so p_k differs from the float DFT by
@@ -1703,99 +1222,42 @@ def wav_spectral(
 
     Files shorter than ``n_samples`` (or malformed) -> NULL powers.
     Output: input columns + ``p_bin{k}`` per bin + ``dom_bin`` (the
-    argmax bin, ties to the lowest k; NULL when powers are NULL).
-    Default engine: the Arrow kernel (``_arrow_engine``)."""
+    argmax bin, ties to the lowest k; NULL when powers are NULL)."""
     if n_samples < 2:
         raise ValueError(f"n_samples must be >= 2, got {n_samples}")
     if not bins:
         raise ValueError("bins must be non-empty")
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
-
-        return codecs_arrow.wav_spectral(
-            df, n_samples, bins, binary_col, coef_scale
-        )
     coeffs = dft_coeffs(n_samples, bins, coef_scale)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok & (n_samp >= n_samples))
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__nch": F.when(ok, n_ch.cast("long")),
-        }
-    )
-    # materialized sample array, consumed ONLY by scalar element_at
-    # reads in the next projection (the ppm_dhash pack pattern; a fold
-    # reading it would mis-bind, see decode_wav notes)
-    v_sql = (
-        f"transform(sequence(CAST(0 AS BIGINT), CAST({n_samples - 1} AS BIGINT)),"
-        f" ksp -> CASE WHEN"
-        f" (CAST(conv(substring(__hx, CAST((45 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)"
-        f"  + 256 * CAST(conv(substring(__hx, CAST((46 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)) >= 32768"
-        f" THEN (CAST(conv(substring(__hx, CAST((45 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)"
-        f"  + 256 * CAST(conv(substring(__hx, CAST((46 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)) - 65536"
-        f" ELSE (CAST(conv(substring(__hx, CAST((45 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)"
-        f"  + 256 * CAST(conv(substring(__hx, CAST((46 + ksp * __nch * 2) * 2 - 1 AS INT), 2), 16, 10) AS BIGINT)) END)"
-    )
-    out = out.withColumn("__sv", F.when(ok, F.expr(v_sql)))
-
-    def corr_sql(row: "list[int]") -> str:
-        terms = [
-            f"element_at(__sv, {n + 1}) * CAST({row[n]} AS BIGINT)"
-            for n in range(n_samples)
-            if row[n] != 0
-        ]
-        return "(" + (" + ".join(terms) if terms else "CAST(0 AS BIGINT)") + ")"
-
-    pw_cols = {}
-    for k in bins:
-        cr, sr = coeffs[k]
-        pw_cols[f"__pw{k}"] = F.when(
-            ok,
-            F.expr(
-                f"{corr_sql(cr)} * {corr_sql(cr)}"
-                f" + {corr_sql(sr)} * {corr_sql(sr)}"
-            ),
-        )
-    out = out.withColumns(pw_cols)
+    basis = {
+        k: (np.array(cr, dtype=np.int64), np.array(sr, dtype=np.int64))
+        for k, (cr, sr) in coeffs.items()
+    }
     denom = float(coef_scale) ** 2 * float(n_samples) ** 2
-    dom = None
-    for k in bins:   # ties -> lowest k: strict > against all later bins
-        cond = None
-        for j in bins:
-            if j == k:
-                continue
-            c = (
-                F.col(f"__pw{k}") > F.col(f"__pw{j}")
-                if j < k
-                else F.col(f"__pw{k}") >= F.col(f"__pw{j}")
-            )
-            cond = c if cond is None else (cond & c)
-        cond = cond if cond is not None else F.lit(True)
-        dom = F.when(ok & cond, F.lit(k)) if dom is None else dom.when(
-            ok & cond, F.lit(k)
-        )
-    keep = [
-        c for c in out.columns
-        if c not in ("__hx", "__nch", "__sv", "__ok")
-        and not c.startswith("__pw")
+    fields = [T.StructField(f"p_bin{k}", T.DoubleType()) for k in bins] + [
+        T.StructField("dom_bin", T.IntegerType())
     ]
-    return out.select(
-        *keep,
-        *[
-            (F.col(f"__pw{k}") / F.lit(denom)).alias(f"p_bin{k}")
-            for k in bins
-        ],
-        dom.cast("int").alias("dom_bin"),
-    )
+
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None or hdr[2] < n_samples:
+            return (None,) * (len(bins) + 1)
+        nch = hdr[0]
+        v = _samples(b)[::nch][:n_samples]
+        pw = {}
+        for k in bins:
+            cr, sr = basis[k]
+            x, y = int(v @ cr), int(v @ sr)
+            pw[k] = _i64(_i64(x * x) + _i64(y * y))
+        best = max(pw.values())
+        dom = min(k for k in bins if pw[k] == best)
+        return (*[pw[k] / denom for k in bins], dom)
+
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def ppm_contrast_stretch(
     df: DataFrame,
     binary_col: str = "image",
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-image min-max contrast normalization audit over real P6
     pixels: computes the integer-luma dynamic range and the FULL
@@ -1805,208 +1267,56 @@ def ppm_contrast_stretch(
 
     carried out entirely in exact integer math (round-half-up via
     ``((v-lo)*2000 + (hi-lo)) div (2*(hi-lo))``), so the output is
-    bit-identical on any engine — the preprocessing-parity check for a
+    exact and oracle-replayable — the preprocessing-parity check for a
     vision-data normalize stage without emitting the pixels themselves.
 
-    Two scan-stage integer folds per row (pass 1: min/max; pass 2: the
-    remap moments), zero shuffles, no Python. Output per image:
-    ``luma_lo``/``luma_hi`` (0..255 scale), ``contrast``
-    ((hi-lo)/255, 4dp), ``stretch_sum``/``stretch_sumsq`` (exact BIGINT
-    moments of v' in 0..1000). Default engine: the Arrow kernel
-    (``_arrow_engine``).
+    Output per image: ``n_px``, ``luma_lo``/``luma_hi`` (0..255 scale),
+    ``contrast`` ((hi-lo)/255, 4dp), ``stretch_sum``/``stretch_sumsq``
+    (exact BIGINT moments of v' in 0..1000). Zero-area or malformed
+    images -> NULL.
     """
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [
+        T.StructField("n_px", T.LongType()),
+        T.StructField("luma_lo", T.DoubleType()),
+        T.StructField("luma_hi", T.DoubleType()),
+        T.StructField("contrast", T.DoubleType()),
+        T.StructField("stretch_sum", T.LongType()),
+        T.StructField("stretch_sumsq", T.LongType()),
+    ]
 
-        return codecs_arrow.ppm_contrast_stretch(df, binary_col)
-    raw = F.col(binary_col)
-    ok, w, h, mxv, hdr_len = _ppm_header(raw)
-    df = df.withColumn("__ok", ok)  # gate evaluated once (decode_ppm)
-    ok = F.col("__ok")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-        }
-    )
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    n_px = (w * h).cast("long")
-    idx = F.sequence(F.lit(0).cast("long"), n_px - 1)
-
-    def luma(i: Column) -> Column:
-        base = hdrc + i * 3
+    def per_blob(b):
+        p = _pnm_parse(b)
+        if p is None or p[0] * p[1] == 0:
+            return (None,) * 6
+        w, h, _mx, hdr = p
+        lm = _luma1000(b, w, h, hdr).ravel()
+        lo, hi = int(lm.min()), int(lm.max())
+        rng = hi - lo
+        if rng > 0:
+            vp = ((lm - lo) * 2000 + rng) // (2 * rng)
+        else:
+            vp = np.full(lm.shape, 500, dtype=np.int64)
         return (
-            _u8h(hxc, base + 1) * 299
-            + _u8h(hxc, base + 2) * 587
-            + _u8h(hxc, base + 3) * 114
+            w * h, lo / 1000.0, hi / 1000.0,
+            math.floor(rng / 255000.0 * 10000 + 0.5) / 10000,
+            int(vp.sum()), int((vp * vp).sum()),
         )
 
-    mm0 = F.struct(
-        F.lit(1 << 40).cast("long").alias("mn"),
-        F.lit(-1).cast("long").alias("mx"),
-    )
-    mm = F.when(
-        ok & (n_px > 0),
-        F.aggregate(
-            F.transform(idx, _lam("ics", lambda i: luma(i))),
-            mm0,
-            _lam("acs, vcs", lambda a, v: F.struct(
-                F.least(a["mn"], v).alias("mn"),
-                F.greatest(a["mx"], v).alias("mx"),
-            )),
-        ),
-    )
-    out = out.select("*", mm.alias("__mm"))
-    lo, hi = F.col("__mm")["mn"], F.col("__mm")["mx"]
-    rng = hi - lo
-
-    def stretched(i: Column) -> Column:
-        num = (luma(i) - lo) * 2000 + rng
-        den = rng * 2
-        # exact integer div of non-negatives: (num - num % den) / den
-        return F.when(rng > 0, ((num - num % den) / den).cast("long")).otherwise(
-            F.lit(500).cast("long")
-        )
-
-    zl = F.lit(0).cast("long")
-    st0 = F.struct(zl.alias("s"), zl.alias("q"))
-    st = F.when(
-        ok & (n_px > 0),
-        F.aggregate(
-            F.transform(idx, _lam("jcs", stretched)),
-            st0,
-            _lam("bcs, wcs", lambda a, v: F.struct(
-                (a["s"] + v).alias("s"), (a["q"] + v * v).alias("q")
-            )),
-        ),
-    )
-    out = out.select("*", st.alias("__st"))
-    a = F.col("__st")
-    good = ok & (n_px > 0)
-    return out.withColumns(
-        {
-            "n_px": F.when(good, n_px),
-            "luma_lo": F.when(good, lo / 1000.0),
-            "luma_hi": F.when(good, hi / 1000.0),
-            "contrast": F.when(
-                good, F.floor(rng / 255000.0 * 10000 + 0.5) / 10000
-            ),
-            "stretch_sum": F.when(good, a["s"]),
-            "stretch_sumsq": F.when(good, a["q"]),
-        }
-    ).drop("__hx", "__hdr", "__mm", "__st", "__ok")
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
-def _pgm_value_frames(df: DataFrame, id_col: str, binary_col: str):
-    """Shared front end for per-image pixel-VALUE operators (equalize,
-    Otsu binarize): parse the P5 header, pull every pixel out of the
-    blob ONCE as an array column, and explode to (id, pos, value) rows.
-
-    Returns (base, ids, px): ``base`` is the input + ``__ok``/gate
-    columns (for the final assembly join), ``ids`` the fenced
-    (__id, __npx, __mx, __vals) frame, ``px`` the exploded pixel frame.
-
-    The fence matters twice: (a) downstream must filter on the CHEAP
-    gates only — a filter on the computed __vals column is pushed below
-    the projection and alias-substitutes the whole per-pixel transform
-    tree into it (the e185 pushdown landmine); (b) ``ids`` is
-    localCheckpoint'ed because the pixel frame fans out into a
-    self-join (px ⋈ remap both derive from it) — without lineage
-    truncation the upstream builder tree duplicates into every branch
-    and the plan explodes combinatorially."""
-    # materialize the INPUT blobs before any per-pixel work: the binary
-    # column may itself be an expensive expression (e.g. the output of
-    # ppm_to_pgm), and CollapseProject inlines a single-referenced
-    # hex(raw) alias into the per-pixel lambda — re-evaluating the
-    # whole upstream tree once per PIXEL (interpreted HOFs have no
-    # subexpression elimination). Measured: 62s -> ~2s at sf0.1.
-    df = df.localCheckpoint(eager=False)
-    raw = F.col(binary_col)
-    ok0, w, h, mx, hdr_len = _pnm_header(raw, "P5", bpp=1)
-    src = df.withColumn("__ok", ok0)
-    ok = F.col("__ok")
-    n_px = (w * h).cast("long")
-    src = src.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__hdr": F.when(ok, hdr_len.cast("long")),
-            "__npx": F.when(ok, n_px),
-            "__mx": F.when(ok, mx.cast("long")),
-        }
-    )
-    hxc, hdrc = F.col("__hx"), F.col("__hdr")
-    vals = F.when(
-        ok & (F.col("__npx") > 0),
-        F.transform(
-            F.sequence(F.lit(0).cast("long"), F.col("__npx") - 1),
-            _lam("ieq", lambda i: _u8h(hxc, hdrc + i + 1)),
-        ),
-    )
-    base = src.withColumn("__vals", vals)
-    ids = (
-        base.filter(ok & (F.col("__npx") > 0))
-        .select(F.col(id_col).alias("__id"), "__npx", "__mx", "__vals")
-        .localCheckpoint(eager=False)
-    )
-    px = ids.select("__id", F.posexplode("__vals").alias("__pos", "__v"))
-    return base, ids, px
-
-
-def _pgm_remapped_out(
-    df: DataFrame,
-    base: DataFrame,
-    px: DataFrame,
-    remap: DataFrame,
-    id_col: str,
-    binary_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Shared back end: apply a per-image (value → new value) ``remap``
-    table to the pixel frame, rebuild the payload in pixel order, and
-    emit a real P5 file next to the caller's columns (NULL for rows
-    that were not valid P5)."""
-    rebuilt = (
-        px.join(remap, ["__id", "__v"])
-        .select(
-            "__id", "__pos", F.lpad(F.hex(F.col("__nv")), 2, "0").alias("__h2")
-        )
-        .groupBy("__id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("__pos"), F.col("__h2")))
-                    ),
-                    lambda s: s["__h2"],
-                ),
-                "",
-            ).alias("__payload_hex")
-        )
-    )
-    raw = F.col(binary_col)
-    _, w, h, mx, _ = _pnm_header(raw, "P5", bpp=1)
-    header = F.concat(
-        F.lit("P5\n"), w.cast("string"), F.lit(" "), h.cast("string"),
-        F.lit("\n"), mx.cast("string"), F.lit("\n"),
-    )
-    ok = F.col("__ok")
-    return base.join(
-        rebuilt, base[id_col] == rebuilt["__id"], "left"
-    ).select(
-        *[c for c in df.columns],
-        F.when(
-            ok & (F.col("__npx") > 0) & F.col("__payload_hex").isNotNull(),
-            F.concat(F.encode(header, "UTF-8"), F.unhex(F.col("__payload_hex"))),
-        ).alias(out_col),
-    )
+def _pgm_lut_apply(b, w, h, mx, hdr, lut: np.ndarray) -> bytes:
+    """A real P5 file: the source header fields + ``lut`` applied to
+    every gray byte."""
+    v = np.frombuffer(b, dtype=np.uint8, offset=hdr)
+    header = f"P5\n{w} {h}\n{mx}\n".encode()
+    return header + lut[v].astype(np.uint8).tobytes()
 
 
 def pgm_equalize(
     df: DataFrame,
-    id_col: str,
     binary_col: str = "gray",
     out_col: str = "equalized",
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-image histogram equalization emitting REAL P5 PGM bytes —
     the classic contrast transform (Gonzalez & Woods §3.3), the
@@ -2016,65 +1326,40 @@ def pgm_equalize(
 
     with cdf the per-image cumulative gray histogram and cdf_min its
     smallest nonzero entry. All arithmetic is exact integer half-up
-    (floor((x*2*maxval + denom) / (2*denom))) so the remap is engine-
-    and partitioning-identical; constant images (denominator 0) map to
-    gray 0 by convention.
+    (floor((x*2*maxval + denom) / (2*denom))) so the remap is exact
+    and partitioning-independent; constant images (denominator 0) map
+    to gray 0 by convention.
 
-    Plan: each blob is parsed once and its pixel VALUES leave as an
-    array in one scan-stage projection (the blob itself never rides an
-    explode); pixels become (id, pos, value) rows, the histogram / cdf
-    / remap table live on the ≤256-rows-per-image VALUE frame (one
-    image-keyed window), and the remap join + ordered payload rebuild
-    shuffle pixel-sized frames keyed by image id — linear end to end,
-    no O(n_px²) step. Rows that are not valid P5 get NULL output.
-    Default engine: the Arrow kernel (``_arrow_engine``), which does
-    the histogram/LUT per row with zero shuffles.
+    Per image: one 256-bin histogram, its cumulative sum and a 256-entry
+    lookup table applied to the pixels — zero shuffles. Rows that are
+    not valid P5 (or have zero area) get NULL output.
     """
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(out_col, T.BinaryType())]
 
-        return codecs_arrow.pgm_equalize(df, id_col, binary_col, out_col)
-    base, ids, px = _pgm_value_frames(df, id_col, binary_col)
-    hist = px.groupBy("__id", "__v").agg(F.count(F.lit(1)).alias("__c"))
-    from pyspark.sql import Window
+    def per_blob(b):
+        p = _pnm_parse(b, "P5", 1)
+        if p is None or p[0] * p[1] == 0:
+            return (None,)
+        w, h, mx, hdr = p
+        v = np.frombuffer(b, dtype=np.uint8, offset=hdr)
+        cdf = np.cumsum(np.bincount(v, minlength=256).astype(np.int64))
+        npx = w * h
+        cdfmin = int(cdf[int(v.min())])
+        denom = npx - cdfmin
+        if denom > 0:
+            lut = ((cdf - cdfmin) * mx * 2 + denom) // (2 * denom)
+        else:
+            lut = np.zeros(256, dtype=np.int64)
+        return (_pgm_lut_apply(b, w, h, mx, hdr, lut),)
 
-    wcum = (
-        Window.partitionBy("__id")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("__id")
-    cd = hist.select(
-        "__id", "__v",
-        F.sum("__c").over(wcum).alias("__cdf"),
-    ).withColumn("__cdfmin", F.min("__cdf").over(wall))
-    stats = ids.select("__id", "__npx", "__mx")
-    denom = F.col("__npx") - F.col("__cdfmin")
-    remap = cd.join(stats, "__id").select(
-        "__id", "__v",
-        F.when(
-            denom > 0,
-            F.floor(
-                (
-                    (F.col("__cdf") - F.col("__cdfmin")) * F.col("__mx") * 2
-                    + denom
-                )
-                / (2 * denom)
-            ).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
-        .alias("__nv"),
-    )
-    return _pgm_remapped_out(df, base, px, remap, id_col, binary_col, out_col)
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def pgm_binarize_otsu(
     df: DataFrame,
-    id_col: str,
     binary_col: str = "gray",
     out_col: str = "binarized",
     threshold_col: str = "otsu_threshold",
-    engine: str = "auto",
 ) -> DataFrame:
     """Otsu binarization emitting REAL P5 bytes: per image, pick the
     threshold t* maximizing the between-class variance of the gray
@@ -2085,70 +1370,50 @@ def pgm_binarize_otsu(
     For each candidate t (every distinct value with cdf(t) < n_px):
         crit(t) = (cdf(t)·S - n_px·cumsum(t))² / (cdf(t)·(n_px - cdf(t)))
     with S the image's gray total — the standard algebraic form of
-    ω₀ω₁(μ₀-μ₁)². All inputs are exact integers in doubles (< 2⁵³), the
-    expression shape is engine-identical, ties break to the smallest t,
-    and a constant image (no valid split) thresholds at its single
-    value (all pixels → 0).
+    ω₀ω₁(μ₀-μ₁)². All inputs are exact integers in doubles (< 2⁵³);
+    the numerator is a BIGINT cast to double, then squared and divided,
+    the op order an oracle replays; ties break to the smallest t, and a
+    constant image (no valid split) thresholds at its single value (all
+    pixels → 0).
 
-    Same scale shape as ``pgm_equalize``: pixels leave the blob once,
-    the criterion lives on the ≤256-rows-per-image value frame, linear
-    id-keyed shuffles only. Adds ``threshold_col`` (BIGINT, NULL for
-    invalid rows) next to the emitted file. Default engine: the Arrow
-    kernel (``_arrow_engine``).
+    Per image: one histogram pass, the criterion over ≤256 candidate
+    values, and a lookup-table remap — zero shuffles. Adds
+    ``threshold_col`` (BIGINT, NULL for invalid or zero-area rows) next
+    to the emitted file.
     """
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [
+        T.StructField(out_col, T.BinaryType()),
+        T.StructField(threshold_col, T.LongType()),
+    ]
 
-        return codecs_arrow.pgm_binarize_otsu(
-            df, id_col, binary_col, out_col, threshold_col
-        )
-    from pyspark.sql import Window
+    def per_blob(b):
+        p = _pnm_parse(b, "P5", 1)
+        if p is None or p[0] * p[1] == 0:
+            return (None, None)
+        w, h, mx, hdr = p
+        v = np.frombuffer(b, dtype=np.uint8, offset=hdr)
+        counts = np.bincount(v, minlength=256).astype(np.int64)
+        present = np.nonzero(counts)[0]
+        cdf = np.cumsum(counts)
+        cs = np.cumsum(np.arange(256, dtype=np.int64) * counts)
+        npx = w * h
+        S = int(cs[255])
+        best_t, best_crit = None, None
+        for u in present:
+            c = int(cdf[u])
+            if c >= npx:
+                continue
+            a = float(_i64(c * S - npx * int(cs[u])))
+            den = float(c * (npx - c))
+            crit = a * a / den
+            if best_crit is None or crit > best_crit:
+                best_t, best_crit = int(u), crit
+        if best_t is None:          # constant image: its single value
+            best_t = int(present[0])
+        lut = np.where(np.arange(256) <= best_t, 0, mx).astype(np.int64)
+        return (_pgm_lut_apply(b, w, h, mx, hdr, lut), best_t)
 
-    base, ids, px = _pgm_value_frames(df, id_col, binary_col)
-    hist = px.groupBy("__id", "__v").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = (
-        Window.partitionBy("__id")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cd = hist.select(
-        "__id", "__v",
-        F.sum("__c").over(wcum).alias("__cdf"),
-        F.sum(F.col("__v") * F.col("__c")).over(wcum).alias("__cs"),
-    )
-    tot = hist.groupBy("__id").agg(
-        F.sum(F.col("__v") * F.col("__c")).alias("__S")
-    )
-    cand = cd.join(tot, "__id").join(
-        ids.select("__id", "__npx", "__mx"), "__id"
-    )
-    a = (F.col("__cdf") * F.col("__S") - F.col("__npx") * F.col("__cs")).cast(
-        "double"
-    )
-    den = (F.col("__cdf") * (F.col("__npx") - F.col("__cdf"))).cast("double")
-    crit = F.when(F.col("__cdf") < F.col("__npx"), a * a / den)
-    wbest = Window.partitionBy("__id").orderBy(
-        F.desc_nulls_last("__crit"), F.asc("__v")
-    )
-    best = (
-        cand.withColumn("__crit", crit)
-        .withColumn("__rn", F.row_number().over(wbest))
-        .filter(F.col("__rn") == 1)
-        .select("__id", F.col("__v").alias("__t"), "__mx")
-    )
-    remap = (
-        hist.select("__id", "__v")
-        .join(best, "__id")
-        .select(
-            "__id", "__v",
-            F.when(F.col("__v") <= F.col("__t"), F.lit(0).cast("long"))
-            .otherwise(F.col("__mx"))
-            .alias("__nv"),
-        )
-    )
-    out = _pgm_remapped_out(df, base, px, remap, id_col, binary_col, out_col)
-    thr = best.select(F.col("__id"), F.col("__t").alias(threshold_col))
-    return out.join(thr, out[id_col] == thr["__id"], "left").drop("__id")
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 def wav_gain(
@@ -2156,7 +1421,6 @@ def wav_gain(
     target_peak: int = 30000,
     binary_col: str = "audio",
     out_col: str = "normalized",
-    engine: str = "auto",
 ) -> DataFrame:
     """Peak normalization emitting REAL WAV bytes: scale every sample
     by target_peak / peak(|samples|) so the loudest sample lands
@@ -2164,86 +1428,40 @@ def wav_gain(
     run before energy thresholding (a quiet and a loud copy of the
     same clip otherwise score differently in every energy screen).
 
-    The rescale is exact integer half-up, engine-identical:
+    The rescale is exact integer half-up:
         out = floor((2·v·T + P) / (2·P))       (P = peak, T = target)
     so ±P map to exactly ±T and no clamp is needed for T <= 32767.
-    Silent files (P = 0) pass through unchanged (gain is undefined).
-    One fold computes the peak, one transform rewrites the samples —
-    each int16 word leaves the blob once per pass; the 44-byte header
-    is copied verbatim (rate/channels/sizes are unchanged). Default
-    engine: the Arrow kernel (``_arrow_engine``).
+    Silent files (P = 0) pass through unchanged (gain is undefined);
+    zero-sample or malformed files -> NULL. The 44-byte header is
+    copied verbatim (rate/channels/sizes are unchanged).
     """
     if not 0 < target_peak <= 32767:
         raise ValueError(
             f"target_peak must be in (0, 32767], got {target_peak}"
         )
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(out_col, T.BinaryType())]
+    tp = int(target_peak)
 
-        return codecs_arrow.wav_gain(df, target_peak, binary_col, out_col)
-    # materialize the input blobs first: this operator chains TWO HOF
-    # passes (the peak fold is referenced inside the rewrite lambda),
-    # so an expression-valued binary column (e.g. a make_wav builder
-    # tree) would be inlined into nested lambdas multiple times —
-    # observed as a driver OOM in expression canonicalization
-    df = df.localCheckpoint(eager=False)
-    raw = F.col(binary_col)
-    ok, n_ch, rate, n_samp = _wav_header(binary_col)
-    df = df.withColumn("__ok", ok)   # see decode_ppm: one gate eval
-    ok = F.col("__ok")
-    n_words = (n_samp * n_ch).cast("long")
-    out = df.withColumns(
-        {
-            "__hx": F.when(ok, F.hex(raw)),
-            "__nw": F.when(ok, n_words),
-        }
-    )
-    hxc = F.col("__hx")
+    def per_blob(b):
+        hdr = _wav_parse(b)
+        if hdr is None:
+            return (None,)
+        nch, _rate, n = hdr
+        if n * nch == 0:
+            return (None,)
+        v = _samples(b)
+        pk = int(np.abs(v).max())
+        if pk == 0:
+            return (b,)
+        scaled = (2 * v * tp + pk) // (2 * pk)
+        return (b[:44] + (scaled % 65536).astype("<u2").tobytes(),)
 
-    def word(j: Column) -> Column:
-        pos = F.lit(45).cast("long") + j * 2
-        v = _u8h(hxc, pos) + _u8h(hxc, pos + 1) * 256
-        return F.when(v >= 32768, v - 65536).otherwise(v)
-
-    idx = F.sequence(F.lit(0).cast("long"), F.col("__nw") - 1)
-    peak = F.when(
-        ok & (F.col("__nw") > 0),
-        F.aggregate(
-            F.transform(idx, _lam("jwg", word)),
-            F.lit(0).cast("long"),
-            _lam("awg, vwg", lambda a, v: F.greatest(a, F.abs(v))),
-        ),
-    )
-    out = out.withColumn("__pk", peak)
-    pk = F.col("__pk")
-
-    def scaled(j: Column) -> Column:
-        v = word(j)
-        nv = F.floor(
-            (2 * v * F.lit(target_peak) + pk) / (2 * pk)
-        ).cast("long")
-        b = F.pmod(nv, F.lit(65536))
-        return F.concat(
-            F.lpad(F.hex(b % 256), 2, "0"),
-            F.lpad(F.hex(F.floor(b / 256).cast("long")), 2, "0"),
-        )
-
-    payload = F.unhex(
-        F.array_join(F.transform(idx, _lam("jwg2", scaled)), "")
-    )
-    header = F.expr(f"substring({binary_col}, 1, 44)")
-    keep = [c for c in out.columns if c not in ("__hx", "__nw", "__pk", "__ok")]
-    return out.select(
-        *keep,
-        F.when(ok & (F.col("__nw") > 0) & (pk > 0), F.concat(header, payload))
-        .when(ok & (pk == 0), raw)
-        .alias(out_col),
-    )
+    return _append_kernel(df, binary_col, fields, per_blob)
 
 
 # ---------------------------------------------------------------------------
-# PNG (truecolor 8-bit, stored-deflate zlib) — a REAL compressed
-# container decodable with pure byte arithmetic
+# PNG (truecolor 8-bit): a stored-deflate emitter replayable in SQL, a
+# real-DEFLATE emitter, and one decoder for both
 # ---------------------------------------------------------------------------
 
 PNG_SIG_HEX = "89504E470D0A1A0A"
@@ -2277,22 +1495,19 @@ def make_png(width: int, height: int, payload: Column) -> Column:
     The zlib stream inside IDAT uses STORED (BTYPE=0) deflate blocks in
     the greedy 65535-byte layout — byte-identical to what
     ``zlib.compress(raw, level=0)`` emits for raw <= 65531 bytes (one
-    block; past that zlib's block sizes diverge from the greedy model,
-    see ``decode_png``) — so the file is readable by
-    any standards-compliant PNG decoder AND parseable back by
-    ``decode_png``'s expression arithmetic (stored blocks are the one
-    deflate flavor whose payload needs no bit-level Huffman state;
-    RFC 1951 §3.2.4 byte-aligns them). Filter byte 0 (None) per
+    block; past that zlib's block sizes differ from the greedy layout)
+    — so the file is readable by any standards-compliant PNG decoder,
+    ``decode_png`` included, and replayable byte for byte by a SQL
+    oracle (stored blocks are the one deflate flavor whose payload
+    needs no bit-level Huffman state; RFC 1951 §3.2.4 byte-aligns
+    them). Filter byte 0 (None) per
     scanline; IDAT CRC-32 via Spark's builtin ``crc32``; zlib Adler-32
     via one exact integer fold (s2 = L + Σ (L-j+1)·b_j mod 65521 —
     the closed form of the running-sum recurrence, so one pass).
     ``width``/``height`` are Python ints (row/block layout unrolls into
     the expression); sized for thumbnail/sprite payloads like the
-    other emitters (``codecs.py:18-22`` megapixel handoff note).
+    other emitters.
     """
-    import binascii
-    import struct
-
     if width <= 0 or height <= 0:
         raise ValueError("width/height must be positive")
     raw_len = height * (1 + 3 * width)
@@ -2366,13 +1581,174 @@ def make_png(width: int, height: int, payload: Column) -> Column:
     )
 
 
-def _be(raw: Column, pos, n: int) -> Column:
-    """Big-endian unsigned int of ``n`` bytes at 1-based ``pos``."""
-    if not isinstance(pos, Column):
-        pos = F.lit(pos)
-    return F.conv(F.hex(F.substring(raw, pos.cast("int"), n)), 16, 10).cast(
-        "long"
-    )
+_PNG_SIG = bytes.fromhex(PNG_SIG_HEX)
+
+
+def _png_unfilter(scan: "np.ndarray", w: int, h: int) -> "np.ndarray | None":
+    """Invert PNG scanline filters 0-4 (RGB8, bpp=3). NONE/SUB/UP rows
+    are vectorized (SUB is a wrapping per-channel ``np.add.accumulate``,
+    i.e. mod-256 prefix sum); AVERAGE/PAETH rows fall back to a per-byte
+    loop — exactly per the spec's sequential recurrence. Returns the
+    (h, 3w) reconstructed pixel matrix, or None on a filter type > 4."""
+    if (scan[:, 0] > 4).any():
+        return None
+    out = np.zeros((h, 3 * w), dtype=np.uint8)
+    prev = np.zeros(3 * w, dtype=np.uint8)
+    for r in range(h):
+        f = int(scan[r, 0])
+        rec = scan[r, 1:].copy()
+        if f == 1:  # Sub: Recon(x) = Filt(x) + Recon(x - bpp)
+            for c in range(3):
+                np.add.accumulate(rec[c::3], dtype=np.uint8, out=rec[c::3])
+        elif f == 2:  # Up (uint8 add wraps = mod 256)
+            rec += prev
+        elif f == 3:  # Average
+            for i in range(3 * w):
+                a = int(rec[i - 3]) if i >= 3 else 0
+                rec[i] = (int(rec[i]) + (a + int(prev[i])) // 2) & 0xFF
+        elif f == 4:  # Paeth
+            for i in range(3 * w):
+                a = int(rec[i - 3]) if i >= 3 else 0
+                up = int(prev[i])
+                c = int(prev[i - 3]) if i >= 3 else 0
+                p = a + up - c
+                pa, pb, pc = abs(p - a), abs(p - up), abs(p - c)
+                pred = a if (pa <= pb and pa <= pc) else (up if pb <= pc else c)
+                rec[i] = (int(rec[i]) + pred) & 0xFF
+        out[r] = rec
+        prev = out[r]
+    return out
+
+
+def _png_parse(b: "bytes | None"):
+    """Real PNG decode (truecolor 8-bit): returns (width, height,
+    unfiltered_pixel_matrix) or None.
+
+    Checks, each of which rejects (None): the 8-byte signature; IHDR
+    first, 13 bytes, CRC-valid, bit depth 8, color type 2 (RGB),
+    non-interlaced; every chunk's CRC-32; at least one IDAT; IEND
+    ending the file exactly; the zlib stream (``zlib.decompress``
+    verifies the Adler-32 and every stored or fixed/dynamic-Huffman
+    block); the inflated length against ``h * (1 + 3w)``; and the
+    scanline filter types (0-4, inverted by ``_png_unfilter``).
+    Multiple IDAT chunks concatenate and CRC-valid ancillary chunks are
+    skipped, as real encoders emit them."""
+    if b is None or len(b) < 45:
+        return None
+    if b[0:8] != _PNG_SIG:
+        return None
+    be = lambda o, k: int.from_bytes(b[o : o + k], "big")  # noqa: E731
+    # IHDR (must be first, 13 bytes, CRC-valid, RGB8 non-interlaced)
+    if be(8, 4) != 13 or b[12:16] != b"IHDR":
+        return None
+    if b[24] != 8 or b[25] != 2 or b[26] != 0 or b[27] != 0 or b[28] != 0:
+        return None
+    if binascii.crc32(b[12:29]) != be(29, 4):
+        return None
+    w, h = be(16, 4), be(20, 4)
+    if not (w > 0 and h > 0):
+        return None
+    # chunk walk: every chunk CRC-verified; IDAT payloads concatenate;
+    # IEND must terminate the file exactly
+    off, idat, ended = 33, [], False
+    while off + 12 <= len(b):
+        ln = be(off, 4)
+        if off + 12 + ln > len(b):
+            return None
+        typ = b[off + 4 : off + 8]
+        if binascii.crc32(b[off + 4 : off + 8 + ln]) != be(off + 8 + ln, 4):
+            return None
+        if typ == b"IDAT":
+            idat.append(b[off + 8 : off + 8 + ln])
+        elif typ == b"IEND":
+            if ln != 0 or off + 12 != len(b):
+                return None
+            ended = True
+            break
+        off += 12 + ln
+    if not ended or not idat:
+        return None
+    try:
+        raw = zlib.decompress(b"".join(idat))
+    except zlib.error:
+        return None
+    stride = 1 + 3 * w
+    if len(raw) != h * stride:
+        return None
+    scan = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
+    if not scan[:, 0].any():
+        return w, h, scan[:, 1:]
+    px = _png_unfilter(scan, w, h)
+    return None if px is None else (w, h, px)
+
+
+def make_png_deflate(width, height, payload, level: int = 6,
+                     filter_cycle: bool = True):
+    """Genuine compressed-PNG emitter (pandas UDF, binary -> binary):
+    the payload column must hold exactly ``height * width * 3`` pixel
+    bytes; scanline r is FORWARD-filtered with type ``r % 5`` (all five
+    spec filters, exercising the decoder's unfilter path; pass
+    ``filter_cycle=False`` for all-NONE) and the stream is compressed
+    with ``zlib.compress(level)`` — real fixed/dynamic-Huffman DEFLATE,
+    the layout real encoders emit (``make_png`` is the stored-deflate,
+    SQL-replayable emitter). Wrong-length or NULL payloads emit NULL.
+    """
+    w, h = int(width), int(height)
+
+    def chunk(typ: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", binascii.crc32(typ + data))
+        )
+
+    @F.pandas_udf("binary")
+    def mk(s: pd.Series) -> pd.Series:
+        def one(p):
+            if p is None or len(p) != w * h * 3:
+                return None
+            px = np.frombuffer(bytes(p), dtype=np.uint8).reshape(h, 3 * w)
+            rows = []
+            prev = np.zeros(3 * w, dtype=np.uint8)
+            for r in range(h):
+                t = r % 5 if filter_cycle else 0
+                cur = px[r]
+                if t == 0:
+                    filt = cur.copy()
+                elif t == 1:  # Sub
+                    filt = cur.copy()
+                    filt[3:] = cur[3:] - cur[:-3]
+                elif t == 2:  # Up (uint8 subtract wraps = mod 256)
+                    filt = cur - prev
+                elif t == 3:  # Average
+                    filt = np.empty_like(cur)
+                    for i in range(3 * w):
+                        a = int(cur[i - 3]) if i >= 3 else 0
+                        filt[i] = (int(cur[i]) - (a + int(prev[i])) // 2) & 0xFF
+                else:  # Paeth
+                    filt = np.empty_like(cur)
+                    for i in range(3 * w):
+                        a = int(cur[i - 3]) if i >= 3 else 0
+                        up = int(prev[i])
+                        c = int(prev[i - 3]) if i >= 3 else 0
+                        pp = a + up - c
+                        pa, pb, pc = abs(pp - a), abs(pp - up), abs(pp - c)
+                        pred = (
+                            a if (pa <= pb and pa <= pc)
+                            else (up if pb <= pc else c)
+                        )
+                        filt[i] = (int(cur[i]) - pred) & 0xFF
+                rows.append(bytes([t]) + filt.tobytes())
+                prev = cur
+            z = zlib.compress(b"".join(rows), level)
+            ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
+            return (
+                _PNG_SIG + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", z) + chunk(b"IEND", b"")
+            )
+
+        return s.map(one)
+
+    return mk(payload)
 
 
 def decode_png(
@@ -2380,207 +1756,42 @@ def decode_png(
     binary_col: str = "image",
     meta_col: str = "meta",
     channel_means: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
-    """Parse REAL truecolor PNGs whose zlib stream is stored-deflate in
-    a constant-block-size greedy layout — ``make_png`` output (65535-
-    byte blocks) at any size, and ``zlib.compress(raw, 0)`` output
-    (65531-byte first block) up to TWO stored blocks, i.e. raw <=
-    2*65531 bytes (~128 KB; CPython zlib's third block onward shrinks
-    — e.g. (65531, 32773, 32758) for a 131062-byte stream — which
-    breaks the constant-size model and is rejected, meta NULL, never a
-    wrong value). This is the one compressed-container family that is
-    fully decodable in scan-stage Catalyst byte arithmetic, because
-    stored blocks are byte-aligned (RFC 1951 §3.2.4). The block size
-    is DERIVED from the first block's LEN field and every later block
-    is verified against it.
+    """Parse and decode REAL truecolor PNGs (bit depth 8, color type 2,
+    non-interlaced): the chunk walk, zlib inflate and scanline unfilter
+    of ``_png_parse``. Accepts what real encoders emit — stored or
+    fixed/dynamic-Huffman DEFLATE (``make_png`` and ``make_png_deflate``
+    output, ``zlib.compress`` at any level), multiple IDAT chunks,
+    CRC-valid ancillary chunks and scanline filters 0-4.
 
-    Declared limitations (each makes ``ok`` false, never a wrong
-    answer): single IDAT chunk directly after IHDR; bit depth 8, color
-    type 2 (RGB), non-interlaced; filter 0 on every scanline; Huffman
-    (BTYPE 1/2) blocks are NOT decodable without bit-level state and
-    are rejected.
+    Integrity is VERIFIED from the bytes, not assumed: the signature,
+    IHDR and every chunk's CRC-32, the zlib Adler-32, the inflated
+    length against the header dimensions (poison-pill: a lying header
+    can never size the decode — same discipline as ``_pnm_header``)
+    and every filter type. Anything that fails a check gets NULL
+    ``meta`` (and NULL means), never a crashed job.
 
-    Integrity actually VERIFIED from the bytes (not assumed): the
-    8-byte signature; IHDR layout + its CRC-32 (Spark builtin
-    ``crc32``); the physical file length against the header-implied
-    block layout (poison-pill: a lying header can never size a fold —
-    same discipline as ``_pnm_header``); every stored-block header
-    flag/LEN/NLEN; every scanline filter byte; the IDAT CRC-32; and
-    the zlib Adler-32 recomputed from the pixel bytes.
-
-    Adds ``meta`` (NULL for anything that fails a check) and, with
-    ``channel_means``, exact ``mean_r``/``mean_g``/``mean_b`` over the
-    de-filtered pixel bytes. engine="expr" is all scan-stage Catalyst;
-    the default resolves to the Arrow kernel (``_arrow_engine``),
-    which is output-identical on every file the expression accepts,
-    rejects every corruption it rejects (bad signature / chunk CRC /
-    Adler-32 / truncation / unknown filter), and is a strict
-    SUPERSET: it additionally decodes what
-    real encoders emit — genuine fixed/dynamic-Huffman DEFLATE
-    streams (``zlib.decompress``), multiple IDAT chunks, CRC-valid
-    ancillary chunks, and scanline filters 1-4
-    (``codecs_arrow._png_parse``). Files needing the superset return
-    NULL meta on the expression engine, by the contract above.
+    Adds ``meta`` and, with ``channel_means``, exact ``mean_r``/
+    ``mean_g``/``mean_b`` over the de-filtered pixel bytes.
     """
-    if _arrow_engine(engine):
-        from pivot_spark.operators import codecs_arrow
+    fields = [T.StructField(meta_col, PNG_META_SCHEMA)]
+    if channel_means:
+        fields += [T.StructField(f"mean_{c}", T.DoubleType()) for c in "rgb"]
 
-        return codecs_arrow.decode_png(df, binary_col, meta_col, channel_means)
-    raw = F.col(binary_col)
-    w = _be(raw, 17, 4)
-    h = _be(raw, 21, 4)
-    raw_len = h * (1 + 3 * w)
-    # constant stored-block payload size, read from the FIRST block's
-    # little-endian LEN field (zlib level 0 emits 65531, make_png
-    # 65535); clamped >= 1 so it can never size a division by zero
-    blk = F.greatest(
-        F.lit(1).cast("long"), _u8(raw, F.lit(45)) + 256 * _u8(raw, F.lit(46))
-    )
-    n_blocks = F.greatest(
-        F.lit(1).cast("long"),
-        F.floor((raw_len + blk - 1) / blk).cast("long"),
-    )
-    idat_len = F.lit(2).cast("long") + 5 * n_blocks + raw_len + 4
-    file_len = 8 + 25 + (12 + idat_len) + 12
-
-    sig_ok = F.hex(F.substring(raw, 1, 8)) == PNG_SIG_HEX
-    ihdr_ok = (
-        (_be(raw, 9, 4) == 13)
-        & (F.substring(raw, 13, 4).cast("string") == "IHDR")
-        & (_u8(raw, F.lit(25)) == 8)   # bit depth
-        & (_u8(raw, F.lit(26)) == 2)   # truecolor
-        & (_u8(raw, F.lit(27)) == 0)   # compression
-        & (_u8(raw, F.lit(28)) == 0)   # filter method
-        & (_u8(raw, F.lit(29)) == 0)   # non-interlaced
-        & (F.crc32(F.substring(raw, 13, 17)) == _be(raw, 30, 4))
-    )
-    shape_ok = (
-        (w > 0) & (h > 0)
-        & (F.length(raw).cast("long") == file_len)
-        & (_be(raw, 34, 4) == idat_len)
-        & (F.substring(raw, 38, 4).cast("string") == "IDAT")
-        & (_u8(raw, F.lit(42)) == 0x78)  # zlib CMF: deflate, 32K window
-    )
-    # gate the per-byte folds on the cheap structural checks FIRST so a
-    # non-PNG blob never drives a sequence() by its (garbage) header
-    pre_ok = sig_ok & ihdr_ok & shape_ok
-
-    df = df.withColumn("__pre", pre_ok)
-    pre = F.col("__pre")
-    out = df.withColumns(
-        {
-            "__hx": F.when(pre, F.hex(raw)),
-            "__w": w,
-            "__h": h,
-            "__L": raw_len,
-            "__nb": n_blocks,
-            "__bk": blk,
+    def per_blob(b):
+        p = _png_parse(b)
+        if p is None:
+            return (None,) * len(fields)
+        w, h, pxm = p
+        meta = {
+            "width": w, "height": h, "bit_depth": 8, "color_type": 2,
+            "format": "png", "n_bytes": len(b),
         }
-    )
-    hx = F.col("__hx")
-    wc, hc, Lc = F.col("__w"), F.col("__h"), F.col("__L")
-    nb, bk = F.col("__nb"), F.col("__bk")
+        if not channel_means:
+            return (meta,)
+        px = pxm.reshape(-1, 3).astype(np.int64)
+        n_px = w * h
+        sums = px.sum(axis=0)
+        return (meta, *[int(sums[c]) / float(n_px) for c in range(3)])
 
-    # stored-block headers: byte 44+k*(blk+5) is the BFINAL flag (1
-    # only on the last), LEN/NLEN little-endian ones'-complement pair
-    def blk_hdr_pos(k: Column) -> Column:
-        return 44 + k * (bk + 5)
-
-    def le16(p: Column) -> Column:
-        return _u8h(hx, p) + 256 * _u8h(hx, p + 1)
-
-    blocks_ok = F.aggregate(
-        F.when(pre, F.sequence(F.lit(0).cast("long"), nb - 1)),
-        F.lit(True),
-        _lam(
-            "ab, kb",
-            lambda a, k: a
-            & (
-                _u8h(hx, blk_hdr_pos(k))
-                == F.when(k == nb - 1, 1).otherwise(0)
-            )
-            & (le16(blk_hdr_pos(k) + 1) == F.least(bk, Lc - k * bk))
-            & (le16(blk_hdr_pos(k) + 1) + le16(blk_hdr_pos(k) + 3) == 65535),
-        ),
-    )
-
-    # raw-stream byte j (1-based) -> 1-based file position
-    def rpos(j: Column) -> Column:
-        return 49 + F.floor((j - 1) / bk).cast("long") * (bk + 5) + (
-            (j - 1) % bk
-        )
-
-    filters_ok = F.aggregate(
-        F.when(pre, F.sequence(F.lit(0).cast("long"), hc - 1)),
-        F.lit(True),
-        _lam(
-            "af, rf",
-            lambda a, r: a & (_u8h(hx, rpos(r * (1 + 3 * wc) + 1)) == 0),
-        ),
-    )
-
-    idxs = F.when(pre, F.sequence(F.lit(1).cast("long"), Lc))
-    s1 = (
-        F.lit(1).cast("long")
-        + F.aggregate(
-            idxs, F.lit(0).cast("long"),
-            _lam("ad1, jd1", lambda a, j: a + _u8h(hx, rpos(j))),
-        )
-    ) % 65521
-    s2 = (
-        Lc
-        + F.aggregate(
-            idxs, F.lit(0).cast("long"),
-            _lam("ad2, jd2", lambda a, j: a + (Lc + 1 - j) * _u8h(hx, rpos(j))),
-        )
-    ) % 65521
-    adler_ok = (s2 * 65536 + s1) == _be(raw, 49 + (nb - 1) * (bk + 5)
-                                        + (Lc - (nb - 1) * bk), 4)
-    crc_ok = F.crc32(F.substring(raw, F.lit(38).cast("int"), (idat_len + 4).cast("int"))) == _be(
-        raw, 42 + idat_len, 4
-    )
-    iend_ok = F.hex(F.substring(raw, (46 + idat_len).cast("int"), 12)) == (
-        "0000000049454E44AE426082"
-    )
-
-    out = out.withColumn(
-        "__ok", pre & blocks_ok & filters_ok & adler_ok & crc_ok & iend_ok
-    )
-    ok = F.col("__ok")
-    meta = F.when(
-        ok,
-        F.struct(
-            wc.cast("int").alias("width"),
-            hc.cast("int").alias("height"),
-            F.lit(8).alias("bit_depth"),
-            F.lit(2).alias("color_type"),
-            F.lit("png").alias("format"),
-            F.length(raw).cast("long").alias("n_bytes"),
-        ),
-    )
-    out = out.withColumn(meta_col, meta)
-    drop = ["__pre", "__hx", "__w", "__h", "__L", "__nb", "__bk", "__ok"]
-    if not channel_means:
-        return out.drop(*drop)
-
-    n_px = wc * hc
-
-    # pixel byte i (0-based over 3wh) -> raw index -> file position
-    def ppos(i: Column) -> Column:
-        return rpos((i / (3 * wc)).cast("long") * (1 + 3 * wc) + 2 + i % (3 * wc))
-
-    def chan_mean(c: int) -> Column:
-        total = F.aggregate(
-            F.when(ok, F.sequence(F.lit(0).cast("long"), n_px - 1)),
-            F.lit(0).cast("long"),
-            _lam(
-                f"ac{c}, ic{c}",
-                lambda a, i: a + _u8h(hx, ppos(i * 3 + F.lit(c))),
-            ),
-        )
-        return F.when(ok & (n_px > 0), total / n_px.cast("double"))
-
-    return out.withColumns(
-        {"mean_r": chan_mean(0), "mean_g": chan_mean(1), "mean_b": chan_mean(2)}
-    ).drop(*drop)
+    return _append_kernel(df, binary_col, fields, per_blob)

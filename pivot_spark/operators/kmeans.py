@@ -8,7 +8,8 @@ Per iteration the data NEVER leaves the executors:
    a ``zip_with`` + ``aggregate`` fold (pure Catalyst, codegen'd), and
    the argmin is ``array_min`` over ``struct(dist, cid)`` structs —
    lexicographic struct comparison gives deterministic smallest-cid
-   tie-breaking.
+   tie-breaking. Above 16 centers the assignment is one numpy GEMM
+   per Arrow batch instead (``assign_clusters``).
 2. **Update** (one shuffle of k x dim scalars): new centroids via the
    ``centroids`` operator (posexplode -> per-(cluster, position) partial
    SUM/COUNT with map-side combine). Only the k x dim mean vector — a
@@ -68,24 +69,23 @@ def assign_clusters(
     centers: Sequence[Sequence[float]],
     cluster_col: str = "cluster",
     dist_col: Optional[str] = "dist_sq",
-    engine: str = "auto",
 ) -> DataFrame:
     """Append the argmin-centroid id (INT) and optionally the squared
     distance. Ties break to the smallest centroid id (struct min /
     first-argmin).
 
-    Dual-engine, same contract as the codec family: ``expr`` is the
-    pure-Catalyst fold (k struct distances + ``array_min`` — exact
+    The center count picks the implementation: up to
+    ``_GEMM_K_THRESHOLD`` (16) centers, ``_assign_clusters_fold`` — the
+    pure-Catalyst fold (k struct distances + ``array_min``, exact
     left-to-right association order, the form the e54/e57 oracles
-    replay term by term), ``arrow`` is one numpy GEMM per Arrow batch
-    (``|x|^2 - 2 x.C^T + |c|^2``), and ``auto`` picks ``expr`` for
-    k <= 16 and ``arrow`` above — the expression path's cost is k
-    INTERPRETED folds per row (higher-order lambdas never reach
-    codegen), so at the k = n/2000 scaling a growing corpus demands it
-    degenerates from "slow" to "stuck" (measured: k=100 over 200k
-    vectors never finished; the GEMM path is seconds).
+    replay term by term); above it, ``_assign_clusters_gemm`` — one
+    numpy GEMM per Arrow batch (``|x|^2 - 2 x.C^T + |c|^2``). The
+    fold's cost is k INTERPRETED folds per row (higher-order lambdas
+    never reach codegen), so at the k = n/2000 scaling a growing corpus
+    demands it degenerates from "slow" to "stuck" (measured: k=100 over
+    200k vectors never finished; the GEMM path is seconds).
 
-    Engine parity: the expanded form suffers catastrophic cancellation
+    Agreement: the expanded form suffers catastrophic cancellation
     near zero distance (absolute error ~eps * (|x|^2 + |c|^2), so two
     centers within that band — NOT just exact ties — could swap argmin;
     SemDeDup's centers ARE corpus vectors, so true-zero distances are
@@ -93,17 +93,24 @@ def assign_clusters(
     REFINES every near-tie: candidates within an |x|^2- and
     |c|^2-scaled error band of the batch minimum are recomputed with
     the exact left-to-right (x_i-c_i)^2 fold — the same association
-    order as the expr path — and the winner (smallest-cid on true
+    order as the fold path — and the winner (smallest-cid on true
     ties) plus its distance come from that exact recompute. Rows whose
     minimum is uncontested keep the (clamped) GEMM distance, which
     differs from the fold only in the last ulp."""
-    if engine not in ("auto", "expr", "arrow"):
-        raise ValueError(f"engine must be auto/expr/arrow, got {engine!r}")
-    use_arrow = engine == "arrow" or (
-        engine == "auto" and len(centers) > _GEMM_K_THRESHOLD
-    )
-    if use_arrow:
+    if len(centers) > _GEMM_K_THRESHOLD:
         return _assign_clusters_gemm(df, vec_col, centers, cluster_col, dist_col)
+    return _assign_clusters_fold(df, vec_col, centers, cluster_col, dist_col)
+
+
+def _assign_clusters_fold(
+    df: DataFrame,
+    vec_col: str,
+    centers: Sequence[Sequence[float]],
+    cluster_col: str,
+    dist_col: Optional[str],
+) -> DataFrame:
+    """Catalyst assignment: one ``sq_dist_to`` fold per center, argmin
+    by ``array_min`` over ``struct(d, cid)``."""
     cands = F.array(
         *[
             F.struct(
@@ -135,7 +142,7 @@ def _assign_clusters_gemm(
     megabytes even at 10^9 vectors); per-row work is O(k x dim)
     vectorized instead of k interpreted lambda folds. Null/None
     vectors — and vectors whose length differs from the center dim —
-    get cluster 0 and a null distance, matching the expression path,
+    get cluster 0 and a null distance, matching the fold path,
     where ``zip_with`` null-pads a length mismatch into a null fold
     and ``array_min`` over all-null-``d`` structs resolves to the
     first (cid 0) struct. Near-tied argmins are re-decided by an exact
@@ -178,7 +185,7 @@ def _assign_clusters_gemm(
             pdf = pdf.copy()
             vecs = pdf[vec_col]
             # usable = non-null AND exactly center-dim long (a length
-            # mismatch is the expr path's null-fold -> cluster 0 case)
+            # mismatch is the fold path's null-fold -> cluster 0 case)
             mask = np.array(
                 [v is not None and len(v) == dim for v in vecs], dtype=bool
             )

@@ -5,7 +5,7 @@ The Spark-side plumbing — schemas, batch iteration, partition-preserving
 transforms — is real and tested. ``decode_image`` parses a
 deterministic fake header (the zero-dependency test harness);
 ``decode_image_real`` is the genuine path: built-in real PNG decode
-(chunk walk + zlib inflate + unfilter, see ``codecs_arrow``) plus an
+(chunk walk + zlib inflate + unfilter, see ``codecs.decode_png``) plus an
 optional Pillow extra for JPEG/GIF/WebP — blobs Pillow would handle
 yield NULL meta when it is absent, never an exception.
 
@@ -104,7 +104,7 @@ def decode_image_real(df: DataFrame, binary_col: str = "image") -> DataFrame:
 
     1. **PNG — built-in, no third-party dependency**: genuine chunk
        walk + zlib inflate + scanline unfilter via
-       ``codecs_arrow._png_parse`` (every integrity gate CRC/Adler-
+       ``codecs._png_parse`` (every integrity gate CRC/Adler-
        verified; truecolor 8-bit).
     2. **JPEG/GIF/WebP/TIFF — optional Pillow extra**: when ``PIL``
        is importable the remaining formats decode through
@@ -126,7 +126,7 @@ def decode_image_real(df: DataFrame, binary_col: str = "image") -> DataFrame:
     def parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import io
 
-        from pivot_spark.operators.codecs_arrow import _png_parse
+        from pivot_spark.operators.codecs import _png_parse
 
         try:
             from PIL import Image as _pil_image

@@ -472,7 +472,7 @@ def e167_dedup_savings(spark, sf_dir):
 # --- E168: REAL image format decode (PPM/P6) without PIL — fabricate
 # genuine P6 files from document text (ASCII corpus, verified), then
 # parse width/height/maxval from the bytes and compute exact per-channel
-# means, all in scan-stage Catalyst byte arithmetic (operators/codecs.py).
+# means in a scan-stage Arrow kernel (operators/codecs.py).
 # Oracle replays the same bytes as character codes.
 _E168_ORACLE = """
 WITH img AS (
@@ -583,7 +583,7 @@ def e169_bmp_decode(spark, sf_dir):
 # --- E170: REAL audio decode (WAV/PCM-16) — genuine RIFF/WAVE files
 # (stdlib-wave canonical layout) fabricated from document text as
 # signed 16-bit LE samples, then header + exact per-channel mean/RMS
-# parsed back by Catalyst byte arithmetic (operators/codecs.py). Sample
+# parsed back by a scan-stage Arrow kernel (operators/codecs.py). Sample
 # i is built from char pair (2i, 2i+1): v = c0 + 256*c1, signed. ASCII
 # chars < 128 keep v < 32768, so the oracle needs no sign branch.
 _E170_N = 30  # samples per doc (60 payload bytes)
@@ -904,7 +904,7 @@ FROM sm
 def e174_audio_features(spark, sf_dir):
     """The cheap screens a speech-curation pipeline runs before any
     model: zero-crossing rate, peak, crest factor, silence fraction —
-    one scan-stage fold per file (operators/codecs.py::wav_features)."""
+    one vectorized pass per file (operators/codecs.py::wav_features)."""
     from pivot_spark.operators.codecs import make_wav, wav_features
 
     need = 2 * _E174_N
@@ -963,7 +963,7 @@ FROM lm
 @query("e175_image_stats", _E175_ORACLE)
 def e175_image_stats(spark, sf_dir):
     """Blank-frame screen over real P6 bytes: per-pixel integer luma
-    fold -> mean/std/min/max + is_blank
+    -> mean/std/min/max + is_blank
     (operators/codecs.py::ppm_luma_stats)."""
     from pivot_spark.operators.codecs import make_ppm, ppm_luma_stats
 

@@ -198,8 +198,8 @@ def _e185_audio(spark, sf_dir):
 def e185_audio_fingerprint(spark, sf_dir):
     """Haitsma-Kalker-family energy-delta fingerprint over real WAV
     bytes — the audio leg of the perceptual-hash dedup stack
-    (operators/codecs.py::audio_fingerprint): one nested scan-stage
-    fold, each sample read once, no shuffle."""
+    (operators/codecs.py::audio_fingerprint): one cumulative energy
+    sum per file, scan-stage, no shuffle."""
     from pivot_spark.operators.codecs import audio_fingerprint
 
     return audio_fingerprint(
@@ -290,8 +290,8 @@ def _e187_images(spark, sf_dir):
 def e187_image_dhash(spark, sf_dir):
     """Gradient perceptual hash (dHash) over real P6 pixels — survives
     the brightness shifts that break aHash's global-mean threshold
-    (operators/codecs.py::ppm_dhash): one interpreted luma transform +
-    scalar packing, scan-stage, no shuffle."""
+    (operators/codecs.py::ppm_dhash): grid lumas + bit packing per
+    image, scan-stage, no shuffle."""
     from pivot_spark.operators.codecs import ppm_dhash
 
     return ppm_dhash(_e187_images(spark, sf_dir)).select("doc_id", "dhash")
@@ -374,8 +374,8 @@ FROM kept
 @query("e189_audio_trim", _E189_ORACLE)
 def e189_audio_trim(spark, sf_dir):
     """Silence trim (VAD-lite) producing real WAV bytes, decoded back
-    (operators/codecs.py::wav_trim_silence): one bounds fold + one
-    frame-copy transform per file, scan-stage, no shuffle."""
+    (operators/codecs.py::wav_trim_silence): active-sample bounds +
+    one frame slice per file, scan-stage, no shuffle."""
     from pivot_spark.operators.codecs import (
         decode_wav,
         make_wav,
@@ -653,7 +653,7 @@ FROM lp
 @query("e193_image_blur", _E193_ORACLE)
 def e193_image_blur(spark, sf_dir):
     """Variance-of-Laplacian blur/focus screen over real P6 pixels
-    (codecs.py::ppm_blur_score): one integer fold per image, exact
+    (codecs.py::ppm_blur_score): one integer stencil per image, exact
     BIGINT moments, scan-stage, no shuffle — the vision-curation
     quality gate next to ppm_luma_stats' blank screen."""
     from pivot_spark.operators.codecs import ppm_blur_score
@@ -732,8 +732,8 @@ FROM pw
 def e194_audio_spectral(spark, sf_dir):
     """Quantized-DFT band powers + dominant bin over real WAV bytes
     (codecs.py::wav_spectral): tone/hum detection and bandwidth triage
-    for audio curation — unrolled scalar reads of one sample array,
-    whole-stage codegen, no fold, no shuffle."""
+    for audio curation — one integer dot product per basis row,
+    scan-stage, no shuffle."""
     from pivot_spark.operators.codecs import make_wav, wav_spectral
 
     need = 2 * _E174_N
@@ -1176,8 +1176,8 @@ FROM st
 
 @query("e204_contrast_stretch", _E204_ORACLE)
 def e204_contrast_stretch(spark, sf_dir):
-    """Per-image dynamic range + exact stretched-histogram moments: two
-    scan-stage integer folds per row, zero shuffle, no Python — the
+    """Per-image dynamic range + exact stretched-histogram moments: a
+    min/max pass and an integer remap per image, zero shuffle — the
     vision-normalize parity audit next to e193's blur screen."""
     from pivot_spark.operators.codecs import ppm_contrast_stretch
 

@@ -552,9 +552,9 @@ GROUP BY o.doc_id, np.w, np.h, np.n_px
 @query("e216_image_equalize", _E216_ORACLE)
 def e216_image_equalize(spark, sf_dir):
     """Histogram equalization end-to-end: P6 corpus -> real P5 -> real
-    equalized P5, decoded back byte-for-byte. Pixels ride linear
-    id-keyed shuffles; the remap table lives on a ≤256-row-per-image
-    value frame."""
+    equalized P5, decoded back byte-for-byte. The histogram and the
+    256-entry remap table are per image, inside one scan-stage kernel
+    (zero shuffles)."""
     from pivot_spark.operators.codecs import (
         _pnm_header,
         _u8h,
@@ -578,7 +578,7 @@ def e216_image_equalize(spark, sf_dir):
         "doc_id", make_ppm(F.col("w"), F.col("h"), F.col("p")).alias("image")
     )
     pgm = ppm_to_pgm(img).select("doc_id", F.col("gray").alias("gray"))
-    eq = pgm_equalize(pgm, "doc_id", "gray", out_col="equalized").filter(
+    eq = pgm_equalize(pgm, "gray", out_col="equalized").filter(
         F.col("equalized").isNotNull()
     )
     # decode the emitted file back: header parse + per-pixel bytes
@@ -872,8 +872,9 @@ FROM gr JOIN best ON best.doc_id = gr.doc_id
 @query("e220_image_otsu", _E220_ORACLE)
 def e220_image_otsu(spark, sf_dir):
     """No-tuning document binarization: the between-class-variance
-    argmax lives on the per-image value frame; every output byte of
-    the emitted P5 is hash-checked."""
+    argmax runs over each image's ≤256 gray values inside one
+    scan-stage kernel; every output byte of the emitted P5 is
+    hash-checked."""
     from pivot_spark.operators.codecs import (
         _lam,
         _pnm_header,
@@ -898,7 +899,7 @@ def e220_image_otsu(spark, sf_dir):
         "doc_id", make_ppm(F.col("w"), F.col("h"), F.col("p")).alias("image")
     )
     pgm = ppm_to_pgm(img).select("doc_id", F.col("gray").alias("gray"))
-    bz = pgm_binarize_otsu(pgm, "doc_id", "gray").filter(
+    bz = pgm_binarize_otsu(pgm, "gray").filter(
         F.col("binarized").isNotNull()
     )
     raw = F.col("binarized")
@@ -1350,7 +1351,7 @@ def e227_robust_scale(spark, sf_dir):
 # fabricate genuine PNGs (byte-identical to zlib-level-0 output,
 # test_png.py pins this against CPython zlib) from document text, then
 # parse IHDR / stored-block layout, VERIFY CRC-32 + Adler-32 from the
-# bytes, and compute exact channel means — all scan-stage Catalyst
+# bytes, and compute exact channel means — one scan-stage Arrow kernel
 # (codecs.py::decode_png). The oracle replays the payload characters
 # directly: the container is lossless, so decoded means equal source-
 # character means, and the verified-checksum path is covered by the
@@ -1440,9 +1441,8 @@ def e228_png_decode(spark, sf_dir):
 # emitter swapped for real DEFLATE (zlib.compress level 6,
 # fixed/dynamic Huffman) and every scanline forward-filtered with the
 # spec's full filter set (type = row % 5: None/Sub/Up/Average/Paeth).
-# Only the Arrow engine can read these (codecs_arrow._png_parse:
-# chunk walk + zlib inflate + unfilter); the expression engine is
-# stored-deflate-only by contract. The container is lossless, so the
+# decode_png reads them with codecs._png_parse (chunk walk + zlib
+# inflate + unfilter). The container is lossless, so the
 # oracle replays source-character means directly — a wrong inflate,
 # a wrong unfilter, or a wrong CRC gate all surface as value
 # mismatches. n_bytes is NOT output (real compression makes it
@@ -1474,10 +1474,9 @@ FROM img
 @query("e231_png_deflate_decode", _E231_ORACLE)
 def e231_png_deflate_decode(spark, sf_dir):
     """Real-encoder PNG leg: zlib level-6 DEFLATE + cycling scanline
-    filters 0-4, decoded by the Arrow kernel's genuine inflate +
+    filters 0-4, decoded by ``decode_png``'s genuine inflate +
     unfilter chain. Scan-stage (two MapInPandas, zero shuffles)."""
-    from pivot_spark.operators import codecs_arrow
-    from pivot_spark.operators.codecs import decode_png
+    from pivot_spark.operators.codecs import decode_png, make_png_deflate
 
     n = _E231_W * _E231_H * 3
     d = (
@@ -1496,9 +1495,9 @@ def e231_png_deflate_decode(spark, sf_dir):
     )
     img = d.select(
         "doc_id",
-        codecs_arrow.make_png_deflate(_E231_W, _E231_H, F.col("p")).alias("image"),
+        make_png_deflate(_E231_W, _E231_H, F.col("p")).alias("image"),
     )
-    out = decode_png(img, engine="arrow")
+    out = decode_png(img)
     return out.select(
         "doc_id",
         F.col("meta.width").alias("width"),

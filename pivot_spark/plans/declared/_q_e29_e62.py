@@ -1160,8 +1160,8 @@ def e57_semdedup(spark, sf_dir):
 
 
 # --- E57B: the same SemDeDup contract with the cluster-count scaled to
-# ENGAGE the GEMM assignment engine at gate scale: k = min(n,
-# max(20, ceil(sqrt(n)))) > the k=16 auto threshold at every test SF
+# ENGAGE the GEMM assignment path at gate scale: k = min(n,
+# max(20, ceil(sqrt(n)))) > the k=16 threshold at every test SF
 # (n=50 -> 20, n=500 -> 23), vs e57's k=8 there. This pins the
 # |x|^2 - 2x.c + |c|^2 + exact-near-tie-refinement path
 # (operators/kmeans.py:_assign_clusters_gemm) against the oracle's
@@ -1187,8 +1187,8 @@ _E57B_K_SQL = (
 
 @query("e57b_semdedup_gemm", _e57_oracle(k_sql=_E57B_K_SQL))
 def e57b_semdedup_gemm(spark, sf_dir):
-    """e57 with scaled-up k so ``assign_clusters(engine="auto")``
-    routes through the Arrow GEMM: one numpy ``X @ C.T`` per batch,
+    """e57 with scaled-up k (> ``_GEMM_K_THRESHOLD``) so
+    ``assign_clusters`` routes through the Arrow GEMM: one numpy ``X @ C.T`` per batch,
     near-tied argmins re-decided by the exact left-to-right fold."""
     import math
 

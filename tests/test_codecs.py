@@ -612,3 +612,172 @@ def test_e174_payload_transform_parity(spark):
 
     for i, t in enumerate(texts):
         assert got[i] == ref(t), f"payload mismatch for doc {i}"
+
+
+def test_arrow_kernels_at_large_payload(spark):
+    # Payloads far past thumbnail scale: a ~0.7 MB 600x400 PNG (11
+    # stored blocks) and a ~1 MB 16.5-second stereo WAV decode with
+    # exact stats, and the WAV fingerprints.
+    import random
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from pivot_spark.operators.codecs import (
+        audio_fingerprint,
+        decode_png,
+        decode_wav,
+    )
+
+    rnd = random.Random(23)
+    w, h = 600, 400
+    rgb = bytes(rnd.randrange(256) for _ in range(w * h * 3))
+    raw = b"".join(
+        b"\x00" + rgb[r * 3 * w : (r + 1) * 3 * w] for r in range(h)
+    )
+
+    def chunk(typ, data):
+        return (
+            struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", zlib.crc32(typ + data))
+        )
+
+    blob = (
+        bytes.fromhex("89504E470D0A1A0A")
+        + chunk(b"IHDR", struct.pack(">II5B", w, h, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(raw, 0))
+        + chunk(b"IEND", b"")
+    )
+    img = spark.createDataFrame([(1, blob)], "id long, image binary")
+    r = decode_png(img).head()
+    assert r["meta"]["width"] == w and r["meta"]["height"] == h
+    px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+    for c, name in enumerate(["mean_r", "mean_g", "mean_b"]):
+        assert r[name] == int(px[:, c].sum()) / (w * h), name
+
+    n = 264_000  # stereo frames
+    samples = [((i * 2654435761) % 65536) - 32768 for i in range(2 * n)]
+    wav = spark.createDataFrame(
+        [(1, _py_wav(2, 16000, samples))], "id long, audio binary"
+    )
+    rw = decode_wav(wav).head()
+    assert rw["meta"]["n_samples"] == n
+    ch0 = np.array(samples[0::2], dtype=np.int64)
+    assert rw["mean_ch0"] == int(ch0.sum()) / n
+    assert audio_fingerprint(wav).head()["afp"] is not None
+
+
+def test_arrow_kernel_is_zero_shuffle(spark):
+    from pivot_spark.operators.codecs import wav_features
+
+    df = spark.createDataFrame(
+        [(1, _py_wav(1, 8000, [0, 100, -200, 300]))], "id long, audio binary"
+    )
+    plan = wav_features(df)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan and "Join" not in plan
+
+
+def _run_kernel(fn, df, bad_ids):
+    """Run ``fn`` over ``df``; every column it adds must be NULL on the
+    ``bad_ids`` rows. Returns {id: row}."""
+    out = fn(df)
+    new = [c for c in out.columns if c not in df.columns]
+    rows = {r["id"]: r for r in out.collect()}
+    for i in bad_ids:
+        assert all(rows[i][c] is None for c in new), (i, rows[i])
+    return rows
+
+
+def test_kernels_null_malformed_and_degenerate_inputs(spark):
+    """Edge inputs of every pixel/sample kernel. NULL blobs, garbage,
+    a length-mismatched header and a WAV whose data is not
+    frame-aligned null every output column; zero-sample/zero-area
+    files, a 3-channel WAV, a low-maxval PGM and an exact Otsu tie
+    follow each operator's documented convention."""
+    import math
+
+    from pivot_spark.operators import codecs as C
+
+    misaligned = bytearray(_py_wav(1, 8000, [1, 2]))
+    misaligned[40:44] = (3).to_bytes(4, "little")  # odd data size
+    wavs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, b"RIFF" + b"x" * 60),
+            (3, bytes(misaligned[:47])),
+            (4, _py_wav(1, 8000, [])),
+            (5, _py_wav(3, 16000, [1, 2, 3, -4, -5, -6])),
+        ],
+        "id long, audio binary",
+    )
+    bad = (1, 2, 3)
+    r = _run_kernel(C.decode_wav, wavs, bad)
+    assert r[4]["meta"]["n_samples"] == 0 and r[4]["mean_ch0"] is None
+    assert r[5]["meta"]["n_channels"] == 3 and r[5]["meta"]["n_samples"] == 2
+    assert (r[5]["mean_ch0"], r[5]["mean_ch1"]) == (-1.5, -1.5)
+    assert r[5]["rms_ch0"] == math.sqrt(8.5)
+    r = _run_kernel(C.wav_features, wavs, bad)
+    assert [r[5][c] for c in ("n_samples", "zcr", "peak", "silence_frac")] == [
+        2, 1.0, 4, 1.0,
+    ]
+    assert r[5]["crest"] == 4 / math.sqrt(8.5)
+    r = _run_kernel(C.wav_mixdown, wavs, bad)  # first two channels only
+    assert r[4]["mono"] is None
+    assert bytes(r[5]["mono"]) == _py_wav(1, 16000, [1, -5])
+    r = _run_kernel(lambda d: C.wav_trim_silence(d, threshold_abs=3), wavs, bad)
+    assert bytes(r[4]["trimmed"]) == _py_wav(1, 8000, [])
+    assert bytes(r[5]["trimmed"]) == _py_wav(3, 16000, [-4, -5, -6])
+    r = _run_kernel(lambda d: C.wav_downsample(d, 2), wavs, bad)
+    assert r[4]["downsampled"] is None
+    assert bytes(r[5]["downsampled"]) == _py_wav(3, 8000, [1, 2, 3])
+    r = _run_kernel(C.wav_gain, wavs, bad)
+    assert r[4]["normalized"] is None
+    assert bytes(r[5]["normalized"]) == _py_wav(
+        3, 16000, [5000, 10000, 15000, -20000, -25000, -30000]
+    )
+    r = _run_kernel(lambda d: C.audio_fingerprint(d, n_frames=2), wavs, bad)
+    assert r[4]["afp"] is None and r[5]["afp"] == 1
+    r = _run_kernel(lambda d: C.wav_spectral(d, 2, bins=(1,)), wavs, bad)
+    assert r[4]["p_bin1"] is None
+    assert (r[5]["p_bin1"], r[5]["dom_bin"]) == (6.25, 1)
+
+    images = spark.createDataFrame(
+        [
+            (1, None),
+            (2, b"not an image at all"),
+            (3, b"P6\n4 4\n255\nshort"),
+            (4, b"P6\n0 4\n255\n"),
+        ],
+        "id long, image binary",
+    )
+    r = _run_kernel(C.decode_ppm, images, (1, 2, 3))
+    assert r[4]["meta"]["width"] == 0 and r[4]["mean_r"] is None
+    r = _run_kernel(C.ppm_dhash, images, (1, 2, 3))
+    assert r[4]["dhash"] == 0
+    for fn in (C.ppm_luma_stats, C.ppm_blur_score, C.ppm_contrast_stretch,
+               C.ppm_to_pgm, C.decode_bmp, C.decode_png):
+        _run_kernel(fn, images, (1, 2, 3, 4))
+
+    grays = spark.createDataFrame(
+        [
+            (1, None),
+            (2, b"not an image at all"),
+            (3, b"P5\n4 4\n255\nnope"),
+            (4, b"P5\n0 3\n255\n"),
+            (5, b"P5\n3 3\n99\n" + bytes(range(9))),
+        ],
+        "id long, gray binary",
+    )
+    r = _run_kernel(lambda d: C.decode_pgm(d, "gray"), grays, (1, 2, 3))
+    assert r[4]["meta"]["width"] == 0 and r[4]["mean_gray"] is None
+    assert r[5]["meta"]["maxval"] == 99 and r[5]["mean_gray"] == 4.0
+    r = _run_kernel(C.pgm_equalize, grays, (1, 2, 3, 4))
+    assert bytes(r[5]["equalized"]) == b"P5\n3 3\n99\n" + bytes(
+        [0, 12, 25, 37, 50, 62, 74, 87, 99]
+    )
+    # t=3 and t=4 tie at crit 405.0 exactly: the smaller wins
+    r = _run_kernel(C.pgm_binarize_otsu, grays, (1, 2, 3, 4))
+    assert r[5]["otsu_threshold"] == 3
+    assert bytes(r[5]["binarized"]) == b"P5\n3 3\n99\n" + bytes([0] * 4 + [99] * 5)

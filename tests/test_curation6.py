@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from pivot_spark.operators.embedding import quantize_int8
-from pivot_spark.operators.kmeans import assign_clusters, kmeans, kmeans_fit
+from pivot_spark.operators.kmeans import (
+    _assign_clusters_fold,
+    _assign_clusters_gemm,
+    assign_clusters,
+    kmeans,
+    kmeans_fit,
+)
 from pivot_spark.operators.lm import unigram_lm_score
 from pivot_spark.operators.merge import upsert
 from pivot_spark.operators.quality import C4Thresholds, c4_line_signals
@@ -218,11 +224,29 @@ def test_quantize_int8_clamps(spark):
     assert r["qvec"][0] == 127 and r["qvec"][1] == -127
 
 
+def plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assign_both(df, centers):
+    """Run the fold and the GEMM assignment directly: {path: {vid: row}}."""
+    return {
+        name: {
+            r["vid"]: r
+            for r in fn(df, "vec", centers, "cluster", "dist_sq").collect()
+        }
+        for name, fn in (
+            ("fold", _assign_clusters_fold),
+            ("gemm", _assign_clusters_gemm),
+        )
+    }
+
+
 def test_assign_clusters_arrow_matches_expr(spark):
     """The GEMM (mapInPandas) assignment and the Catalyst fold must
     agree on cluster ids and on dist_sq to float tolerance — including
     a null vector (cluster 0 + null dist on both paths) — and
-    engine=auto must pick the GEMM path above the k threshold."""
+    assign_clusters must pick the GEMM path above the k threshold."""
     import random
 
     rnd = random.Random(7)
@@ -232,25 +256,21 @@ def test_assign_clusters_arrow_matches_expr(spark):
     df = spark.createDataFrame(rows, "vid long, vec array<double>")
     centers = [[rnd.uniform(-1, 1) for _ in range(8)] for _ in range(20)]
 
-    expr = {
-        r["vid"]: r
-        for r in assign_clusters(df, "vec", centers, engine="expr").collect()
-    }
-    for eng in ("arrow", "auto"):  # auto: k=20 > threshold -> GEMM
-        got = {
-            r["vid"]: r
-            for r in assign_clusters(df, "vec", centers, engine=eng).collect()
-        }
-        assert set(got) == set(expr)
-        for vid, r in got.items():
-            e = expr[vid]
-            assert r["cluster"] == e["cluster"], (eng, vid)
-            if e["dist_sq"] is None:
-                assert r["dist_sq"] is None
-            else:
-                assert math.isclose(
-                    r["dist_sq"], e["dist_sq"], rel_tol=1e-9, abs_tol=1e-9
-                )
+    both = _assign_both(df, centers)
+    fold, gemm = both["fold"], both["gemm"]
+    assert set(gemm) == set(fold)
+    for vid, r in gemm.items():
+        e = fold[vid]
+        assert r["cluster"] == e["cluster"], vid
+        if e["dist_sq"] is None:
+            assert r["dist_sq"] is None
+        else:
+            assert math.isclose(
+                r["dist_sq"], e["dist_sq"], rel_tol=1e-9, abs_tol=1e-9
+            )
+    # k=20 > threshold: the public entry point takes the GEMM path
+    assert "MapInPandas" in plan_of(assign_clusters(df, "vec", centers))
+    assert "MapInPandas" not in plan_of(assign_clusters(df, "vec", centers[:16]))
 
 
 def test_assign_clusters_gemm_near_tie_refinement(spark):
@@ -267,37 +287,23 @@ def test_assign_clusters_gemm_near_tie_refinement(spark):
     centers[5] = big
     centers[6] = near
     df = spark.createDataFrame([(1, big), (2, near)], "vid long, vec array<double>")
-    for eng in ("arrow", "expr"):
-        out = {
-            r["vid"]: r
-            for r in assign_clusters(df, "vec", centers, engine=eng).collect()
-        }
-        assert out[1]["cluster"] == 5, eng
-        assert out[1]["dist_sq"] == 0.0, eng
-        assert out[2]["cluster"] == 6, eng
-        assert out[2]["dist_sq"] == 0.0, eng
+    for path, out in _assign_both(df, centers).items():
+        assert out[1]["cluster"] == 5, path
+        assert out[1]["dist_sq"] == 0.0, path
+        assert out[2]["cluster"] == 6, path
+        assert out[2]["dist_sq"] == 0.0, path
 
 
 def test_assign_clusters_gemm_ragged_vector_matches_expr(spark):
     """A vector whose length differs from the center dim follows the
-    expr path's null-fold semantics on BOTH engines (cluster 0, null
+    fold path's null-fold semantics on BOTH paths (cluster 0, null
     dist) instead of crashing the Python worker with a ragged
     np.stack."""
     rows = [(1, [1.0, 2.0]), (2, [1.0, 2.0, 3.0]), (3, [1.0]), (4, None)]
     df = spark.createDataFrame(rows, "vid long, vec array<double>")
     centers = [[0.0, 0.0], [5.0, 5.0]]
-    for eng in ("expr", "arrow"):
-        out = {
-            r["vid"]: r
-            for r in assign_clusters(df, "vec", centers, engine=eng).collect()
-        }
-        assert out[1]["cluster"] == 0 and out[1]["dist_sq"] == 5.0, eng
+    for path, out in _assign_both(df, centers).items():
+        assert out[1]["cluster"] == 0 and out[1]["dist_sq"] == 5.0, path
         for vid in (2, 3, 4):
-            assert out[vid]["cluster"] == 0, (eng, vid)
-            assert out[vid]["dist_sq"] is None, (eng, vid)
-
-
-def test_assign_clusters_engine_validation(spark):
-    df = _vec_df(spark, [(1, [0.0, 0.0])])
-    with pytest.raises(ValueError, match="engine"):
-        assign_clusters(df, "vec", [[0.0, 0.0]], engine="bogus")
+            assert out[vid]["cluster"] == 0, (path, vid)
+            assert out[vid]["dist_sq"] is None, (path, vid)

@@ -435,7 +435,7 @@ def test_pgm_equalize_known_image(spark):
     hdr = b"P5\n2 2\n255\n"
     img = hdr + bytes([10, 10, 20, 250])
     df = spark.createDataFrame([(1, bytearray(img))], "id long, gray binary")
-    out = pgm_equalize(df, "id", "gray").collect()[0]["equalized"]
+    out = pgm_equalize(df, "gray").collect()[0]["equalized"]
     assert out is not None
     body = bytes(out)
     assert body.startswith(b"P5\n2 2\n255\n")
@@ -454,7 +454,7 @@ def test_pgm_equalize_constant_and_invalid(spark):
     rows = [(1, bytearray(img)), (2, bytearray(b"NOTPGM"))]
     df = spark.createDataFrame(rows, "id long, gray binary")
     out = {r["id"]: r["equalized"] for r in
-           pgm_equalize(df, "id", "gray").collect()}
+           pgm_equalize(df, "gray").collect()}
     # constant image: denominator 0 -> all pixels map to 0
     assert list(bytes(out[1])[len(hdr):]) == [0, 0, 0]
     assert out[2] is None
@@ -470,7 +470,7 @@ def test_otsu_bimodal_image(spark):
     df = spark.createDataFrame(
         [(1, bytearray(hdr + bytes(vals)))], "id long, gray binary"
     )
-    r = pgm_binarize_otsu(df, "id", "gray").collect()[0]
+    r = pgm_binarize_otsu(df, "gray").collect()[0]
     assert 20 <= r["otsu_threshold"] < 200
     body = list(bytes(r["binarized"])[len(hdr):])
     assert body == [0, 0, 0, 0, 255, 255, 255, 255]
@@ -482,7 +482,7 @@ def test_otsu_constant_image_and_invalid(spark):
     hdr = b"P5\n2 1\n255\n"
     rows = [(1, bytearray(hdr + bytes([9, 9]))), (2, bytearray(b"nope"))]
     df = spark.createDataFrame(rows, "id long, gray binary")
-    out = {r["id"]: r for r in pgm_binarize_otsu(df, "id", "gray").collect()}
+    out = {r["id"]: r for r in pgm_binarize_otsu(df, "gray").collect()}
     # constant image: threshold = the single value, all pixels -> 0
     assert out[1]["otsu_threshold"] == 9
     assert list(bytes(out[1]["binarized"])[len(hdr):]) == [0, 0]

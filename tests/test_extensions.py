@@ -238,14 +238,14 @@ def test_decode_image_real_builtin_png_and_graceful_unknown(spark):
 
     from pyspark.sql import functions as F
 
-    from pivot_spark.operators import codecs_arrow
+    from pivot_spark.operators.codecs import make_png_deflate
     from pivot_spark.operators.multimodal import decode_image_real
 
     rnd = random.Random(5)
     payload = bytes(rnd.randrange(256) for _ in range(4 * 3 * 3))
     src = spark.createDataFrame([(1, payload)], "id long, p binary")
     png = src.select(
-        "id", codecs_arrow.make_png_deflate(4, 3, F.col("p")).alias("image")
+        "id", make_png_deflate(4, 3, F.col("p")).alias("image")
     )
     rest = spark.createDataFrame(
         [(2, b"\xff\xd8\xff\xe0 fake jpeg header"), (3, b"x"), (4, None)],

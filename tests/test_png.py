@@ -1,9 +1,10 @@
-"""PNG stored-deflate codec: make_png / decode_png.
+"""PNG codec: make_png / make_png_deflate / decode_png.
 
-The emitter must be byte-identical to a reference PNG built with
-CPython's zlib at level 0 (stored blocks), and the decoder must parse
-REAL zlib-emitted files — that is the "genuinely compressed container"
-contract (round-3 verdict item 7).
+The stored-deflate emitter must be byte-identical to a reference PNG
+built with CPython's zlib at level 0, and the decoder must parse REAL
+zlib-emitted files — stored or Huffman DEFLATE, split IDATs, ancillary
+chunks and every scanline filter — and reject corruption with NULL
+meta, never a crash.
 """
 
 from __future__ import annotations
@@ -137,9 +138,8 @@ def test_decode_png_rejects_corruption_not_crashes(spark):
         (4, huff), (5, b"not a png"), (6, b""),
     ]
     df = spark.createDataFrame(rows, "id int, image binary")
-    # default (arrow) engine: genuine corruption rejects; the Huffman
-    # stream (row 4) is VALID — since round 6 the arrow engine really
-    # inflates it (superset contract) and must get the means right
+    # genuine corruption rejects; the Huffman stream (row 4) is VALID:
+    # decode_png really inflates it and must get the means right
     out = {r["id"]: r for r in decode_png(df).collect()}
     assert out[1]["meta"] is not None
     assert out[4]["meta"] is not None and out[4]["meta"]["width"] == w
@@ -148,9 +148,70 @@ def test_decode_png_rejects_corruption_not_crashes(spark):
     for i in (2, 3, 5, 6):
         assert out[i]["meta"] is None, f"row {i} should be rejected"
         assert out[i]["mean_r"] is None
-    # expression engine: stored-deflate only — Huffman honestly rejects
-    out_e = {r["id"]: r for r in decode_png(df, engine="expr").collect()}
-    assert out_e[1]["meta"] is not None
-    for i in (2, 3, 4, 5, 6):
-        assert out_e[i]["meta"] is None, f"row {i} should be rejected (expr)"
-        assert out_e[i]["mean_r"] is None
+
+
+def _rgb(w, h, seed):
+    import random
+
+    rnd = random.Random(seed)
+    return bytes(rnd.randrange(256) for _ in range(w * h * 3))
+
+
+def test_png_real_deflate_roundtrip_all_filters(spark):
+    """make_png_deflate (forward filters r%5, zlib level 6) ->
+    decode_png must reproduce exact channel means."""
+    import numpy as np
+
+    from pivot_spark.operators.codecs import decode_png, make_png_deflate
+
+    w, h = 7, 11  # 11 rows -> every filter type 0-4 occurs twice+
+    payload = _rgb(w, h, 91)
+    df = spark.createDataFrame([(1, payload)], "id long, p binary")
+    img = df.select("id", make_png_deflate(w, h, F.col("p")).alias("image"))
+    r = decode_png(img).head()
+    assert r["meta"]["width"] == w and r["meta"]["height"] == h
+    px = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+    for c, name in enumerate(["mean_r", "mean_g", "mean_b"]):
+        assert r[name] == int(px[:, c].sum()) / (w * h), name
+
+
+def test_png_multi_idat_and_ancillary_chunks(spark):
+    """Real-encoder layout: IDAT split across chunks + a tEXt chunk
+    between IHDR and IDAT decodes; a flipped IDAT payload byte (chunk
+    CRC now wrong) rejects."""
+    import numpy as np
+
+    from pivot_spark.operators.codecs import decode_png
+
+    w, h = 5, 4
+    payload = _rgb(w, h, 17)
+    raw = b"".join(
+        b"\x00" + payload[r * 3 * w : (r + 1) * 3 * w] for r in range(h)
+    )
+    z = zlib.compress(raw, 9)
+
+    def chunk(typ, data):
+        return (
+            struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", zlib.crc32(typ + data))
+        )
+
+    ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
+    cut = len(z) // 2
+    blob = (
+        bytes.fromhex("89504E470D0A1A0A")
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"tEXt", b"Comment\x00synthetic")
+        + chunk(b"IDAT", z[:cut]) + chunk(b"IDAT", z[cut:])
+        + chunk(b"IEND", b"")
+    )
+    bad = bytearray(blob)
+    bad[len(blob) - 30] ^= 0xFF  # inside the 2nd IDAT payload
+    df = spark.createDataFrame(
+        [(1, blob), (2, bytes(bad))], "id long, image binary"
+    )
+    got = {r["id"]: r for r in decode_png(df).collect()}
+    assert got[1]["meta"]["width"] == w
+    px = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+    assert got[1]["mean_g"] == int(px[:, 1].sum()) / (w * h)
+    assert got[2]["meta"] is None  # chunk CRC gate still holds

@@ -121,11 +121,13 @@ def main() -> None:
             if not info.name.startswith("_"):
                 modnames.append(f"{pkg}.{info.name}")
     n = 0
+    written = set()
     for modname in modnames:
         text = render_module(modname, xref)
         if text is None:
             continue
         fname = modname.replace("pivot_spark.", "") + ".md"
+        written.add(fname)
         with open(os.path.join(OUT, fname), "w") as fh:
             fh.write(text)
         first = ""
@@ -138,6 +140,10 @@ def main() -> None:
         )
         index.append(f"- [`{modname}`](api/{fname}) — {first}{suffix}")
         n += 1
+    # pages of modules that no longer exist
+    for fname in set(os.listdir(OUT)) - written:
+        if fname.endswith(".md"):
+            os.remove(os.path.join(OUT, fname))
     with open(os.path.join(REPO, "docs", "API.md"), "w") as fh:
         fh.write("\n".join(index) + "\n")
     print(f"wrote {n} module pages + docs/API.md")
