@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pivot_spark.operators.neardup import hamming_pairs
+
 # typed metadata contract for a decoded image column
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -273,58 +275,10 @@ def ahash_pairs(
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash Hamming distance:
     ``(id_a, id_b, hamming INT)`` for pairs with distance <=
-    ``max_hamming``. Candidate generation is the SimHash block trick
-    (``neardup.neardup_simhash``): split the hash into ``max_hamming+1``
-    bit blocks — pigeonhole guarantees every qualifying pair collides on
-    at least one block — equi-join per block, then verify the exact
-    ``bit_count(xor)``. Work scales with block-bucket load, never n²."""
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    n_blocks = max_hamming + 1
-    width = (grid + n_blocks - 1) // n_blocks
-    h = (
-        ahash(df, binary_col, grid=grid)
-        .select(F.col(id_col).alias("__id"), F.col("ahash").alias("__h"))
-        # (id, hash) is 16 bytes/doc; fence it so the interpreted
-        # byte-extraction pipeline runs once, not once per join side
-        .localCheckpoint(eager=False)
+    ``max_hamming`` — the ``ahash`` fingerprints through the shared
+    block-permutation join ``neardup.hamming_pairs`` (pigeonhole
+    candidates, exact ``bit_count(xor)`` verify inside the join). Work
+    scales with block-bucket load, never n²."""
+    return hamming_pairs(
+        ahash(df, binary_col, grid=grid), id_col, "ahash", grid, max_hamming
     )
-    blocks = h.select(
-        "__id",
-        "__h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.pmod(
-                            F.shiftright(F.col("__h"), b * width),
-                            F.lit(1 << width),
-                        ).alias("v"),
-                    )
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("__blk"),
-    )
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
-    # verify INSIDE the join projection, dedupe after: the hamming test
-    # is a scalar on the join output, so block-collision fan-out (tight
-    # hash clusters make it ~1000x the true pair count) never reaches
-    # the dropDuplicates shuffle — measured 5.0s -> 3.3s on 5k docs
-    cand = (
-        blocks.alias("a")
-        .join(
-            blocks.alias("b"),
-            (F.col("a.__blk") == F.col("b.__blk"))
-            & (F.col("a.__id") < F.col("b.__id"))
-            & (ham <= F.lit(max_hamming)),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return cand

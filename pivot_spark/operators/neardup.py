@@ -17,6 +17,12 @@ Scale notes:
 * exact verification joins candidate pairs back to per-doc shingle-hash
   sets; state per doc is the distinct-shingle set (bounded by doc
   length), never corpus-sized.
+
+Each mining step exists once: every Hamming-distance miner (SimHash,
+aHash, dHash, audio) is ``hamming_pairs``' block join; every exact
+verify is ``_verify_join``, which broadcasts the id->payload map only
+when the size counts of the fence job that already ran put it under
+256 MiB; MinHash band keys come from ``_banded``.
 """
 
 from __future__ import annotations
@@ -109,39 +115,53 @@ def word_shingles_pd(
 
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """persist + eager count. Every persisted frame here feeds >= 2
-    consumers inside a single downstream action (self-join sides, split
-    aggregations); without the fence both consumers race to compute the
-    not-yet-cached frame and the whole upstream runs twice."""
+def _materialize(
+    df: DataFrame, set_col: "str | None" = None
+) -> "tuple[DataFrame, int, int]":
+    """persist + ONE eager aggregate as the fence. Every persisted frame
+    here feeds >= 2 consumers inside a single downstream action
+    (self-join sides, split aggregations); without the fence both
+    consumers race to compute the not-yet-cached frame and the whole
+    upstream runs twice.
+
+    Returns ``(frame, rows, elems)``: the fence job's row count and the
+    total element count of the array column ``set_col`` (0 without
+    one) — the size inputs of ``_verify_join``, taken by the job that
+    runs anyway instead of a second scan of the cached frame."""
     df = df.persist()
-    df.count()
-    return df
+    elems = F.sum(F.size(set_col)) if set_col else F.lit(0)
+    row = df.agg(F.count(F.lit(1)), elems).head()
+    return df, row[0], row[1] or 0
+
 
 _VERIFY_BROADCAST_BYTES = 256 << 20
 
 
-def _auto_verify_broadcast(base: DataFrame) -> bool:
-    """Byte-sized 'auto' heuristic for broadcasting the id->shingle-set
-    verify map: estimate the serialized payload from the materialized
-    frame (8 bytes per shingle hash + ~48 bytes row overhead) and
-    broadcast only under a 256 MiB budget. A row-count bound alone
-    (the old ``<= 100_000`` docs rule) undercounts corpora of LONG
-    documents — 100k docs x 10k shingles is an 8 GB payload that would
-    blow Spark's broadcast cap on the DEFAULT path. The frame is
-    already persisted, so this aggregate is a cheap cached scan."""
-    row = base.agg(
-        F.sum("__n").alias("__sh"), F.count(F.lit(1)).alias("__rows")
-    ).collect()[0]
-    est_bytes = (row["__sh"] or 0) * 8 + row["__rows"] * 48
-    return est_bytes <= _VERIFY_BROADCAST_BYTES
+def _verify_join(
+    cand: DataFrame, payload: DataFrame, rows: int, elems: int
+) -> DataFrame:
+    """The exact-verify join of every pair miner: candidate pairs
+    ``cand`` (__ida, __idb) joined to the id -> payload frame
+    ``payload`` (__id, value) on both sides, giving (__ida, __idb, __a,
+    __b); each caller scores its own verify over __a/__b.
+
+    The payload is broadcast (measured ~3x faster than the shuffled
+    join at 5k docs) when its estimated size — 8 B per array element
+    plus ~48 B per row, from the ``rows``/``elems`` its fence counted —
+    is within 256 MiB; past that both joins shuffle, the plan that is
+    safe at any data size. A row-count bound alone would undercount
+    corpora of few-but-long documents (100k docs x 10k shingles is an
+    8 GB payload)."""
+    sa = payload.toDF("__ida", "__a")
+    sb = payload.toDF("__idb", "__b")
+    if 8 * elems + 48 * rows <= _VERIFY_BROADCAST_BYTES:
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    return cand.join(sa, "__ida").join(sb, "__idb")
 
 
-def _check_verify_broadcast(value) -> None:
-    if value not in (True, False, "auto"):
-        raise ValueError(
-            f"verify_broadcast must be True/False/'auto', got {value!r}"
-        )
+def _jaccard(a: str, b: str) -> Column:
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter)
 
 
 def _affine_params(k: int, seed: int) -> list[tuple[int, int]]:
@@ -247,6 +267,25 @@ def minhash_signatures(
     return spread_input(base).mapInPandas(compute, schema=out_schema)
 
 
+def _banded(sigs: DataFrame, bands: int, r: int, *cols) -> DataFrame:
+    """(__id, *cols, __band, __key): one row per LSH band of each
+    signature, the key an xxhash64 over the band index and its ``r``
+    minhash values. Built as ONE SQL string: the Column-DSL form
+    (F.array of per-band F.xxhash64) paid ~bands*(r+1) py4j round-trips
+    of plan construction per query (the round-7 e134/e221 selectExpr
+    finding); the expression tree is identical."""
+    keys_sql = ", ".join(
+        "xxhash64(%d, %s)"
+        % (b, ", ".join(f"__minhash[{b * r + i}]" for i in range(r)))
+        for b in range(bands)
+    )
+    return sigs.select(
+        "__id",
+        *cols,
+        F.posexplode(F.expr(f"array({keys_sql})")).alias("__band", "__key"),
+    )
+
+
 def neardup_minhash_lsh(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -256,7 +295,6 @@ def neardup_minhash_lsh(
     bands: int = 64,
     shingle_len: int = 3,
     seed: int = 42,
-    verify_broadcast: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) with word-n-gram Jaccard
     >= threshold, found via MinHash-LSH banding and verified exactly.
@@ -268,24 +306,11 @@ def neardup_minhash_lsh(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sigs = _materialize(
-        minhash_signatures(df, id_col, text_col, num_hashes, shingle_len, seed)
+    sigs, rows, elems = _materialize(
+        minhash_signatures(df, id_col, text_col, num_hashes, shingle_len, seed),
+        "__shingles",
     )
-
-    # band keys as ONE SQL string: the F.array(*[F.xxhash64(...) ...])
-    # Column-DSL form paid ~bands*(r+1) py4j round-trips of plan
-    # construction per query (the round-7 e134/e221 selectExpr finding);
-    # the expression tree is identical.
-    keys_sql = ", ".join(
-        "xxhash64(%d, %s)"
-        % (b, ", ".join(f"__minhash[{b * r + i}]" for i in range(r)))
-        for b in range(bands)
-    )
-    banded = sigs.select(
-        "__id",
-        F.size("__shingles").alias("__nsh"),
-        F.posexplode(F.expr(f"array({keys_sql})")).alias("__band", "__key"),
-    )
+    banded = _banded(sigs, bands, r, F.size("__shingles").alias("__nsh"))
     t = float(threshold)
     cand = (
         banded.alias("a")
@@ -306,34 +331,12 @@ def neardup_minhash_lsh(
         .select(F.col("a.__id").alias("__ida"), F.col("b.__id").alias("__idb"))
         .dropDuplicates(["__ida", "__idb"])
     )
-
-    # ONE sets frame joined under two aliases (not two renamed copies):
-    # keeps the broadcast subtrees structurally identical so the
-    # exchange is reuse-eligible, and skips two rename projections
-    sets = sigs.select("__id", "__shingles")
-    if verify_broadcast:
-        # bounded by the corpus shingle-set frame — same knob/contract as
-        # ngram_jaccard_pairs; pass False past broadcast size
-        sets = F.broadcast(sets)
-    pairs = (
-        cand.join(sets.alias("sa"), F.col("__ida") == F.col("sa.__id"))
-        .join(sets.alias("sb"), F.col("__idb") == F.col("sb.__id"))
-    )
-    inter = F.size(
-        F.array_intersect(F.col("sa.__shingles"), F.col("sb.__shingles"))
-    )
-    union = (
-        F.size(F.col("sa.__shingles")) + F.size(F.col("sb.__shingles")) - inter
-    )
-    out = (
-        pairs.select(
-            F.col("__ida").alias("id_a"),
-            F.col("__idb").alias("id_b"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out
+    pairs = _verify_join(cand, sigs.select("__id", "__shingles"), rows, elems)
+    return pairs.select(
+        F.col("__ida").alias("id_a"),
+        F.col("__idb").alias("id_b"),
+        _jaccard("__a", "__b").alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(
@@ -342,7 +345,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     shingle_len: int = 3,
-    verify_broadcast: "bool | str" = "auto",
     max_comparisons: "int | None" = None,
 ) -> DataFrame:
     """EXACT n-gram-Jaccard near-dup pairs via a prefix-filtered
@@ -428,28 +430,21 @@ def ngram_jaccard_pairs(
     candidate pairs in tens of seconds; 5.7e9 filled an 80 GB disk
     with shuffle spill).
 
-    ``verify_broadcast``: True broadcasts the id->shingle-set map into
-    the verify join — measured 3x faster than the shuffled join at 5k
-    docs. It is bounded by the whole corpus' set frame, so past the
-    broadcast limit it must be False (shuffled hash join, the only
-    data-size-unbounded-safe plan). The default ``"auto"`` estimates
-    the payload in BYTES from the materialized frame (8 B per shingle
-    hash + row overhead) and broadcasts only under a 256 MiB budget —
-    a row-count rule would mis-broadcast corpora of few-but-long
-    documents. Anything other than True/False/'auto' raises."""
+    Survivors are verified through ``_verify_join``, which broadcasts
+    the id->shingle-set map when the fence's byte estimate allows."""
     # cached: the per-doc shingle-hash set feeds three consumers (df-count,
     # prefix regroup, verify) — without it the interpreted shingling
-    _check_verify_broadcast(verify_broadcast)
     # expression re-runs per consumer (and again on each self-join side).
     # State is one hash per distinct shingle per doc, disk-spillable.
-    base = _materialize(
+    base, rows, elems = _materialize(
         df.select(
             F.col(id_col).alias("__id"),
             F.transform(
                 word_shingles_pd(F.col(text_col), shingle_len),
                 lambda g: F.xxhash64(g),
             ).alias("__hs"),  # shingles already distinct
-        ).withColumn("__n", F.size("__hs"))
+        ).withColumn("__n", F.size("__hs")),
+        "__hs",
     )
 
     from pyspark.sql import Window
@@ -473,7 +468,7 @@ def ngram_jaccard_pairs(
             )
         ).alias("__p", "__h"),
     )
-    pref = _materialize(pref)
+    pref = _materialize(pref)[0]
     if max_comparisons is not None:
         # linear probe over the materialized prefix frame: counts the
         # UNORDERED same-token candidate pairs sum_h C(df_pref(h), 2) —
@@ -558,24 +553,12 @@ def ngram_jaccard_pairs(
         )
         .select("__ida", "__idb")
     )
-    sets = base.select("__id", "__hs")
-    sa = sets.withColumnsRenamed({"__id": "__ida", "__hs": "__sa"})
-    sb = sets.withColumnsRenamed({"__id": "__idb", "__hs": "__sb"})
-    if verify_broadcast == "auto":
-        verify_broadcast = _auto_verify_broadcast(base)
-    if verify_broadcast:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    pairs = cand.join(sa, "__ida").join(sb, "__idb")
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    j = inter.cast("double") / (F.size("__sa") + F.size("__sb") - inter)
-    return (
-        pairs.select(
-            F.col("__ida").alias("id_a"),
-            F.col("__idb").alias("id_b"),
-            j.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    pairs = _verify_join(cand, base.select("__id", "__hs"), rows, elems)
+    return pairs.select(
+        F.col("__ida").alias("id_a"),
+        F.col("__idb").alias("id_b"),
+        _jaccard("__a", "__b").alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def _bit_mask(bit: int) -> int:
@@ -729,29 +712,60 @@ def neardup_simhash(
     n_blocks: "int | None" = None,
     base_hash: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup pairs (id_a < id_b, hamming <= max_hamming) using
-    the block-permutation trick: split the signature into n_blocks chunks;
-    any pair within max_hamming distance shares >= n_blocks - max_hamming
-    chunks, so pairs sharing >=1 (block_idx, block_value) are a superset
-    of all true pairs when max_hamming < n_blocks. Exact verify after the
-    block join.
+    """SimHash near-dup pairs (id_a, id_b, hamming) with id_a < id_b and
+    hamming <= max_hamming: the ``simhash_df`` signatures through the
+    block-permutation join of ``hamming_pairs``. For billions of docs
+    move to 128-bit signatures (two longs) so blocks stay wide."""
+    sigs = simhash_df(df, id_col, text_col, num_bits, shingle_len, base_hash)
+    return hamming_pairs(sigs, "__id", "__sig", num_bits, max_hamming, n_blocks)
+
+
+def hamming_pairs(
+    df: DataFrame,
+    id_col: str,
+    sig_col: str,
+    num_bits: int,
+    max_hamming: int,
+    n_blocks: "int | None" = None,
+) -> DataFrame:
+    """Hamming-ball pair join over a PRECOMPUTED <=63-bit BIGINT
+    signature column: ``(id_a, id_b, hamming)`` for pairs with id_a <
+    id_b within ``max_hamming``. The caller supplies the fingerprint
+    (SimHash, aHash/dHash, audio energy-delta, any 64-bit sketch), so
+    every perceptual-hash modality shares this one join.
+
+    Block-permutation candidates: split the signature into ``n_blocks``
+    chunks; a pair within max_hamming differs in at most max_hamming
+    chunks, so when max_hamming < n_blocks it collides on >= 1 (block
+    index, block value) and the block equi-join is a superset of all
+    true pairs; the exact distance is verified inside the join. Work
+    scales with block-bucket load, never n².
 
     n_blocks defaults to max_hamming + 1 — the minimum that preserves the
     superset guarantee, which maximizes block width and so minimizes
     candidate volume (~ n_docs^2 / 2^width per block). Widths need not
     divide num_bits: the remainder is spread one extra bit over the
     first blocks ({8,8,8,8,7,7,7,7} for 60 bits / 8 blocks — measured
-    3x fewer candidates than ten 6-bit blocks). For billions of docs
-    move to 128-bit signatures (two longs) so blocks stay wide."""
+    3x fewer candidates than ten 6-bit blocks)."""
     if n_blocks is None:
         n_blocks = max_hamming + 1
-    assert max_hamming < n_blocks <= num_bits
+    if max_hamming < 0 or not max_hamming < n_blocks <= num_bits:
+        raise ValueError(
+            f"need 0 <= max_hamming < n_blocks <= num_bits, got "
+            f"{max_hamming}/{n_blocks}/{num_bits}"
+        )
     base_w, extra = divmod(num_bits, n_blocks)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_blocks)]
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
+    # NULL-signature rows (e.g. codec poison-pill rejects) are dropped
+    # AFTER the persist fence: a .where() on the computed column BEFORE
+    # it would be predicate-pushed below the caller's projections,
+    # alias-substituting the full signature tree into the Filter — the
+    # fingerprint then computes twice and the inlined monster expression
+    # falls out of codegen (observed: 87 KB filter condition)
     sigs = _materialize(
-        simhash_df(df, id_col, text_col, num_bits, shingle_len, base_hash)
-    )
+        df.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig"))
+    )[0].where(F.col("__sig").isNotNull())
     blocks = sigs.select(
         "__id",
         "__sig",
@@ -767,82 +781,10 @@ def neardup_simhash(
         ).alias("__blk", "__val"),
     )
     # hamming verify INSIDE the join condition: the test is a scalar on
-    # carried signatures, so block-collision fan-out is cut before the
-    # dropDuplicates shuffle instead of after it (same reorder measured
-    # 5.0s -> 3.3s on the aHash twin, multimodal.ahash_pairs)
-    cand = (
-        blocks.alias("a")
-        .join(
-            blocks.alias("b"),
-            (F.col("a.__blk") == F.col("b.__blk"))
-            & (F.col("a.__val") == F.col("b.__val"))
-            & (F.col("a.__id") < F.col("b.__id"))
-            & (
-                hamming64(F.col("a.__sig"), F.col("b.__sig"))
-                <= F.lit(max_hamming)
-            ),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            hamming64(F.col("a.__sig"), F.col("b.__sig")).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return cand
-
-
-def hamming_pairs(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    num_bits: int,
-    max_hamming: int,
-    n_blocks: "int | None" = None,
-) -> DataFrame:
-    """Generic Hamming-ball pair join over a PRECOMPUTED <=63-bit BIGINT
-    signature column: ``(id_a, id_b, hamming)`` for pairs within
-    ``max_hamming``. Same block-permutation candidate generation as
-    ``neardup_simhash`` (split into ``n_blocks`` chunks; pigeonhole
-    guarantees every qualifying pair collides on >=1 chunk when
-    ``max_hamming < n_blocks``), but signature-agnostic — the caller
-    supplies the fingerprint (SimHash, aHash/dHash, audio energy-delta,
-    any 64-bit sketch), so every perceptual-hash modality shares one
-    scale-safe join. Work scales with block-bucket load, never n²."""
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    if not max_hamming < n_blocks <= num_bits:
-        raise ValueError(
-            f"need max_hamming < n_blocks <= num_bits, got "
-            f"{max_hamming}/{n_blocks}/{num_bits}"
-        )
-    base_w, extra = divmod(num_bits, n_blocks)
-    widths = [base_w + (1 if i < extra else 0) for i in range(n_blocks)]
-    offsets = [sum(widths[:i]) for i in range(n_blocks)]
-    # NULL-signature rows (e.g. codec poison-pill rejects) are dropped
-    # AFTER the persist fence: a .where() on the computed column BEFORE
-    # it would be predicate-pushed below the caller's projections,
-    # alias-substituting the full signature tree into the Filter — the
-    # fingerprint then computes twice and the inlined monster expression
-    # falls out of codegen (observed: 87 KB filter condition)
-    sigs = _materialize(
-        df.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig"))
-    ).where(F.col("__sig").isNotNull())
-    blocks = sigs.select(
-        "__id",
-        "__sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("__sig"), offsets[i]).bitwiseAND(
-                        F.lit((1 << widths[i]) - 1).cast("long")
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("__blk", "__val"),
-    )
-    # hamming verify INSIDE the join condition (see neardup_simhash)
+    # carried signatures, so block-collision fan-out (tight hash clusters
+    # make it ~1000x the true pair count) is cut before the
+    # dropDuplicates shuffle instead of after it (measured 5.0s -> 3.3s
+    # on 5k aHash docs)
     return (
         blocks.alias("a")
         .join(
@@ -875,7 +817,6 @@ def neardup_embedding_cosine(
     exact: bool = False,
     exact_max_rows: int = 1_000_000,
     seed: int = 42,
-    verify_broadcast: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs (id_a < id_b, cos >= threshold).
 
@@ -891,12 +832,9 @@ def neardup_embedding_cosine(
     the 100 TB path (miss probability per true pair at cos c is
     (1 - (1 - acos(c)/pi)^n_planes)^n_tables). Candidates travel as bare
     (id_a, id_b) pairs — vectors are joined back only for the verify, so
-    the bucket join and dedup never shuffle array payloads.
-
-    ``verify_broadcast`` (default True) broadcasts the id->vector map
-    into the verify joins (measured ~3x at 5k x 64-dim). It is bounded
-    by the corpus vector frame — past broadcast size pass False for the
-    shuffled hash join.
+    the bucket join and dedup never shuffle array payloads; the verify
+    join broadcasts the id->vector map while it is small enough
+    (``_verify_join``).
     """
     from pivot_spark.operators.similarity import cosine_pd, srp_signatures_pd
 
@@ -925,7 +863,7 @@ def neardup_embedding_cosine(
     # sides; unpersisted, the SRP Arrow kernel re-ran once per side
     # (two ArrowEvalPython scans in the e12 plan). (id, table, sig) is
     # 24 bytes/row x n_tables — disk-spillable at any corpus size.
-    tagged = _materialize(
+    tagged, n_tagged, _ = _materialize(
         base.select("__id", F.posexplode(sig_cols).alias("__t", "__sig"))
     )
     cand = (
@@ -939,11 +877,8 @@ def neardup_embedding_cosine(
         .select(F.col("a.__id").alias("__ida"), F.col("b.__id").alias("__idb"))
         .dropDuplicates(["__ida", "__idb"])
     )
-    va = base.withColumnsRenamed({"__id": "__ida", "__vec": "__va"})
-    vb = base.withColumnsRenamed({"__id": "__idb", "__vec": "__vb"})
-    if verify_broadcast:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    pairs = cand.join(va, "__ida").join(vb, "__idb")
+    rows = n_tagged // n_tables  # posexplode: n_tables rows per vector
+    pairs = _verify_join(cand, base, rows, rows * dim)
     out = pairs.select(
         F.col("__ida").alias("id_a"),
         F.col("__idb").alias("id_b"),
@@ -951,7 +886,7 @@ def neardup_embedding_cosine(
         # pushes under this projection and the verify kernel scores
         # every candidate pair TWICE (guide §4.4)
         cosine_pd(
-            F.col("__va"), F.col("__vb"), nondeterministic=True
+            F.col("__a"), F.col("__b"), nondeterministic=True
         ).alias("cos"),
     )
     return out.filter(F.col("cos") >= threshold)
@@ -1024,7 +959,6 @@ def ngram_containment_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
     shingle_len: int = 3,
-    verify_broadcast: "bool | str" = "auto",
     collapse_exact_dups: "bool | str" = "auto",
     max_comparisons: "int | None" = None,
 ) -> DataFrame:
@@ -1086,14 +1020,9 @@ def ngram_containment_pairs(
     the same corpus) or MinHash-LSH (``neardup_minhash``) and accept
     approximate recall.
 
-    ``verify_broadcast`` as in ``ngram_jaccard_pairs``: True broadcasts
-    the id->set map into the verify join (measured faster than the
-    shuffled hash join up to at least 50k docs x ~500 shingles; pass
-    False when the id->set map outgrows executor memory). The default
-    ``"auto"`` estimates the post-collapse representative payload in
-    BYTES (8 B per shingle hash + row overhead, a cached scan) and
-    broadcasts only under a 256 MiB budget. Anything other than
-    True/False/'auto' raises.
+    The verify join (``_verify_join``) broadcasts the post-collapse
+    representative id->set map while its byte estimate, taken by the
+    fence job, stays within budget.
 
     ``max_comparisons``: optional fail-fast guard (same contract as
     ``ngram_jaccard_pairs``): a linear-cost probe (two token-keyed
@@ -1105,7 +1034,6 @@ def ngram_containment_pairs(
     does not perturb results (parity-tested)."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    _check_verify_broadcast(verify_broadcast)
     if collapse_exact_dups not in (True, False, "auto"):
         raise ValueError(
             f"collapse_exact_dups must be True/False/'auto', got "
@@ -1121,10 +1049,10 @@ def ngram_containment_pairs(
         ).alias("__hs"),
     ).persist()
     # ONE aggregate doubles as the persist fence AND computes every
-    # driver-side decision input (collapse probe + the verify-broadcast
-    # byte estimate) — the separate fence count, probe job, and
-    # _auto_verify_broadcast scan were three more passes over the same
-    # cached frame (guide §1.3: count the jobs, then cut them)
+    # driver-side decision input (collapse probe + the verify join's
+    # size estimate) — a separate fence count and probe job would be
+    # two more passes over the same cached frame (guide §1.3: count the
+    # jobs, then cut them)
     probe = sets0.agg(
         F.count(F.lit(1)).alias("__cnt"),
         F.approx_count_distinct(F.xxhash64("__hs")).alias("__dst"),
@@ -1136,16 +1064,18 @@ def ngram_containment_pairs(
             probe["__dst"] < 0.9 * probe["__cnt"]
         )
     groups = None
+    rows, elems = probe["__cnt"], probe["__sh"] or 0
     if do_collapse:
         # one representative per distinct (sorted) shingle-hash set;
         # set ops downstream are order-insensitive, so sorting __hs is
         # free canonicalization
-        groups = _materialize(
+        groups, rows, elems = _materialize(
             sets0.groupBy("__hs").agg(
                 F.min("__id").alias("__rep"),
                 F.collect_list("__id").alias("__members"),
                 F.count(F.lit(1)).alias("__g"),
-            )
+            ),
+            "__hs",
         )
         sets0 = groups.select(F.col("__rep").alias("__id"), "__hs")
     # sets0 (or groups) is already persisted; __n is a cheap projection
@@ -1177,7 +1107,7 @@ def ngram_containment_pairs(
             ).alias("__p"),
             "__h",
         )
-    )
+    )[0]
     pref = pos_ord.filter(F.col("__p") < prefix_len).select(
         F.col("__id").alias("__ida"),
         F.col("__n").alias("__na"),
@@ -1237,30 +1167,13 @@ def ngram_containment_pairs(
         .select("__ida", "__idb")
         .distinct()
     )
-    sets = base.select("__id", "__hs")
-    sa = sets.withColumnsRenamed({"__id": "__ida", "__hs": "__sa"})
-    sb = sets.withColumnsRenamed({"__id": "__idb", "__hs": "__sb"})
-    if verify_broadcast == "auto":
-        # post-collapse representative payload under the same 256 MiB
-        # budget as ngram_jaccard_pairs. Without a collapse the fence
-        # aggregate already measured the payload — no extra job; with
-        # one, re-probe the (materialized) representative frame.
-        if do_collapse:
-            verify_broadcast = _auto_verify_broadcast(base)
-        else:
-            est = (probe["__sh"] or 0) * 8 + probe["__cnt"] * 48
-            verify_broadcast = est <= _VERIFY_BROADCAST_BYTES
-    if verify_broadcast:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    pairs = cand.join(sa, "__ida").join(sb, "__idb")
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    c = inter.cast("double") / F.size("__sa")
-    j = inter.cast("double") / (F.size("__sa") + F.size("__sb") - inter)
+    pairs = _verify_join(cand, base.select("__id", "__hs"), rows, elems)
+    c = F.size(F.array_intersect("__a", "__b")).cast("double") / F.size("__a")
     rep_pairs = pairs.select(
         F.col("__ida").alias("id_a"),
         F.col("__idb").alias("id_b"),
         c.alias("containment"),
-        j.alias("jaccard"),
+        _jaccard("__a", "__b").alias("jaccard"),
     ).filter(F.col("containment") >= threshold)
     if not do_collapse:
         return rep_pairs
@@ -1310,7 +1223,6 @@ def neardup_minhash_incremental(
     bands: int = 64,
     shingle_len: int = 3,
     seed: int = 42,
-    verify_broadcast: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection — the daily-ingest path: a new
     ``delta`` batch is checked against an already-built signature
@@ -1330,27 +1242,19 @@ def neardup_minhash_incremental(
     merge semantics if deltas can replace docs)."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    dsigs = _materialize(
-        minhash_signatures(delta, id_col, text_col, num_hashes, shingle_len, seed)
+    dsigs, rows, elems = _materialize(
+        minhash_signatures(delta, id_col, text_col, num_hashes, shingle_len, seed),
+        "__shingles",
     )
+    # the verify payload is index + delta; the caller persisted the
+    # index, so sizing its part is one aggregate over the cache
+    idx = index.agg(F.count(F.lit(1)), F.sum(F.size("__shingles"))).head()
     all_sigs = index.unionByName(dsigs)
-
-    def banded(sigs):
-        band_keys = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(b), *[F.col("__minhash")[b * r + i] for i in range(r)]
-                )
-                for b in range(bands)
-            ]
-        )
-        return sigs.select("__id", F.posexplode(band_keys).alias("__band", "__key"))
-
     cand = (
-        banded(dsigs)
+        _banded(dsigs, bands, r)
         .alias("a")
         .join(
-            banded(all_sigs).alias("b"),
+            _banded(all_sigs, bands, r).alias("b"),
             (F.col("a.__band") == F.col("b.__band"))
             & (F.col("a.__key") == F.col("b.__key"))
             & (F.col("a.__id") != F.col("b.__id")),
@@ -1361,18 +1265,16 @@ def neardup_minhash_incremental(
         )
         .dropDuplicates(["__ida", "__idb"])
     )
-    sets = all_sigs.select("__id", "__shingles")
-    sa = sets.withColumnsRenamed({"__id": "__ida", "__shingles": "__sa"})
-    sb = sets.withColumnsRenamed({"__id": "__idb", "__shingles": "__sb"})
-    if verify_broadcast:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    pairs = cand.join(sa, "__ida").join(sb, "__idb")
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    union = F.size("__sa") + F.size("__sb") - inter
+    pairs = _verify_join(
+        cand,
+        all_sigs.select("__id", "__shingles"),
+        rows + idx[0],
+        elems + (idx[1] or 0),
+    )
     out = pairs.select(
         F.col("__ida").alias("id_a"),
         F.col("__idb").alias("id_b"),
-        (inter.cast("double") / union).alias("jaccard"),
+        _jaccard("__a", "__b").alias("jaccard"),
     ).filter(F.col("jaccard") >= threshold)
     return out, all_sigs
 
@@ -1457,7 +1359,7 @@ def minhash_estimate_report(
         sample, id_col, text_col,
         num_hashes=num_hashes, shingle_len=shingle_len, seed=seed,
     )
-    sigs = _materialize(sigs)  # both join sides read it
+    sigs = _materialize(sigs)[0]  # both join sides read it
     a = sigs.select(
         F.col("__id").alias("__ida"),
         F.col("__minhash").alias("__ma"),

@@ -7,21 +7,16 @@ confined to k-means clusters, so the candidate-pair count is
 sum(|cluster|^2) instead of n^2 — clusters are the blocking unit, the
 same role LSH bands play for MinHash.
 
-Two physical strategies:
-
-* ``method='gemm'`` (default): one ``applyInPandas`` pass grouped by
-  cluster — each task normalizes its cluster block once and computes
-  the within-cluster similarity matrix as a single numpy GEMM
-  (the paper's own formulation). Data transfer is each vector ONCE (not
-  once per pair), compute is vectorized; memory is O(|cluster|^2)
-  doubles per task, which is exactly the quantity the method already
-  bounds by choosing k (production runs use tens of thousands of
-  clusters, the paper uses 50k). Measured ~5x over the join form at
-  5k x 64-dim, k=8.
-* ``method='expr'``: cluster equi-join + per-pair interpreted fold —
-  no Arrow, no per-task materialization; the fallback when cluster
-  blocks must never be materialized per-task (degenerate giant
-  clusters) or when bit-exact fold-order arithmetic is required.
+One physical plan: one ``applyInPandas`` pass grouped by cluster —
+each task normalizes its cluster block once and computes the
+within-cluster similarity matrix as a single numpy GEMM (the paper's
+own formulation). Data transfer is each vector ONCE (not once per
+pair), compute is vectorized; memory is O(|cluster|^2) doubles per
+task, which is exactly the quantity the method already bounds by
+choosing k (production runs use tens of thousands of clusters, the
+paper uses 50k; with ``centers=None`` k grows with n). Measured ~5x
+over a cluster equi-join with a per-pair interpreted dot product at
+5k x 64-dim, k=8.
 
 Determinism (the paper drops a random/farthest member per pair; we
 declare an engine-portable rule): a row is DROPPED iff some
@@ -37,17 +32,10 @@ from typing import Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators.embedding import normalize_vectors
 from pivot_spark.operators.kmeans import assign_clusters
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
 
 
 def semdedup(
@@ -58,7 +46,6 @@ def semdedup(
     eps: float = 0.95,
     cluster_col: str = "cluster",
     keep_col: str = "keep",
-    method: str = "gemm",
     target_cluster_size: int = 2000,
     fit_iters: int = 2,
 ) -> DataFrame:
@@ -72,11 +59,9 @@ def semdedup(
     ``k = max(8, n // target_cluster_size)`` — k MUST scale with n or
     the per-cluster O(|cluster|^2) degenerates back to O(n^2/k_fixed)
     at corpus growth; scaling k holds expected cluster size (and so
-    per-task pair work) constant. See the module docstring for the two
-    ``method`` strategies.
+    per-task pair work) constant. See the module docstring for the
+    per-cluster GEMM.
     """
-    if method not in ("gemm", "expr"):
-        raise ValueError(f"method must be 'gemm' or 'expr', got {method!r}")
     if centers is None:
         if target_cluster_size <= 0:
             raise ValueError("target_cluster_size must be positive")
@@ -89,48 +74,28 @@ def semdedup(
         df.select(id_col, vec_col), vec_col, centers, cluster_col, dist_col=None
     )
 
-    if method == "gemm":
-        thin = assigned.select(
-            F.col(id_col).alias("__id"),
-            F.col(cluster_col).alias("__c"),
-            F.col(vec_col).alias("__v"),
-        )
-        id_type = df.schema[id_col].dataType
-        out_schema = f"__id {id_type.simpleString()}"
+    thin = assigned.select(
+        F.col(id_col).alias("__id"),
+        F.col(cluster_col).alias("__c"),
+        F.col(vec_col).alias("__v"),
+    )
+    id_type = df.schema[id_col].dataType
+    out_schema = f"__id {id_type.simpleString()}"
 
-        def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf["__id"].values
-            order = np.argsort(ids)
-            V = np.stack(pdf["__v"].values[order]).astype("float64")
-            norms = np.linalg.norm(V, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            V = V / norms
-            S = V @ V.T
-            # dropped: any strictly-earlier (smaller-id) row >= eps
-            drop = np.triu(S >= eps, k=1).any(axis=0)
-            return pd.DataFrame({"__id": ids[order][drop]})
+    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["__id"].values
+        order = np.argsort(ids)
+        V = np.stack(pdf["__v"].values[order]).astype("float64")
+        norms = np.linalg.norm(V, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        V = V / norms
+        S = V @ V.T
+        # dropped: any strictly-earlier (smaller-id) row >= eps
+        drop = np.triu(S >= eps, k=1).any(axis=0)
+        return pd.DataFrame({"__id": ids[order][drop]})
 
-        dropped = thin.groupBy("__c").applyInPandas(prune, out_schema)
-        dropped = dropped.select(F.col("__id").alias(id_col))
-    else:
-        normed = assigned.withColumn("__nv", normalize_vectors(F.col(vec_col)))
-        a = normed.select(
-            F.col(cluster_col).alias("__c"),
-            F.col(id_col).alias("__ida"),
-            F.col("__nv").alias("__va"),
-        )
-        b = normed.select(
-            F.col(cluster_col).alias("__c"),
-            F.col(id_col).alias("__idb"),
-            F.col("__nv").alias("__vb"),
-        )
-        dropped = (
-            a.join(b, "__c")
-            .filter(F.col("__ida") < F.col("__idb"))
-            .filter(_dot(F.col("__va"), F.col("__vb")) >= F.lit(float(eps)))
-            .select(F.col("__idb").alias(id_col))
-            .distinct()
-        )
+    dropped = thin.groupBy("__c").applyInPandas(prune, out_schema)
+    dropped = dropped.select(F.col("__id").alias(id_col))
 
     flag = dropped.withColumn("__dropped", F.lit(True))
     out = (

@@ -306,7 +306,7 @@ WITH first AS (
   SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey
   FROM second WHERE rn = 1
 ), ordered AS (
-  SELECT o_custkey, o_orderstatus, o_orderdate,
+  SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
          lag(o_orderstatus) OVER w AS prev,
          row_number() OVER w AS rn
   FROM stream
@@ -319,7 +319,7 @@ SELECT o_custkey, o_orderstatus,
        epoch_us(lead(o_orderdate) OVER w2) AS valid_to_us,
        (lead(o_orderdate) OVER w2) IS NULL AS is_current
 FROM changes
-WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate)
+WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """,
 )
 def e70_scd2_apply(spark, sf_dir):

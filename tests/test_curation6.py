@@ -86,7 +86,10 @@ def test_semdedup_drops_later_similar_same_cluster(spark):
     assert out[4]["cluster"] == 1 and out[4]["keep"] is True
 
 
-def test_semdedup_gemm_matches_expr(spark):
+def test_semdedup_matches_numpy_bruteforce(spark):
+    """semdedup against a numpy brute force of its keep-min-id rule:
+    each row joins its nearest center, and is dropped iff a smaller-id
+    row of the same cluster has cosine >= eps."""
     import numpy as np
 
     rng = np.random.RandomState(3)
@@ -96,16 +99,24 @@ def test_semdedup_gemm_matches_expr(spark):
          for i in range(10)]
     df = _vec_df(spark, rows)
     centers = [r[1] for r in rows[:4]]
-    g = semdedup(df, "vid", "vec", centers, eps=0.95, method="gemm")
-    e = semdedup(df, "vid", "vec", centers, eps=0.95, method="expr")
-    assert {tuple(r) for r in g.collect()} == {tuple(r) for r in e.collect()}
-
-
-def test_semdedup_bad_method(spark):
-    df = _vec_df(spark, [(1, [1.0, 0.0])])
-    import pytest as _pt
-    with _pt.raises(ValueError, match="method"):
-        semdedup(df, "vid", "vec", [[1.0, 0.0]], method="fast")
+    X = {i: np.array(v) for i, v in rows}
+    C = np.array(centers)
+    cluster = {i: int(np.argmin(((C - x) ** 2).sum(axis=1))) for i, x in X.items()}
+    unit = {i: x / np.linalg.norm(x) for i, x in X.items()}
+    want = {
+        (
+            i,
+            cluster[i],
+            not any(
+                j < i and cluster[j] == cluster[i] and unit[i] @ unit[j] >= 0.95
+                for j in X
+            ),
+        )
+        for i in X
+    }
+    got = {tuple(r) for r in semdedup(df, "vid", "vec", centers, eps=0.95).collect()}
+    assert got == want
+    assert sum(not keep for _, _, keep in want) >= 9  # the planted group
 
 
 def test_semdedup_counts(spark):

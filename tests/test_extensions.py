@@ -103,41 +103,63 @@ def test_ngram_jaccard_max_comparisons_guard(docs_df):
     assert {(r["id_a"], r["id_b"]) for r in out} == {(1, 2)}
 
 
-def test_verify_broadcast_validated(docs_df):
-    """verify_broadcast accepts exactly True/False/'auto': a typo like
-    'Auto' must raise, not silently force a broadcast (round-6 advisor
-    item — the old code let any non-'auto' string fall through truthy)."""
-    import pytest as _pytest
-
-    from pivot_spark.operators.neardup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = docs_df.filter(F.col("text") != "")
-    for bad in ("Auto", "none", ""):
-        with _pytest.raises(ValueError, match="verify_broadcast"):
-            ngram_jaccard_pairs(docs, verify_broadcast=bad)
-        with _pytest.raises(ValueError, match="verify_broadcast"):
-            ngram_containment_pairs(docs, verify_broadcast=bad)
-
-
-def test_auto_verify_broadcast_is_byte_sized(spark):
-    """The 'auto' broadcast heuristic keys on estimated BYTES, not row
-    count: few-but-long documents past the 256 MiB budget must fall back
-    to the shuffled join even though the row count is tiny."""
+def test_verify_join_broadcasts_only_under_budget(spark):
+    """The exact-verify join broadcasts the id->payload map while its
+    estimate (8 B per element + 48 B per row) is within the 256 MiB
+    budget and shuffles one element past it — sized in BYTES, so 40
+    documents with millions of shingles are not broadcast. Spark's own
+    size-based broadcast is off here, so only the hint can broadcast."""
     from pivot_spark.operators import neardup as nd
 
-    small = spark.createDataFrame(
-        [(i, [1, 2, 3]) for i in range(10)], "__id long, __hs array<long>"
-    ).withColumn("__n", F.size("__hs"))
-    assert nd._auto_verify_broadcast(small) is True
-    # 40 docs x 1e6 shingle hashes each = ~320 MB estimated payload;
-    # fabricate the count without materializing the arrays
-    big = spark.createDataFrame(
-        [(i, 1_000_000) for i in range(40)], "__id long, __n long"
+    cand = spark.createDataFrame([(1, 2)], "__ida long, __idb long")
+    payload = spark.createDataFrame(
+        [(1, [1, 2]), (2, [2, 3])], "__id long, __hs array<long>"
     )
-    assert nd._auto_verify_broadcast(big) is False
+    rows = 40
+    elems = (nd._VERIFY_BROADCAST_BYTES - 48 * rows) // 8
+
+    def plan(n):
+        out = nd._verify_join(cand, payload, rows, n)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert plan(elems).count("BroadcastHashJoin") == 2
+        assert "Broadcast" not in plan(elems + 1)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_ngram_jaccard_build_runs_only_its_fences(spark, docs_df):
+    """Building ngram_jaccard_pairs submits only its two fence
+    aggregates (shingle sets, prefix tokens) — 8 jobs, since adaptive
+    execution runs each query stage as a job — all from the one fence
+    call site: the verify join's size estimate rides on the first fence
+    instead of a probe job of its own."""
+    from pivot_spark.operators.neardup import ngram_jaccard_pairs
+
+    spark.catalog.clearCache()  # a cached base frame would skip a fence
+    sc = spark.sparkContext
+    docs = docs_df.filter(F.col("text") != "")
+    group = "test_ngram_jaccard_build"
+    sc.setJobGroup(group, group)
+    try:
+        out = ngram_jaccard_pairs(docs, threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    sites = {
+        tracker.getStageInfo(st).name
+        for j in jobs
+        for st in tracker.getJobInfo(j).stageIds
+    }
+    assert len(jobs) == 8 and len(sites) == 1, (len(jobs), sites)
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 2)}
 
 
 def test_simhash_neardup(docs_df):

@@ -217,3 +217,5 @@ def test_hamming_pairs_generic_vs_bruteforce(spark):
 def test_hamming_pairs_validates():
     with pytest.raises(ValueError):
         hamming_pairs(None, "id", "sig", num_bits=8, max_hamming=8)
+    with pytest.raises(ValueError, match="max_hamming"):
+        hamming_pairs(None, "id", "sig", num_bits=8, max_hamming=-1)

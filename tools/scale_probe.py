@@ -53,8 +53,8 @@ def _ccomb(df, keys) -> "tuple[int, int]":
 
 
 def _divmod_blocks(sigs, sig_col: str, num_bits: int, n_blocks: int):
-    """Replicate neardup.hamming_pairs / neardup_simhash block splitting
-    (divmod width spread) for the volume probe."""
+    """Replicate neardup.hamming_pairs' block splitting (divmod width
+    spread) for the volume probe."""
     base_w, extra = divmod(num_bits, n_blocks)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_blocks)]
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
@@ -118,25 +118,10 @@ def probe_e117(spark, sf_dir):
         ).alias("image"),
     )
     h = ahash(imgs, "image", grid=60)
-    # ahash_pairs: n_blocks = max_hamming + 1 = 6, fixed width ceil(60/6)
-    n_blocks, width = 6, 10
-    blocks = h.select(
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.pmod(
-                            F.shiftright(F.col("ahash"), b * width),
-                            F.lit(1 << width),
-                        ).alias("v"),
-                    )
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("__p", "__blk")
+    # ahash_pairs -> hamming_pairs: n_blocks = max_hamming + 1 = 6
+    v, m = _ccomb(
+        _divmod_blocks(h, "ahash", num_bits=60, n_blocks=6), ["__blk", "__val"]
     )
-    v, m = _ccomb(blocks, ["__blk"])
     return {"candidates": v, "max_bucket": m}
 
 
