@@ -61,6 +61,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from pivot_spark.session import get_spark
     from pivot_spark.plans.declared import QUERIES
+    from pivot_spark.operators._fence import fence_scope
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -104,10 +105,10 @@ def main() -> None:
     if os.path.isdir(warm_dir):
         for wq in ("p17", "e03_neardup_minhash"):
             try:
-                QUERIES[wq](spark, warm_dir).collect()
+                with fence_scope():
+                    QUERIES[wq](spark, warm_dir).collect()
             except Exception:
                 pass
-        spark.catalog.clearCache()
 
     baseline: dict[str, float] = {}
     bl_path = os.path.join(REPO, "BASELINE_OPERATIVE.json")
@@ -124,17 +125,16 @@ def main() -> None:
             py_calib_mid, jvm_calib_mid = _calib_point(spark)
         runs = []
         for _ in range(reps):
-            # queries are independent: drop DataFrames persisted by the
-            # previous run so cache blocks can't evict/GC-thrash this one
-            spark.catalog.clearCache()
-            # localCheckpoint() blocks are RDD-level persists that
-            # clearCache() does NOT release — without this they
-            # accumulate across the suite and inflate later queries
+            # queries are independent: the fence scope releases the
+            # frames this run pins, so cache blocks can't evict/GC-thrash
+            # the next one. Loop-body localCheckpoint() blocks are
+            # RDD-level persists no scope tracks — release those too, or
+            # they accumulate across the suite and inflate later queries
             for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
                 rdd.unpersist()
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = len(df.collect())
+            with fence_scope():
+                n = len(fn(spark, sf_dir).collect())
             runs.append(time.perf_counter() - t0)
             assert n >= 0
         # median: single-run numbers swing +-25% from GC/python-worker
@@ -163,11 +163,11 @@ def main() -> None:
     for q in suspects:
         runs = []
         for _ in range(reps):
-            spark.catalog.clearCache()
             for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
                 rdd.unpersist()
             t0 = time.perf_counter()
-            QUERIES[q](spark, sf_dir).collect()
+            with fence_scope():
+                QUERIES[q](spark, sf_dir).collect()
             runs.append(time.perf_counter() - t0)
         iso = round(sorted(runs)[len(runs) // 2], 3)
         reruns[q] = {"suite": timings[q], "isolated": iso}

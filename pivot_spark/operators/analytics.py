@@ -27,6 +27,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+from pivot_spark.operators.profile import _range_pids
+
 US_PER_WEEK = 7 * 24 * 3600 * 1_000_000
 
 
@@ -366,12 +369,11 @@ def ks_test(
         .repartitionByRange(num_ranges, F.col("__v"))
         .withColumn("__pid", F.spark_partition_id())
     )
-    # persist + fence: m feeds the per-range offsets, the totals and the
-    # cumulative pass — unpersisted, each consumer re-ran both side
-    # scans + the full-outer merge (e100's plan carried 6 source scans).
+    # fenced: m feeds the per-range offsets, the totals and the
+    # cumulative pass — unfenced, each consumer re-ran both side scans
+    # + the full-outer merge (e100's plan carried 6 source scans).
     # State is distinct-value-sized, disk-spillable.
-    m = m.persist()
-    m.count()
+    m = materialize(m, "analytics.ks_test")[0]
     tot = m.groupBy("__pid").agg(
         F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
     )
@@ -812,7 +814,6 @@ def classification_report(
         df.filter(y.isNotNull() & p.isNotNull())
         .groupBy(y.alias("label"), p.alias("pred"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     true_m = ct.groupBy(F.col("label").alias("class")).agg(F.sum("n").alias("n_true"))
     pred_m = ct.groupBy(F.col("pred").alias("class")).agg(F.sum("n").alias("n_pred"))
@@ -1049,11 +1050,7 @@ def conformal_threshold(
         raise ValueError("empty calibration set")
     k = min(n, int(math.ceil((n + 1) * (1.0 - alpha))))
     vc = base.groupBy("__r").agg(F.count(F.lit(1)).alias("__c"))
-    part = (
-        vc.repartitionByRange(32, F.col("__r"))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    part = _range_pids(vc, 32, [F.col("__r")], "analytics.conformal_threshold")
     tot = part.groupBy("__pid").agg(F.sum("__c").alias("__t"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = tot.select(
@@ -1367,7 +1364,8 @@ def sequence_surprise(
             ).alias("__t"),
         )
         .filter(F.col("__t").isNotNull())
-    ).persist()
+    )
+    trans = materialize(trans, "analytics.sequence_surprise")[0]  # counts + join
     counts = trans.groupBy("__f", "__t").agg(F.count(F.lit(1)).alias("__n"))
     tot = Window.partitionBy("__f")
     probs = counts.select(
@@ -1406,7 +1404,6 @@ def rolling_active_users(
         df.filter(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
         .select(day.alias("__day"), F.col(user_col).alias("__u"))
         .distinct()
-        .persist()
     )
     dau = du.groupBy(F.col("__day").alias("day")).agg(
         F.count(F.lit(1)).alias("dau")
@@ -1637,8 +1634,7 @@ def cohens_kappa(
     conf = base.groupBy(
         F.col(col_a).alias("__a"), F.col(col_b).alias("__b")
     ).agg(F.count(F.lit(1)).alias("__c"))
-    conf = conf.persist()
-    conf.count()  # eager fence: tot/rows/cols would each rescan the corpus
+    conf = materialize(conf, "analytics.cohens_kappa")[0]  # read by tot/rows/cols
     tot = conf.agg(
         F.sum("__c").alias("n"),
         F.coalesce(
@@ -1701,30 +1697,19 @@ def krippendorff_alpha(
     (n_units BIGINT, n_pairable BIGINT, d_o, d_e, alpha as raw doubles;
     callers round). Degenerate D_e = 0 (a single value overall) yields
     NULL alpha.
-
-    EAGER: this operator executes at call time (it materializes the
-    one-row answer so the cache fences around the reused coincidence
-    frame can be released immediately — a long-lived session would
-    otherwise accumulate cached blocks per invocation) and returns a
-    localized answer-sized frame. Plan-only callers (plan audits,
-    type-parity sweeps) pay full execution for queries built on it.
     """
     base = df.filter(
         F.col(unit_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(F.col(unit_col).alias("__u"), F.col(value_col).alias("__v"))
     uc = base.groupBy("__u", "__v").agg(F.count(F.lit(1)).alias("__nc"))
     mu = uc.groupBy("__u").agg(F.sum("__nc").alias("__m"))
-    uc2 = (
-        uc.join(mu, "__u")
-        .filter(F.col("__m") >= 2)
-        .persist()
+    # fenced: the self-join + totals would rescan upstream; n_units is
+    # a probe of the fence job
+    uc2, (_, n_units) = materialize(
+        uc.join(mu, "__u").filter(F.col("__m") >= 2),
+        "analytics.krippendorff_alpha",
+        F.count_distinct("__u"),
     )
-    # fence: the self-join + totals would rescan upstream. The fence
-    # action doubles as the n_units computation (one count-distinct in
-    # the same pass) — the separate uc2.select(__u).distinct().count()
-    # job it replaces cost a full plan+schedule round on an already-
-    # persisted frame.
-    n_units = uc2.agg(F.count_distinct("__u")).collect()[0][0]
     left = uc2.select(
         "__u", F.col("__v").alias("__c"), F.col("__nc").alias("__na"), "__m"
     )
@@ -1747,8 +1732,7 @@ def krippendorff_alpha(
         .groupBy("__c", "__cp")
         .agg(F.sum("__o").alias("__occ"))
     )
-    coin = coin.persist()
-    coin.count()
+    coin = materialize(coin, "analytics.krippendorff_alpha")[0]
     marg = coin.groupBy("__c").agg(F.sum("__occ").alias("__nc"))
     tots = coin.agg(
         F.sum("__occ").alias("__n"),
@@ -1769,20 +1753,13 @@ def krippendorff_alpha(
     )
     d_o = F.col("__dis") / F.col("__n")
     d_e = F.col("__en") / (F.col("__n") * (F.col("__n") - 1))
-    out = tots.crossJoin(F.broadcast(e_num)).select(
+    return tots.crossJoin(F.broadcast(e_num)).select(
         F.lit(n_units).cast("long").alias("n_units"),
         F.round(F.col("__n")).cast("long").alias("n_pairable"),
         d_o.alias("d_o"),
         d_e.alias("d_e"),
         F.when(d_e > 0, 1.0 - d_o / d_e).alias("alpha"),
     )
-    # The answer is ONE row: materialize it, release the fences (a
-    # long-lived session would otherwise accumulate cached blocks per
-    # invocation), and hand back an answer-sized local frame.
-    rows = out.collect()
-    coin.unpersist()
-    uc2.unpersist()
-    return out.sparkSession.createDataFrame(rows, out.schema)
 
 
 def threshold_select(
@@ -1974,10 +1951,6 @@ def jackknife_ratio(
     ONE corpus aggregate (B-bounded), then answer-sized algebra.
     Output: one row — (ratio, se_jack, ci_lo, ci_hi at ±1.96·se,
     n_buckets BIGINT, n BIGINT).
-
-    EAGER: executes at call time and returns a localized answer-sized
-    frame (see ``krippendorff_alpha`` — same cache-fence rationale).
-    Plan-only callers pay full execution for queries built on it.
     """
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
@@ -2010,7 +1983,6 @@ def jackknife_ratio(
         F.sum("__d").alias("__sd"),
         F.count(F.lit(1)).alias("__c"),
     )
-    per = per.persist()
     tot = per.agg(
         F.sum("__sn").alias("__tn"),
         F.sum("__sd").alias("__td"),
@@ -2034,7 +2006,7 @@ def jackknife_ratio(
     se = F.sqrt(
         (F.col("__nb") - 1) / F.col("__nb") * F.greatest(ss, F.lit(0.0))
     )
-    res = out.select(
+    return out.select(
         ratio.alias("ratio"),
         se.alias("se_jack"),
         (ratio - 1.96 * se).alias("ci_lo"),
@@ -2042,7 +2014,3 @@ def jackknife_ratio(
         F.col("__nb").cast("long").alias("n_buckets"),
         F.col("__n_rows").cast("long").alias("n"),
     )
-    # One-row answer: materialize, release the fence, return local.
-    rows = res.collect()
-    per.unpersist()
-    return res.sparkSession.createDataFrame(rows, res.schema)

@@ -80,13 +80,14 @@ def bpe_learn(
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     spark = df.sparkSession
-    vocab = (
-        _words(df, text_col, lowercase)
-        .select(_sym_expr(F.col("w")).alias("sym"), "c")
-        .localCheckpoint(eager=False)
+    vocab = _words(df, text_col, lowercase).select(
+        _sym_expr(F.col("w")).alias("sym"), "c"
     )
     merges = []
     for idx in range(1, num_merges + 1):
+        # the round's pair count and its merge both read vocab; the
+        # checkpoint also keeps the plan from growing with the rounds
+        vocab = vocab.localCheckpoint(eager=False)
         # bind the split array to a lambda variable so it is evaluated
         # once per vocab row, not once per adjacent pair (expressions
         # referenced inside an HOF lambda are re-evaluated per element)
@@ -128,7 +129,7 @@ def bpe_learn(
         merges.append((idx, left, right, n))
         vocab = vocab.select(
             _merge_expr(F.col("sym"), left, right).alias("sym"), "c"
-        ).localCheckpoint(eager=False)
+        )
     return spark.createDataFrame(
         merges, "merge_idx int, left string, right string, pair_count long"
     )

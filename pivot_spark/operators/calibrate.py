@@ -27,6 +27,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 
 def quantile_normalize(
     df: DataFrame,
@@ -145,12 +147,11 @@ def isotonic_fit(
             F.col("__mn") + F.col("bin") * (F.col("__mx") - F.col("__mn")) / bins
         ).alias("bin_lo"),
     )
-    # persist + fence the <=bins-row frame: the a/b prefix self-join and
-    # the PAV segment joins below otherwise re-derive the whole corpus
-    # binning per consumer (e208's plan carried 8 source scans; the
-    # 2-scan floor is the min/max pass + the binning pass)
-    per_bin = per_bin.persist()
-    per_bin.count()
+    # fence the <=bins-row frame: the a/b prefix self-join and the PAV
+    # segment joins below otherwise re-derive the whole corpus binning
+    # per consumer (e208's plan carried 8 source scans; the 2-scan
+    # floor is the min/max pass + the binning pass)
+    per_bin = materialize(per_bin, "calibrate.isotonic_fit")[0]
     # prefix sums over the <=bins-row frame (bounded single-task window)
     from pyspark.sql import Window
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 
 def chunk_dup_signals(
     df: DataFrame,
@@ -153,8 +155,8 @@ def source_diversity(
             F.col(id_col).alias("__id"),
             word_shingles(F.lower(F.col(text_col)), shingle_len).alias("__g"),
         )
-        .persist()
     )
+    sampled = materialize(sampled, "chunk_dedup.source_diversity")[0]  # 2 join sides
     n_docs = base.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )

@@ -114,7 +114,7 @@ def calibration_report(
         F.count(F.lit(1)).alias("n"),
         F.avg("__s").alias("mean_score"),
         F.avg("__y").alias("pos_rate"),
-    ).persist()
+    )
     tot = per.agg(
         F.sum("n").alias("__tot"),
         F.sum(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -118,13 +120,13 @@ def connected_components(
     set is a fixpoint of both stars) and ``max_iter`` is a safety bound
     — 25 double-rounds covers graphs of ~2^25 nodes.
     """
-    edges = (
+    edges, (n_edges,) = materialize(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "components.connected_components",
     )
-    if driver_max_edges and edges.count() <= driver_max_edges:
+    if driver_max_edges and n_edges <= driver_max_edges:
         labels = _driver_union_find(
             (r["src"], r["dst"]) for r in edges.toLocalIterator()
         )
@@ -254,20 +256,19 @@ def triangle_stats(
     out-degrees are √m-bounded under this orientation, which is the
     whole trick), then close each wedge against the oriented edge set.
     Three hash joins, no explosion on high-degree hubs."""
-    e = (
+    # edge-list-sized; fenced — degrees, orientation, wedges and the
+    # closing join all reuse it, and without the fence an expensive
+    # upstream (near-dup pair mining) would re-execute once per consumer
+    e = materialize(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(
             F.least(F.col("a"), F.col("b")).alias("a"),
             F.greatest(F.col("a"), F.col("b")).alias("b"),
         )
-        .distinct()
-        # edge-list-sized; materialized once — degrees, orientation,
-        # wedges and the closing join all reuse it, and without the
-        # fence an expensive upstream (near-dup pair mining) would
-        # re-execute once per consumer
-        .localCheckpoint(eager=False)
-    )
+        .distinct(),
+        "components.triangle_stats",
+    )[0]
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -345,12 +346,10 @@ def pagerank(
         )
         .distinct()
     )
-    e = _symmetrize(e).localCheckpoint(eager=False)
+    e = materialize(_symmetrize(e), "components.pagerank")[0]
     out = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = out.select(F.col("src").alias("node"), "__deg").localCheckpoint(
-        eager=False
-    )
-    n = nodes.count()
+    nodes = out.select(F.col("src").alias("node"), "__deg")
+    nodes, (n,) = materialize(nodes, "components.pagerank")
     if n == 0:
         return nodes.select(
             F.col("node"), F.lit(None).cast("double").alias("pagerank")
@@ -412,13 +411,13 @@ def label_propagation(
         .where(F.col("a") != F.col("b"))
     )
     e = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint(eager=True)
-    labels = (
+    e = materialize(e, "components.label_propagation")[0]
+    labels = materialize(
         e.select(F.col("a").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
+        .select("node", F.col("node").alias("label")),
+        "components.label_propagation",
+    )[0]
     for _ in range(iterations):
         nbr = e.join(
             labels.withColumnsRenamed({"node": "b", "label": "__nl"}), "b"

@@ -27,6 +27,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 
 def fuzzy_join(
     left: DataFrame,
@@ -220,7 +222,8 @@ def sorted_neighborhood_pairs(
         part.withColumn("__rn", F.row_number().over(wrn))
         .join(F.broadcast(offs), "__pid")
         .select("__id", "__k", (F.col("__off") + F.col("__rn")).alias("__r"))
-    ).persist()
+    )
+    ranked = materialize(ranked, "fuzzy.sorted_neighborhood_pairs")[0]  # 2 join sides
     b = F.floor(F.col("__r") / window)
     left = ranked.select(
         "__id", "__k", "__r", F.explode(F.array(b, b + 1)).alias("__b")

@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pivot_spark.operators.profile import _range_pids
+
 
 def interleave_bits(cols: Sequence[Column], bits: int) -> Column:
     """Morton-interleave ``bits`` low bits of each non-negative integer
@@ -158,11 +160,8 @@ def plan_compaction(
     base = df.select(
         F.col(id_col).alias("__id"), F.col(size_col).cast("long").alias("__sz")
     ).filter(F.col("__sz").isNotNull())
-    part = (
-        base.repartitionByRange(32, F.col("__sz").desc(), F.col("__id"))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    order = [F.col("__sz").desc(), F.col("__id")]
+    part = _range_pids(base, 32, order, "layout.plan_compaction")
     tot = part.groupBy("__pid").agg(F.sum("__sz").alias("__t"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = tot.select(

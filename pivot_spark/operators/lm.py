@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.functions.text import tokens
+from pivot_spark.operators._fence import materialize
 
 
 def unigram_lm_score(
@@ -96,7 +97,7 @@ def bigram_lm_score(
     unigram table are broadcast; the only corpus-sized shuffles are the
     bigram count aggregate and the count join, both keyed by the
     bigram itself (map-side combine absorbs hot bigrams). The pair
-    frame is localCheckpoint'ed so tokenization runs once.
+    frame is fenced (``_fence.materialize``) so tokenization runs once.
     """
     if vocab_size <= 0:
         raise ValueError("vocab_size must be positive")
@@ -106,15 +107,15 @@ def bigram_lm_score(
     toks = df.select(F.col(id_col), tokens(text).alias("__w"))
     expl = toks.select(id_col, F.explode("__w").alias("__tok"))
     raw_counts = expl.groupBy("__tok").agg(F.count(F.lit(1)).alias("__c"))
-    # ≤ V rows; materialized once — it feeds three broadcast sides,
-    # and without the checkpoint each broadcast job re-runs the
-    # TakeOrdered vocabulary selection from the raw token scan
-    vocab = (
+    # ≤ V rows; fenced — it feeds three broadcast sides, and unfenced
+    # each broadcast job re-runs the TakeOrdered vocabulary selection
+    # from the raw token scan
+    vocab = materialize(
         raw_counts.orderBy(F.col("__c").desc(), F.col("__tok"))
         .limit(vocab_size)
-        .select("__tok")
-        .localCheckpoint(eager=False)
-    )
+        .select("__tok"),
+        "lm.bigram_lm_score",
+    )[0]
 
     # raw pairs from the array (w[:-1] zip w[1:]); docs with <2 tokens
     # produce no pairs and come back via the final left join
@@ -129,11 +130,11 @@ def bigram_lm_score(
             )
         ).alias("__p"),
     ).select(id_col, F.col("__p.a").alias("__a"), F.col("__p.b").alias("__b"))
-    # (doc, a, b, multiplicity) pre-aggregate, checkpointed once: both
-    # the global bigram counts and the scoring pass read it, shrinking
-    # the count-join input from raw pairs to distinct doc-bigrams
+    # (doc, a, b, multiplicity) pre-aggregate, fenced: both the global
+    # bigram counts and the scoring pass read it, shrinking the
+    # count-join input from raw pairs to distinct doc-bigrams
     vmark = vocab.withColumn("__v", F.lit(True))
-    dp = (
+    dp = materialize(
         praw.join(F.broadcast(vmark.withColumnRenamed("__tok", "__a").withColumnRenamed("__v", "__av")), "__a", "left")
         .join(F.broadcast(vmark.withColumnRenamed("__tok", "__b").withColumnRenamed("__v", "__bv")), "__b", "left")
         .select(
@@ -142,20 +143,20 @@ def bigram_lm_score(
             F.when(F.col("__bv"), F.col("__b")).otherwise(F.lit(unk_token)).alias("__b"),
         )
         .groupBy(id_col, "__a", "__b")
-        .agg(F.count(F.lit(1)).alias("__m"))
-        .localCheckpoint(eager=False)
-    )
+        .agg(F.count(F.lit(1)).alias("__m")),
+        "lm.bigram_lm_score",
+    )[0]
     # <unk>-mapped unigram counts in ONE conditional aggregate;
-    # ≤ V+1 rows, materialized once for its three broadcast uses
-    uni_all = (
+    # ≤ V+1 rows, fenced for its three broadcast uses
+    uni_all = materialize(
         expl.join(F.broadcast(vmark), "__tok", "left")
         .select(
             F.when(F.col("__v"), F.col("__tok")).otherwise(F.lit(unk_token)).alias("__tok")
         )
         .groupBy("__tok")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
-    )
+        .agg(F.count(F.lit(1)).alias("__c")),
+        "lm.bigram_lm_score",
+    )[0]
     total = uni_all.agg(F.sum("__c").cast("double").alias("__n"))
 
     bc = dp.groupBy("__a", "__b").agg(F.sum("__m").alias("__cb"))
@@ -250,14 +251,14 @@ def stupid_backoff_score(
 
     ttoks = toks_of(train_df)
     texpl = ttoks.select(F.explode("__w").alias("__tok"))
-    vocab = (
+    vocab = materialize(
         texpl.groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__c"))
         .orderBy(F.col("__c").desc(), F.col("__tok"))
         .limit(vocab_size)
-        .select("__tok")
-        .localCheckpoint(eager=False)
-    )
+        .select("__tok"),
+        "lm.stupid_backoff_score",
+    )[0]
     vmark = vocab.withColumn("__v", F.lit(True))
 
     def unk_map(frame: DataFrame, col: str) -> DataFrame:
@@ -270,12 +271,12 @@ def stupid_backoff_score(
         ).drop(f"__{col}v")
 
     # train tables: unk-mapped unigram counts (≤ V+1 rows) + bigram counts
-    uni = (
+    uni = materialize(
         unk_map(texpl.withColumnRenamed("__tok", "__t1"), "__t1")
         .groupBy("__t1")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
-    )
+        .agg(F.count(F.lit(1)).alias("__c")),
+        "lm.stupid_backoff_score",
+    )[0]
     total = uni.agg(F.sum("__c").cast("double").alias("__n"))
     tb = unk_map(unk_map(pairs_of(ttoks), "__a"), "__b")
     bc = tb.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__cb"))
@@ -365,9 +366,10 @@ def char_bigram_gibberish(
     # one explode pass over the train shard: uni is the bigram counts
     # re-grouped by first char (sum of c(c1 c2) over c2 == c(c1) counted
     # directly), and |alphabet| is uni's row count — deriving both from
-    # the persisted alphabet^2-bounded count table instead of from `tr`
-    # saves two full canon+explode scans of the train corpus
-    big = tr.groupBy("__bg").agg(F.count(F.lit(1)).alias("__cbg")).persist()
+    # the alphabet^2-bounded count table (every reader shares its one
+    # exchange through exchange reuse) instead of from `tr` saves two
+    # full canon+explode scans of the train corpus
+    big = tr.groupBy("__bg").agg(F.count(F.lit(1)).alias("__cbg"))
     uni = (
         big.select(F.substring("__bg", 1, 1).alias("__c1"), "__cbg")
         .groupBy("__c1")

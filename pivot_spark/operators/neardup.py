@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pivot_spark.operators._fence import materialize
 from pivot_spark.operators._spread import spread_input
 
 # 31-bit Mersenne prime: (a*h + b) with a,b,h < 2^31 stays under 2^63, so
@@ -115,25 +116,6 @@ def word_shingles_pd(
 
 
 
-def _materialize(
-    df: DataFrame, set_col: "str | None" = None
-) -> "tuple[DataFrame, int, int]":
-    """persist + ONE eager aggregate as the fence. Every persisted frame
-    here feeds >= 2 consumers inside a single downstream action
-    (self-join sides, split aggregations); without the fence both
-    consumers race to compute the not-yet-cached frame and the whole
-    upstream runs twice.
-
-    Returns ``(frame, rows, elems)``: the fence job's row count and the
-    total element count of the array column ``set_col`` (0 without
-    one) — the size inputs of ``_verify_join``, taken by the job that
-    runs anyway instead of a second scan of the cached frame."""
-    df = df.persist()
-    elems = F.sum(F.size(set_col)) if set_col else F.lit(0)
-    row = df.agg(F.count(F.lit(1)), elems).head()
-    return df, row[0], row[1] or 0
-
-
 _VERIFY_BROADCAST_BYTES = 256 << 20
 
 
@@ -154,7 +136,7 @@ def _verify_join(
     8 GB payload)."""
     sa = payload.toDF("__ida", "__a")
     sb = payload.toDF("__idb", "__b")
-    if 8 * elems + 48 * rows <= _VERIFY_BROADCAST_BYTES:
+    if 8 * (elems or 0) + 48 * rows <= _VERIFY_BROADCAST_BYTES:
         sa, sb = F.broadcast(sa), F.broadcast(sb)
     return cand.join(sa, "__ida").join(sb, "__idb")
 
@@ -306,9 +288,10 @@ def neardup_minhash_lsh(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sigs, rows, elems = _materialize(
+    sigs, (rows, elems) = materialize(
         minhash_signatures(df, id_col, text_col, num_hashes, shingle_len, seed),
-        "__shingles",
+        "neardup.neardup_minhash_lsh",
+        F.sum(F.size("__shingles")),
     )
     banded = _banded(sigs, bands, r, F.size("__shingles").alias("__nsh"))
     t = float(threshold)
@@ -436,7 +419,7 @@ def ngram_jaccard_pairs(
     # prefix regroup, verify) — without it the interpreted shingling
     # expression re-runs per consumer (and again on each self-join side).
     # State is one hash per distinct shingle per doc, disk-spillable.
-    base, rows, elems = _materialize(
+    base, (rows, elems) = materialize(
         df.select(
             F.col(id_col).alias("__id"),
             F.transform(
@@ -444,7 +427,8 @@ def ngram_jaccard_pairs(
                 lambda g: F.xxhash64(g),
             ).alias("__hs"),  # shingles already distinct
         ).withColumn("__n", F.size("__hs")),
-        "__hs",
+        "neardup.ngram_jaccard_pairs",
+        F.sum(F.size("__hs")),
     )
 
     from pyspark.sql import Window
@@ -468,7 +452,7 @@ def ngram_jaccard_pairs(
             )
         ).alias("__p", "__h"),
     )
-    pref = _materialize(pref)[0]
+    pref = materialize(pref, "neardup.ngram_jaccard_pairs")[0]
     if max_comparisons is not None:
         # linear probe over the materialized prefix frame: counts the
         # UNORDERED same-token candidate pairs sum_h C(df_pref(h), 2) —
@@ -763,8 +747,9 @@ def hamming_pairs(
     # alias-substituting the full signature tree into the Filter — the
     # fingerprint then computes twice and the inlined monster expression
     # falls out of codegen (observed: 87 KB filter condition)
-    sigs = _materialize(
-        df.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig"))
+    sigs = materialize(
+        df.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig")),
+        "neardup.hamming_pairs",
     )[0].where(F.col("__sig").isNotNull())
     blocks = sigs.select(
         "__id",
@@ -863,8 +848,9 @@ def neardup_embedding_cosine(
     # sides; unpersisted, the SRP Arrow kernel re-ran once per side
     # (two ArrowEvalPython scans in the e12 plan). (id, table, sig) is
     # 24 bytes/row x n_tables — disk-spillable at any corpus size.
-    tagged, n_tagged, _ = _materialize(
-        base.select("__id", F.posexplode(sig_cols).alias("__t", "__sig"))
+    tagged, (n_tagged,) = materialize(
+        base.select("__id", F.posexplode(sig_cols).alias("__t", "__sig")),
+        "neardup.neardup_embedding_cosine",
     )
     cand = (
         tagged.alias("a")
@@ -1039,43 +1025,38 @@ def ngram_containment_pairs(
             f"collapse_exact_dups must be True/False/'auto', got "
             f"{collapse_exact_dups!r}"
         )
-    sets0 = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_sort(
-            F.transform(
-                word_shingles_pd(F.col(text_col), shingle_len),
-                lambda g: F.xxhash64(g),
-            )
-        ).alias("__hs"),
-    ).persist()
-    # ONE aggregate doubles as the persist fence AND computes every
-    # driver-side decision input (collapse probe + the verify join's
-    # size estimate) — a separate fence count and probe job would be
-    # two more passes over the same cached frame (guide §1.3: count the
-    # jobs, then cut them)
-    probe = sets0.agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        F.approx_count_distinct(F.xxhash64("__hs")).alias("__dst"),
-        F.sum(F.size("__hs")).alias("__sh"),
-    ).head()
+    # the fence's probes are every driver-side decision input (collapse
+    # probe + the verify join's size estimate): no probe job of its own
+    sets0, (rows, n_distinct, elems) = materialize(
+        df.select(
+            F.col(id_col).alias("__id"),
+            F.array_sort(
+                F.transform(
+                    word_shingles_pd(F.col(text_col), shingle_len),
+                    lambda g: F.xxhash64(g),
+                )
+            ).alias("__hs"),
+        ),
+        "neardup.ngram_containment_pairs",
+        F.approx_count_distinct(F.xxhash64("__hs")),
+        F.sum(F.size("__hs")),
+    )
     do_collapse = collapse_exact_dups is True
     if collapse_exact_dups == "auto":
-        do_collapse = probe["__cnt"] > 0 and (
-            probe["__dst"] < 0.9 * probe["__cnt"]
-        )
+        do_collapse = rows > 0 and n_distinct < 0.9 * rows
     groups = None
-    rows, elems = probe["__cnt"], probe["__sh"] or 0
     if do_collapse:
         # one representative per distinct (sorted) shingle-hash set;
         # set ops downstream are order-insensitive, so sorting __hs is
         # free canonicalization
-        groups, rows, elems = _materialize(
+        groups, (rows, elems) = materialize(
             sets0.groupBy("__hs").agg(
                 F.min("__id").alias("__rep"),
                 F.collect_list("__id").alias("__members"),
                 F.count(F.lit(1)).alias("__g"),
             ),
-            "__hs",
+            "neardup.ngram_containment_pairs",
+            F.sum(F.size("__hs")),
         )
         sets0 = groups.select(F.col("__rep").alias("__id"), "__hs")
     # sets0 (or groups) is already persisted; __n is a cheap projection
@@ -1095,7 +1076,7 @@ def ngram_containment_pairs(
     # being unpersisted it ran once per join side. Ties (same df AND
     # same hash within one doc) permute interchangeable rows only.
     prefix_len = F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")).cast("int") + 1
-    pos_ord = _materialize(
+    pos_ord = materialize(
         ex.select(
             "__id",
             "__n",
@@ -1106,7 +1087,8 @@ def ngram_containment_pairs(
                 - 1
             ).alias("__p"),
             "__h",
-        )
+        ),
+        "neardup.ngram_containment_pairs",
     )[0]
     pref = pos_ord.filter(F.col("__p") < prefix_len).select(
         F.col("__id").alias("__ida"),
@@ -1226,11 +1208,11 @@ def neardup_minhash_incremental(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection — the daily-ingest path: a new
     ``delta`` batch is checked against an already-built signature
-    ``index`` (the frame returned by ``minhash_signatures``, persisted
-    by the caller between runs) WITHOUT re-shingling the corpus. Only
-    delta text is hashed; the corpus participates through its compact
-    (id, minhash, shingle-hash) index — at 100 TB that is the
-    difference between scanning 100 TB and scanning the day's batch
+    ``index`` (the frame returned by ``minhash_signatures``, pinned by
+    the caller with ``_fence.materialize``) WITHOUT re-shingling the
+    corpus. Only delta text is hashed; the corpus participates through
+    its compact (id, minhash, shingle-hash) index — at 100 TB that is
+    the difference between scanning 100 TB and scanning the day's batch
     plus an index ~1% its size.
 
     Returns ``(pairs, updated_index)``: pairs (id_a, id_b, jaccard)
@@ -1242,11 +1224,12 @@ def neardup_minhash_incremental(
     merge semantics if deltas can replace docs)."""
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    dsigs, rows, elems = _materialize(
+    dsigs, (rows, elems) = materialize(
         minhash_signatures(delta, id_col, text_col, num_hashes, shingle_len, seed),
-        "__shingles",
+        "neardup.neardup_minhash_incremental",
+        F.sum(F.size("__shingles")),
     )
-    # the verify payload is index + delta; the caller persisted the
+    # the verify payload is index + delta; the caller pinned the
     # index, so sizing its part is one aggregate over the cache
     idx = index.agg(F.count(F.lit(1)), F.sum(F.size("__shingles"))).head()
     all_sigs = index.unionByName(dsigs)
@@ -1269,7 +1252,7 @@ def neardup_minhash_incremental(
         cand,
         all_sigs.select("__id", "__shingles"),
         rows + idx[0],
-        elems + (idx[1] or 0),
+        (elems or 0) + (idx[1] or 0),
     )
     out = pairs.select(
         F.col("__ida").alias("id_a"),
@@ -1359,7 +1342,7 @@ def minhash_estimate_report(
         sample, id_col, text_col,
         num_hashes=num_hashes, shingle_len=shingle_len, seed=seed,
     )
-    sigs = _materialize(sigs)[0]  # both join sides read it
+    sigs = materialize(sigs, "neardup.minhash_estimate_report")[0]  # both join sides read it
     a = sigs.select(
         F.col("__id").alias("__ida"),
         F.col("__minhash").alias("__ma"),

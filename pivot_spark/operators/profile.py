@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pivot_spark.operators._fence import materialize
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -206,6 +208,15 @@ def quantiles(
     return wide.select(F.inline(F.array(*rows)))
 
 
+def _range_pids(df: DataFrame, num_ranges: int, cols: Sequence, label: str) -> DataFrame:
+    """``df`` range-partitioned on ``cols`` with each row's range id in
+    ``__pid``, fenced: RangePartitioner re-SAMPLES per evaluation, so two
+    unfenced computations can assign rows to different ranges, corrupting
+    per-range offsets (observed as duplicate/gapped ranks)."""
+    part = df.repartitionByRange(num_ranges, *cols)
+    return materialize(part.withColumn("__pid", F.spark_partition_id()), label)[0]
+
+
 def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
     """(value, __r_<col>) average-rank lookup table for ``base[col]``,
     computed DISTRIBUTED: the distinct-value frame is range-partitioned
@@ -213,9 +224,8 @@ def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
     (window partitioned by the range-partition id — parallel, never a
     single global partition), and the per-partition offsets (one scalar
     per range) are a prefix sum over the tiny per-range totals frame,
-    broadcast-joined back — fully lazy, so every column's rank map
-    builds inside ONE job (no per-column driver round-trip; the range
-    exchange is deduplicated by ReuseExchange). Average rank for a tie
+    broadcast-joined back; the range-partitioned frame is fenced
+    (``_range_pids``), one fence job per column. Average rank for a tie
     group of size c starting after cum rows = cum + (c+1)/2 —
     identical to SQL ``rank() + (count(*) OVER (PARTITION BY v)-1)/2``.
     State: the map is distinct-value-sized; no row-sized global sort
@@ -223,14 +233,8 @@ def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
     from pyspark.sql import Window
 
     vc = base.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    # persist fence: the offsets aggregate and the rank projection both
-    # read this frame; RangePartitioner re-samples per evaluation, so
-    # two un-persisted computations can disagree on pids (see row_rank)
-    vcp = (
-        vc.repartitionByRange(num_ranges, F.col(col))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    # the offsets aggregate and the rank projection both read vcp
+    vcp = _range_pids(vc, num_ranges, [F.col(col)], "profile.avg_rank_map")
     # RangePartitioner orders ranges by partition id: offset(p) = rows
     # in all earlier ranges. num_ranges scalars — the single-partition
     # window below is over ≤ num_ranges rows, not data.
@@ -480,7 +484,7 @@ def join_size_estimate(
     )
     per = lc.join(rc, on).select(
         F.col(on), (F.col("__nl") * F.col("__nr")).alias("__c")
-    ).persist()
+    )
     tot = per.agg(
         F.sum("__c").alias("est_rows"), F.count(F.lit(1)).alias("n_keys_matched")
     )
@@ -557,13 +561,8 @@ def pareto_frontier_2d(
         F.col(x_col).cast("double").alias("__x"),
         F.col(y_col).cast("double").alias("__y"),
     ).filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-    part = (
-        base.repartitionByRange(
-            num_ranges, F.col("__x").desc(), F.col("__y").desc(), F.col("__id")
-        )
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    order = [F.col("__x").desc(), F.col("__y").desc(), F.col("__id")]
+    part = _range_pids(base, num_ranges, order, "profile.pareto_frontier_2d")
     tot = part.groupBy("__pid").agg(F.max("__y").alias("__t"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = tot.select(
@@ -602,15 +601,8 @@ def row_rank(
     ``sorted_neighborhood_pairs``). ``order_cols`` must be a total
     order (include a unique tiebreaker)."""
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    # persist: the offsets aggregate and the final rank projection both
-    # read `part`, and RangePartitioner re-SAMPLES per evaluation — two
-    # un-persisted computations can assign rows to different partitions,
-    # corrupting the offsets (observed as duplicate/gapped ranks)
-    part = (
-        df.repartitionByRange(num_ranges, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    # the offsets aggregate and the final rank projection both read part
+    part = _range_pids(df, num_ranges, cols, "profile.row_rank")
     tot = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__t"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = tot.select(
@@ -702,11 +694,7 @@ def weighted_quantile(
         .groupBy(v.alias("__v"))
         .agg(F.sum(w).alias("__w"))
     )
-    part = (
-        vc.repartitionByRange(num_ranges, F.col("__v"))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+    part = _range_pids(vc, num_ranges, [F.col("__v")], "profile.weighted_quantile")
     tot = part.groupBy("__pid").agg(F.sum("__w").alias("__t"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = tot.select(
@@ -717,9 +705,13 @@ def weighted_quantile(
         .orderBy("__v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = part.join(F.broadcast(offs), "__pid").withColumn(
-        "__cum", F.sum("__w").over(wcum) + F.col("__off")
-    ).persist()
+    # fenced: the total and every per-prob probe read the running sums
+    cum = materialize(
+        part.join(F.broadcast(offs), "__pid").withColumn(
+            "__cum", F.sum("__w").over(wcum) + F.col("__off")
+        ),
+        "profile.weighted_quantile",
+    )[0]
     total = cum.agg(F.max("__cum").alias("__total"))
     outs = []
     for p in ps:
@@ -765,7 +757,7 @@ def key_containment(
     rv_all = right.filter(F.col(right_col).isNotNull()).select(
         F.col(right_col).cast("string").alias("__v")
     )
-    ld = lv.distinct().persist()
+    ld = lv.distinct()
     rstats = rv_all.agg(
         F.count(F.lit(1)).alias("__rn"), F.count_distinct("__v").alias("__rd")
     )

@@ -32,6 +32,8 @@ from typing import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 # 16^4 buckets give rate granularity of 6.1e-5 while keeping the
 # threshold a 4-char hex-string compare (no bigint parsing needed).
 _HEX_DIGITS = 4
@@ -384,8 +386,8 @@ def negative_sample_k(
     # fenced: the distinct-id frame feeds three consumers (count, the
     # rank index, the anchor probes) — one narrow column, never re-scan
     # the source per consumer
-    ids = df.select(F.col(id_col)).distinct().localCheckpoint(eager=False)
-    n = ids.count()
+    ids = df.select(F.col(id_col)).distinct()
+    ids, (n,) = materialize(ids, "sample.negative_sample_k")
     if n < 2:
         raise ValueError("need at least 2 distinct ids to sample negatives")
     ranks = _avg_rank_map(ids, id_col, num_ranges)
@@ -472,7 +474,7 @@ def temperature_mixture_rates(
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     per = df.groupBy(F.col(stratum_col).alias("stratum")).agg(
         F.sum(w.cast("double")).alias("weight")
-    ).persist()
+    )
     tot = per.agg(
         F.sum("weight").alias("__tot"),
         F.sum(F.pow(F.col("weight"), F.lit(alpha))).alias("__pow_tot_raw"),
@@ -527,18 +529,17 @@ def rake_weights(
     4 iterations made Catalyst itself the bottleneck) — and at corpus
     scale every margin pass would re-derive the whole upstream chain.
     With it: one source scan, 2*iterations map-side passes over the
-    checkpointed frame, constant-size plans. The base is persisted and
-    its row-count job doubles as the fence. Rows in categories absent
-    from the targets get weight 0. Output: input columns +
-    ``weight``."""
+    checkpointed frame, constant-size plans. The base is fenced
+    (``_fence.materialize``), and its fence job's row count is n. Rows
+    in categories absent from the targets get weight 0. Output: input
+    columns + ``weight``."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     for name, t in (("targets_a", targets_a), ("targets_b", targets_b)):
         tot = sum(t.values())
         if abs(tot - 1.0) > 1e-9:
             raise ValueError(f"{name} shares must sum to 1, got {tot}")
-    df = df.persist()
-    n_rows = df.count()
+    df, (n_rows,) = materialize(df, "sample.rake_weights")
     cur = df.withColumn(weight_col, F.lit(1.0))
     spark = df.sparkSession
     for _ in range(iterations):

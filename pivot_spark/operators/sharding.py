@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 
 def rendezvous_shard(key: Column, n_shards: int, salt: str = "shard") -> Column:
     """Shard id (INT in [0, n_shards)) of ``key`` under HRW hashing."""
@@ -54,7 +56,9 @@ def rebalance_report(
         "key",
         rendezvous_shard(F.col("key"), n_from, salt).alias("s_from"),
         rendezvous_shard(F.col("key"), n_to, salt).alias("s_to"),
-    ).persist()
+    )
+    # fenced: three aggregates read the tags; each key's md5 draws run once
+    tagged = materialize(tagged, "sharding.rebalance_report")[0]
     agg = tagged.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum((F.col("s_from") != F.col("s_to")).cast("long")).alias("moved"),

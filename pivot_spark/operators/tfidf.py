@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.functions.text import tokens
+from pivot_spark.operators._fence import materialize
 
 
 def tfidf_top_terms(
@@ -187,29 +188,24 @@ def tfidf_cosine_pairs(
     df_cap = F.lit(max_df_share) * F.col("__N")
     need_probe = max_df_share < 1.0 or max_comparisons is not None
     if need_probe:
-        # the stop-term prune / probe runs a driver-side job over dfreq
-        # BEFORE the main query, which would materialize the tokenize ->
-        # explode -> tf chain once for that job and once again for the
-        # weight join below; caching tf makes the early job pay for it
-        tf = tf.persist()
+        # the dfreq fence below and the weight join both read tf: fenced,
+        # the tokenize -> explode -> tf chain runs once
+        tf = materialize(tf, "tfidf.tfidf_cosine_pairs")[0]
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).crossJoin(
         F.broadcast(nd)
     )
     if need_probe:
-        # ONE aggregate job computes every driver-side decision input:
-        # the prune-log count, N (for the log line), and the
-        # max_comparisons probe over the POST-PRUNE df values — the
-        # separate n_docs job, prune-count job and probe job were three
-        # scheduling rounds over the same cached frame (guide §1.3)
-        dfreq = dfreq.persist()
-        stats = dfreq.agg(
-            F.sum(F.when(F.col("df") > df_cap, 1)).alias("__ndrop"),
-            F.first("__N").alias("__n"),
-            F.sum(
-                F.when(F.col("df") <= df_cap, F.expr("df * (df - 1) / 2"))
-            ).alias("__ncmp"),
-        ).collect()[0]
-        n_dropped = stats["__ndrop"] or 0
+        # the fence's probes are every driver-side decision input: the
+        # prune-log count, N (for the log line) and the max_comparisons
+        # probe over the POST-PRUNE df values (guide §1.3)
+        dfreq, (_, n_dropped, n_docs, ncmp) = materialize(
+            dfreq,
+            "tfidf.tfidf_cosine_pairs",
+            F.sum(F.when(F.col("df") > df_cap, 1)),
+            F.first("__N"),
+            F.sum(F.when(F.col("df") <= df_cap, F.expr("df * (df - 1) / 2"))),
+        )
+        n_docs = n_docs or 0
         if max_df_share < 1.0:
             if n_dropped:
                 import logging
@@ -217,8 +213,7 @@ def tfidf_cosine_pairs(
                 logging.getLogger("pivot_spark.tfidf").info(
                     "tfidf_cosine_pairs: pruned %d term(s) with df > %.0f "
                     "(max_df_share=%.2f, N=%d)",
-                    n_dropped, max_df_share * (stats["__n"] or 0),
-                    max_df_share, stats["__n"] or 0,
+                    n_dropped, max_df_share * n_docs, max_df_share, n_docs,
                 )
             dfreq = dfreq.filter(F.col("df") <= df_cap)
         if max_comparisons is not None:
@@ -226,7 +221,7 @@ def tfidf_cosine_pairs(
             # candidate pairs the postings self-join would generate (the
             # physical join touches ~2x row combinations per term before
             # the doc-order predicate prunes duplicates)
-            ncmp = stats["__ncmp"] or 0
+            ncmp = ncmp or 0
             if ncmp > max_comparisons:
                 raise ValueError(
                     f"tfidf_cosine_pairs would generate {ncmp:.3e} unordered"
@@ -258,12 +253,9 @@ def tfidf_cosine_pairs(
         .select("doc", "term", "df", (F.col("w") / F.col("nrm")).alias("wn"))
     )
     if not prefix_filter:
-        # persist + FENCE: the self-join reads wn twice, and without the
-        # eager count the two concurrently-launched join-side stages race
-        # the not-yet-populated cache and each computes the upstream
-        # chain (measured 1.5x query cost)
-        wn = wn.persist()
-        wn.count()
+        # fenced: both self-join sides read wn; with a lazy cache both
+        # computed the upstream chain (measured 1.5x query cost)
+        wn = materialize(wn, "tfidf.tfidf_cosine_pairs")[0]
         dots = (
             wn.alias("a")
             .join(wn.alias("b"), "term")
@@ -277,8 +269,8 @@ def tfidf_cosine_pairs(
 
     from pyspark.sql import Window
 
-    wn = wn.persist()
-    wn.count()  # fence: prefix + both verify sides read it (4 consumers)
+    # fenced: prefix + both verify sides read it (4 consumers)
+    wn = materialize(wn, "tfidf.tfidf_cosine_pairs")[0]
     # suffix L2 mass in (df DESC, term) order; prefix = rows where the
     # mass from this term onward is still >= (threshold/2)^2
     win = Window.partitionBy("doc").orderBy(

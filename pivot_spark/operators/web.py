@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import materialize
+
 # public-suffix-lite: second-level labels that combine with a 2-letter
 # ccTLD to form the registrable suffix (co.uk, com.au, ac.jp, ...).
 # A full public-suffix list is a broadcast-join swap-in; this covers
@@ -64,9 +66,9 @@ def domain_stats(
         aggs.append(F.count_distinct(F.col(lang_col)).alias("n_langs"))
     if size_col:
         aggs.append(F.avg(F.col(size_col).cast("double")).alias("avg_size"))
-    # persist: both the output and the total read `per` — without it the
+    # fenced: both the output and the total read `per` — unfenced, the
     # whole corpus scan + domain aggregate runs twice (plan-pinned)
-    per = base.groupBy("domain").agg(*aggs).persist()
+    per = materialize(base.groupBy("domain").agg(*aggs), "web.domain_stats")[0]
     total = per.agg(F.sum("n_docs").alias("__total"))
     return per.crossJoin(F.broadcast(total)).select(
         *per.columns,

@@ -4,6 +4,8 @@ QUERIES/ORACLES keep their registration order."""
 
 from __future__ import annotations
 
+from pivot_spark.operators._fence import materialize
+
 from ._base import (F, _mined_pairs, _read, query)  # noqa: F401
 from ._q_e96_e125 import (_E126_ORACLE)  # noqa: F401
 
@@ -171,14 +173,11 @@ def e129_neardup_incremental(spark, sf_dir):
     d = _read(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    # the operator contract says the caller persists the index ("the
-    # frame returned by minhash_signatures, persisted by the caller
-    # between runs"); unpersisted, the corpus signature kernel re-ran
-    # once per consumer (band-join side + BOTH verify broadcasts = 3x
-    # compute, guide §1.3/§5). The fence count stops the concurrent
-    # broadcast builds racing the cache.
-    index = minhash_signatures(corpus, "doc_id", "text").persist()
-    index.count()
+    # the operator contract: the caller pins the index; unfenced, the
+    # corpus signature kernel re-ran once per consumer (band-join side +
+    # BOTH verify broadcasts = 3x compute, guide §1.3/§5)
+    index = minhash_signatures(corpus, "doc_id", "text")
+    index = materialize(index, "e129_neardup_incremental")[0]
     pairs, _new_index = neardup_minhash_incremental(index, delta, "doc_id", "text")
     return pairs.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
@@ -229,10 +228,10 @@ def e130_hll_overlap(spark, sf_dir):
     )
     est = hll_overlap_matrix(ev, "event_type", "user_id", lg_k=14)
 
-    # persist + fence: d feeds the sizes aggregate and BOTH self-join
-    # sides — unpersisted, the distinct shuffle ran three times
-    d = ev.select("event_type", "user_id").distinct().persist()
-    d.count()
+    # fenced: d feeds the sizes aggregate and BOTH self-join sides —
+    # unfenced, the distinct shuffle ran three times
+    d = ev.select("event_type", "user_id").distinct()
+    d = materialize(d, "e130_hll_overlap")[0]
     sz = d.groupBy(F.col("event_type").alias("g")).agg(
         F.count("*").alias("n")
     )

@@ -4,6 +4,8 @@ QUERIES/ORACLES keep their registration order."""
 
 from __future__ import annotations
 
+from pivot_spark.operators._fence import materialize
+
 from ._base import (F, _mined_pairs, _read, query, round_doubles, serialize_arrays)  # noqa: F401
 from ._q_p01_e28 import (_E04_ORACLE)  # noqa: F401
 from ._q_e29_e62 import (_E49_QUERIES, _E54_DIM, _E55_LINE_RE, _e54_dist)  # noqa: F401
@@ -347,15 +349,13 @@ def e70_scd2_apply(spark, sf_dir):
         )
         .select("o_custkey", "s.o_orderstatus", "s.o_orderdate")
     )
-    # persist + fence both operator inputs: scd2_apply reads the history
-    # three times (closed shard, current shard, matched-keys semi-join)
-    # and the delta three times (update join, key projection, inserts
-    # anti-join) — unpersisted, the window build / latest aggregate
-    # re-ran per consumer (6 source scans in the plan)
-    hist = hist.persist()
-    hist.count()
-    latest = latest.persist()
-    latest.count()
+    # fence both operator inputs: scd2_apply reads the history three
+    # times (closed shard, current shard, matched-keys semi-join) and
+    # the delta three times (update join, key projection, inserts
+    # anti-join) — unfenced, the window build / latest aggregate re-ran
+    # per consumer (6 source scans in the plan)
+    hist = materialize(hist, "e70_scd2_apply")[0]
+    latest = materialize(latest, "e70_scd2_apply")[0]
     out = scd2_apply(
         hist,
         latest,

@@ -25,6 +25,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _fence_scope():
+    """Release every frame a test pinned, so no test sees another
+    test's cached frames."""
+    from pivot_spark.operators._fence import fence_scope
+
+    with fence_scope():
+        yield
+
+
 SALES_COLUMNS = ["Quarter", "Product", "Brand", "Sales", "ShopID"]
 
 # Reference golden fixture (PivotTest.java:88-133 / examples/sample_data.csv).

@@ -135,30 +135,33 @@ def test_verify_join_broadcasts_only_under_budget(spark):
 def test_ngram_jaccard_build_runs_only_its_fences(spark, docs_df):
     """Building ngram_jaccard_pairs submits only its two fence
     aggregates (shingle sets, prefix tokens) — 8 jobs, since adaptive
-    execution runs each query stage as a job — all from the one fence
-    call site: the verify join's size estimate rides on the first fence
-    instead of a probe job of its own."""
+    execution runs each query stage as a job — and every one carries
+    the operator's label as its job description, so an event log
+    charges the fences to the operator. The verify join's size estimate
+    rides on the first fence instead of a probe job of its own. The
+    caller's job group and description are in place after the call."""
     from pivot_spark.operators.neardup import ngram_jaccard_pairs
 
-    spark.catalog.clearCache()  # a cached base frame would skip a fence
     sc = spark.sparkContext
     docs = docs_df.filter(F.col("text") != "")
     group = "test_ngram_jaccard_build"
-    sc.setJobGroup(group, group)
+    sc.setJobGroup(group, "caller description")
     try:
         out = ngram_jaccard_pairs(docs, threshold=0.5)
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    sites = {
-        tracker.getStageInfo(st).name
-        for j in jobs
-        for st in tracker.getJobInfo(j).stageIds
-    }
-    assert len(jobs) == 8 and len(sites) == 1, (len(jobs), sites)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    store = sc._jsc.sc().statusStore()
+    labels = [store.job(j).description() for j in jobs]
+    labels = {d.get() if d.isDefined() else None for d in labels}
+    assert len(jobs) == 8 and labels == {"neardup.ngram_jaccard_pairs"}, (
+        len(jobs),
+        labels,
+    )
     assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 2)}
 
 

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 import duckdb
 
 import __spark_entry__ as entry_mod
+from pivot_spark.operators._fence import fence_scope
 from pivot_spark.session import get_spark
 from pivot_spark.sources.catalog import TABLES
 
@@ -100,9 +101,10 @@ def main() -> int:
     for name in queries:
         if only and name not in only:
             continue
-        sdf = queries[name](spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = list(sdf.columns)
+        with fence_scope():
+            sdf = queries[name](spark, sf_dir)
+            srows = [tuple(r) for r in sdf.collect()]
+            scols = list(sdf.columns)
         if name not in oracles:
             print(f"{name:18s} ROWS-ONLY rows={len(srows)}")
             continue

@@ -5,9 +5,10 @@ any eager driver steps the operator runs), time `collect()` and the
 noop sink (`format("noop")` — computes every column, §1.4) over
 N reps, and write `.explain("formatted")` to plans/r07/<query>_<tag>.txt.
 
-Timing protocol matches bench.py (clearCache + unpersist RDDs between
-reps, median of reps), but per query, so a change can be measured in
-~30 s instead of a 25-min suite run.
+Timing protocol matches bench.py (each rep inside its own fence scope,
+checkpointed RDDs released between reps, median of reps), but per
+query, so a change can be measured in ~30 s instead of a 25-min suite
+run.
 
 Usage: python tools/perf_probe.py <tag> <query> [query ...]
   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -32,6 +33,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("PROBE_REPS", "3"))
 
+    from pivot_spark.operators._fence import fence_scope
     from pivot_spark.session import get_spark
     from pivot_spark.plans.declared import QUERIES
 
@@ -44,10 +46,10 @@ def main() -> int:
     if os.path.isdir(warm_dir):
         for wq in ("p17", "e03_neardup_minhash"):
             try:
-                QUERIES[wq](spark, warm_dir).collect()
+                with fence_scope():
+                    QUERIES[wq](spark, warm_dir).collect()
             except Exception:
                 pass
-        spark.catalog.clearCache()
 
     out = {}
     for name in names:
@@ -55,20 +57,20 @@ def main() -> int:
         spark.sparkContext.setJobDescription(f"probe:{name}")
         builds, collects, noops = [], [], []
         for _ in range(reps):
-            spark.catalog.clearCache()
             for rdd in list(
                 spark.sparkContext._jsc.getPersistentRDDs().values()
             ):
                 rdd.unpersist()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            builds.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.collect()
-            collects.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            noops.append(time.perf_counter() - t0)
+            with fence_scope():
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                builds.append(time.perf_counter() - t0)
+                t0 = time.perf_counter()
+                df.collect()
+                collects.append(time.perf_counter() - t0)
+                t0 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                noops.append(time.perf_counter() - t0)
         # explain AFTER execution so AQE-final shapes are near-real;
         # formatted explain shows the initial plan either way
         try:

@@ -47,12 +47,15 @@ def _run(spark, fn, sf_dir: str, reps: int) -> "tuple[float, int, float]":
     data work, and it poisons both ends of the slope with noise. The
     noop write is measured once, after the collect reps warmed the
     plan's generated code."""
+    from pivot_spark.operators._fence import fence_scope
+
     def _isolate() -> None:
-        # same cold-cache start for every sample: operators that
-        # _materialize() intermediates must recompute them, at BOTH SFs
-        # — otherwise the noop sample is a cache-hit at one SF and a
-        # cache-miss at the other and the slope compares those instead
-        spark.catalog.clearCache()
+        # same cold-cache start for every sample: each sample runs in
+        # its own fence scope, so frames an operator pins with
+        # _fence.materialize are recomputed at BOTH SFs — otherwise the
+        # noop sample is a cache-hit at one SF and a cache-miss at the
+        # other and the slope compares those instead. Loop-body
+        # localCheckpoint RDDs are outside any scope; release them here
         for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
             rdd.unpersist()
 
@@ -60,11 +63,13 @@ def _run(spark, fn, sf_dir: str, reps: int) -> "tuple[float, int, float]":
     for _ in range(reps):
         _isolate()
         t0 = time.perf_counter()
-        n = len(fn(spark, sf_dir).collect())
+        with fence_scope():
+            n = len(fn(spark, sf_dir).collect())
         runs.append(time.perf_counter() - t0)
     _isolate()
     t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    with fence_scope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return min(runs), n, time.perf_counter() - t0
 
 
