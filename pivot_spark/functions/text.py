@@ -296,11 +296,11 @@ def hapax_novelty(
     """
     from pyspark.sql import functions as F
 
-    from pivot_spark.operators._fence import materialize
+    from pivot_spark.operators._fence import pin
 
     toks = tokens(F.lower(F.col(text_col)))
     pairs = df.select(F.col(id_col).alias("__id"), F.explode(toks).alias("__t"))
-    pairs = materialize(pairs, "text.hapax_novelty")[0]  # counts + join read it
+    pairs = pin(pairs, "text.hapax_novelty")  # counts + join read it
     counts = pairs.groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
     j = pairs.join(counts, "__t")
     return (

@@ -1,11 +1,10 @@
-"""The one materialization fence for a frame read by several consumers
-(self-join sides, split aggregations, a driver-side decision plus the
-query after it): cached AND filled before they run, it is computed once,
-and its fence job is labelled with the operator so an event log charges
-the cost to it. A long-lived session wraps each action in
-``fence_scope()`` so cached frames do not pile up and a later build never
-finds an earlier build's frame still cached. Loop bodies that must cut
-lineage use ``localCheckpoint``; a persist keeps the lineage in the plan.
+"""The one way to share a frame between several consumers (self-join
+sides, split aggregations, a driver-side decision plus the query after
+it), so it is computed once. ``pin`` is a lazy ``localCheckpoint``: its
+shuffle stages run now, its last stage in the first action that reads
+it. ``materialize`` persists the frame and fills it with one aggregate
+job whose row the caller needs (a row count, a probe). ``fence_scope()``
+releases both, so a long-lived session wraps each query in one.
 """
 
 from __future__ import annotations
@@ -16,35 +15,59 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-_scopes: list[list[DataFrame]] = []
+_scopes: list[list] = []  # JVM handles: checkpointed RDDs, persisted Datasets
+
+
+def pin(df: DataFrame, label: str) -> DataFrame:
+    """Checkpoint ``df`` lazily (its shuffle jobs run under the job
+    description ``label``) and record it in the innermost scope."""
+    with _described(df, label):
+        df = df.localCheckpoint(eager=False)
+    if _scopes:
+        _scopes[-1].append(df._jdf.logicalPlan().rdd())
+    return df
 
 
 def materialize(df: DataFrame, label: str, *probes: Column) -> "tuple[DataFrame, Row]":
     """Persist ``df`` and fill it with ONE aggregate job, ``count(1)``
-    plus ``probes``, run under the job description ``label``; the
-    caller's description is restored afterwards. Returns ``(frame,
-    row)``: ``row[0]`` is the row count, ``row[1:]`` the probe values."""
+    plus ``probes``, run under the job description ``label``. Returns
+    ``(frame, row)``: ``row[0]`` is the row count, ``row[1:]`` the probe
+    values."""
     df = df.persist()
     if _scopes:
-        _scopes[-1].append(df)
+        _scopes[-1].append(df._jdf)
+    with _described(df, label):
+        return df, df.agg(F.count(F.lit(1)), *probes).head()
+
+
+@contextmanager
+def _described(df: DataFrame, label: str) -> Iterator[None]:
+    """Run the jobs inside under the job description ``label``, then
+    restore the caller's (a job group set by the caller keeps its own)."""
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)
     try:
-        row = df.agg(F.count(F.lit(1)), *probes).head()
+        yield
     finally:
         sc.setLocalProperty("spark.job.description", prev)
-    return df, row
 
 
 @contextmanager
 def fence_scope() -> Iterator[None]:
-    """Unpersist, on exit, every frame ``materialize`` pinned inside.
-    Outside any scope nothing is recorded: the frame stays cached until
-    the caller uncaches it."""
+    """Release, on exit, every frame pinned inside.
+
+    Run every action on a frame built inside the scope inside it too.
+    After exit a ``pin``ned frame's rows are gone and reading it fails;
+    a ``materialize``d frame is recomputed, and where one evaluation
+    matters (a nondeterministic upstream) its readers can disagree.
+    Outside any scope nothing is recorded: Spark drops a ``pin``ned
+    frame's rows once the frame is garbage-collected, and
+    ``spark.catalog.clearCache()`` releases ``materialize``d frames.
+    """
     _scopes.append([])
     try:
         yield
     finally:
-        for df in _scopes.pop():
-            df.unpersist()
+        for handle in _scopes.pop():
+            handle.unpersist(False)

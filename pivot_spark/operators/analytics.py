@@ -27,7 +27,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import materialize, pin
 from pivot_spark.operators.profile import _range_pids
 
 US_PER_WEEK = 7 * 24 * 3600 * 1_000_000
@@ -369,10 +369,8 @@ def ks_test(
         .repartitionByRange(num_ranges, F.col("__v"))
         .withColumn("__pid", F.spark_partition_id())
     )
-    # fenced: m feeds the per-range offsets, the totals and the
-    # cumulative pass — unfenced, each consumer re-ran both side scans
-    # + the full-outer merge (e100's plan carried 6 source scans).
-    # State is distinct-value-sized, disk-spillable.
+    # the offsets, the totals and the cumulative pass read m; unfenced,
+    # e100's plan carried 6 source scans. Distinct-value-sized.
     m = materialize(m, "analytics.ks_test")[0]
     tot = m.groupBy("__pid").agg(
         F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
@@ -1365,7 +1363,7 @@ def sequence_surprise(
         )
         .filter(F.col("__t").isNotNull())
     )
-    trans = materialize(trans, "analytics.sequence_surprise")[0]  # counts + join
+    trans = pin(trans, "analytics.sequence_surprise")  # counts + join
     counts = trans.groupBy("__f", "__t").agg(F.count(F.lit(1)).alias("__n"))
     tot = Window.partitionBy("__f")
     probs = counts.select(
@@ -1696,15 +1694,15 @@ def krippendorff_alpha(
     aggregates. ONE corpus-scale shuffle. Returns one row:
     (n_units BIGINT, n_pairable BIGINT, d_o, d_e, alpha as raw doubles;
     callers round). Degenerate D_e = 0 (a single value overall) yields
-    NULL alpha.
+    NULL alpha. Its two fence jobs run at call time; outside a
+    ``fence_scope()`` release their frames with ``clearCache()``.
     """
     base = df.filter(
         F.col(unit_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(F.col(unit_col).alias("__u"), F.col(value_col).alias("__v"))
     uc = base.groupBy("__u", "__v").agg(F.count(F.lit(1)).alias("__nc"))
     mu = uc.groupBy("__u").agg(F.sum("__nc").alias("__m"))
-    # fenced: the self-join + totals would rescan upstream; n_units is
-    # a probe of the fence job
+    # the self-join + totals read uc2; n_units is a probe of the fence
     uc2, (_, n_units) = materialize(
         uc.join(mu, "__u").filter(F.col("__m") >= 2),
         "analytics.krippendorff_alpha",

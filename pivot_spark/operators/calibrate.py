@@ -147,10 +147,8 @@ def isotonic_fit(
             F.col("__mn") + F.col("bin") * (F.col("__mx") - F.col("__mn")) / bins
         ).alias("bin_lo"),
     )
-    # fence the <=bins-row frame: the a/b prefix self-join and the PAV
-    # segment joins below otherwise re-derive the whole corpus binning
-    # per consumer (e208's plan carried 8 source scans; the 2-scan
-    # floor is the min/max pass + the binning pass)
+    # the prefix self-join and the PAV segment joins read the <=bins-row
+    # frame; unfenced, e208's plan carried 8 source scans (floor: 2)
     per_bin = materialize(per_bin, "calibrate.isotonic_fit")[0]
     # prefix sums over the <=bins-row frame (bounded single-task window)
     from pyspark.sql import Window

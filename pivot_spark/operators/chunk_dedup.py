@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def chunk_dup_signals(
@@ -156,7 +156,7 @@ def source_diversity(
             word_shingles(F.lower(F.col(text_col)), shingle_len).alias("__g"),
         )
     )
-    sampled = materialize(sampled, "chunk_dedup.source_diversity")[0]  # 2 join sides
+    sampled = pin(sampled, "chunk_dedup.source_diversity")  # 2 join sides
     n_docs = base.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )

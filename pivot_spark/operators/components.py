@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import materialize, pin
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -128,7 +128,7 @@ def connected_components(
     )
     if driver_max_edges and n_edges <= driver_max_edges:
         labels = _driver_union_find(
-            (r["src"], r["dst"]) for r in edges.toLocalIterator()
+            (r["src"], r["dst"]) for r in edges.coalesce(1).toLocalIterator()
         )
         spark = pairs.sparkSession
         from pyspark.sql import types as T
@@ -256,10 +256,8 @@ def triangle_stats(
     out-degrees are √m-bounded under this orientation, which is the
     whole trick), then close each wedge against the oriented edge set.
     Three hash joins, no explosion on high-degree hubs."""
-    # edge-list-sized; fenced — degrees, orientation, wedges and the
-    # closing join all reuse it, and without the fence an expensive
-    # upstream (near-dup pair mining) would re-execute once per consumer
-    e = materialize(
+    # degrees, orientation, wedges and the closing join all read e
+    e = pin(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(
@@ -268,7 +266,7 @@ def triangle_stats(
         )
         .distinct(),
         "components.triangle_stats",
-    )[0]
+    )
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -346,7 +344,7 @@ def pagerank(
         )
         .distinct()
     )
-    e = materialize(_symmetrize(e), "components.pagerank")[0]
+    e = pin(_symmetrize(e), "components.pagerank")
     out = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     nodes = out.select(F.col("src").alias("node"), "__deg")
     nodes, (n,) = materialize(nodes, "components.pagerank")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def _grams(text: Column) -> Column:
@@ -83,12 +83,9 @@ def dsir_logweights(
         F.explode(_grams(F.col(text_col))).alias("__gram"),
     ).select(id_col, "__tgt", _bucket(F.col("__gram"), B).alias("__b"))
 
-    # (doc, bucket) pre-aggregate, fenced: both the bucket models and
-    # the scoring pass read it, so the text is tokenized+hashed exactly
-    # once — at corpus scale re-exploding every gram for the second pass
-    # costs more than caching the ≤ docs×min(doc_grams, B) count frame
+    # the bucket models and the scoring pass read the (doc, bucket) counts
     db = g.groupBy(id_col, "__tgt", "__b").agg(F.count(F.lit(1)).alias("__n"))
-    db = materialize(db, "dsir.dsir_logweights")[0]
+    db = pin(db, "dsir.dsir_logweights")
     stats = db.groupBy("__b").agg(
         F.sum("__n").alias("__n_raw"),
         F.sum(F.col("__n") * F.col("__tgt")).alias("__n_tgt"),

@@ -27,7 +27,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def fuzzy_join(
@@ -223,7 +223,7 @@ def sorted_neighborhood_pairs(
         .join(F.broadcast(offs), "__pid")
         .select("__id", "__k", (F.col("__off") + F.col("__rn")).alias("__r"))
     )
-    ranked = materialize(ranked, "fuzzy.sorted_neighborhood_pairs")[0]  # 2 join sides
+    ranked = pin(ranked, "fuzzy.sorted_neighborhood_pairs")  # 2 join sides
     b = F.floor(F.col("__r") / window)
     left = ranked.select(
         "__id", "__k", "__r", F.explode(F.array(b, b + 1)).alias("__b")

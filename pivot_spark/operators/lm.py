@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.functions.text import tokens
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def unigram_lm_score(
@@ -97,7 +97,7 @@ def bigram_lm_score(
     unigram table are broadcast; the only corpus-sized shuffles are the
     bigram count aggregate and the count join, both keyed by the
     bigram itself (map-side combine absorbs hot bigrams). The pair
-    frame is fenced (``_fence.materialize``) so tokenization runs once.
+    frame is pinned (``_fence.pin``) so tokenization runs once.
     """
     if vocab_size <= 0:
         raise ValueError("vocab_size must be positive")
@@ -107,15 +107,13 @@ def bigram_lm_score(
     toks = df.select(F.col(id_col), tokens(text).alias("__w"))
     expl = toks.select(id_col, F.explode("__w").alias("__tok"))
     raw_counts = expl.groupBy("__tok").agg(F.count(F.lit(1)).alias("__c"))
-    # ≤ V rows; fenced — it feeds three broadcast sides, and unfenced
-    # each broadcast job re-runs the TakeOrdered vocabulary selection
-    # from the raw token scan
-    vocab = materialize(
+    # ≤ V rows read by three broadcast sides (one TakeOrdered)
+    vocab = pin(
         raw_counts.orderBy(F.col("__c").desc(), F.col("__tok"))
         .limit(vocab_size)
         .select("__tok"),
         "lm.bigram_lm_score",
-    )[0]
+    )
 
     # raw pairs from the array (w[:-1] zip w[1:]); docs with <2 tokens
     # produce no pairs and come back via the final left join
@@ -130,11 +128,9 @@ def bigram_lm_score(
             )
         ).alias("__p"),
     ).select(id_col, F.col("__p.a").alias("__a"), F.col("__p.b").alias("__b"))
-    # (doc, a, b, multiplicity) pre-aggregate, fenced: both the global
-    # bigram counts and the scoring pass read it, shrinking the
-    # count-join input from raw pairs to distinct doc-bigrams
+    # (doc, a, b, multiplicity): read by the bigram counts and the scoring
     vmark = vocab.withColumn("__v", F.lit(True))
-    dp = materialize(
+    dp = pin(
         praw.join(F.broadcast(vmark.withColumnRenamed("__tok", "__a").withColumnRenamed("__v", "__av")), "__a", "left")
         .join(F.broadcast(vmark.withColumnRenamed("__tok", "__b").withColumnRenamed("__v", "__bv")), "__b", "left")
         .select(
@@ -145,10 +141,10 @@ def bigram_lm_score(
         .groupBy(id_col, "__a", "__b")
         .agg(F.count(F.lit(1)).alias("__m")),
         "lm.bigram_lm_score",
-    )[0]
+    )
     # <unk>-mapped unigram counts in ONE conditional aggregate;
-    # ≤ V+1 rows, fenced for its three broadcast uses
-    uni_all = materialize(
+    # ≤ V+1 rows read by three broadcast sides
+    uni_all = pin(
         expl.join(F.broadcast(vmark), "__tok", "left")
         .select(
             F.when(F.col("__v"), F.col("__tok")).otherwise(F.lit(unk_token)).alias("__tok")
@@ -156,7 +152,7 @@ def bigram_lm_score(
         .groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__c")),
         "lm.bigram_lm_score",
-    )[0]
+    )
     total = uni_all.agg(F.sum("__c").cast("double").alias("__n"))
 
     bc = dp.groupBy("__a", "__b").agg(F.sum("__m").alias("__cb"))
@@ -251,14 +247,14 @@ def stupid_backoff_score(
 
     ttoks = toks_of(train_df)
     texpl = ttoks.select(F.explode("__w").alias("__tok"))
-    vocab = materialize(
+    vocab = pin(
         texpl.groupBy("__tok")
         .agg(F.count(F.lit(1)).alias("__c"))
         .orderBy(F.col("__c").desc(), F.col("__tok"))
         .limit(vocab_size)
         .select("__tok"),
         "lm.stupid_backoff_score",
-    )[0]
+    )
     vmark = vocab.withColumn("__v", F.lit(True))
 
     def unk_map(frame: DataFrame, col: str) -> DataFrame:
@@ -271,12 +267,12 @@ def stupid_backoff_score(
         ).drop(f"__{col}v")
 
     # train tables: unk-mapped unigram counts (≤ V+1 rows) + bigram counts
-    uni = materialize(
+    uni = pin(
         unk_map(texpl.withColumnRenamed("__tok", "__t1"), "__t1")
         .groupBy("__t1")
         .agg(F.count(F.lit(1)).alias("__c")),
         "lm.stupid_backoff_score",
-    )[0]
+    )
     total = uni.agg(F.sum("__c").cast("double").alias("__n"))
     tb = unk_map(unk_map(pairs_of(ttoks), "__a"), "__b")
     bc = tb.groupBy("__a", "__b").agg(F.count(F.lit(1)).alias("__cb"))

@@ -415,10 +415,8 @@ def ngram_jaccard_pairs(
 
     Survivors are verified through ``_verify_join``, which broadcasts
     the id->shingle-set map when the fence's byte estimate allows."""
-    # cached: the per-doc shingle-hash set feeds three consumers (df-count,
-    # prefix regroup, verify) — without it the interpreted shingling
-    # expression re-runs per consumer (and again on each self-join side).
-    # State is one hash per distinct shingle per doc, disk-spillable.
+    # the df-count, the prefix regroup and the verify read the per-doc
+    # shingle-hash set, so the interpreted shingling runs once
     base, (rows, elems) = materialize(
         df.select(
             F.col(id_col).alias("__id"),
@@ -844,10 +842,8 @@ def neardup_embedding_cosine(
         return _exact_cosine_pairs_gemm(base, df.schema[id_col].dataType, threshold)
 
     sig_cols = srp_signatures_pd(F.col("__vec"), n_planes, dim, n_tables, seed)
-    # fence: the bucket self-join reads the signature frame on BOTH
-    # sides; unpersisted, the SRP Arrow kernel re-ran once per side
-    # (two ArrowEvalPython scans in the e12 plan). (id, table, sig) is
-    # 24 bytes/row x n_tables — disk-spillable at any corpus size.
+    # both bucket self-join sides read the signatures; unfenced, the
+    # SRP Arrow kernel ran once per side (two scans in the e12 plan)
     tagged, (n_tagged,) = materialize(
         base.select("__id", F.posexplode(sig_cols).alias("__t", "__sig")),
         "neardup.neardup_embedding_cosine",

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -210,11 +210,12 @@ def quantiles(
 
 def _range_pids(df: DataFrame, num_ranges: int, cols: Sequence, label: str) -> DataFrame:
     """``df`` range-partitioned on ``cols`` with each row's range id in
-    ``__pid``, fenced: RangePartitioner re-SAMPLES per evaluation, so two
-    unfenced computations can assign rows to different ranges, corrupting
-    per-range offsets (observed as duplicate/gapped ranks)."""
+    ``__pid``, pinned: RangePartitioner re-SAMPLES per evaluation, so two
+    computations can assign rows to different ranges, corrupting
+    per-range offsets (duplicate/gapped ranks). Its readers must run
+    while it is cached (see ``_fence.fence_scope``)."""
     part = df.repartitionByRange(num_ranges, *cols)
-    return materialize(part.withColumn("__pid", F.spark_partition_id()), label)[0]
+    return pin(part.withColumn("__pid", F.spark_partition_id()), label)
 
 
 def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
@@ -224,8 +225,8 @@ def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
     (window partitioned by the range-partition id — parallel, never a
     single global partition), and the per-partition offsets (one scalar
     per range) are a prefix sum over the tiny per-range totals frame,
-    broadcast-joined back; the range-partitioned frame is fenced
-    (``_range_pids``), one fence job per column. Average rank for a tie
+    broadcast-joined back; the range-partitioned frame is pinned
+    (``_range_pids``). Average rank for a tie
     group of size c starting after cum rows = cum + (c+1)/2 —
     identical to SQL ``rank() + (count(*) OVER (PARTITION BY v)-1)/2``.
     State: the map is distinct-value-sized; no row-sized global sort
@@ -705,13 +706,13 @@ def weighted_quantile(
         .orderBy("__v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # fenced: the total and every per-prob probe read the running sums
-    cum = materialize(
+    # the total and every per-prob probe read the running sums
+    cum = pin(
         part.join(F.broadcast(offs), "__pid").withColumn(
             "__cum", F.sum("__w").over(wcum) + F.col("__off")
         ),
         "profile.weighted_quantile",
-    )[0]
+    )
     total = cum.agg(F.max("__cum").alias("__total"))
     outs = []
     for p in ps:

@@ -383,11 +383,8 @@ def negative_sample_k(
         raise ValueError(f"oversample must be >= 1, got {oversample}")
     from pivot_spark.operators.profile import _avg_rank_map
 
-    # fenced: the distinct-id frame feeds three consumers (count, the
-    # rank index, the anchor probes) — one narrow column, never re-scan
-    # the source per consumer
-    ids = df.select(F.col(id_col)).distinct()
-    ids, (n,) = materialize(ids, "sample.negative_sample_k")
+    # the count, the rank index and the anchor probes read the ids
+    ids, (n,) = materialize(df.select(F.col(id_col)).distinct(), "sample.negative_sample_k")
     if n < 2:
         raise ValueError("need at least 2 distinct ids to sample negatives")
     ranks = _avg_rank_map(ids, id_col, num_ranges)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def rendezvous_shard(key: Column, n_shards: int, salt: str = "shard") -> Column:
@@ -57,8 +57,8 @@ def rebalance_report(
         rendezvous_shard(F.col("key"), n_from, salt).alias("s_from"),
         rendezvous_shard(F.col("key"), n_to, salt).alias("s_to"),
     )
-    # fenced: three aggregates read the tags; each key's md5 draws run once
-    tagged = materialize(tagged, "sharding.rebalance_report")[0]
+    # three aggregates read the tags; each key's md5 draws run once
+    tagged = pin(tagged, "sharding.rebalance_report")
     agg = tagged.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum((F.col("s_from") != F.col("s_to")).cast("long")).alias("moved"),

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 
 def duplicated_spans(
@@ -66,7 +66,7 @@ def duplicated_spans(
         .select(F.col(id_col).alias("__id"), F.explode(wins).alias("w"))
         .select("__id", F.col("w.pos").alias("pos"), F.col("w.gram").alias("gram"))
     )
-    pw = materialize(pw, "spans.duplicated_spans")[0]  # counts + join read it
+    pw = pin(pw, "spans.duplicated_spans")  # counts + join read it
     counts = pw.groupBy("gram").agg(F.count(F.lit(1)).alias("__c"))
     dup = pw.join(counts.filter(F.col("__c") >= 2), "gram").select("__id", "pos")
     # merge: windows [pos, pos+k-1]; a new span starts when the gap from

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.functions.text import tokens
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import materialize, pin
 
 
 def tfidf_top_terms(
@@ -188,16 +188,14 @@ def tfidf_cosine_pairs(
     df_cap = F.lit(max_df_share) * F.col("__N")
     need_probe = max_df_share < 1.0 or max_comparisons is not None
     if need_probe:
-        # the dfreq fence below and the weight join both read tf: fenced,
-        # the tokenize -> explode -> tf chain runs once
-        tf = materialize(tf, "tfidf.tfidf_cosine_pairs")[0]
+        # the dfreq fence below and the weight join both read tf
+        tf = pin(tf, "tfidf.tfidf_cosine_pairs")
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).crossJoin(
         F.broadcast(nd)
     )
     if need_probe:
-        # the fence's probes are every driver-side decision input: the
-        # prune-log count, N (for the log line) and the max_comparisons
-        # probe over the POST-PRUNE df values (guide §1.3)
+        # probes: the prune-log count, N (for the log line) and the
+        # max_comparisons probe over the POST-PRUNE df values
         dfreq, (_, n_dropped, n_docs, ncmp) = materialize(
             dfreq,
             "tfidf.tfidf_cosine_pairs",
@@ -253,8 +251,7 @@ def tfidf_cosine_pairs(
         .select("doc", "term", "df", (F.col("w") / F.col("nrm")).alias("wn"))
     )
     if not prefix_filter:
-        # fenced: both self-join sides read wn; with a lazy cache both
-        # computed the upstream chain (measured 1.5x query cost)
+        # eager: with a lazy cache both self-join sides computed wn (1.5x)
         wn = materialize(wn, "tfidf.tfidf_cosine_pairs")[0]
         dots = (
             wn.alias("a")

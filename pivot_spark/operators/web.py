@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import materialize
+from pivot_spark.operators._fence import pin
 
 # public-suffix-lite: second-level labels that combine with a 2-letter
 # ccTLD to form the registrable suffix (co.uk, com.au, ac.jp, ...).
@@ -66,9 +66,8 @@ def domain_stats(
         aggs.append(F.count_distinct(F.col(lang_col)).alias("n_langs"))
     if size_col:
         aggs.append(F.avg(F.col(size_col).cast("double")).alias("avg_size"))
-    # fenced: both the output and the total read `per` — unfenced, the
-    # whole corpus scan + domain aggregate runs twice (plan-pinned)
-    per = materialize(base.groupBy("domain").agg(*aggs), "web.domain_stats")[0]
+    # both the output and the total read `per` (plan-pinned)
+    per = pin(base.groupBy("domain").agg(*aggs), "web.domain_stats")
     total = per.agg(F.sum("n_docs").alias("__total"))
     return per.crossJoin(F.broadcast(total)).select(
         *per.columns,

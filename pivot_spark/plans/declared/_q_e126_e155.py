@@ -173,9 +173,7 @@ def e129_neardup_incremental(spark, sf_dir):
     d = _read(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    # the operator contract: the caller pins the index; unfenced, the
-    # corpus signature kernel re-ran once per consumer (band-join side +
-    # BOTH verify broadcasts = 3x compute, guide §1.3/§5)
+    # the operator contract: the caller pins the index (3 consumers)
     index = minhash_signatures(corpus, "doc_id", "text")
     index = materialize(index, "e129_neardup_incremental")[0]
     pairs, _new_index = neardup_minhash_incremental(index, delta, "doc_id", "text")
@@ -228,10 +226,8 @@ def e130_hll_overlap(spark, sf_dir):
     )
     est = hll_overlap_matrix(ev, "event_type", "user_id", lg_k=14)
 
-    # fenced: d feeds the sizes aggregate and BOTH self-join sides —
-    # unfenced, the distinct shuffle ran three times
-    d = ev.select("event_type", "user_id").distinct()
-    d = materialize(d, "e130_hll_overlap")[0]
+    # the sizes aggregate and BOTH self-join sides read d
+    d = materialize(ev.select("event_type", "user_id").distinct(), "e130_hll_overlap")[0]
     sz = d.groupBy(F.col("event_type").alias("g")).agg(
         F.count("*").alias("n")
     )

@@ -349,11 +349,8 @@ def e70_scd2_apply(spark, sf_dir):
         )
         .select("o_custkey", "s.o_orderstatus", "s.o_orderdate")
     )
-    # fence both operator inputs: scd2_apply reads the history three
-    # times (closed shard, current shard, matched-keys semi-join) and
-    # the delta three times (update join, key projection, inserts
-    # anti-join) — unfenced, the window build / latest aggregate re-ran
-    # per consumer (6 source scans in the plan)
+    # scd2_apply reads each input three times; unfenced, the window
+    # build / latest aggregate re-ran per consumer (6 source scans)
     hist = materialize(hist, "e70_scd2_apply")[0]
     latest = materialize(latest, "e70_scd2_apply")[0]
     out = scd2_apply(

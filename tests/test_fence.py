@@ -6,7 +6,7 @@ import pathlib
 
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import fence_scope
+from pivot_spark.operators._fence import fence_scope, pin
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "pivot_spark"
 
@@ -24,7 +24,7 @@ def _persisted(sc):
 
 
 def test_persist_only_in_fence_module():
-    """Every shared frame is pinned through ``_fence.materialize``: a
+    """Every shared frame is pinned through ``_fence``: a
     ``.persist(`` call anywhere else in the package is a hand-rolled
     fence that no scope releases."""
     offenders = []
@@ -69,6 +69,35 @@ def test_scope_releases_and_repeat_builds_run_the_same_jobs(spark):
     assert jobs[0] == jobs[1] > 0, jobs
 
 
+def test_pin_labels_its_jobs_and_scope_releases_it(spark):
+    """``pin`` runs the frame's shuffle stages under its label and keeps
+    the rows for the first action; the scope drops them on exit."""
+    sc = spark.sparkContext
+    group = "test_pin"
+    before = _persisted(sc)
+    with fence_scope():
+        sc.setJobGroup(group, "caller description")
+        try:
+            df = pin(
+                spark.range(100).groupBy((F.col("id") % 7).alias("k")).count(),
+                "test.pin",
+            )
+            assert sc.getLocalProperty("spark.job.description") == "caller description"
+            assert sorted(r["count"] for r in df.collect()) == [14] * 5 + [15] * 2
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        labels = [
+            store.job(j).description() for j in sc.statusTracker().getJobIdsForGroup(group)
+        ]
+        labels = [d.get() if d.isDefined() else None for d in labels]
+        assert "test.pin" in labels, labels
+        assert _persisted(sc) - before  # the action stored the rows
+    assert _persisted(sc) - before == set()
+
+
 def _at_partitions(spark, n, build):
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
@@ -93,7 +122,7 @@ def test_calibrate_invariant_to_shuffle_partitions(spark):
 
 
 def test_tfidf_invariant_to_shuffle_partitions(spark):
-    """tfidf_cosine_pairs fences its normalized-weight frame (and, with
+    """tfidf_cosine_pairs pins its normalized-weight frame (and, with
     a df cap, its tf and df frames); the pairs are the same at 1 and at
     4 shuffle partitions, on the plain and the prefix-filter path. The
     cosine is a double sum whose order follows the partitioning, so it

@@ -1,12 +1,12 @@
 """Physical-plan audit over EVERY declared batch query.
 
 `.explain` discipline, made systematic: build each query's DataFrame at
-sf0.001 (plan analysis only — building a batch query executes nothing,
-EXCEPT queries built on the eager one-row operators
-``analytics.krippendorff_alpha`` / ``analytics.jackknife_ratio``, which
-materialize their answer at call time to release cache fences — those
-few pay full sf0.001 execution here), walk the physical plan string,
-and report the operators that decide 100 TB behavior:
+sf0.001 (plan analysis only — building a batch query executes nothing
+but the eager fence jobs of ``operators/_fence.py::materialize``, which
+compute a row count or size probe an operator needs at build time; each
+query is built inside its own ``fence_scope()`` so the frames it pins
+are released), walk the physical plan string, and report the operators
+that decide 100 TB behavior:
 
 * shuffle surface — hash / range / single-partition Exchanges;
 * join strategies — broadcast vs sort-merge vs the two landmines
@@ -66,6 +66,7 @@ def audit_plan(plan: str) -> dict:
 
 def main() -> int:
     import __spark_entry__ as entry_mod
+    from pivot_spark.operators._fence import fence_scope
     from pivot_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -80,8 +81,9 @@ def main() -> int:
             continue
         if name.startswith("s") and "_stream" in name:
             continue
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        with fence_scope():
+            df = fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
         report[name] = audit_plan(plan)
 
     summary = {

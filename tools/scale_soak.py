@@ -51,8 +51,8 @@ def _run(spark, fn, sf_dir: str, reps: int) -> "tuple[float, int, float]":
 
     def _isolate() -> None:
         # same cold-cache start for every sample: each sample runs in
-        # its own fence scope, so frames an operator pins with
-        # _fence.materialize are recomputed at BOTH SFs — otherwise the
+        # its own fence scope, so frames an operator pins through
+        # _fence are recomputed at BOTH SFs — otherwise the
         # noop sample is a cache-hit at one SF and a cache-miss at the
         # other and the slope compares those instead. Loop-body
         # localCheckpoint RDDs are outside any scope; release them here
