@@ -7,16 +7,8 @@ plus extension operators), each (spark, sf_dir) -> DataFrame.
 get the driver's rows-only check.
 
 ORDER MATTERS: the driver's correctness gate checks the FIRST 50 entries
-of ``queries()``. Rounds 1-2 verified the original first 50 (p01-p25,
-e01-e23); each round since front-loads a window of canaries +
-not-yet-driver-checked queries so the hard signal sweeps the whole
-declared set over successive rounds (round-2 verdict item #1). Round 7
-completed the never-checked backlog; round 8 front-loads every query
-whose plan or declared semantics changed in round 7 (the round-7
-verdict's item #1 list: e57b's lockstep oracle change first, the
-contract rewrites and fold anchors, the ~30 plan-changed queries) plus
-the queries round 8 itself touches. The full dict still contains every
-query (bench runs them all).
+of ``queries()``; ``_ROUND_WINDOW`` puts the queries to re-check first.
+The full dict still contains every query (bench runs them all).
 """
 
 from __future__ import annotations
@@ -29,48 +21,28 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Round 8 runs no standing canary either: all 50 slots go to the
-# round-7/8-MODIFIED set (round-7 verdict item #1 — the round-7 window
-# was pre-committed to the never-checked backlog, so none of the ~30
-# queries whose plans or declared semantics changed in round 7 were
-# driver-re-checked; this window closes that).
+# No standing canary: every slot goes to a query to re-check.
 _CANARIES: "list[str]" = []
 
-# Round-8 rotation (50 slots), per the round-7 verdict's explicit list:
-# (a) e57b first — its k=⌈√n⌉ change was a LOCKSTEP query+oracle edit
-#     the driver has never re-verified;
-# (b) the round-7 contract rewrites (e26b/e79/e108b) and rows-only fold
-#     anchors (e15_knn_ivf_fullprobe/e71b_knn_pq_rerank) + the e147
-#     holdover;
-# (c) every round-7 plan-changed query (fuzzy/tfidf/LSH/neardup/
-#     bootstrap/OOD/gibberish/markov/krippendorff/classifier/rake/
-#     isotonic/ks/hll/scd2/char-LM/guards + the 8-query audio family);
-# (d) the 10 graph-family consumers of the MinHash mining stage that
-#     round 8 changed, plus e188/e117 media neardup, e81 and s04/s13:
-#     round 8 planned changes to these five but made none, so they are
-#     plain re-checks here.
+# The 50-slot window, in order:
+# (a) the streaming replays whose stateful fold moved into
+#     ``streaming/_fold.py``;
+# (b) the 27 pivot queries, whose plans were re-routed (routed plan and
+#     error port in the one scan);
+# (c) the codec queries whose operators run only their Arrow kernels,
+#     until the 50 slots are full.
 _ROUND_WINDOW = [
-    "e57b_semdedup_gemm", "e26b_threshold_buckets",
-    "e79_incremental_distinct", "e108b_pca_project",
-    "e15_knn_ivf_fullprobe", "e71b_knn_pq_rerank",
-    "e147_linear_regression", "e73_fuzzy_match",
-    "e123_tfidf_cosine_join", "e12_neardup_cosine_lsh", "e09_knn_lsh",
-    "e129_neardup_incremental", "e89_containment", "e11_neardup_cosine",
-    "e134_poisson_bootstrap", "e221_ood_scores", "e222_char_gibberish",
-    "e223_markov_attribution", "e210_krippendorff_alpha",
-    "e109_quality_classifier", "e145_rake_weights",
-    "e208_isotonic_calibration", "e100_ks_test", "e130_hll_overlap",
-    "e70_scd2_apply", "e85_bigram_lm", "e10_ngram_jaccard",
-    "e174_audio_features", "e178_audio_downsample", "e182_audio_mixdown",
-    "e185_audio_fingerprint", "e186_audio_neardup", "e189_audio_trim",
-    "e194_audio_spectral", "e219_audio_gain",
-    "e31_dup_clusters", "e82_dedup_keep_best", "e103_triangle_stats",
-    "e107_pagerank", "e115_leakage_safe_split", "e116_negative_sampling",
-    "e136_label_propagation", "e157_cross_source_dups",
-    "e162_degree_stats", "e209_local_clustering",
-    "e188_image_neardup_dhash", "e117_image_neardup",
-    "e81_spearman_matrix", "s04_stream_debounce",
-    "s13_stream_session_native",
+    "s03_stream_session", "s04_stream_debounce", "s06_stream_topk",
+    "s07_stream_ewma", "s08_stream_quantile",
+    "p01", "p02", "p03", "p04", "p05", "p06", "p07", "p08", "p09", "p10",
+    "p11", "p12", "p13", "p14", "p15", "p16", "p17", "p18", "p19", "p20",
+    "p22", "p21", "p21_errors", "p23", "p24", "p25", "p26b",
+    "e168_ppm_decode", "e169_bmp_decode", "e170_wav_decode",
+    "e174_audio_features", "e175_image_stats", "e177_image_resize",
+    "e178_audio_downsample", "e179_image_gray", "e181_media_sniff",
+    "e182_audio_mixdown", "e185_audio_fingerprint", "e186_audio_neardup",
+    "e187_image_dhash", "e188_image_neardup_dhash", "e189_audio_trim",
+    "e190_image_crop", "e193_image_blur", "e194_audio_spectral",
 ]
 
 

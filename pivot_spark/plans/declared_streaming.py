@@ -30,6 +30,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from pivot_spark.operators._fence import pin_view
+
 _SEQ = [0]
 
 
@@ -56,7 +58,8 @@ def _shuffle(spark, n: int):
 
 def _drain(out, mode: str) -> str:
     """Run a streaming DataFrame to completion into a uniquely-named
-    memory sink; return the sink table name."""
+    memory sink; return the sink table name. The innermost
+    ``fence_scope`` drops the sink when it exits."""
     _SEQ[0] += 1
     name = f"stream_replay_{os.getpid()}_{_SEQ[0]}"
     q = (
@@ -69,7 +72,7 @@ def _drain(out, mode: str) -> str:
         q.processAllAvailable()
     finally:
         q.stop()
-    return name
+    return pin_view(out.sparkSession, name)
 
 
 def _stream(spark, sf_dir: str, table: str):
@@ -562,12 +565,15 @@ FROM events GROUP BY user_id
             start_upsert_sink,
         )
 
-        with _shuffle(spark, 8):
+        # the state directory is read lazily, so it stays; the
+        # checkpoint is not read after termination
+        with _shuffle(spark, 8), tempfile.TemporaryDirectory(
+            prefix="s10_ckpt_"
+        ) as ckpt:
             src = _stream(spark, sf_dir, "events").select(
                 "user_id", "ts", "event_id", "event_type", "value"
             )
             state = tempfile.mkdtemp(prefix="s10_state_")
-            ckpt = tempfile.mkdtemp(prefix="s10_ckpt_")
             q = start_upsert_sink(
                 src, state, keys=["user_id"], checkpoint=ckpt, order_col="ts"
             )

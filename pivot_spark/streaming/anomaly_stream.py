@@ -14,7 +14,7 @@ EW variance follows the standard recurrence (West 1979):
 
 State per key is (mean, var, n) — three doubles, independent of stream
 length; keys whose last event falls ``state_ttl`` behind the watermark
-are dropped (event-time TTL, the ``first_seen_stream`` pattern — an
+are dropped (event-time TTL, the ``streaming._fold`` pattern — an
 evicted key simply re-warms, the standard trade for bounded state on
 unbounded key spaces).
 """
@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pivot_spark.streaming._fold import keyed_fold
 
 
 def ewma_anomaly_stream(
@@ -45,7 +46,6 @@ def ewma_anomaly_stream(
         raise ValueError("ewma_anomaly_stream requires a streaming DataFrame")
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    df = df.withWatermark(event_time, watermark)
 
     out_schema = T.StructType(
         [
@@ -66,23 +66,15 @@ def ewma_anomaly_stream(
     )
     ttl_ms = state_ttl_minutes * 60 * 1000
 
-    def fn(key, pdfs, state: GroupState):
+    def step(key, rows, ts_ms, state):
         import numpy as np
         import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(event_time)
-        pdf = pdf[pdf[value_col].notna()]
-        if not len(pdf):
-            return
-
-        mean, var, n = state.get if state.exists else (0.0, 0.0, 0)
+        keep = rows[value_col].notna().to_numpy()
+        if not keep.any():
+            return None
+        pdf = rows[keep]
+        mean, var, n = state if state is not None else (0.0, 0.0, 0)
         # fold over plain python floats (tolist), not boxed pandas
         # scalars — the float expression shapes below are the oracle
         # contract (recursive-CTE replay) and must not change
@@ -106,10 +98,7 @@ def ewma_anomaly_stream(
             e_o.append(mean)
             z_o.append(z)
             a_o.append(anom)
-        state.update((mean, var, n))
-        last_ms = int(pd.Timestamp(pdf[event_time].max()).value // 1_000_000)
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 key_col: np.repeat(key[0], len(xs)),
                 "ts": pdf[event_time].to_numpy(),
@@ -119,14 +108,9 @@ def ewma_anomaly_stream(
                 "is_anomaly": a_o,
             }
         )
+        # the timeout counts only the rows that carry a value
+        return (mean, var, n), ts_ms[keep].max() + ttl_ms, out
 
-    return (
-        df.groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_fold(
+        df, [key_col], event_time, watermark, out_schema, state_schema, step
     )

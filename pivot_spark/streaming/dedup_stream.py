@@ -8,22 +8,23 @@ Two tiers:
 * ``dedup_stream`` — Spark-native ``dropDuplicates`` /
   ``dropDuplicatesWithinWatermark``: state is managed by the streaming
   aggregation operator, bounded by the watermark. The default choice.
-* ``first_seen_stream`` — custom stateful operator via
-  ``applyInPandasWithState``: keeps a per-key "seen" flag (plus first
-  event time) in GroupState with a processing-time TTL, emitting only
-  the first record of each key. This is the template for operators the
-  built-ins can't express (per-key custom state transitions); state per
-  key is O(1), and keys expire via timeout so state size tracks the TTL
-  window, not the stream history.
+* ``debounce_stream`` — a custom stateful fold (``streaming._fold``):
+  per key, emit a record iff it is at least a gap after the last
+  emitted one. State per key is one timestamp, and keys expire on
+  event time, so state size tracks the TTL window, not the stream
+  history. ``first_seen_stream`` is the same fold with no re-emit gap:
+  it emits only the first record of each key.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pivot_spark.streaming._fold import keyed_fold
 
 
 def dedup_stream(
@@ -55,53 +56,17 @@ def first_seen_stream(
     watermark: str = "10 minutes",
     ttl_minutes: int = 60,
 ) -> DataFrame:
-    """Emit only the first record observed per key (custom stateful
-    operator, ``applyInPandasWithState``). Output schema = input schema.
+    """Emit only the first record per key: ``debounce_stream`` with no
+    re-emit gap. Output schema = input schema.
 
-    State per key is a single flag, expired on EVENT time: a key whose
-    last event is ``ttl_minutes`` behind the watermark is dropped (after
-    which a recurrence is emitted again — a TTL-bounded dedup cache).
-    Event-time expiry keeps state bounded by the watermark window and is
-    reprocessing-safe; processing-time timeouts additionally deadlock
-    ``processAllAvailable`` on this Spark line, so they are avoided.
+    The first record is the earliest by event time (within a micro-batch
+    too). A key whose last event is ``ttl_minutes`` behind the watermark
+    is dropped, after which a recurrence is emitted again — a
+    TTL-bounded dedup cache.
     """
     if not df.isStreaming:
         raise ValueError("first_seen_stream requires a streaming DataFrame")
-    keys = list(keys)
-    df = df.withWatermark(event_time, watermark)
-    out_schema = df.schema
-    state_schema = T.StructType([T.StructField("seen", T.LongType())])
-    ttl_ms = ttl_minutes * 60 * 1000
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # the input iterator must be fully consumed — bailing early stalls
-        # the Arrow channel between the JVM and the python worker
-        first = None
-        max_ts_ms = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            if first is None:
-                first = pdf.iloc[:1]
-            batch_max = int(pdf[event_time].max().timestamp() * 1000)
-            max_ts_ms = max(max_ts_ms, batch_max)
-        already_seen = state.exists
-        state.update((1,))
-        if max_ts_ms:
-            state.setTimeoutTimestamp(max_ts_ms + ttl_ms)
-        if not already_seen and first is not None:
-            yield first
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return debounce_stream(df, keys, event_time, math.inf, watermark, ttl_minutes)
 
 
 def debounce_stream(
@@ -128,47 +93,20 @@ def debounce_stream(
     """
     if not df.isStreaming:
         raise ValueError("debounce_stream requires a streaming DataFrame")
-    keys = list(keys)
-    df = df.withWatermark(event_time, watermark)
-    out_schema = df.schema
-    state_schema = T.StructType([T.StructField("last_kept_ms", T.LongType())])
     gap_ms = min_gap_seconds * 1000
     ttl_ms = ttl_minutes * 60 * 1000
 
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        import pandas as pd
+    def step(key, rows, ts_ms, state):
+        last = state[0] if state is not None else None
+        # the keep-iff-gap-since-last-KEPT fold is inherently sequential
+        kept = []
+        for i, t in enumerate(ts_ms.tolist()):
+            if last is None or t - last >= gap_ms:
+                kept.append(i)
+                last = t
+        return (last,), ts_ms.max() + ttl_ms, rows.iloc[kept]
 
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if not batches:
-            return
-        rows = pd.concat(batches).sort_values(event_time).reset_index(drop=True)
-        last = state.get[0] if state.exists else None
-        # the keep-iff-gap-since-last-KEPT fold is inherently sequential,
-        # but loop over a pre-converted int64 array — a per-row
-        # pandas ``Timestamp.timestamp()`` call dominated the fold
-        ts_ms_arr = (rows[event_time].astype("int64") // 1_000_000).tolist()
-        kept_idx = []
-        max_ts_ms = 0
-        for i, ts_ms in enumerate(ts_ms_arr):
-            if ts_ms > max_ts_ms:
-                max_ts_ms = ts_ms
-            if last is None or ts_ms - last >= gap_ms:
-                kept_idx.append(i)
-                last = ts_ms
-        if last is not None:
-            state.update((int(last),))
-        if max_ts_ms:
-            state.setTimeoutTimestamp(max_ts_ms + ttl_ms)
-        if kept_idx:
-            yield rows.iloc[kept_idx]
-
-    return df.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    state_schema = T.StructType([T.StructField("last_kept_ms", T.LongType())])
+    return keyed_fold(
+        df, list(keys), event_time, watermark, df.schema, state_schema, step
     )

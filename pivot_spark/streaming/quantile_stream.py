@@ -6,17 +6,18 @@ heights) and emits the key's current estimate, so a dashboard reads one
 row per key per batch.
 
 State per key is 11 doubles + a count — independent of stream length;
-idle keys expire by event-time TTL (the ``first_seen_stream``
-contract). Accuracy is the published P² behavior (~1% relative error on
-smooth distributions once n >> 5); exact quantiles at rest are the
-batch ``quantiles`` / ``weighted_quantile`` operators.
+idle keys expire by event-time TTL (``streaming._fold``). Accuracy is
+the published P² behavior (~1% relative error on smooth distributions
+once n >> 5); exact quantiles at rest are the batch ``quantiles`` /
+``weighted_quantile`` operators.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pivot_spark.streaming._fold import keyed_fold
 
 
 def _p2_init(xs):
@@ -74,7 +75,6 @@ def quantile_stream(
         raise ValueError("quantile_stream requires a streaming DataFrame")
     if not 0.0 < p < 1.0:
         raise ValueError(f"p must be in (0, 1), got {p}")
-    df = df.withWatermark(event_time, watermark)
 
     out_schema = T.StructType(
         [
@@ -91,24 +91,15 @@ def quantile_stream(
     )
     ttl_ms = state_ttl_minutes * 60 * 1000
 
-    def fn(key, pdfs, state: GroupState):
+    def step(key, rows, ts_ms, state):
         import math
 
         import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(event_time)
-        xs = [float(v) for v in pdf[value_col] if v is not None and not pd.isna(v)]
+        xs = [float(v) for v in rows[value_col] if v is not None and not pd.isna(v)]
         if not xs:
-            return
-        q, np_, buf, cnt = (
-            state.get if state.exists else ([], [], [], 0)
-        )
+            return None
+        q, np_, buf, cnt = state if state is not None else ([], [], [], 0)
         q, np_, buf = list(q), list(np_), list(buf)
         for x in xs:
             if cnt < 5:
@@ -125,18 +116,13 @@ def quantile_stream(
             est = srt[max(0, min(len(srt) - 1, int(math.ceil(p * len(srt))) - 1))]
         else:
             est = q[2]
-        state.update((q, np_, buf, cnt))
-        last_ms = int(pd.Timestamp(pdf[event_time].max()).value // 1_000_000)
-        state.setTimeoutTimestamp(last_ms + ttl_ms)
-        yield pd.DataFrame({key_col: [key[0]], "n": [cnt], "estimate": [est]})
-
-    return (
-        df.groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        # the timeout counts every row, with or without a value
+        return (
+            (q, np_, buf, cnt),
+            ts_ms.max() + ttl_ms,
+            pd.DataFrame({key_col: [key[0]], "n": [cnt], "estimate": [est]}),
         )
+
+    return keyed_fold(
+        df, [key_col], event_time, watermark, out_schema, state_schema, step
     )

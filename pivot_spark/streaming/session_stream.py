@@ -1,7 +1,7 @@
 """Streaming sessionization — the unbounded counterpart of
 ``operators.sessionize`` (30-min-gap sessions, e14).
 
-Custom stateful operator via ``applyInPandasWithState``: per user, fold
+Custom stateful operator (``streaming._fold``): per user, fold
 events into the open session; when an event arrives more than ``gap``
 after the previous one, the open session closes and is emitted, and the
 event starts a new one. Sessions with no successor event close via
@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pivot_spark.streaming._fold import keyed_fold
 
 
 def session_stream(
@@ -34,7 +35,6 @@ def session_stream(
     the gap, or when the watermark passes its end + gap (timeout)."""
     if not df.isStreaming:
         raise ValueError("session_stream requires a streaming DataFrame")
-    df = df.withWatermark(event_time, watermark)
     gap_ms = gap_minutes * 60 * 1000
 
     out_schema = T.StructType(
@@ -55,75 +55,54 @@ def session_stream(
         ]
     )
 
-    def fn(key, pdfs, state: GroupState):
+    def frame(key, starts, ends, ns, svs):
         import numpy as np
         import pandas as pd
 
-        def frame(starts, ends, ns, svs):
-            return pd.DataFrame(
-                {
-                    user_col: np.repeat(key[0], len(starts)),
-                    "session_start": pd.to_datetime(starts, unit="ms"),
-                    "session_end": pd.to_datetime(ends, unit="ms"),
-                    "n_events": ns,
-                    "sum_value": svs,
-                }
-            )
+        return pd.DataFrame(
+            {
+                user_col: np.repeat(key[0], len(starts)),
+                "session_start": pd.to_datetime(starts, unit="ms"),
+                "session_end": pd.to_datetime(ends, unit="ms"),
+                "n_events": ns,
+                "sum_value": svs,
+            }
+        )
 
-        if state.hasTimedOut:
-            start_ms, last_ms, n, sv = state.get
-            state.remove()
-            yield frame([start_ms], [last_ms], [n], [sv])
-            return
+    def expire(key, state):  # the open session closes
+        return frame(key, *([v] for v in state))
 
-        # consume ALL batches first (bailing early stalls the Arrow
-        # channel), then fold in event-time order. The fold itself is
-        # vectorized: a per-event Python loop emitting one single-row
-        # DataFrame per closed session dominated the replay wall-clock
-        # (~100k tiny frames at sf0.1); break detection is a diff
-        # compare and per-session aggregates are reduceat segments.
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        events = pd.concat(parts).sort_values(event_time)
-        ts_ms = (events[event_time].astype("int64") // 1_000_000).to_numpy()
+    def step(key, events, ts_ms, state):
+        import numpy as np
+
+        # vectorized fold: a per-event Python loop emitting one
+        # single-row DataFrame per closed session dominated the replay
+        # wall-clock (~100k tiny frames at sf0.1); break detection is a
+        # diff compare and per-session aggregates are reduceat segments
         vals = events[value_col].astype("float64").to_numpy()
-
         brk = np.empty(len(ts_ms), dtype=bool)
         brk[0] = True
         np.greater(ts_ms[1:] - ts_ms[:-1], gap_ms, out=brk[1:])
         seg = np.flatnonzero(brk)  # start index of each new session
         seg_end = np.append(seg[1:], len(ts_ms)) - 1
-        n_seg = seg_end - seg + 1
-        sv_seg = np.add.reduceat(vals, seg)
-        start_seg = ts_ms[seg].copy()
-        end_seg = ts_ms[seg_end]
+        segs = [ts_ms[seg], ts_ms[seg_end], seg_end - seg + 1,
+                np.add.reduceat(vals, seg)]  # start, end, n, value sum
 
-        carried = None  # state session closed by the first new event
-        if state.exists:
-            start_ms, last_ms, n, sv = state.get
-            if ts_ms[0] - last_ms > gap_ms:
-                carried = (start_ms, last_ms, n, sv)
-            else:  # first segment continues the open session
-                start_seg[0] = start_ms
-                n_seg[0] += n
-                sv_seg[0] += sv
-
-        state.update(
-            (int(start_seg[-1]), int(end_seg[-1]), int(n_seg[-1]),
-             float(sv_seg[-1]))
+        if state is not None:
+            if ts_ms[0] - state[1] > gap_ms:  # the open session closes
+                segs = [np.insert(a, 0, v) for a, v in zip(segs, state)]
+            else:  # the first segment continues the open session
+                segs[0][0] = state[0]
+                segs[2][0] += state[2]
+                segs[3][0] += state[3]
+        start, end, n, sv = segs
+        return (
+            (int(start[-1]), int(end[-1]), int(n[-1]), float(sv[-1])),
+            end[-1] + gap_ms,
+            frame(key, start[:-1], end[:-1], n[:-1], sv[:-1]),
         )
-        state.setTimeoutTimestamp(int(end_seg[-1]) + gap_ms)
 
-        if carried is not None:
-            yield frame([carried[0]], [carried[1]], [carried[2]], [carried[3]])
-        if len(seg) > 1:
-            yield frame(
-                start_seg[:-1], end_seg[:-1], n_seg[:-1], sv_seg[:-1]
-            )
-
-    return df.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        df, [user_col], event_time, watermark, out_schema, state_schema,
+        step, expire,
     )

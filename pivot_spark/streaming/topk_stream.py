@@ -1,7 +1,7 @@
 """Streaming per-window top-k heavy keys — the unbounded counterpart of
 ``operators.heavy.heavy_hitters``.
 
-Custom stateful operator via ``applyInPandasWithState``, keyed by the
+Custom stateful operator (``streaming._fold``), keyed by the
 tumbling event-time window start: state per window is a bounded
 Misra-Gries counter sketch (``capacity`` entries, O(1) in the stream
 length — the same undercount-bounded summary the batch operator's pass
@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pivot_spark.streaming._fold import keyed_fold
 
 
 def topk_stream(
@@ -50,28 +51,18 @@ def topk_stream(
     # window length in ms, for the timeout timestamp (validated before
     # any plan is built)
     parts = window_duration.split()
-    unit_ms = {
-        "millisecond": 1, "milliseconds": 1,
-        "second": 1000, "seconds": 1000,
-        "minute": 60_000, "minutes": 60_000,
-        "hour": 3_600_000, "hours": 3_600_000,
-        "day": 86_400_000, "days": 86_400_000,
-    }
+    unit_ms = {"millisecond": 1, "second": 1000, "minute": 60_000,
+               "hour": 3_600_000, "day": 86_400_000}
     try:
-        win_ms = int(parts[0]) * unit_ms[parts[1].lower()]
+        unit = parts[1].lower()
+        win_ms = int(parts[0]) * unit_ms[unit[:-1] if unit.endswith("s") else unit]
     except (KeyError, ValueError, IndexError):
         raise ValueError(f"unsupported window_duration {window_duration!r}")
 
-    src = (
-        df.withWatermark(event_time, watermark)
-        .select(
-            F.window(F.col(event_time), window_duration)["start"].alias("__ws"),
-            F.col(key_col).cast("string").alias("__key"),
-            # the watermarked attribute must reach the stateful operator
-            # for event-time timeouts to be allowed
-            F.col(event_time).alias("__et"),
-        )
-        .filter(F.col("__key").isNotNull())
+    src = df.select(
+        F.window(F.col(event_time), window_duration)["start"].alias("__ws"),
+        F.col(key_col).cast("string").alias("__key"),
+        F.col(event_time).alias("__et"),  # watermarked by the fold
     )
 
     out_schema = T.StructType(
@@ -89,60 +80,47 @@ def topk_stream(
         ]
     )
 
-    def fn(key, pdfs, state: GroupState):
+    def expire(key, state):
         import pandas as pd
 
-        ws = key[0]
+        best = sorted(zip(*state), key=lambda kv: (-kv[1], kv[0]))[:k]
+        return pd.DataFrame(
+            {
+                "window_start": [key[0]] * len(best),
+                "key": [b[0] for b in best],
+                "est_count": [b[1] for b in best],
+                "rank": list(range(1, len(best) + 1)),
+            }
+        )
 
-        def top_rows(counters):
-            best = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-            return pd.DataFrame(
-                {
-                    "window_start": [ws] * len(best),
-                    "key": [b[0] for b in best],
-                    "est_count": [b[1] for b in best],
-                    "rank": list(range(1, len(best) + 1)),
-                }
-            )
+    def step(key, rows, ts_ms, state):
+        # NULL keys are dropped here, after the watermark saw their rows
+        keys = rows["__key"].dropna()
+        if not len(keys):
+            return None
+        counters = dict(zip(*state)) if state is not None else {}
+        for v in keys.values:
+            if v in counters:
+                counters[v] += 1
+            elif len(counters) < cap:
+                counters[v] = 1
+            else:
+                dead = []
+                for c in counters:
+                    counters[c] -= 1
+                    if counters[c] == 0:
+                        dead.append(c)
+                for c in dead:
+                    del counters[c]
+        # every row of a key lies in its window; the state times out
+        # (emitting the top k) when the watermark passes the window end
+        ws_ms = ts_ms[0] - ts_ms[0] % win_ms
+        return (
+            (list(counters.keys()), [int(v) for v in counters.values()]),
+            ws_ms + win_ms,
+            None,
+        )
 
-        if state.hasTimedOut:
-            keys, counts = state.get
-            state.remove()
-            yield top_rows(dict(zip(keys, counts)))
-            return
-
-        counters: dict = {}
-        if state.exists:
-            keys, counts = state.get
-            counters = dict(zip(keys, counts))
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        for pdf in batches:
-            for v in pdf["__key"].values:
-                if v in counters:
-                    counters[v] += 1
-                elif len(counters) < cap:
-                    counters[v] = 1
-                else:
-                    dead = []
-                    for c in counters:
-                        counters[c] -= 1
-                        if counters[c] == 0:
-                            dead.append(c)
-                    for c in dead:
-                        del counters[c]
-        state.update((list(counters.keys()), [int(v) for v in counters.values()]))
-        # emit when the watermark passes the window end (naive
-        # timestamps are UTC under spark.sql.session.timeZone=UTC —
-        # pd.Timestamp.value avoids the system-local .timestamp() trap)
-        ws_ms = int(pd.Timestamp(ws).value // 1_000_000)
-        state.setTimeoutTimestamp(ws_ms + win_ms)
-        return
-        yield  # pragma: no cover — generator contract
-
-    return src.groupBy("__ws").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_fold(
+        src, ["__ws"], "__et", watermark, out_schema, state_schema, step, expire
     )

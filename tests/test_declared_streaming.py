@@ -111,6 +111,20 @@ def test_s08_quantile_all_in_band(spark):
     assert sum(r.n for r in rows) == load_table(spark, SF, "events").count()
 
 
+def test_scope_drops_replay_sinks(spark):
+    from pivot_spark.operators._fence import fence_scope
+
+    def sinks():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("stream_replay_")}
+
+    before = sinks()
+    with fence_scope():
+        for name in ("s02_stream_dedup", "s04_stream_debounce", "s06_stream_topk"):
+            assert _q(name)(spark, SF).collect()
+        assert len(sinks() - before) == 3
+    assert sinks() == set()
+
+
 def test_shuffle_ctx_restores_conf(spark):
     from pivot_spark.plans.declared_streaming import _shuffle
 

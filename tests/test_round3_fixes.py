@@ -1,8 +1,5 @@
-"""Round-3 fix pins: P-square marker positions on skewed data,
-weighted_sample_k nonpositive weights, pmi_pairs per-doc cap,
-tfidf_cosine_pairs max_df prune."""
-
-import math
+"""Round-3 fix pins: weighted_sample_k nonpositive weights, pmi_pairs
+per-doc cap, tfidf_cosine_pairs max_df prune."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,41 +7,6 @@ from pyspark.sql import functions as F
 from pivot_spark.operators.cooccur import pmi_pairs
 from pivot_spark.operators.sample import weighted_sample_k
 from pivot_spark.operators.tfidf import tfidf_cosine_pairs
-from pivot_spark.streaming.quantile_stream import _p2_init, _p2_update
-
-
-def _p2_run(xs, p):
-    q, n = _p2_init(xs[:5])
-    for x in xs[5:]:
-        _p2_update(q, n, x, p)
-    return q[2]
-
-
-def _exp_stream(n):
-    # golden-ratio low-discrepancy sequence -> Exp(1) via inverse CDF:
-    # equidistributed but arrives in pseudo-random order (what P2 needs)
-    phi = (math.sqrt(5) - 1) / 2
-    return [-math.log(1.0 - ((i + 1) * phi) % 1.0) for i in range(n)]
-
-
-@pytest.mark.parametrize("p", [0.5, 0.9])
-def test_p2_skewed_accuracy(p):
-    """Jain & Chlamtac marker-2 position is 1 + p(n-1)/2; with the
-    published positions P2 tracks exponential quantiles within ~2%
-    relative error at n=5000 (the drifted-marker bug gave 3-5x worse)."""
-    xs = _exp_stream(5000)
-    est = _p2_run(xs, p)
-    true = -math.log(1.0 - p)
-    assert abs(est - true) / true < 0.02
-
-
-def test_p2_desired_positions_formula():
-    q = [0.0, 1.0, 2.0, 3.0, 4.0]
-    n = [1.0, 2.0, 3.0, 4.0, 5.0]
-    # one step at p=0.5, x above the max: total becomes 6 after bump
-    _p2_update(q, n, 10.0, 0.5)
-    # marker invariants hold: positions strictly increasing
-    assert all(n[i] < n[i + 1] for i in range(4))
 
 
 def test_weighted_sample_rejects_nonpositive_weights(spark):

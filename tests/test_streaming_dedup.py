@@ -1,5 +1,8 @@
 """Streaming dedup tests: file-backed streams drained to memory sinks."""
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -55,6 +58,74 @@ def test_first_seen_stream(spark, dup_dir):
     rows = spark.sql("SELECT user_id, event_type FROM fs_out").collect()
     assert {(r[0], r[1]) for r in rows} == {(1, "click"), (2, "view"), (2, "click")}
     assert len(rows) == 3
+
+
+def test_first_seen_stream_emits_earliest_in_batch(spark, tmp_path):
+    # one file -> one micro-batch whose rows are out of event-time order
+    d = str(tmp_path / "events")
+    B = 1_000_000_000
+    rows = [(1, B + 20, "late"), (2, B + 7, "two"), (1, B + 5, "early"), (1, B + 9, "mid")]
+    spark.createDataFrame(rows, "user_id int, ts_s int, tag string").coalesce(1).write.parquet(d)
+    src = (
+        spark.readStream.schema("user_id int, ts_s int, tag string")
+        .parquet(d)
+        .withColumn("ts", F.timestamp_seconds(F.col("ts_s")))
+    )
+    _drain(first_seen_stream(src, ["user_id"], "ts", watermark="10 seconds"), "fs_order")
+    got = {(r[0], r[1]) for r in spark.sql("SELECT user_id, tag FROM fs_order").collect()}
+    assert got == {(1, "early"), (2, "two")}
+
+
+def test_first_seen_stream_reemits_after_ttl(spark, tmp_path):
+    d = str(tmp_path / "events")
+    B = 1_000_000_000
+    schema = "user_id int, ts_s int"
+    spark.createDataFrame([(1, B)], schema).coalesce(1).write.parquet(d)
+    src = (
+        spark.readStream.schema(schema)
+        .parquet(d)
+        .withColumn("ts", F.timestamp_seconds(F.col("ts_s")))
+    )
+    out = first_seen_stream(src, ["user_id"], "ts", watermark="10 seconds", ttl_minutes=1)
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("fs_ttl")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    q.processAllAvailable()
+    # key 2 moves the watermark to B + 190, past key 1's timeout B + 60:
+    # the no-data batch that follows expires key 1
+    spark.createDataFrame([(2, B + 200)], schema).coalesce(1).write.mode("append").parquet(d)
+    q.processAllAvailable()
+    # key 1 again, on time for the watermark: a fresh first
+    spark.createDataFrame([(1, B + 195)], schema).coalesce(1).write.mode("append").parquet(d)
+    q.processAllAvailable()
+    q.stop()
+    got = sorted(tuple(r) for r in spark.sql("SELECT user_id, ts_s FROM fs_ttl").collect())
+    assert got == [(1, B), (1, B + 195), (2, B + 200)]
+
+
+def test_group_state_only_in_fold_module():
+    """Every Python-stateful streaming operator folds through
+    ``streaming._fold.keyed_fold``: no other module calls
+    ``applyInPandasWithState`` or names ``GroupStateTimeout``."""
+    pkg = Path(__file__).resolve().parent.parent / "pivot_spark"
+    names = {"applyInPandasWithState", "GroupStateTimeout"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "streaming/_fold.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                getattr(node, "attr", None)
+                or getattr(node, "id", None)
+                or (node.name if isinstance(node, ast.alias) else None)
+            )
+            if name in names:
+                offenders.append(f"{path.relative_to(pkg.parent)}:{getattr(node, 'lineno', '?')}")
+    assert offenders == []
 
 
 def test_rejects_batch(spark):
