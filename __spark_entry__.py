@@ -25,24 +25,28 @@ from pyspark.sql import DataFrame, SparkSession
 _CANARIES: "list[str]" = []
 
 # The 50-slot window, in order:
-# (a) the streaming replays whose stateful fold moved into
+# (a) the queries that reach the one vector-search core in
+#     ``operators/similarity.py`` (and s10, whose state directory is now
+#     released by the query's scope);
+# (b) the streaming replays whose stateful fold moved into
 #     ``streaming/_fold.py``;
-# (b) the 27 pivot queries, whose plans were re-routed (routed plan and
-#     error port in the one scan);
-# (c) the codec queries whose operators run only their Arrow kernels,
+# (c) the 27 pivot queries, whose validation reads one input-type rule
+#     per aggregate;
+# (d) the codec queries whose operators run only their Arrow kernels,
 #     until the 50 slots are full.
 _ROUND_WINDOW = [
+    "e04_knn_cosine", "e09_knn_lsh", "e11_neardup_cosine",
+    "e12_neardup_cosine_lsh", "e15_knn_ivf_fullprobe", "e20_tfidf",
+    "e57_semdedup", "e57b_semdedup_gemm", "e71b_knn_pq_rerank",
+    "e84_hybrid_rrf", "e180_semantic_decontam", "e212_matryoshka_recall",
+    "s10_stream_upsert",
     "s03_stream_session", "s04_stream_debounce", "s06_stream_topk",
     "s07_stream_ewma", "s08_stream_quantile",
     "p01", "p02", "p03", "p04", "p05", "p06", "p07", "p08", "p09", "p10",
     "p11", "p12", "p13", "p14", "p15", "p16", "p17", "p18", "p19", "p20",
     "p22", "p21", "p21_errors", "p23", "p24", "p25", "p26b",
     "e168_ppm_decode", "e169_bmp_decode", "e170_wav_decode",
-    "e174_audio_features", "e175_image_stats", "e177_image_resize",
-    "e178_audio_downsample", "e179_image_gray", "e181_media_sniff",
-    "e182_audio_mixdown", "e185_audio_fingerprint", "e186_audio_neardup",
-    "e187_image_dhash", "e188_image_neardup_dhash", "e189_audio_trim",
-    "e190_image_crop", "e193_image_blur", "e194_audio_spectral",
+    "e174_audio_features", "e175_image_stats",
 ]
 
 

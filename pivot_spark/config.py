@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Mapping, Sequence
 
+from pivot_spark.functions.aggregates import AGGREGATES
+
 
 class OnError(str, Enum):
     """Invalid-pivot-value routing (``PivotConfig.java:74-80``).
@@ -49,41 +51,8 @@ class OnError(str, Enum):
     FAIL = "fail-pipeline"
 
 
-# The 21 aggregate functions of PivotConfig.Function (PivotConfig.java:529-551).
-FUNCTION_NAMES = frozenset(
-    {
-        "COUNT",
-        "COUNTALL",  # spelled count(*) in config strings
-        "COUNTDISTINCT",
-        "SUM",
-        "AVG",
-        "MIN",
-        "MAX",
-        "FIRST",
-        "LAST",
-        "STDDEV",
-        "VARIANCE",
-        "COLLECTLIST",
-        "COLLECTSET",
-        "LONGESTSTRING",
-        "SHORTESTSTRING",
-        "COUNTNULLS",
-        "CONCAT",
-        "CONCATDISTINCT",
-        "LOGICALAND",
-        "LOGICALOR",
-        "SUMOFSQUARES",
-        "CORRECTEDSUMOFSQUARES",
-        # engine extensions: the reference ships these as the RunningStats
-        # helper (function/RunningStats.java:24-85) but never exposes them
-        # through PivotConfig.Function — we do.
-        "SKEWNESS",
-        "KURTOSIS",
-        "MEDIAN",
-        "APPROXMEDIAN",  # sketch-based median: the bounded-state 100 TB path
-        "APPROXCOUNTDISTINCT",  # HLL++ sketch: bounded-state distinct count
-    }
-)
+# The aggregate function names (``functions.aggregates.AGGREGATES``).
+FUNCTION_NAMES = frozenset(AGGREGATES)
 
 _AGG_RE = re.compile(r"^\s*([A-Za-z_][A-Za-z0-9_]*)\s*:\s*([A-Za-z]+)\s*\(\s*(\*|[^)]*?)\s*\)\s*$")
 
@@ -243,7 +212,7 @@ class PivotConfig:
         if func not in FUNCTION_NAMES:
             errors.append(f"unknown aggregate function {func!r} for alias {alias!r}")
             return None
-        if fld is None and func != "COUNTALL":
+        if fld is None and AGGREGATES[func].requires_field:
             errors.append(f"aggregate {alias!r}: function {func} requires a field")
             return None
         return AggregateDef(alias=alias, func=func, field=fld)

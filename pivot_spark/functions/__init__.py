@@ -1,3 +1,3 @@
-from pivot_spark.functions.aggregates import AGGREGATES, AggregateBuilder, build_cell_expr
+from pivot_spark.functions.aggregates import AGGREGATES, AggregateBuilder
 
-__all__ = ["AGGREGATES", "AggregateBuilder", "build_cell_expr"]
+__all__ = ["AGGREGATES", "AggregateBuilder"]

@@ -64,15 +64,20 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-NUMERIC_TYPES = (
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.FloatType,
-    T.DoubleType,
-    T.DecimalType,
-)
+# The field types each ``AggregateBuilder.requires`` rule accepts.
+INPUT_TYPES = {
+    "numeric": (
+        T.ByteType,
+        T.ShortType,
+        T.IntegerType,
+        T.LongType,
+        T.FloatType,
+        T.DoubleType,
+        T.DecimalType,
+    ),
+    "string": (T.StringType,),
+    "boolean": (T.BooleanType,),
+}
 
 
 def _masked(cond: Column, col: Column) -> Column:
@@ -120,7 +125,9 @@ class AggregateBuilder:
     build: Callable[[Column, Optional[Column], Optional[Sequence[Column]], Optional[T.DataType]], Column]
     # input DataType -> output DataType (for design-time schema inference)
     output_type: Callable[[Optional[T.DataType]], T.DataType]
-    requires_numeric: bool = False
+    # The input type rule: "numeric", "string" or "boolean" (a key of
+    # ``INPUT_TYPES``), or None when any field type is accepted.
+    requires: Optional[str] = None
     requires_field: bool = True
     # What an empty cell yields: the reference's initial value (0, True,
     # "", [] — cast to ``output_type``), or None when it yields NULL, which
@@ -130,6 +137,10 @@ class AggregateBuilder:
     # of a config is routed (operators/pivot.py has the measurements): for
     # these functions one aggregate per group beats one per cell.
     routed: bool = False
+
+    def accepts(self, t: T.DataType) -> bool:
+        """Whether a field of type ``t`` passes the ``requires`` rule."""
+        return self.requires is None or isinstance(t, INPUT_TYPES[self.requires])
 
     @property
     def non_null_identity(self) -> bool:
@@ -360,6 +371,11 @@ def _t_array(t):
     return T.ArrayType(t if t is not None else T.StringType())
 
 
+# PivotConfig.Function (PivotConfig.java:529-551); COUNTALL is count(*)
+# in config strings. MEDIAN, APPROXMEDIAN, APPROXCOUNTDISTINCT, SKEWNESS
+# and KURTOSIS are engine extensions: the reference ships the moments as
+# the RunningStats helper (function/RunningStats.java:24-85) but never
+# exposes them through PivotConfig.Function.
 AGGREGATES: dict[str, AggregateBuilder] = {
     "COUNT": AggregateBuilder("COUNT", _b_count, _t_long, empty=0),
     "COUNTALL": AggregateBuilder(
@@ -368,60 +384,54 @@ AGGREGATES: dict[str, AggregateBuilder] = {
     "COUNTDISTINCT": AggregateBuilder(
         "COUNTDISTINCT", _b_countdistinct, _t_int, empty=0, routed=True
     ),
-    "SUM": AggregateBuilder("SUM", _b_sum, _t_same, requires_numeric=True),
-    "AVG": AggregateBuilder("AVG", _b_avg, _t_double, requires_numeric=True),
+    "SUM": AggregateBuilder("SUM", _b_sum, _t_same, requires="numeric"),
+    "AVG": AggregateBuilder("AVG", _b_avg, _t_double, requires="numeric"),
     "MIN": AggregateBuilder("MIN", _b_min, _t_same),
     "MAX": AggregateBuilder("MAX", _b_max, _t_same),
     "FIRST": AggregateBuilder("FIRST", _b_first, _t_same),
     "LAST": AggregateBuilder("LAST", _b_last, _t_same),
-    "STDDEV": AggregateBuilder("STDDEV", _b_stddev, _t_double, requires_numeric=True),
-    "VARIANCE": AggregateBuilder("VARIANCE", _b_variance, _t_double, requires_numeric=True),
+    "STDDEV": AggregateBuilder("STDDEV", _b_stddev, _t_double, requires="numeric"),
+    "VARIANCE": AggregateBuilder("VARIANCE", _b_variance, _t_double, requires="numeric"),
     "COLLECTLIST": AggregateBuilder("COLLECTLIST", _b_collectlist, _t_array, empty=[]),
     "COLLECTSET": AggregateBuilder("COLLECTSET", _b_collectset, _t_array, empty=[]),
     "LONGESTSTRING": AggregateBuilder(
-        "LONGESTSTRING", _b_longeststring, _t_string, empty=""
+        "LONGESTSTRING", _b_longeststring, _t_string, requires="string", empty=""
     ),
-    "SHORTESTSTRING": AggregateBuilder("SHORTESTSTRING", _b_shorteststring, _t_string),
+    "SHORTESTSTRING": AggregateBuilder(
+        "SHORTESTSTRING", _b_shorteststring, _t_string, requires="string"
+    ),
     "COUNTNULLS": AggregateBuilder("COUNTNULLS", _b_countnulls, _t_long, empty=0),
     "CONCAT": AggregateBuilder("CONCAT", _b_concat, _t_string, empty=""),
     "CONCATDISTINCT": AggregateBuilder(
         "CONCATDISTINCT", _b_concatdistinct, _t_string, empty=""
     ),
-    "LOGICALAND": AggregateBuilder("LOGICALAND", _b_logicaland, _t_bool, empty=True),
-    "LOGICALOR": AggregateBuilder("LOGICALOR", _b_logicalor, _t_bool, empty=False),
+    "LOGICALAND": AggregateBuilder(
+        "LOGICALAND", _b_logicaland, _t_bool, requires="boolean", empty=True
+    ),
+    "LOGICALOR": AggregateBuilder(
+        "LOGICALOR", _b_logicalor, _t_bool, requires="boolean", empty=False
+    ),
     "SUMOFSQUARES": AggregateBuilder(
-        "SUMOFSQUARES", _b_sumofsquares, _t_double, requires_numeric=True, empty=0.0
+        "SUMOFSQUARES", _b_sumofsquares, _t_double, requires="numeric", empty=0.0
     ),
     "CORRECTEDSUMOFSQUARES": AggregateBuilder(
         "CORRECTEDSUMOFSQUARES", _b_correctedsumofsquares, _t_double,
-        requires_numeric=True,
+        requires="numeric",
     ),
     "MEDIAN": AggregateBuilder(
-        "MEDIAN", _b_median, _t_double, requires_numeric=True
+        "MEDIAN", _b_median, _t_double, requires="numeric"
     ),
     "APPROXMEDIAN": AggregateBuilder(
-        "APPROXMEDIAN", _b_approxmedian, _t_double, requires_numeric=True
+        "APPROXMEDIAN", _b_approxmedian, _t_double, requires="numeric"
     ),
     "APPROXCOUNTDISTINCT": AggregateBuilder(
         "APPROXCOUNTDISTINCT", _b_approxcountdistinct, _t_long, empty=0
     ),
     "SKEWNESS": AggregateBuilder(
-        "SKEWNESS", _b_skewness, _t_double, requires_numeric=True, routed=True
+        "SKEWNESS", _b_skewness, _t_double, requires="numeric", routed=True
     ),
     "KURTOSIS": AggregateBuilder(
-        "KURTOSIS", _b_kurtosis, _t_double, requires_numeric=True, routed=True
+        "KURTOSIS", _b_kurtosis, _t_double, requires="numeric", routed=True
     ),
 }
 
-
-def build_cell_expr(
-    func: str,
-    cond: Column,
-    col: Optional[Column],
-    order: Optional[Sequence[Column]],
-    input_type: Optional[T.DataType],
-    out_name: str,
-) -> Column:
-    """Build the aggregate expression for one (cell, aggregate) pair."""
-    builder = AGGREGATES[func]
-    return builder.build(cond, col, order, input_type).alias(out_name)

@@ -23,8 +23,6 @@ exact brute force.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 import pandas as pd
 
@@ -32,12 +30,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pivot_spark.operators import similarity
+from pivot_spark.operators.similarity import _broadcast_rows, _merge_topk, _unit_rows, cosine_pd
+
 
 def _kmeans_fit(M: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
     """Plain Lloyd on L2-normalized rows (spherical k-means): cosine
     assignment == dot product against normalized centroids."""
     rng = np.random.RandomState(seed)
-    M = M / np.linalg.norm(M, axis=1, keepdims=True)
+    M = _unit_rows(M)
     C = M[rng.choice(len(M), size=min(k, len(M)), replace=False)]
     for _ in range(iters):
         assign = np.argmax(M @ C.T, axis=1)
@@ -45,7 +46,7 @@ def _kmeans_fit(M: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
             members = M[assign == j]
             if len(members):
                 C[j] = members.sum(axis=0)
-        C = C / np.linalg.norm(C, axis=1, keepdims=True)
+        C = _unit_rows(C)
     return C
 
 
@@ -85,8 +86,7 @@ def ivf_index(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf["__vec"].values).astype("float64")
-            A = A / np.linalg.norm(A, axis=1, keepdims=True)
+            A = _unit_rows(np.stack(pdf["__vec"].values).astype("float64"))
             cl = np.argmax(A @ Cb.T, axis=1).astype("int32")
             yield pd.DataFrame(
                 {"__id": pdf["__id"], "__vec": pdf["__vec"], "__cluster": cl}
@@ -106,59 +106,43 @@ def ivf_search(
 ) -> DataFrame:
     """(query_id, neighbor_id, cos, rank): top-k within the ``nprobe``
     nearest clusters of each query. Query side (ids + probed clusters)
-    is broadcast; the corpus is scanned once, pruned to probed lists."""
-    from pivot_spark.operators.similarity import _topk_struct, cosine_pd
-
+    is broadcast; the corpus is scanned once, pruned to probed lists.
+    A zero vector scores cos 0. Past 100 000 query rows it raises."""
     spark = assigned.sparkSession
-    qpdf = queries.select(F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec")).toPandas()
-    Q = np.stack(qpdf["__qvec"].values).astype("float64")
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    order = np.argsort(-(Qn @ centroids.T), axis=1)[:, :nprobe]
-    def _py(v):
-        # numpy scalars -> python scalars; leaves str/int/other id types
-        # untouched (id_col's type comes from the schema, not a cast)
-        return v.item() if hasattr(v, "item") else v
-
-    probe_rows = [
-        # arrow hands back numpy arrays for parquet float columns but
-        # plain lists for createDataFrame-built ones — normalize both
-        (_py(qpdf["__qid"].iloc[i]), int(c), [float(v) for v in qpdf["__qvec"].iloc[i]])
-        for i in range(len(qpdf))
-        for c in order[i]
-    ]
-    q_type = queries.schema[id_col].dataType
-    el_type = queries.schema[vec_col].dataType
+    qids, Q = _broadcast_rows(
+        queries,
+        id_col,
+        vec_col,
+        similarity._QUERY_MAX_ROWS,
+        f"ivf_search ships the query probes to every task; query set "
+        f"exceeds {similarity._QUERY_MAX_ROWS} rows.",
+    )
+    order = np.argsort(-(Q @ centroids.T), axis=1)[:, :nprobe]
     probes = spark.createDataFrame(
-        probe_rows,
+        list(zip(np.repeat(qids, order.shape[1]).tolist(), order.ravel().tolist())),
         T.StructType(
             [
-                T.StructField("__qid", q_type),
+                T.StructField("__qid", queries.schema[id_col].dataType),
                 T.StructField("__cluster", T.IntegerType()),
-                T.StructField("__qvec", el_type),
             ]
         ),
     )
+    # the probed queries carry their vectors back from ``queries``
+    qside = queries.select(
+        F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
+    ).join(F.broadcast(probes), "__qid")
     cand = assigned.join(
-        F.broadcast(probes),
+        F.broadcast(qside),
         on=[
-            assigned["__cluster"] == probes["__cluster"],
-            assigned["__id"] != probes["__qid"],
+            assigned["__cluster"] == qside["__cluster"],
+            assigned["__id"] != qside["__qid"],
         ],
-    ).select("__qid", F.col("__id").alias("__cid"), "__qvec", "__vec")
-    scored = cand.select(
-        "__qid", "__cid", cosine_pd(F.col("__qvec"), F.col("__vec")).alias("__cos")
+    ).select(
+        "__qid",
+        F.col("__id").alias("__cid"),
+        cosine_pd(F.col("__qvec"), F.col("__vec")).alias("__score"),
     )
-    item = _topk_struct(F.col("__cos"), F.col("__cid"))
-    final = scored.groupBy("__qid").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("__top")
-    )
-    out = final.select("__qid", F.posexplode("__top").alias("__rank", "__t"))
-    return out.select(
-        F.col("__qid").alias("query_id"),
-        F.col("__t.nid").alias("neighbor_id"),
-        (-F.col("__t.negsim")).alias("cos"),
-        (F.col("__rank") + 1).cast("int").alias("rank"),
-    )
+    return _merge_topk(cand, k)
 
 
 def cosine_topk_ivf(

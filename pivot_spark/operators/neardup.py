@@ -810,7 +810,8 @@ def neardup_embedding_cosine(
     bytes); all-pairs is O(n^2) regardless, so past broadcast size use
     exact=False. A corpus larger than ``exact_max_rows`` (default 1M ≈
     512 MB broadcast at dim=64) raises rather than silently collecting an
-    unbounded corpus to the driver.
+    unbounded corpus to the driver. A zero vector scores cos 0 (both
+    paths).
     exact=False: SRP-LSH bucketed candidates, then exact cosine verify —
     the 100 TB path (miss probability per true pair at cos c is
     (1 - (1 - acos(c)/pi)^n_planes)^n_tables). Candidates travel as bare
@@ -823,23 +824,9 @@ def neardup_embedding_cosine(
 
     base = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
     if exact:
-        # Scale gate: the exact path is the correctness anchor for small
-        # corpora, never the 100 TB route. Refuse past broadcast size
-        # instead of OOMing the driver mid-collect.
-        n = base.count()
-        if n > exact_max_rows:
-            raise ValueError(
-                f"exact=True collects the corpus to the driver and scores "
-                f"all O(n^2) pairs; corpus has {n} rows > exact_max_rows="
-                f"{exact_max_rows}. Use exact=False (SRP-LSH bucketed "
-                f"candidates + exact verify) past broadcast size."
-            )
-        logging.getLogger(__name__).info(
-            "neardup_embedding_cosine exact path: n=%d rows (bound %d)",
-            n,
-            exact_max_rows,
+        return _exact_cosine_pairs_gemm(
+            base, df.schema[id_col].dataType, threshold, exact_max_rows
         )
-        return _exact_cosine_pairs_gemm(base, df.schema[id_col].dataType, threshold)
 
     sig_cols = srp_signatures_pd(F.col("__vec"), n_planes, dim, n_tables, seed)
     # both bucket self-join sides read the signatures; unfenced, the
@@ -874,7 +861,9 @@ def neardup_embedding_cosine(
     return out.filter(F.col("cos") >= threshold)
 
 
-def _exact_cosine_pairs_gemm(base: DataFrame, id_type, threshold: float) -> DataFrame:
+def _exact_cosine_pairs_gemm(
+    base: DataFrame, id_type, threshold: float, max_rows: int
+) -> DataFrame:
     """All-pairs cosine >= threshold by blocked matrix multiply against a
     broadcast L2-normalized corpus matrix. Only qualifying (sparse) pairs
     cross Arrow back to the JVM.
@@ -894,13 +883,27 @@ def _exact_cosine_pairs_gemm(base: DataFrame, id_type, threshold: float) -> Data
     """
     import numpy as np
 
+    from pivot_spark.operators.similarity import _broadcast_rows, _unit_rows
+
     spark = base.sparkSession
-    rows = base.toPandas()
-    ids_all = rows["__id"].to_numpy()
-    M = np.stack(rows["__vec"].values).astype("float64")
-    M /= np.linalg.norm(M, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids_all, M))
+    # the scale gate: the exact path is the correctness anchor for small
+    # corpora, never the 100 TB route, so it refuses past broadcast size
+    # instead of OOMing the driver mid-collect
+    ids_all, M = _broadcast_rows(
+        base,
+        "__id",
+        "__vec",
+        max_rows,
+        f"exact=True collects the corpus to the driver and scores all "
+        f"O(n^2) pairs; corpus has more than exact_max_rows={max_rows} "
+        f"rows. Use exact=False (SRP-LSH bucketed candidates + exact "
+        f"verify) past broadcast size.",
+    )
     n = len(ids_all)
+    logging.getLogger(__name__).info(
+        "neardup_embedding_cosine exact path: n=%d rows (bound %d)", n, max_rows
+    )
+    bc = spark.sparkContext.broadcast((ids_all, M))
     # (block x n) float64 score tile capped at ~128 MB, floor 64 rows
     blk = max(64, int(128 * 2**20 / max(n * 8, 1)))
 
@@ -919,8 +922,7 @@ def _exact_cosine_pairs_gemm(base: DataFrame, id_type, threshold: float) -> Data
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf["__vec"].values).astype("float64")
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
+            A = _unit_rows(np.stack(pdf["__vec"].values).astype("float64"))
             a_ids = pdf["__id"].to_numpy()
             for s in range(0, len(a_ids), blk):
                 Ab, ab_ids = A[s : s + blk], a_ids[s : s + blk]

@@ -85,7 +85,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pivot_spark.config import OnError, PivotConfig, PivotConfigError
-from pivot_spark.functions.aggregates import AGGREGATES, NUMERIC_TYPES
+from pivot_spark.functions.aggregates import AGGREGATES
 
 
 # the per-group error-port flag, dropped before the output is returned
@@ -144,26 +144,13 @@ def _validate_against_schema(
             continue
         builder = AGGREGATES[agg.func]
         ftype = fields[agg.field].dataType
-        if builder.requires_numeric and not isinstance(ftype, NUMERIC_TYPES):
+        if not builder.accepts(ftype):
             # Reference: numeric aggregates reject non-numeric and
-            # logical-typed fields (AggregationUtils.java:36-39).
+            # logical-typed fields (AggregationUtils.java:36-39); the
+            # string and boolean functions take only their own type.
             errors.append(
-                f"aggregate {agg.alias!r}: {agg.func} requires a numeric field, "
-                f"{agg.field!r} is {ftype.simpleString()}"
-            )
-        if agg.func in ("LONGESTSTRING", "SHORTESTSTRING") and not isinstance(
-            ftype, T.StringType
-        ):
-            errors.append(
-                f"aggregate {agg.alias!r}: {agg.func} requires a string field, "
-                f"{agg.field!r} is {ftype.simpleString()}"
-            )
-        if agg.func in ("LOGICALAND", "LOGICALOR") and not isinstance(
-            ftype, T.BooleanType
-        ):
-            errors.append(
-                f"aggregate {agg.alias!r}: {agg.func} requires a boolean field, "
-                f"{agg.field!r} is {ftype.simpleString()}"
+                f"aggregate {agg.alias!r}: {agg.func} requires a "
+                f"{builder.requires} field, {agg.field!r} is {ftype.simpleString()}"
             )
     if config.order_by:
         for key in config.order_by:

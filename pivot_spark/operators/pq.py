@@ -14,7 +14,7 @@ Spark shape (all scan-stage until the final bounded top-k):
   codebooks are (m, ksub, dsub), a few KB, broadcast;
 * encode: one ``mapInPandas`` pass — per subspace a (batch, ksub) GEMM
   argmin; output is ``array<tinyint-ish>`` codes (no shuffle);
-* search: queries are collected (bounded set by contract), their ADC
+* search: queries are collected (at most 100 000 rows), their ADC
   lookup tables T[q] = q_sub . codebook_sub^T precomputed driver-side
   and broadcast; one ``mapInPandas`` pass over the encoded corpus does
   ``T[q][arange(m), codes].sum()`` per (query, row) and keeps a local
@@ -40,11 +40,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _norm_rows(M: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(M, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return M / n
+from pivot_spark.operators import similarity
+from pivot_spark.operators.similarity import (
+    _batch_topk,
+    _broadcast_rows,
+    _merge_topk,
+    _unit_rows,
+    cosine_pd,
+)
 
 
 def pq_train(
@@ -63,7 +66,7 @@ def pq_train(
     ``sample(fraction, seed)`` at scale). d must be divisible by m.
     """
     sample = corpus.select(vec_col).limit(train_sample).toPandas()
-    M = _norm_rows(np.stack(sample[vec_col].values).astype("float64"))
+    M = _unit_rows(np.stack(sample[vec_col].values).astype("float64"))
     d = M.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -115,7 +118,7 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = _norm_rows(np.stack(pdf["__vec"].values).astype("float64"))
+            A = _unit_rows(np.stack(pdf["__vec"].values).astype("float64"))
             codes = np.empty((len(A), m), dtype="int16")
             for j in range(m):
                 S = A[:, j * dsub : (j + 1) * dsub]
@@ -140,18 +143,22 @@ def pq_search(
 ) -> DataFrame:
     """ADC top-k: (query_id, neighbor_id, adc, rank) by approximate
     cosine (inner product of normalized vectors). Bounded two-level
-    top-k; the corpus scan reads only (id, codes)."""
+    top-k; the corpus scan reads only (id, codes). A zero query vector
+    scores adc 0 with every row. Past 100 000 query rows it raises."""
     m, ksub, dsub = codebooks.shape
     spark = encoded.sparkSession
-    qpdf = queries.select(
-        F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-    ).toPandas()
-    Q = _norm_rows(np.stack(qpdf["__qvec"].values).astype("float64"))
+    qids, Q = _broadcast_rows(
+        queries,
+        id_col,
+        vec_col,
+        similarity._QUERY_MAX_ROWS,
+        f"pq_search ships the ADC tables of every query to every task; "
+        f"query set exceeds {similarity._QUERY_MAX_ROWS} rows.",
+    )
     # ADC tables: tables[q, j, c] = q_sub(j) . codebook[j, c]
     tables = np.empty((len(Q), m, ksub))
     for j in range(m):
         tables[:, j, :] = Q[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T
-    qids = list(qpdf["__qid"])
     bc = spark.sparkContext.broadcast((tables, qids))
     q_type = queries.schema[id_col].dataType
 
@@ -159,13 +166,12 @@ def pq_search(
         [
             T.StructField("__qid", q_type),
             T.StructField("__cid", encoded.schema["__id"].dataType),
-            T.StructField("__adc", T.DoubleType()),
+            T.StructField("__score", T.DoubleType()),
         ]
     )
 
     def score(batches):
         Tq, ids = bc.value
-        nq = len(ids)
         arange_m = np.arange(m)
         for pdf in batches:
             if len(pdf) == 0:
@@ -173,36 +179,10 @@ def pq_search(
             codes = np.stack(pdf["__codes"].values).astype("int64")  # (n, m)
             # sims[q, n] = sum_j Tq[q, j, codes[n, j]]
             sims = Tq[:, arange_m, codes].sum(axis=2)  # (nq, n)
-            cids = pdf["__id"].values
-            # self-exclusion BEFORE the local top-k: with few partitions a
-            # query's own row would otherwise consume one of its k slots
-            for qi in range(nq):
-                sims[qi, cids == ids[qi]] = -np.inf
-            kk = min(k, sims.shape[1])
-            idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            rows = {"__qid": [], "__cid": [], "__adc": []}
-            for qi in range(nq):
-                sel = idx[qi]
-                sel = sel[np.isfinite(sims[qi, sel])]
-                rows["__qid"].extend([ids[qi]] * len(sel))
-                rows["__cid"].extend(cids[sel])
-                rows["__adc"].extend(sims[qi, sel])
-            yield pd.DataFrame(rows)
+            yield _batch_topk(sims, ids, pdf["__id"].to_numpy(), k)
 
     local = encoded.select("__id", "__codes").mapInPandas(score, out_schema)
-    from pivot_spark.operators.similarity import _topk_struct
-
-    item = _topk_struct(F.col("__adc"), F.col("__cid"))
-    final = local.groupBy("__qid").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("__top")
-    )
-    out = final.select("__qid", F.posexplode("__top").alias("__rank", "__t"))
-    return out.select(
-        F.col("__qid").alias("query_id"),
-        F.col("__t.nid").alias("neighbor_id"),
-        (-F.col("__t.negsim")).alias("adc"),
-        (F.col("__rank") + 1).cast("int").alias("rank"),
-    )
+    return _merge_topk(local, k, "adc")
 
 
 def cosine_topk_pq(
@@ -220,7 +200,7 @@ def cosine_topk_pq(
     per query and the final top-k is EXACT cosine over those candidates
     (vectors joined back, candidate side broadcast). ``rerank`` >= corpus
     size degrades to brute force — the hash-checkable correctness anchor
-    (same role as ``ivf`` full-probe)."""
+    (same role as ``ivf`` full-probe). A zero vector scores cos 0."""
     books = pq_train(
         corpus, vec_col=vec_col, m=m, ksub=ksub, seed=seed
     )
@@ -231,8 +211,6 @@ def cosine_topk_pq(
     cand = pq_search(
         encoded, books, queries, max(rerank, k), id_col=id_col, vec_col=vec_col
     ).select("query_id", "neighbor_id")
-    from pivot_spark.operators.similarity import _topk_struct, cosine_pd
-
     qs = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
@@ -244,19 +222,9 @@ def cosine_topk_pq(
         base.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qs), "query_id")
         .select(
-            "query_id",
-            "neighbor_id",
-            cosine_pd(F.col("__qvec"), F.col("__vec")).alias("__cos"),
+            F.col("query_id").alias("__qid"),
+            F.col("neighbor_id").alias("__cid"),
+            cosine_pd(F.col("__qvec"), F.col("__vec")).alias("__score"),
         )
     )
-    item = _topk_struct(F.col("__cos"), F.col("neighbor_id"))
-    final = scored.groupBy("query_id").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("__top")
-    )
-    out = final.select("query_id", F.posexplode("__top").alias("__rank", "__t"))
-    return out.select(
-        "query_id",
-        F.col("__t.nid").alias("neighbor_id"),
-        (-F.col("__t.negsim")).alias("cos"),
-        (F.col("__rank") + 1).cast("int").alias("rank"),
-    )
+    return _merge_topk(scored, k)

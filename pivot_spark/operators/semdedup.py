@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.operators.kmeans import assign_clusters
+from pivot_spark.operators.similarity import _unit_rows
 
 
 def semdedup(
@@ -85,10 +86,7 @@ def semdedup(
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["__id"].values
         order = np.argsort(ids)
-        V = np.stack(pdf["__v"].values[order]).astype("float64")
-        norms = np.linalg.norm(V, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        V = V / norms
+        V = _unit_rows(np.stack(pdf["__v"].values[order]).astype("float64"))
         S = V @ V.T
         # dropped: any strictly-earlier (smaller-id) row >= eps
         drop = np.triu(S >= eps, k=1).any(axis=0)

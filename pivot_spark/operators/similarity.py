@@ -3,16 +3,24 @@
 Brute-force cosine top-k is the exact baseline; random-hyperplane LSH
 bucketing is the approximate scale path. Bulk vector math (pairwise
 cosine, SRP signatures) runs in Arrow-batched pandas UDFs — numpy matrix
-ops per batch. Catalyst's higher-order functions (``zip_with`` +
-``aggregate``) are kept as expression-form variants for ad-hoc use, but
-they evaluate interpreted per element, ~20x slower over a corpus.
+ops per batch.
+
+Every search in this module, in ``ivf`` and in ``pq`` shares one core:
+
+* ``_broadcast_rows`` collects a side small enough to ship in a task
+  closure (queries, a benchmark, the exact near-dup corpus), bounded by
+  ``limit(max_rows + 1)`` so no count job runs;
+* ``_unit_rows`` is the one normalization: an all-zero vector stays
+  zero, so a zero vector scores cosine 0 in every search, never NaN;
+* ``_batch_topk`` is the local top-k of one score block and
+  ``_merge_topk`` (``topk.topk_per_group_agg``) the global one.
 
 Scale design (100 TB corpus, small query set):
 * the query side is broadcast — the corpus is scanned exactly once, no
   shuffle of corpus vectors;
 * top-k uses TWO-LEVEL selection: partial top-k per (query, corpus
-  partition) then final top-k per query. Per-group state is bounded by
-  k × num_partitions, never the corpus size — a plain window/row_number
+  batch) then final top-k per query. Per-group state is bounded by
+  k × batches, never the corpus size — a plain window/row_number
   or collect_list over the full corpus per query would sort/hold N rows
   per query and die at scale;
 * ties broken by corpus id ascending → fully deterministic output;
@@ -23,34 +31,87 @@ Scale design (100 TB corpus, small query set):
 from __future__ import annotations
 
 import random
-from typing import Optional, Sequence
+from typing import Optional
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pivot_spark.operators.topk import topk_per_group_agg
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+# The most query rows ``ivf_search`` and ``pq_search`` ship to every
+# task; ``cosine_topk``'s ``query_max_rows`` defaults to it.
+_QUERY_MAX_ROWS = 100_000
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """The float64 rows of ``M`` scaled to unit L2 norm. An all-zero row
+    stays zero, so it scores cosine 0 against everything."""
+    n = np.linalg.norm(M, axis=1, keepdims=True)
+    return np.divide(M, n, out=np.zeros_like(M), where=n > 0)
+
+
+def _broadcast_rows(
+    df: DataFrame, id_col: str, vec_col: str, max_rows: int, what: str
+) -> "tuple[np.ndarray, np.ndarray]":
+    """Collect the (id, vector) side that a search ships to every task:
+    ``(ids, U)``, the ids as an array and the vectors as ``_unit_rows``.
+    ``limit(max_rows + 1)`` bounds the collect itself (no count job);
+    the one extra row only arrives when ``df`` is too big, and then
+    ``ValueError(what)`` is raised. An empty ``df`` gives empty arrays."""
+    pdf = (
+        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
+        .limit(max_rows + 1)
+        .toPandas()
     )
+    if len(pdf) > max_rows:
+        raise ValueError(what)
+    ids = pdf["__id"].to_numpy()
+    if len(pdf) == 0:
+        return ids, np.zeros((0, 0))
+    return ids, _unit_rows(np.stack(pdf["__vec"].to_numpy()).astype("float64"))
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
+def _batch_topk(
+    S: np.ndarray, qids: np.ndarray, cids: np.ndarray, k: int
+) -> pd.DataFrame:
+    """Local top-k of one score block, ``S[i, j]`` scoring query
+    ``qids[i]`` against candidate ``cids[j]``: per query the ``k`` best
+    candidates by (score desc, id asc), never the query itself. Every
+    candidate tied with the k-th score takes part in the id order, so
+    the cut is exact. Returns (__qid, __cid, __score) rows."""
+    q_out, c_out, s_out = [], [], []
+    for i, qid in enumerate(qids):
+        keep = cids != qid
+        ids, s = cids[keep], S[i, keep]
+        take = min(k, len(ids))
+        if take == 0:
+            continue
+        kth = np.partition(s, len(s) - take)[len(s) - take]
+        cand = np.flatnonzero(s >= kth)
+        sel = cand[np.lexsort((ids[cand], -s[cand]))][:take]
+        q_out.extend([qid] * take)
+        c_out.extend(ids[sel].tolist())
+        s_out.extend(s[sel].tolist())
+    return pd.DataFrame({"__qid": q_out, "__cid": c_out, "__score": s_out})
+
+
+def _merge_topk(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """The global top-k per query over (__qid, __cid, __score) rows:
+    (query_id, neighbor_id, ``score``, rank) by (score desc, id asc)."""
+    return topk_per_group_agg(
+        scored.select(
+            F.col("__qid").alias("query_id"),
+            F.col("__cid").alias("neighbor_id"),
+            F.col("__score").alias(score),
+        ),
+        ["query_id"],
+        score,
+        k,
+        tie_cols=["neighbor_id"],
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Expression-form cosine (higher-order functions). Catalyst evaluates
-    aggregate/zip_with per element *interpreted* (no codegen), so this is
-    for ad-hoc / few-row use; bulk pairwise scoring goes through
-    ``cosine_pd`` (Arrow-vectorized numpy, ~20x faster at 1M+ pairs)."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
 def _cosine_pd():
@@ -58,21 +119,20 @@ def _cosine_pd():
 
     @pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
         if len(a) == 0:
             return pd.Series([], dtype="float64")
         A = np.stack(a.values).astype("float64")
         B = np.stack(b.values).astype("float64")
         num = np.einsum("ij,ij->i", A, B)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(num / den)
+        return pd.Series(np.divide(num, den, out=np.zeros_like(num), where=den != 0))
 
     return cos
 
 
 def cosine_pd(a: Column, b: Column, nondeterministic: bool = False) -> Column:
-    """Arrow-batched pairwise cosine: one numpy pass per batch.
+    """Arrow-batched pairwise cosine: one numpy pass per batch. A pair
+    with a zero vector scores 0.
 
     ``nondeterministic=True`` marks the (pure) UDF non-deterministic as
     an optimizer fence (guide §4.4): when a threshold filter sits right
@@ -88,11 +148,6 @@ def cosine_pd(a: Column, b: Column, nondeterministic: bool = False) -> Column:
     return f(a, b)
 
 
-def _topk_struct(sim: Column, id_col: Column) -> Column:
-    # descending similarity, ascending id tie-break, as one sortable struct
-    return F.struct((-sim).alias("negsim"), id_col.alias("nid"))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -100,125 +155,56 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: Optional[str] = None,
-    query_max_rows: int = 100_000,
+    query_max_rows: int = _QUERY_MAX_ROWS,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for every query vector.
 
     Returns (query_id, neighbor_id, cos, rank) — k rows per query,
     neighbors ordered by (cos desc, neighbor_id asc); a query never
-    matches itself.
+    matches itself. A zero vector scores cos 0 with everything.
 
     Plan: the query matrix is collected (bounded by ``query_max_rows``)
-    and shipped in the ``mapInPandas`` closure; each corpus partition is
-    scored against ALL queries as one float64 GEMM per Arrow batch, with
-    a per-partition running top-k (numpy lexsort on (-cos, id)). Each
-    corpus vector crosses the Python boundary exactly once — the
-    previous broadcast-join form serialized every corpus vector once per
-    query. Partition outputs are ≤ n_queries × k rows, merged by one
-    tiny final aggregation: at 100 TB the corpus is scanned once, no
-    corpus-sized shuffle exists, and reducer state stays k × partitions.
+    and shipped in the ``mapInPandas`` closure; each Arrow batch of a
+    corpus partition is scored against ALL queries as one float64 GEMM
+    and keeps its own top-k (``_batch_topk``). Each corpus vector
+    crosses the Python boundary exactly once — the previous
+    broadcast-join form serialized every corpus vector once per query.
+    Batch outputs are ≤ n_queries × k rows, merged by one tiny final
+    aggregation: at 100 TB the corpus is scanned once, no corpus-sized
+    shuffle exists, and reducer state stays k × batches.
     """
-    import numpy as np
-
     query_id_col = query_id_col or id_col
-    # limit(cap+1) bounds the collect itself (no separate count job);
-    # one extra row only ever materializes when we're about to raise
-    qpdf = (
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qvec")
-        )
-        .limit(query_max_rows + 1)
-        .toPandas()
+    qids, Q = _broadcast_rows(
+        queries,
+        query_id_col,
+        vec_col,
+        query_max_rows,
+        f"cosine_topk ships the query matrix to every task; query set "
+        f"exceeds query_max_rows={query_max_rows}. Use the LSH/IVF "
+        f"path for query sets past broadcast size.",
     )
-    if len(qpdf) == 0:
+    if len(qids) == 0:
         raise ValueError("queries is empty")
-    if len(qpdf) > query_max_rows:
-        raise ValueError(
-            f"cosine_topk ships the query matrix to every task; query set "
-            f"exceeds query_max_rows={query_max_rows}. Use the LSH/IVF "
-            f"path for query sets past broadcast size."
-        )
-    qids = qpdf["__qid"].to_numpy()
-    Q = np.stack(qpdf["__qvec"].to_numpy()).astype("float64")
 
     c = corpus.select(F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec"))
     q_type = queries.schema[query_id_col].dataType.simpleString()
     c_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"__qid {q_type}, __cid {c_type}, __cos double"
+    out_schema = f"__qid {q_type}, __cid {c_type}, __score double"
 
-    def score_partition(batches):
-        import pandas as pd
-
-        best: dict[int, tuple] = {}  # qi -> (cos desc-sorted arrays)
-        cos_acc: list = []
-        cid_acc: list = []
+    def score_batches(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            B = np.stack(pdf["__cvec"].to_numpy()).astype("float64")
-            cids = pdf["__cid"].to_numpy()
-            # cosine = (B/|B|) @ (Q/|Q|)^T ; norms guarded against 0
-            Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-            S = Bn @ (Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)).T
-            cos_acc.append(S)
-            cid_acc.append(cids)
-        if not cos_acc:
-            return
-        S = np.concatenate(cos_acc)  # (n_part, n_q)
-        cids = np.concatenate(cid_acc)
-        rows_q, rows_c, rows_s = [], [], []
-        for qi in range(len(qids)):
-            col = S[:, qi]
-            mask = cids != qids[qi]  # self-match excluded
-            cand_ids, cand_cos = cids[mask], col[mask]
-            take = min(k, len(cand_ids))
-            if take == 0:
-                continue
-            # partial selection then exact (-cos, id) order
-            part = np.argpartition(-cand_cos, take - 1)[:take]
-            order = np.lexsort((cand_ids[part], -cand_cos[part]))
-            sel = part[order]
-            rows_q.extend([qids[qi]] * take)
-            rows_c.extend(cand_ids[sel].tolist())
-            rows_s.extend(cand_cos[sel].tolist())
-        yield pd.DataFrame({"__qid": rows_q, "__cid": rows_c, "__cos": rows_s})
+            B = _unit_rows(np.stack(pdf["__cvec"].to_numpy()).astype("float64"))
+            S = B @ Q.T  # (batch, n_q)
+            yield _batch_topk(S.T, qids, pdf["__cid"].to_numpy(), k)
 
-    partial = c.mapInPandas(score_partition, schema=out_schema)
-    # final merge: <= n_queries * k rows per partition survive
-    item = _topk_struct(F.col("__cos"), F.col("__cid"))
-    final = partial.groupBy("__qid").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("__top")
-    )
-    out = final.select("__qid", F.posexplode("__top").alias("__rank", "__t"))
-    return out.select(
-        F.col("__qid").alias("query_id"),
-        F.col("__t.nid").alias("neighbor_id"),
-        (-F.col("__t.negsim")).alias("cos"),
-        (F.col("__rank") + 1).alias("rank"),
-    )
+    return _merge_topk(c.mapInPandas(score_batches, schema=out_schema), k)
 
 
 def _srp_planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def srp_signature(
-    vec: Column, n_planes: int, dim: int, seed: int = 42
-) -> Column:
-    """Signed-random-projection (hyperplane) LSH signature as a LONG bitmask
-    (n_planes <= 63). Deterministic: planes from a fixed-seed PRNG.
-
-    Expression form — the literal plane weights make a Catalyst tree of
-    ~n_planes*dim nodes evaluated interpreted per row; use
-    ``srp_signatures_pd`` (all tables in one matrix multiply) anywhere
-    that runs over a corpus."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(_srp_planes(n_planes, dim, seed)):
-        p = F.array(*[F.lit(w) for w in plane])
-        bit = (dot(p, vec) > 0).cast("long")
-        sig = sig + (bit * F.lit(2**i).cast("long"))
-    return sig
 
 
 def srp_signatures_pd(
@@ -231,8 +217,8 @@ def srp_signatures_pd(
 ) -> Column:
     """All ``n_tables`` SRP signatures at once as ``array<long>``: one
     (batch x dim) @ (dim x n_planes) numpy multiply per table per Arrow
-    batch. Same planes (same PRNG stream) as ``srp_signature``, so both
-    forms bucket identically up to float-sum ulps at the hyperplane.
+    batch. Table ``t`` uses the planes ``_srp_planes(n_planes, dim,
+    seed + 1000 * t)``.
 
     ``nondeterministic=True`` is the guide-§4.4 optimizer fence for
     callers that explode the signature array directly: the generate's
@@ -241,8 +227,6 @@ def srp_signatures_pd(
     from pyspark.sql.functions import pandas_udf
 
     def mats():
-        import numpy as np
-
         return (
             [
                 np.array(_srp_planes(n_planes, dim, seed + 1000 * t)).T
@@ -253,8 +237,6 @@ def srp_signatures_pd(
 
     @pandas_udf("array<long>")
     def sigs(v: pd.Series) -> pd.Series:
-        import numpy as np
-
         if len(v) == 0:
             return pd.Series([], dtype=object)
         planes, pows = mats()
@@ -284,7 +266,8 @@ def cosine_topk_lsh(
     At scale this replaces the full corpus scan per query with a bucket
     equi-join: corpus signatures are computed once in the scan stage, the
     join prunes to ~corpus/2^n_planes per table. Recall rises with
-    n_tables and falls with n_planes; exactness is NOT guaranteed.
+    n_tables and falls with n_planes; exactness is NOT guaranteed. A
+    pair with a zero vector scores cos 0.
     """
     def with_sigs(df: DataFrame, idc: str) -> DataFrame:
         rows = df.select(
@@ -321,19 +304,9 @@ def cosine_topk_lsh(
         .dropDuplicates(["__qid", "__cid"])
     )
     scored = cand.select(
-        "__qid", "__cid", cosine_pd(F.col("__qvec"), F.col("__cvec")).alias("__cos")
+        "__qid", "__cid", cosine_pd(F.col("__qvec"), F.col("__cvec")).alias("__score")
     )
-    item = _topk_struct(F.col("__cos"), F.col("__cid"))
-    final = scored.groupBy("__qid").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, k).alias("__top")
-    )
-    out = final.select("__qid", F.posexplode("__top").alias("__rank", "__t"))
-    return out.select(
-        F.col("__qid").alias("query_id"),
-        F.col("__t.nid").alias("neighbor_id"),
-        (-F.col("__t.negsim")).alias("cos"),
-        (F.col("__rank") + 1).alias("rank"),
-    )
+    return _merge_topk(scored, k)
 
 
 def semantic_decontaminate(
@@ -362,29 +335,21 @@ def semantic_decontaminate(
     row — the only shape that works at 100 TB, where benchmark suites
     are broadcast-small and the corpus is not. Past ``bench_max_rows``
     the guard raises toward the LSH/IVF bucketed path."""
-    import numpy as np
-
     bench_id_col = bench_id_col or id_col
-    bpdf = (
-        bench.select(
-            F.col(bench_id_col).alias("__bid"), F.col(vec_col).alias("__bvec")
-        )
-        .limit(bench_max_rows + 1)
-        .toPandas()
+    bids, B = _broadcast_rows(
+        bench,
+        bench_id_col,
+        vec_col,
+        bench_max_rows,
+        f"semantic_decontaminate ships the benchmark matrix to every "
+        f"task; benchmark exceeds bench_max_rows={bench_max_rows}. Use "
+        f"the LSH/IVF bucketed path for benchmark sets past broadcast "
+        f"size.",
     )
-    if len(bpdf) == 0:
+    if len(bids) == 0:
         raise ValueError("bench is empty")
-    if len(bpdf) > bench_max_rows:
-        raise ValueError(
-            f"semantic_decontaminate ships the benchmark matrix to every "
-            f"task; benchmark exceeds bench_max_rows={bench_max_rows}. Use "
-            f"the LSH/IVF bucketed path for benchmark sets past broadcast "
-            f"size."
-        )
-    bpdf = bpdf.sort_values("__bid", kind="mergesort")
-    bids = bpdf["__bid"].to_numpy()
-    B = np.stack(bpdf["__bvec"].to_numpy()).astype("float64")
-    Bn = (B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)).T
+    order = np.argsort(bids, kind="stable")
+    bids, Bn = bids[order], B[order].T
 
     c = corpus.select(F.col(id_col).alias("__cid"), F.col(vec_col).alias("__cvec"))
     c_type = corpus.schema[id_col].dataType.simpleString()
@@ -395,8 +360,7 @@ def semantic_decontaminate(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf["__cvec"].to_numpy()).astype("float64")
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
+            Mn = _unit_rows(np.stack(pdf["__cvec"].to_numpy()).astype("float64"))
             S = Mn @ Bn  # (batch, n_bench)
             j = S.argmax(axis=1)  # first max -> smallest bench id (sorted)
             yield pd.DataFrame(
@@ -423,7 +387,7 @@ def matryoshka_recall(
     dims: "list[int]",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_max_rows: int = 100_000,
+    query_max_rows: int = _QUERY_MAX_ROWS,
 ) -> DataFrame:
     """Recall@k of *truncated-dimension* cosine search vs the full-dim
     answer — the audit behind Matryoshka-style embeddings (Kusupati et

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from pivot_spark.functions.text import tokens
 from pivot_spark.operators._fence import materialize, pin
+from pivot_spark.operators.topk import topk_per_group_agg
 
 
 def tfidf_top_terms(
@@ -50,23 +51,9 @@ def tfidf_top_terms(
     scored = tf.join(dfreq, "term").withColumn(
         "tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df_docs"))
     )
-    item = F.struct(
-        (-F.col("tfidf")).alias("__neg"),
-        F.col("term"),
-        F.col("tf"),
-        F.col("df_docs"),
-    )
-    agg = scored.groupBy("__id").agg(
-        F.slice(F.array_sort(F.collect_list(item)), 1, top).alias("__top")
-    )
-    out = agg.select("__id", F.posexplode("__top").alias("__rank", "__it"))
-    return out.select(
-        F.col("__id").alias(id_col),
-        F.col("__it.term").alias("term"),
-        F.col("__it.tf").alias("tf"),
-        F.col("__it.df_docs").alias("df_docs"),
-        (-F.col("__it.__neg")).alias("tfidf"),
-        (F.col("__rank") + 1).cast("int").alias("rank"),
+    top_terms = topk_per_group_agg(scored, ["__id"], "tfidf", top, tie_cols=["term"])
+    return top_terms.select(
+        F.col("__id").alias(id_col), "term", "tf", "df_docs", "tfidf", "rank"
     )
 
 

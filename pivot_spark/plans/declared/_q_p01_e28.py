@@ -730,8 +730,9 @@ def e08_neardup_simhash(spark, sf_dir):
 
 
 def _srp_sig_sql(vec_expr: str, n_planes: int, dim: int, seed: int) -> str:
-    """SQL replay of ``similarity.srp_signature``: the seeded Gaussian
-    plane weights as literals (e95 idiom), sign bits packed to BIGINT."""
+    """SQL replay of one table of ``similarity.srp_signatures_pd``: the
+    seeded Gaussian plane weights as literals (e95 idiom), sign bits
+    packed to BIGINT."""
     from pivot_spark.operators.similarity import _srp_planes
 
     bits = []

@@ -30,7 +30,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from pivot_spark.operators._fence import pin_view
+from pivot_spark.operators._fence import _on_exit, pin_view
 
 _SEQ = [0]
 
@@ -558,6 +558,7 @@ FROM events GROUP BY user_id
 
     @query("s10_stream_upsert", _S10_ORACLE)
     def s10_stream_upsert(spark, sf_dir):
+        import shutil
         import tempfile
 
         from pivot_spark.streaming.upsert_sink import (
@@ -565,8 +566,9 @@ FROM events GROUP BY user_id
             start_upsert_sink,
         )
 
-        # the state directory is read lazily, so it stays; the
-        # checkpoint is not read after termination
+        # the state directory is read lazily, so the innermost
+        # ``fence_scope`` removes it; the checkpoint is not read after
+        # termination
         with _shuffle(spark, 8), tempfile.TemporaryDirectory(
             prefix="s10_ckpt_"
         ) as ckpt:
@@ -574,6 +576,7 @@ FROM events GROUP BY user_id
                 "user_id", "ts", "event_id", "event_type", "value"
             )
             state = tempfile.mkdtemp(prefix="s10_state_")
+            _on_exit(lambda: shutil.rmtree(state, ignore_errors=True))
             q = start_upsert_sink(
                 src, state, keys=["user_id"], checkpoint=ckpt, order_col="ts"
             )

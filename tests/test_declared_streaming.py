@@ -125,6 +125,22 @@ def test_scope_drops_replay_sinks(spark):
     assert sinks() == set()
 
 
+def test_scope_removes_s10_state_dir(spark):
+    import glob
+    import tempfile
+
+    from pivot_spark.operators._fence import fence_scope
+
+    def state_dirs():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "s10_state_*")))
+
+    before = state_dirs()
+    with fence_scope():
+        assert _q("s10_stream_upsert")(spark, SF).collect()
+        assert state_dirs() - before  # read lazily, so kept inside the scope
+    assert state_dirs() - before == set()
+
+
 def test_shuffle_ctx_restores_conf(spark):
     from pivot_spark.plans.declared_streaming import _shuffle
 

@@ -346,6 +346,79 @@ def test_ivf_partial_probe_subset(spark, vec_df):
     assert len(out) <= 6
 
 
+def test_zero_vector_scores_cosine_zero_in_every_search(spark, vec_df):
+    """A zero vector in the corpus and among the queries scores cos 0.0,
+    never NaN: full-probe IVF and full-rerank PQ still equal brute force
+    (the zero query's neighbours are the smallest ids), and every LSH
+    pair with the zero vector scores 0.0."""
+    import math
+
+    from pivot_spark.operators.ivf import cosine_topk_ivf
+    from pivot_spark.operators.pq import cosine_topk_pq
+    from pivot_spark.operators.similarity import cosine_topk, cosine_topk_lsh
+
+    corpus = vec_df.unionByName(
+        spark.createDataFrame([(200, [0.0] * 16)], vec_df.schema)
+    )
+    q = corpus.filter(F.col("vec_id").isin(0, 1, 200))
+
+    def ranked(df):
+        return {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cos"], 9))
+            for r in df.collect()
+        }
+
+    exact = ranked(cosine_topk(corpus, q, k=3))
+    assert [exact[(200, r)] for r in (1, 2, 3)] == [(0, 0.0), (1, 0.0), (2, 0.0)]
+    assert ranked(cosine_topk_ivf(corpus, q, k=3, n_clusters=4, nprobe=4)) == exact
+    assert ranked(cosine_topk_pq(corpus, q, k=3, m=4, ksub=8, rerank=100)) == exact
+
+    lsh = cosine_topk_lsh(corpus, q, k=50, dim=16, n_planes=1, n_tables=6).collect()
+    zero = [r["cos"] for r in lsh if 200 in (r["query_id"], r["neighbor_id"])]
+    assert zero and not any(math.isnan(c) for c in zero)
+    assert set(zero) == {0.0}
+
+
+def test_ivf_and_pq_query_sides_are_bounded(spark, vec_df, monkeypatch):
+    from pivot_spark.operators import similarity
+    from pivot_spark.operators.ivf import cosine_topk_ivf
+    from pivot_spark.operators.pq import cosine_topk_pq
+
+    monkeypatch.setattr(similarity, "_QUERY_MAX_ROWS", 2)
+    two = vec_df.filter(F.col("vec_id") <= 1)
+    three = vec_df.filter(F.col("vec_id") <= 2)
+    cosine_topk_ivf(vec_df, two, k=2, n_clusters=4, nprobe=1)
+    cosine_topk_pq(vec_df, two, k=2, m=4, ksub=8)
+    with pytest.raises(ValueError, match="ivf_search .* exceeds 2 rows"):
+        cosine_topk_ivf(vec_df, three, k=2, n_clusters=4, nprobe=1)
+    with pytest.raises(ValueError, match="pq_search .* exceeds 2 rows"):
+        cosine_topk_pq(vec_df, three, k=2, m=4, ksub=8)
+
+
+def test_vector_norms_only_in_similarity_core():
+    """Every search normalizes through ``similarity._unit_rows`` (zero
+    rows stay zero) or scores through ``cosine_pd``: an
+    ``np.linalg.norm`` anywhere else in ``operators/`` is a second
+    zero-norm policy."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "pivot_spark" / "operators"
+    calls = set()
+    for path in sorted(ops.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "norm"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "linalg"
+                ):
+                    calls.add((path.name, getattr(top, "name", None)))
+    assert calls == {("similarity.py", "_unit_rows"), ("similarity.py", "_cosine_pd")}
+
+
 def test_count_distinct_skewed(spark):
     from pivot_spark.operators.skew import count_distinct_skewed
 

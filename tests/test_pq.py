@@ -81,3 +81,40 @@ def test_self_excluded(emb):
 def test_dim_not_divisible_raises(emb):
     with pytest.raises(ValueError, match="not divisible"):
         pq_train(emb, m=5, ksub=8)
+
+
+def test_adc_topk_is_a_prefix_of_the_full_ranking(emb):
+    """Tight clusters share code words, so ADC scores tie across a
+    cluster: the local top-k must still cut by (adc desc, id asc), so
+    the top 10 equal the first 10 ranks of the full ranking."""
+    books = pq_train(emb, m=4, ksub=8, train_sample=300, seed=1)
+    enc = pq_encode(emb, books)
+    q = emb.filter(F.col("vec_id") < 5)
+
+    def ranked(k):
+        return {
+            (r["query_id"], r["rank"]): r["neighbor_id"]
+            for r in pq_search(enc, books, q, k).collect()
+        }
+
+    full = ranked(300)
+    assert ranked(10) == {key: v for key, v in full.items() if key[1] <= 10}
+
+
+def test_batch_topk_matches_a_full_sort_on_ties():
+    from pivot_spark.operators.similarity import _batch_topk
+
+    rng = np.random.RandomState(0)
+    for _ in range(200):
+        n, nq = rng.randint(2, 40), rng.randint(1, 4)
+        k = rng.randint(1, n + 2)
+        S = rng.randint(0, 3, size=(nq, n)).astype("float64")
+        cids = rng.permutation(n).astype("int64")
+        qids = cids[:nq]
+        got = _batch_topk(S, qids, cids, k)
+        for i, qid in enumerate(qids):
+            keep = cids != qid
+            ref = np.lexsort((cids[keep], -S[i, keep]))[:k]
+            mine = got[got["__qid"] == qid]
+            assert mine["__cid"].tolist() == cids[keep][ref].tolist()
+            assert mine["__score"].tolist() == S[i, keep][ref].tolist()
