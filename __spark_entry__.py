@@ -25,15 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 _CANARIES: "list[str]" = []
 
 # The 50-slot window, in order:
-# (a) the queries that reach the one vector-search core in
-#     ``operators/similarity.py`` (and s10, whose state directory is now
-#     released by the query's scope);
-# (b) the streaming replays whose stateful fold moved into
-#     ``streaming/_fold.py``;
-# (c) the 27 pivot queries, whose validation reads one input-type rule
-#     per aggregate;
-# (d) the codec queries whose operators run only their Arrow kernels,
-#     until the 50 slots are full.
+# (a) the queries whose Python kernels reference the vector-search core in
+#     ``operators/similarity.py`` (and s10), whose workers now import only
+#     that module, not every operator;
+# (b) the Python-stateful streaming replays, whose workers now import only
+#     ``streaming/_fold.py`` and the operator's module;
+# (c) the 27 pivot queries, which import the root ``pivot_spark`` init;
+# (d) five codec queries that no window has held since the codec
+#     operators moved to their Arrow kernels.
 _ROUND_WINDOW = [
     "e04_knn_cosine", "e09_knn_lsh", "e11_neardup_cosine",
     "e12_neardup_cosine_lsh", "e15_knn_ivf_fullprobe", "e20_tfidf",
@@ -45,8 +44,8 @@ _ROUND_WINDOW = [
     "p01", "p02", "p03", "p04", "p05", "p06", "p07", "p08", "p09", "p10",
     "p11", "p12", "p13", "p14", "p15", "p16", "p17", "p18", "p19", "p20",
     "p22", "p21", "p21_errors", "p23", "p24", "p25", "p26b",
-    "e168_ppm_decode", "e169_bmp_decode", "e170_wav_decode",
-    "e174_audio_features", "e175_image_stats",
+    "e204_contrast_stretch", "e216_image_equalize", "e220_image_otsu",
+    "e228_png_decode", "e231_png_deflate_decode",
 ]
 
 

@@ -30,12 +30,18 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 MAX_INLINE_QUERIES = 40
 
 
-def medians(passes: "list[list[dict]]", failed: "set[str]") -> "dict[str, float]":
-    """Per query, the median ``wall_s`` over the passes, failed ones left out."""
+def pass_walls(passes: "list[list[dict]]", failed: "set[str]") -> "dict[str, list[float]]":
+    """Per query, its ``wall_s`` in each pass, failed ones left out."""
     walls: dict = {}
     for r in (r for p in passes for r in p):
-        walls.setdefault(r["query"], []).append(r["wall_s"])
-    return {q: round(statistics.median(v), 3) for q, v in walls.items() if q not in failed}
+        if r["query"] not in failed:
+            walls.setdefault(r["query"], []).append(r["wall_s"])
+    return walls
+
+
+def medians(passes: "list[list[dict]]", failed: "set[str]") -> "dict[str, float]":
+    """Per query, the median ``wall_s`` over the passes, failed ones left out."""
+    return {q: round(statistics.median(v), 3) for q, v in pass_walls(passes, failed).items()}
 
 
 def rows_from_spans(spans: "list[dict]") -> "dict[str, dict]":
@@ -58,18 +64,22 @@ def rows_from_spans(spans: "list[dict]") -> "dict[str, dict]":
     }
 
 
-def summary(timings: "dict[str, float]", baseline: "dict[str, float]",
+def summary(passes: "list[list[dict]]", baseline: "dict[str, float]",
             failed: "set[str]", sf: "float | None", full: "str | None") -> dict:
     """The stdout line: ``queries`` holds at most 40 medians, the queries that
     regressed past 1.5x their baseline (by at least 0.5 s) first, then those
-    that improved past 1/1.3x (by at least 0.3 s), then the slowest."""
-    ratios = {q: t / baseline[q] for q, t in timings.items() if baseline.get(q)}
-    regressed = sorted((q for q, r in ratios.items()
-                        if r > 1.5 and timings[q] - baseline[q] >= 0.5),
-                       key=lambda q: -ratios[q])
-    improved = sorted((q for q, r in ratios.items()
-                       if r < 1 / 1.3 and baseline[q] - timings[q] >= 0.3),
-                      key=lambda q: ratios[q])
+    that improved past 1/1.3x (by at least 0.3 s), then the slowest. A query
+    is flagged only when every pass is past the line, not just its median:
+    one run's passes straddle a 1.3x line on host noise alone."""
+    timings = medians(passes, failed)
+    walls = {q: v for q, v in pass_walls(passes, failed).items() if baseline.get(q)}
+    ratio = {q: timings[q] / baseline[q] for q in walls}
+    regressed = sorted((q for q, v in walls.items()
+                        if min(v) > 1.5 * baseline[q] and min(v) - baseline[q] >= 0.5),
+                       key=lambda q: -ratio[q])
+    improved = sorted((q for q, v in walls.items()
+                       if max(v) < baseline[q] / 1.3 and baseline[q] - max(v) >= 0.3),
+                      key=lambda q: ratio[q])
     slowest = sorted(timings, key=lambda q: -timings[q])
     inline: dict = {}
     for q in regressed + improved + slowest:
@@ -136,7 +146,7 @@ def main(names: "list[str]") -> None:
     except ValueError:
         sf = None
     full = None if names else "BENCH_FULL.json"
-    out = summary(timings, baseline, runner.failed, sf, full)
+    out = summary(passes, baseline, runner.failed, sf, full)
     if full:
         with open(os.path.join(REPO, full), "w") as fh:
             json.dump({**out, "queries": timings, "rows": rows, "reps": reps,

@@ -1,3 +1,2 @@
-from pivot_spark.functions.aggregates import AGGREGATES, AggregateBuilder
-
-__all__ = ["AGGREGATES", "AggregateBuilder"]
+"""Column-expression builders: the pivot aggregates and the text, web,
+JSON and redaction functions; import each from its module."""

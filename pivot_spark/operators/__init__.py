@@ -1,384 +1,4 @@
-"""Operator surface — every public transform, importable flat:
-``from pivot_spark.operators import pivot, dedup_exact, bm25_topk, ...``.
-
-Grouped as in README: reference operator (pivot), dedup family,
-similarity/ANN, text quality & curation, sampling/splits, joins,
-time/event analytics, profiling/statistics, layout, maintenance.
-"""
-
-from pivot_spark.operators.pivot import (
-    PivotError,
-    PivotResult,
-    lineage,
-    output_schema,
-    pivot,
-)
-
-# --- dedup family
-from pivot_spark.operators.chunk_dedup import (
-    chunk_dup_signals,
-    cross_source_dup_matrix,
-    source_diversity,
-)
-from pivot_spark.operators.components import (
-    connected_components,
-    degree_stats,
-    label_propagation,
-    pagerank,
-    triangle_stats,
-    local_clustering,
-    dedup_clusters,
-    dedup_clusters_keep_best,
-)
-from pivot_spark.operators.dedup import debounce, dedup_against, dedup_exact
-from pivot_spark.operators.neardup import (
-    minhash_estimate_report,
-    minhash_signatures,
-    neardup_embedding_cosine,
-    neardup_minhash_incremental,
-    neardup_minhash_lsh,
-    neardup_simhash,
-    ngram_containment_pairs,
-    ngram_jaccard_pairs,
-)
-from pivot_spark.operators.calibrate import isotonic_fit, quantile_normalize
-from pivot_spark.operators.augment import span_corruption
-from pivot_spark.operators.bpe import bpe_decode
-from pivot_spark.operators.coreset import farthest_point_sample
-from pivot_spark.operators.preference import (
-    bradley_terry,
-    bradley_terry_from_scores,
-    pairwise_wins,
-)
-from pivot_spark.operators.spans import (
-    dedup_savings_report,
-    duplicated_spans,
-    remove_duplicated_spans,
-    repetition_runs,
-)
-from pivot_spark.operators.semdedup import semdedup
-
-# --- similarity / ANN / embeddings
-from pivot_spark.operators.embedding import (
-    centroids,
-    class_separability,
-    mahalanobis_ood,
-    normalize_vectors,
-    quantize_int8,
-    random_projection,
-)
-from pivot_spark.operators.fusion import rrf_fuse
-from pivot_spark.operators.ivf import cosine_topk_ivf, ivf_index, ivf_search
-from pivot_spark.operators.kmeans import assign_clusters, kmeans, kmeans_fit
-from pivot_spark.operators.pca import (
-    covariance_matrix,
-    explained_variance,
-    pca_project,
-)
-from pivot_spark.operators.prune import prototypicality_prune
-from pivot_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_lsh,
-    matryoshka_recall,
-    semantic_decontaminate,
-)
-
-# --- text quality & curation
-from pivot_spark.functions.text import normalize_unicode
-from pivot_spark.functions.web import (
-    ctrl_char_count,
-    html_title,
-    link_density,
-    non_ascii_ratio,
-    strip_html,
-)
-from pivot_spark.operators.dsir import dsir_logweights
-from pivot_spark.operators.lm import (
-    char_bigram_gibberish,
-    bigram_lm_score,
-    stupid_backoff_score,
-    unigram_lm_score,
-)
-from pivot_spark.operators.quality import (
-    c4_line_signals,
-    gopher_filter,
-    gopher_rules,
-    line_dedup,
-    strip_boilerplate_lines,
-)
-from pivot_spark.operators.bpe import bpe_encode, bpe_learn
-from pivot_spark.operators.classifier import (
-    calibration_report,
-    hashed_linear_score,
-    rocchio_predict,
-    rocchio_train,
-)
-from pivot_spark.operators.repetition import repetition_signals
-from pivot_spark.operators.bootstrap import poisson_bootstrap_mean
-from pivot_spark.operators.layout import (
-    cluster_by_zorder,
-    plan_compaction,
-    zorder_key,
-)
-from pivot_spark.operators.sharding import rebalance_report, rendezvous_shard
-from pivot_spark.operators.cooccur import pmi_pairs
-from pivot_spark.operators.tfidf import (
-    keyword_contexts,
-    tfidf_cosine_pairs,
-    tfidf_top_terms,
-)
-from pivot_spark.operators.web import (
-    domain_stats,
-    drop_blocklisted,
-    registered_domain,
-)
-
-# --- retrieval
-from pivot_spark.operators.bm25 import bm25_topk, bm25_topk_batch
-
-# --- sampling / splits
-from pivot_spark.operators.select_extreme import select_extreme
-from pivot_spark.operators.topk import mode_by_key, topk_per_group, topk_per_group_agg
-
-# --- joins
-from pivot_spark.operators.asof import asof_join
-from pivot_spark.operators.denorm import Dim, denormalize
-from pivot_spark.operators.fuzzy import sorted_neighborhood_pairs, best_fuzzy_match, fuzzy_join
-from pivot_spark.operators.range_join import range_join
-from pivot_spark.operators.bucketize import (
-    ntile_buckets,
-    robust_scale,
-    threshold_buckets,
-    zscore_normalize,
-)
-from pivot_spark.operators.sample import (
-    rake_weights,
-    temperature_mixture_rates,
-    group_hash_sample_k,
-    hash_sample,
-    hash_split,
-    mixture_sample,
-    negative_sample_k,
-    repeat_upsample,
-    stratified_hash_sample,
-    weighted_sample_k,
-)
-from pivot_spark.operators.skew import (
-    count_distinct_skewed,
-    salted_join,
-    skew_report,
-)
-
-# --- time / event analytics
-from pivot_spark.operators.analytics import (
-    anova_oneway,
-    average_precision,
-    cohens_kappa,
-    krippendorff_alpha,
-    threshold_select,
-    ipw_estimate,
-    jackknife_ratio,
-    ranking_metrics,
-    dispersion_test,
-    interarrival_stats,
-    rolling_active_users,
-    sequence_surprise,
-    trending_keys,
-    binary_auc,
-    brier_decomposition,
-    conformal_threshold,
-    lift_curve,
-    lift_curve_ranked,
-    linear_regression,
-    classification_report,
-    mannwhitney_u,
-    kaplan_meier,
-    rfm_segments,
-    association_rules,
-    chi_square,
-    cuped_adjust,
-    seasonal_anomalies,
-    welch_t_test,
-    cohort_retention,
-    grouped_ols,
-    ks_test,
-    mutual_information,
-    psi_drift,
-    transition_matrix,
-    user_journeys,
-    wilson_rank,
-)
-from pivot_spark.operators.attribution import attribute, markov_attribution
-from pivot_spark.operators.funnel import funnel
-from pivot_spark.operators.rolling import (
-    cusum_changepoints,
-    decayed_aggregates,
-    ewma,
-    rolling_features,
-    rolling_time_features,
-)
-from pivot_spark.operators.resample import resample_locf
-from pivot_spark.operators.sessionize import (
-    session_stats,
-    session_stats_native,
-    sessionize,
-    sessionize_stream,
-)
-
-# --- profiling / statistics / sketches
-from pivot_spark.operators.heavy import heavy_hitters
-from pivot_spark.operators.outliers import mad_outliers, winsorized_stats
-from pivot_spark.operators.profile import (
-    group_quantiles,
-    zipf_fit,
-    cdf_transform,
-    key_containment,
-    row_rank,
-    vocab_richness,
-    weighted_quantile,
-    pareto_frontier_2d,
-    join_size_estimate,
-    benford_audit,
-    column_entropy,
-    corr_matrix,
-    histogram,
-    profile,
-    quantiles,
-    spearman_matrix,
-)
-from pivot_spark.operators.sketch import cms_build, cms_estimate, cms_merge, hll_overlap_matrix
-
-# --- decontamination
-from pivot_spark.operators.bloom import (
-    bloom_build,
-    bloom_contains,
-    bloom_prefilter_anti_join,
-)
-
-# --- documents / chunking
-from pivot_spark.operators.chunking import chunk_documents
-
-# --- multimodal real codecs (uncompressed formats, pure Catalyst)
-from pivot_spark.operators.codecs import (
-    decode_bmp,
-    pgm_binarize_otsu,
-    pgm_equalize,
-    wav_gain,
-    decode_ppm,
-    decode_wav,
-    make_bmp,
-    decode_pgm,
-    make_ppm,
-    make_wav,
-    ppm_contrast_stretch,
-    ppm_luma_stats,
-    ppm_resize_nn,
-    ppm_to_pgm,
-    sniff_media,
-    wav_downsample,
-    wav_features,
-    wav_mixdown,
-)
-
-# --- maintenance / lakehouse
-from pivot_spark.operators.diff import table_diff
-from pivot_spark.operators.incremental import (
-    agg_state,
-    estimate_distinct,
-    finalize_state,
-    incremental_agg,
-    incremental_distinct,
-    merge_states,
-)
-from pivot_spark.operators.merge import upsert
-from pivot_spark.operators.scd import scd2_apply, scd2_build, scd2_lookup
-from pivot_spark.operators.validate import validate
-
-__all__ = [
-    # reference operator
-    "pivot", "PivotResult", "PivotError", "output_schema", "lineage",
-    # dedup
-    "dedup_exact", "dedup_against", "debounce", "chunk_dup_signals",
-    "cross_source_dup_matrix", "source_diversity",
-    "connected_components", "pagerank", "triangle_stats", "label_propagation", "degree_stats", "dedup_clusters", "dedup_clusters_keep_best",
-    "neardup_minhash_lsh", "neardup_simhash", "ngram_jaccard_pairs",
-    "ngram_containment_pairs", "neardup_embedding_cosine", "semdedup",
-    "minhash_signatures", "neardup_minhash_incremental",
-    "minhash_estimate_report",
-    "duplicated_spans", "remove_duplicated_spans", "repetition_runs",
-    "dedup_savings_report",
-    "tfidf_cosine_pairs", "keyword_contexts", "pmi_pairs",
-    # similarity / embeddings
-    "cosine_topk", "cosine_topk_lsh", "semantic_decontaminate", "cosine_topk_ivf", "ivf_index",
-    "ivf_search", "kmeans", "kmeans_fit", "assign_clusters",
-    "centroids", "normalize_vectors", "quantize_int8", "random_projection",
-    "prototypicality_prune", "rrf_fuse",
-    "covariance_matrix", "pca_project", "explained_variance",
-    # text quality & curation
-    "gopher_rules", "gopher_filter", "c4_line_signals", "line_dedup", "strip_boilerplate_lines",
-    "repetition_signals", "tfidf_top_terms", "unigram_lm_score",
-    "bigram_lm_score", "stupid_backoff_score",
-    "quantile_normalize", "farthest_point_sample", "cohens_kappa",
-    "isotonic_fit", "span_corruption", "local_clustering",
-    "krippendorff_alpha", "matryoshka_recall", "threshold_select",
-    "ipw_estimate", "jackknife_ratio", "class_separability",
-    "pgm_equalize", "bpe_decode", "pgm_binarize_otsu", "wav_gain",
-    "mahalanobis_ood", "char_bigram_gibberish", "markov_attribution",
-    "group_quantiles", "zipf_fit", "robust_scale",
-    "bradley_terry", "bradley_terry_from_scores", "pairwise_wins",
-    "dsir_logweights", "hashed_linear_score",
-    "bpe_learn", "bpe_encode", "calibration_report",
-    "rocchio_train", "rocchio_predict",
-    "domain_stats", "drop_blocklisted", "registered_domain",
-    "strip_html", "normalize_unicode", "html_title", "link_density", "non_ascii_ratio",
-    "ctrl_char_count",
-    # retrieval
-    "bm25_topk", "bm25_topk_batch",
-    # sampling / selection
-    "select_extreme", "topk_per_group", "topk_per_group_agg", "mode_by_key",
-    "hash_split", "hash_sample", "stratified_hash_sample",
-    "mixture_sample", "temperature_mixture_rates", "rake_weights", "repeat_upsample", "group_hash_sample_k",
-    "negative_sample_k",
-    "weighted_sample_k", "ntile_buckets", "threshold_buckets",
-    # joins
-    "asof_join", "fuzzy_join", "best_fuzzy_match", "sorted_neighborhood_pairs", "range_join",
-    "denormalize", "Dim",
-    "salted_join", "count_distinct_skewed", "skew_report", "zscore_normalize",
-    # time / event analytics
-    "sessionize", "session_stats", "session_stats_native", "sessionize_stream", "funnel",
-    "resample_locf",
-    "attribute", "cohort_retention", "grouped_ols",
-    "transition_matrix", "wilson_rank", "mutual_information",
-    "chi_square", "psi_drift", "ks_test", "user_journeys",
-    "association_rules",
-    "rolling_features", "rolling_time_features", "decayed_aggregates",
-    "ewma", "cusum_changepoints", "seasonal_anomalies", "welch_t_test",
-    "cuped_adjust", "rfm_segments", "kaplan_meier", "anova_oneway",
-    "mannwhitney_u", "linear_regression", "conformal_threshold",
-    "lift_curve", "lift_curve_ranked", "binary_auc", "average_precision", "ranking_metrics",
-    "brier_decomposition", "weighted_quantile", "trending_keys",
-    "sequence_surprise", "rolling_active_users", "dispersion_test",
-    "interarrival_stats",
-    # profiling / statistics / sketches
-    "profile", "quantiles", "histogram", "corr_matrix", "spearman_matrix",
-    "benford_audit", "column_entropy",
-    "heavy_hitters", "mad_outliers", "winsorized_stats",
-    "cms_build", "cms_estimate", "cms_merge", "hll_overlap_matrix",
-    "poisson_bootstrap_mean", "join_size_estimate", "classification_report",
-    "rendezvous_shard", "rebalance_report", "cdf_transform",
-    "pareto_frontier_2d", "plan_compaction", "cluster_by_zorder", "zorder_key",
-    "row_rank", "vocab_richness", "key_containment",
-    # multimodal real codecs
-    "make_ppm", "decode_ppm", "make_bmp", "decode_bmp",
-    "make_wav", "decode_wav",
-    "wav_features", "ppm_luma_stats", "ppm_contrast_stretch", "ppm_resize_nn",
-    "wav_downsample", "ppm_to_pgm", "decode_pgm", "sniff_media", "wav_mixdown",
-    # decontamination
-    "bloom_build", "bloom_contains", "bloom_prefilter_anti_join",
-    # documents
-    "chunk_documents",
-    # maintenance / lakehouse
-    "upsert", "scd2_build", "scd2_lookup", "scd2_apply", "table_diff", "validate",
-    "incremental_agg", "merge_states", "agg_state", "finalize_state",
-    "incremental_distinct", "estimate_distinct",
-]
+"""Operator modules, one per family (dedup, similarity search, text
+quality, sampling, joins, event analytics, profiling, layout, media).
+Import each operator from its module, e.g.
+``from pivot_spark.operators.similarity import cosine_topk``."""

@@ -8,8 +8,7 @@ helpers live in ``_base``; the streaming surface registers last, as
 before."""
 
 from pivot_spark.plans.declared._base import (  # noqa: F401
-    FLAGS, ORACLES, QUERIES, _mined_pairs, _read, query, round_doubles,
-    serialize_arrays,
+    ORACLES, QUERIES, query, round_doubles,
 )
 from pivot_spark.plans.declared import _q_p01_e28 as _q_p01_e28  # noqa: F401
 from pivot_spark.plans.declared import _q_e29_e62 as _q_e29_e62  # noqa: F401

@@ -1,38 +1,2 @@
-from pivot_spark.sources.bucketed import (
-    bucket_spec,
-    bucketed_join,
-    buckets_compatible,
-    read_bucketed,
-    write_bucketed,
-)
-from pivot_spark.sources.catalog import TABLES, load_table, load_tables, register_views
-from pivot_spark.sources.io import (
-    FORMATS,
-    avro_available,
-    read_binary_files,
-    read_source,
-    run_file_pipeline,
-    write_bucketed_table,
-    write_manifest,
-    write_sink,
-)
-
-__all__ = [
-    "TABLES",
-    "load_table",
-    "load_tables",
-    "register_views",
-    "FORMATS",
-    "avro_available",
-    "read_binary_files",
-    "read_source",
-    "write_sink",
-    "run_file_pipeline",
-    "write_bucketed_table",
-    "write_manifest",
-    "bucket_spec",
-    "bucketed_join",
-    "buckets_compatible",
-    "read_bucketed",
-    "write_bucketed",
-]
+"""Table loading (``catalog``), file readers and sinks (``io``) and
+bucketed tables (``bucketed``); import each from its module."""

@@ -1,28 +1,2 @@
-from pivot_spark.streaming.anomaly_stream import ewma_anomaly_stream
-from pivot_spark.streaming.dedup_stream import (
-    debounce_stream,
-    dedup_stream,
-    first_seen_stream,
-)
-from pivot_spark.streaming.enrich_stream import enrich_stream
-from pivot_spark.streaming.join_stream import interval_join_stream
-from pivot_spark.streaming.pivot_stream import pivot_stream
-from pivot_spark.streaming.quantile_stream import quantile_stream
-from pivot_spark.streaming.session_stream import session_stream
-from pivot_spark.streaming.topk_stream import topk_stream
-from pivot_spark.streaming.upsert_sink import read_upsert_state, start_upsert_sink
-
-__all__ = [
-    "pivot_stream",
-    "dedup_stream",
-    "first_seen_stream",
-    "debounce_stream",
-    "enrich_stream",
-    "interval_join_stream",
-    "session_stream",
-    "topk_stream",
-    "ewma_anomaly_stream",
-    "quantile_stream",
-    "start_upsert_sink",
-    "read_upsert_state",
-]
+"""Structured Streaming operators, one module each; import each from its
+module, e.g. ``from pivot_spark.streaming.dedup_stream import dedup_stream``."""

@@ -34,7 +34,8 @@ def test_rows_from_spans_take_phase_seconds_and_attrs():
 
 
 def test_summary_contract_and_failed():
-    out = bench.summary({"a": 1.0, "b": 2.0}, {}, {"c"}, 0.1, "BENCH_FULL.json")
+    out = bench.summary([[_row("a", 1.0), _row("b", 2.0)]], {}, {"c"}, 0.1,
+                        "BENCH_FULL.json")
     assert {"metric", "value", "unit", "queries", "sf", "n_queries", "full",
             "failed"} <= set(out)
     assert out["value"] == 3.0
@@ -51,7 +52,8 @@ def test_inline_cap_orders_regressed_improved_slowest():
     timings["slow"], baseline["slow"] = 4.0, 1.0     # regressed 4x
     timings["slower"], baseline["slower"] = 9.0, 1.0  # regressed 9x
     timings["noise"], baseline["noise"] = 0.3, 0.1   # 3x but only +0.2 s
-    out = bench.summary(timings, baseline, set(), 0.1, None)
+    out = bench.summary([[_row(q, t) for q, t in timings.items()]], baseline, set(),
+                        0.1, None)
     inline = list(out["queries"])
     assert len(inline) == bench.MAX_INLINE_QUERIES
     assert inline[:3] == ["slower", "slow", "fast"]
@@ -60,3 +62,14 @@ def test_inline_cap_orders_regressed_improved_slowest():
     )[:bench.MAX_INLINE_QUERIES - 3]
     assert "noise" not in inline
     assert (out["n_regressed_1p5x"], out["n_improved_1p3x"]) == (2, 1)
+
+
+def test_flags_need_every_pass_past_the_line():
+    baseline = {"straddle_fast": 2.0, "straddle_slow": 1.0, "fast": 2.0, "slow": 1.0}
+    walls = {"straddle_fast": (1.2, 1.3, 1.9), "straddle_slow": (2.0, 2.1, 1.2),
+             "fast": (1.2, 1.3, 1.4), "slow": (2.0, 2.1, 1.6)}
+    passes = [[_row(q, w[i]) for q, w in walls.items()] for i in range(3)]
+    out = bench.summary(passes, baseline, set(), 0.1, None)
+    # the straddlers' medians are past 1/1.3x and 1.5x, one pass of each is not
+    assert (out["n_regressed_1p5x"], out["n_improved_1p3x"]) == (1, 1)
+    assert list(out["queries"])[:2] == ["slow", "fast"]

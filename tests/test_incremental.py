@@ -1,4 +1,5 @@
-"""Incremental aggregate maintenance (operators/incremental.py)."""
+"""Incremental maintenance: aggregate states (operators/incremental.py)
+and the MinHash near-dup index (operators/neardup.py)."""
 
 import math
 
@@ -128,3 +129,28 @@ def test_incremental_distinct_matches_full(spark):
     b = {r["k"]: r["n_distinct"] for r in estimate_distinct(full, ["k"]).collect()}
     for k in b:
         assert abs(a[k] - b[k]) / b[k] < 0.02
+
+
+def test_incremental_minhash_matches_full_rebuild(spark):
+    from pivot_spark.operators.neardup import (
+        minhash_signatures,
+        neardup_minhash_incremental,
+        neardup_minhash_lsh,
+    )
+
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    corpus = d.filter(F.col("doc_id") % 5 != 0)
+    delta = d.filter(F.col("doc_id") % 5 == 0)
+    index = minhash_signatures(corpus, "doc_id", "text")
+    pairs, new_index = neardup_minhash_incremental(index, delta, "doc_id", "text")
+    got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
+
+    full = neardup_minhash_lsh(d, threshold=0.5).collect()
+    want = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in full
+        if r.id_a % 5 == 0 or r.id_b % 5 == 0
+    }
+    assert got == want
+    # updated index covers the whole corpus, ready for the next delta
+    assert new_index.count() == d.count()

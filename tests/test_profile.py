@@ -1,8 +1,9 @@
-"""Column profiling unit tests (operators/profile.py)."""
+"""Column profiling, histogram and correlation-matrix unit tests
+(operators/profile.py)."""
 
 import pytest
 
-from pivot_spark.operators.profile import profile
+from pivot_spark.operators.profile import corr_matrix, histogram, profile
 
 
 @pytest.fixture()
@@ -63,3 +64,54 @@ def test_unknown_column_raises(df):
 def test_dtype_reported(df):
     p = _by_col(profile(df))
     assert p["id"].dtype == "bigint" and p["s"].dtype == "string"
+
+
+@pytest.fixture()
+def num_df(spark):
+    rows = [(float(i), float(2 * i), float(-i), None if i == 3 else float(i)) for i in range(10)]
+    return spark.createDataFrame(rows, "x double, y double, z double, w double")
+
+
+def test_histogram_bins_and_edges(num_df):
+    out = {r.bin: r for r in histogram(num_df, "x", lo=0.0, width=2.0, n_bins=5).collect()}
+    assert set(out) == {0, 1, 2, 3, 4}
+    assert all(out[b].n == 2 for b in out)
+    assert (out[1].bin_lo, out[1].bin_hi) == (2.0, 4.0)
+
+
+def test_histogram_clamps_outliers(spark):
+    df = spark.createDataFrame([(-100.0,), (0.5,), (100.0,)], "x double")
+    out = {r.bin: r.n for r in histogram(df, "x", lo=0.0, width=1.0, n_bins=3).collect()}
+    assert out == {0: 2, 2: 1}  # underflow -> bin 0, overflow -> last
+
+
+def test_histogram_drops_nulls(num_df):
+    out = histogram(num_df, "w", lo=0.0, width=5.0, n_bins=2)
+    assert sum(r.n for r in out.collect()) == 9
+
+
+def test_histogram_validation(num_df):
+    with pytest.raises(ValueError):
+        histogram(num_df, "x", 0.0, 0.0, 5)
+
+
+def test_corr_matrix_values(num_df):
+    out = {(r.col_a, r.col_b): r.pearson for r in corr_matrix(num_df, ["x", "y", "z"]).collect()}
+    assert out[("x", "y")] == 1.0  # y = 2x
+    assert out[("x", "z")] == -1.0  # z = -x
+    assert out[("y", "z")] == -1.0
+    assert len(out) == 3  # upper triangle only
+
+
+def test_corr_matrix_validation(num_df):
+    with pytest.raises(ValueError):
+        corr_matrix(num_df, ["x"])
+    with pytest.raises(ValueError):
+        corr_matrix(num_df, ["x", "nope"])
+
+
+def test_corr_matrix_single_row_plan(num_df):
+    plan = corr_matrix(num_df, ["x", "y", "z"])._jdf.queryExecution().executedPlan().toString()
+    # one scalar aggregate: single-partition exchange, no hashpartitioning
+    assert "Exchange SinglePartition" in plan
+    assert "Exchange hashpartitioning" not in plan

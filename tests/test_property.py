@@ -1,7 +1,8 @@
-"""Property-based test: for random small tables, the pivot operator must
+"""Property-based tests: for random small tables, the pivot operator must
 agree with a direct pure-Python model of the reference semantics
 (null-skipping aggregates, undeclared-value exclusion, empty-cell
-identities per SURVEY.md §2.2)."""
+identities per SURVEY.md §2.2), and the sketch/cluster/statistics
+operators keep their invariants on any input."""
 
 import math
 
@@ -213,3 +214,91 @@ def test_every_aggregate_same_in_both_plans(spark, default_value):
     want = by_group(masked)
     assert set(want) == {"g1", "g2", "g3", "g4"}
     _assert_frames_match(by_group(routed), want)
+
+
+# --- the sketch/cluster/statistics operators: invariants on ANY input -------
+
+SETTINGS = dict(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@pytest.mark.usefixtures("spark")
+@given(keys=st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=60))
+@settings(**SETTINGS)
+def test_cms_never_undercounts(spark, keys):
+    from collections import Counter
+
+    from pivot_spark.operators.sketch import cms_build, cms_estimate
+
+    df = spark.createDataFrame([(str(k),) for k in keys], ["k"])
+    sk = cms_build(df, "k", width=16, depth=3)  # tiny width: force collisions
+    est = {
+        r["k"]: r["cms_est"]
+        for r in cms_estimate(sk, df.distinct(), "k", width=16, depth=3).collect()
+    }
+    true = Counter(str(k) for k in keys)
+    for k, n in true.items():
+        assert est[k] >= n
+
+
+@pytest.mark.usefixtures("spark")
+@given(
+    edges=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=15),
+            st.integers(min_value=0, max_value=15),
+        ),
+        max_size=20,
+    ),
+    scores=st.lists(st.integers(min_value=0, max_value=9), min_size=16, max_size=16),
+)
+@settings(**SETTINGS)
+def test_keep_best_one_survivor_per_cluster(spark, edges, scores):
+    from pivot_spark.operators.components import dedup_clusters_keep_best
+
+    df = spark.createDataFrame(
+        [(i, scores[i]) for i in range(16)], ["id", "score"]
+    )
+    pairs = spark.createDataFrame(
+        edges or [(0, 0)], ["id_a", "id_b"]
+    ).filter("id_a != id_b")
+    out = dedup_clusters_keep_best(df, pairs, "id", "score").collect()
+    assert len(out) == 16  # every row labeled
+    by_cluster = {}
+    for r in out:
+        by_cluster.setdefault(r["cluster"], []).append(r)
+    for members in by_cluster.values():
+        keepers = [r for r in members if r["keep"]]
+        assert len(keepers) == 1
+        # the survivor has the max score (tie -> min id)
+        best = max(members, key=lambda r: (r["score"], -r["id"]))
+        assert keepers[0]["id"] == best["id"]
+
+
+@pytest.mark.usefixtures("spark")
+@given(
+    vals=st.lists(
+        st.integers(min_value=-50, max_value=50), min_size=3, max_size=40
+    )
+)
+@settings(**SETTINGS)
+def test_spearman_self_correlation_is_one(spark, vals):
+    from pivot_spark.operators.profile import spearman_matrix
+
+    # y strictly increasing in x => rho == 1 regardless of spacing/ties in x
+    rows = [(float(v), float(i)) for i, v in enumerate(sorted(vals))]
+    df = spark.createDataFrame(rows, ["x", "y"])
+    got = {
+        (r["col_a"], r["col_b"]): r["spearman"]
+        for r in spearman_matrix(df, ["x", "y"], num_ranges=3).collect()
+    }
+    rho = got[("x", "y")]
+    if len(set(vals)) == 1:
+        assert rho is None  # constant x -> undefined
+    else:
+        # ties in x reduce rho below 1 only via average ranks; with y
+        # following sort order rho stays within (0, 1]
+        assert 0.0 < rho <= 1.0

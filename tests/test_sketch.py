@@ -1,10 +1,10 @@
 """Count-Min Sketch: over-count guarantee, exactness at ample width,
-merge == full-build, bounded state."""
+merge == full-build, bounded state; HLL overlap accuracy."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pivot_spark.operators.sketch import cms_build, cms_estimate, cms_merge
+from pivot_spark.operators.sketch import cms_build, cms_estimate, cms_merge, hll_overlap_matrix
 
 
 @pytest.fixture(scope="module")
@@ -65,3 +65,25 @@ def test_invalid_params(spark, words):
         cms_build(words, "w", width=0, depth=3)
     with pytest.raises(ValueError):
         cms_merge()
+
+
+def test_hll_overlap_close_to_exact(spark):
+    # groups with engineered overlap: A = 0..999, B = 500..1499, C = 0..99
+    rows = (
+        [("A", i) for i in range(1000)]
+        + [("B", i) for i in range(500, 1500)]
+        + [("C", i) for i in range(100)]
+    )
+    df = spark.createDataFrame(rows, "g string, m long")
+    out = {(r.group_a, r.group_b): r for r in hll_overlap_matrix(df, "g", "m").collect()}
+    exact = {("A", "B"): (1000, 1000, 1500, 500), ("A", "C"): (1000, 100, 1000, 100),
+             ("B", "C"): (1000, 100, 1100, 0)}
+    for k, (na, nb, nu, ov) in exact.items():
+        r = out[k]
+        # lg_k=14 -> rel err ~0.8%; allow 3 sigma ~ 2.5% (+abs slack for 0)
+        assert r.n_a == pytest.approx(na, rel=0.025)
+        assert r.n_b == pytest.approx(nb, rel=0.025)
+        assert r.n_union == pytest.approx(nu, rel=0.025)
+        assert r.n_overlap == pytest.approx(ov, rel=0.1, abs=60)
+        assert r.n_overlap >= 0
+    assert len(out) == 3
