@@ -24,15 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 # No standing canary: every slot goes to a query to re-check.
 _CANARIES: "list[str]" = []
 
-# The 50-slot window, in order:
+# The 50-slot window, in order. Python workers now start from
+# ``pivot_spark/_daemon.py`` and import pyspark from ``$SPARK_HOME/python``,
+# so the queries that start workers lead:
 # (a) the queries whose Python kernels reference the vector-search core in
-#     ``operators/similarity.py`` (and s10), whose workers now import only
-#     that module, not every operator;
-# (b) the Python-stateful streaming replays, whose workers now import only
-#     ``streaming/_fold.py`` and the operator's module;
-# (c) the 27 pivot queries, which import the root ``pivot_spark`` init;
-# (d) five codec queries that no window has held since the codec
-#     operators moved to their Arrow kernels.
+#     ``operators/similarity.py`` (and s10);
+# (b) the Python-stateful streaming replays, folded in the workers by
+#     ``streaming/_fold.py``;
+# (c) five codec queries, whose pixels run in Arrow ``mapInPandas`` kernels;
+# (d) the 27 pivot queries, which use the root ``pivot_spark`` init, now
+#     loaded lazily.
 _ROUND_WINDOW = [
     "e04_knn_cosine", "e09_knn_lsh", "e11_neardup_cosine",
     "e12_neardup_cosine_lsh", "e15_knn_ivf_fullprobe", "e20_tfidf",
@@ -41,11 +42,11 @@ _ROUND_WINDOW = [
     "s10_stream_upsert",
     "s03_stream_session", "s04_stream_debounce", "s06_stream_topk",
     "s07_stream_ewma", "s08_stream_quantile",
+    "e204_contrast_stretch", "e216_image_equalize", "e220_image_otsu",
+    "e228_png_decode", "e231_png_deflate_decode",
     "p01", "p02", "p03", "p04", "p05", "p06", "p07", "p08", "p09", "p10",
     "p11", "p12", "p13", "p14", "p15", "p16", "p17", "p18", "p19", "p20",
     "p22", "p21", "p21_errors", "p23", "p24", "p25", "p26b",
-    "e204_contrast_stretch", "e216_image_equalize", "e220_image_otsu",
-    "e228_png_decode", "e231_png_deflate_decode",
 ]
 
 

@@ -9,8 +9,10 @@ optimizes (one shuffle, map-side partial aggregation, whole-stage codegen),
 plus the large-scale training-data-pipeline operators (dedup, similarity
 search, text analysis, multimodal columns) the reference lacks.
 
-This module re-exports only the pivot API; every other operator is
-imported from its own module (``pivot_spark.operators.similarity`` ...),
+This module exposes only the pivot API, and loads it on first use (PEP
+562): ``python -m pivot_spark._daemon`` runs this init before it fixes the
+worker's path, so the init must not import pyspark. Every other operator
+is imported from its own module (``pivot_spark.operators.similarity`` ...),
 and no sub-package init imports anything.
 
 Public API:
@@ -18,24 +20,27 @@ Public API:
     pivot             -- DataFrame -> PivotResult transformation
 """
 
-from pivot_spark.config import PivotConfig, PivotConfigError, OnError
-from pivot_spark.operators.pivot import (
-    pivot,
-    PivotResult,
-    PivotError,
-    lineage,
-    output_schema,
-)
+import importlib
 
-__all__ = [
-    "PivotConfig",
-    "PivotConfigError",
-    "OnError",
-    "pivot",
-    "PivotResult",
-    "PivotError",
-    "output_schema",
-    "lineage",
-]
+_HOMES = {
+    "PivotConfig": "pivot_spark.config",
+    "PivotConfigError": "pivot_spark.config",
+    "OnError": "pivot_spark.config",
+    "pivot": "pivot_spark.operators.pivot",
+    "PivotResult": "pivot_spark.operators.pivot",
+    "PivotError": "pivot_spark.operators.pivot",
+    "output_schema": "pivot_spark.operators.pivot",
+    "lineage": "pivot_spark.operators.pivot",
+}
+
+__all__ = list(_HOMES)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _HOMES:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(_HOMES[name]), name)
+    globals()[name] = value
+    return value

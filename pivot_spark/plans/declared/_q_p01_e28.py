@@ -1463,6 +1463,8 @@ def e28_repetition(spark, sf_dir):
 # E29-E30, P26: embedding centroids, rolling features, sketch aggregates
 # --------------------------------------------------------------------------
 
+# ``+ 0.0`` turns DuckDB's -0.0 into +0.0: Spark's ``round(x, 4)`` goes
+# through BigDecimal, so a mean in (-0.00005, 0) prints "0.0000" there.
 _E29_ORACLE = """
 WITH pos AS (
   SELECT label, t.i AS pos, CAST(embedding[t.i + 1] AS DOUBLE) AS x
@@ -1476,7 +1478,7 @@ WITH pos AS (
 )
 SELECT c.label, c.n,
        '[' || array_to_string(
-         (SELECT list(printf('%.4f', round(b.m, 4)) ORDER BY b.pos)
+         (SELECT list(printf('%.4f', round(b.m, 4) + 0.0) ORDER BY b.pos)
           FROM byp b WHERE b.label = c.label), '|') || ']' AS centroid
 FROM cnt c
 """

@@ -44,10 +44,14 @@ def _shuffle(spark, n: int):
     open/commit. For the JVM-side replays (pivot agg, dropDuplicates,
     stream-stream join, window top-k) that overhead dominates at
     replay scale — measured 2-4x faster at 4-8 partitions than 32. The
-    Python-stateful replays (session, debounce) are compute-bound in
-    the Arrow worker and WANT the parallelism, so they keep the session
-    default. On a real cluster this knob is sized by key cardinality,
-    not fixed."""
+    Python-stateful replays (session, debounce) keep the session
+    default. Their worker time is not mostly the fold: a worker profile
+    of s04 split it into a fixed cost per Python task (the zip re-read
+    that ``pivot_spark/_daemon.py`` removes), PySpark's per-key
+    serializer, and the fold's own code at about 4%. Each state
+    partition runs one task per micro-batch and runner, so the partition
+    count is measured per replay, not assumed. On a real cluster this
+    knob is sized by key cardinality, not fixed."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

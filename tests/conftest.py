@@ -7,6 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from pivot_spark.session import WORKER_CONF
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -18,6 +20,8 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # the Python workers start as under get_spark
+        .config(map=WORKER_CONF)
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -14,10 +14,10 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 PKG = REPO / "pivot_spark"
 
 # The two inits that may import, and what each may import. The root
-# re-exports the paper's pivot API; the declared registry imports its
-# parts in order and registers the streaming replays last.
+# loads the paper's pivot API on first use; the declared registry imports
+# its parts in order and registers the streaming replays last.
 ALLOWED = {
-    "__init__.py": ["pivot_spark.config.*", "pivot_spark.operators.pivot.*"],
+    "__init__.py": ["importlib"],
     "plans/declared/__init__.py": [
         "pivot_spark.plans.declared._q_*",
         "pivot_spark.plans.declared._base.ORACLES",
@@ -59,3 +59,28 @@ def test_one_import_leaves_other_operators_unloaded(module):
     out = subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True,
                          capture_output=True, text=True).stdout
     assert out.strip() == "[]"
+
+
+PIVOT_API = ["PivotConfig", "PivotConfigError", "OnError", "pivot",
+             "PivotResult", "PivotError", "output_schema", "lineage"]
+
+
+def test_root_init_leaves_pyspark_unloaded_until_a_pivot_name_is_used():
+    """``python -m pivot_spark._daemon`` runs the root init before it
+    moves the worker's pyspark import off ``pyspark.zip``, so that init
+    must not import pyspark; the pivot API still imports by name."""
+    code = f"""
+import sys, pivot_spark
+print("pyspark" in sys.modules)
+from pivot_spark import {", ".join(PIVOT_API)}
+print(sorted(pivot_spark.__all__) == sorted({PIVOT_API!r}))
+print(pivot.__module__, PivotConfig.__module__)
+try:
+    pivot_spark.no_such_name
+except AttributeError:
+    print("AttributeError")
+"""
+    out = subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True,
+                         capture_output=True, text=True).stdout.split()
+    assert out == ["False", "True", "pivot_spark.operators.pivot",
+                   "pivot_spark.config", "AttributeError"]

@@ -2,10 +2,11 @@
 every public module in the engine (operators / functions / streaming /
 sources / top-level pivot API) from the live docstrings — signature,
 semantics contract, scale notes — plus a cross-reference of the
-DECLARED QUERIES that exercise each module (extracted from the
-`plans/declared` package ASTs, so the oracle IDs a judge or user needs
-to verify any operator are one link away). Rerun after adding an
-operator; docs are committed, the generator keeps them honest.
+DECLARED QUERIES that exercise each module (extracted from the ASTs of
+the `plans/declared` package and `plans/declared_streaming.py`, so the
+oracle IDs a judge or user needs to verify any operator are one link
+away). Rerun after adding an operator; docs are committed, the
+generator keeps them honest.
 
 Usage: python tools/gen_docs.py
 """
@@ -33,15 +34,24 @@ PACKAGES = [
 TOP_MODULES = ["pivot_spark.config", "pivot_spark.session"]
 
 
+def _is_module(name: str) -> bool:
+    path = os.path.join(REPO, *name.split("."))
+    return os.path.isfile(path + ".py") or os.path.isdir(path)
+
+
 def query_xref() -> "dict[str, list[str]]":
     """operator-module name -> sorted list of declared query ids whose
-    body imports it (each query id doubles as the oracle id)."""
+    body imports it (each query id doubles as the oracle id). A module
+    imported from its package (``from pivot_spark.operators import
+    multimodal as M``) is credited, not the package."""
     xref: dict[str, set] = {}
-    ddir = os.path.join(REPO, "pivot_spark", "plans", "declared")
-    for fn in sorted(os.listdir(ddir)):
-        if not fn.endswith(".py"):
-            continue
-        tree = ast.parse(open(os.path.join(ddir, fn)).read())
+    plans = os.path.join(REPO, "pivot_spark", "plans")
+    ddir = os.path.join(plans, "declared")
+    files = [os.path.join(ddir, fn) for fn in sorted(os.listdir(ddir))
+             if fn.endswith(".py")]
+    files.append(os.path.join(plans, "declared_streaming.py"))
+    for path in files:
+        tree = ast.parse(open(path).read())
         for node in ast.walk(tree):
             if not isinstance(node, ast.FunctionDef):
                 continue
@@ -53,10 +63,13 @@ def query_xref() -> "dict[str, list[str]]":
             if qname is None:
                 continue
             for sub in ast.walk(node):
-                if isinstance(sub, ast.ImportFrom) and sub.module:
-                    parts = sub.module.split(".")
-                    if len(parts) >= 2 and parts[0] == "pivot_spark":
-                        xref.setdefault(sub.module, set()).add(qname)
+                if not (isinstance(sub, ast.ImportFrom) and sub.module
+                        and sub.module.startswith("pivot_spark.")):
+                    continue
+                for alias in sub.names:
+                    child = f"{sub.module}.{alias.name}"
+                    mod = child if _is_module(child) else sub.module
+                    xref.setdefault(mod, set()).add(qname)
     return {m: sorted(qs) for m, qs in xref.items()}
 
 
