@@ -24,29 +24,23 @@ from pyspark.sql import DataFrame, SparkSession
 # No standing canary: every slot goes to a query to re-check.
 _CANARIES: "list[str]" = []
 
-# The 50-slot window, in order. Python workers now start from
-# ``pivot_spark/_daemon.py`` and import pyspark from ``$SPARK_HOME/python``,
-# so the queries that start workers lead:
-# (a) the queries whose Python kernels reference the vector-search core in
-#     ``operators/similarity.py`` (and s10);
-# (b) the Python-stateful streaming replays, folded in the workers by
-#     ``streaming/_fold.py``;
-# (c) five codec queries, whose pixels run in Arrow ``mapInPandas`` kernels;
-# (d) the 27 pivot queries, which use the root ``pivot_spark`` init, now
-#     loaded lazily.
+# The 50-slot window, in order. Every running sum or max over a global
+# order now comes from one helper, ``operators/profile.py::_range_scan``,
+# so the queries that reach it lead; the 27 pivot queries follow, then
+# the two vector-search queries whose build runs an extra job (the
+# parquet schema read) and one Python-stateful streaming replay.
 _ROUND_WINDOW = [
-    "e04_knn_cosine", "e09_knn_lsh", "e11_neardup_cosine",
-    "e12_neardup_cosine_lsh", "e15_knn_ivf_fullprobe", "e20_tfidf",
-    "e57_semdedup", "e57b_semdedup_gemm", "e71b_knn_pq_rerank",
-    "e84_hybrid_rrf", "e180_semantic_decontam", "e212_matryoshka_recall",
-    "s10_stream_upsert",
-    "s03_stream_session", "s04_stream_debounce", "s06_stream_topk",
-    "s07_stream_ewma", "s08_stream_quantile",
-    "e204_contrast_stretch", "e216_image_equalize", "e220_image_otsu",
-    "e228_png_decode", "e231_png_deflate_decode",
+    "e81_spearman_matrix", "e90_skew_report", "e100_ks_test",
+    "e116_negative_sampling", "e141_mannwhitney", "e144_sorted_neighborhood",
+    "e146_cdf_transform", "e148_plan_compaction", "e149_pareto_frontier",
+    "e150_conformal", "e151_lift_curve", "e152_roc_auc",
+    "e153_average_precision", "e156_weighted_quantile", "e192_curriculum_order",
+    "e203_quantile_normalize", "e224_group_quantiles", "e225_zipf_fit",
+    "e227_robust_scale", "e230_length_batches",
     "p01", "p02", "p03", "p04", "p05", "p06", "p07", "p08", "p09", "p10",
     "p11", "p12", "p13", "p14", "p15", "p16", "p17", "p18", "p19", "p20",
     "p22", "p21", "p21_errors", "p23", "p24", "p25", "p26b",
+    "e04_knn_cosine", "e180_semantic_decontam", "s04_stream_debounce",
 ]
 
 

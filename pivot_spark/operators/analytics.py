@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pivot_spark.operators._fence import materialize, pin
-from pivot_spark.operators.profile import _range_pids
+from pivot_spark.operators.profile import _range_scan
 
 US_PER_WEEK = 7 * 24 * 3600 * 1_000_000
 
@@ -347,60 +347,27 @@ def ks_test(
     λ = D·√(n_a·n_b/(n_a+n_b))).
 
     Distributed ECDF: per-side value counts are full-outer merged on
-    the value, range-partitioned, and prefix-summed per range with the
-    per-range offsets folded in (the e81 parallel-prefix pattern) — the
-    cumulative distribution never passes through a single global sort;
-    state is distinct-value-sized."""
-    from pyspark.sql import Window
-
+    the value and both running counts come from one
+    ``profile._range_scan`` — the cumulative distribution never passes
+    through a single global sort; state is distinct-value-sized."""
     va = df_a.select(F.col(value_col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     ).groupBy("__v").agg(F.count(F.lit(1)).alias("__ca"))
     vb = df_b.select(F.col(value_col).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     ).groupBy("__v").agg(F.count(F.lit(1)).alias("__cb"))
-    m = (
-        va.join(vb, "__v", "full")
-        .select(
-            "__v",
-            F.coalesce(F.col("__ca"), F.lit(0)).alias("__ca"),
-            F.coalesce(F.col("__cb"), F.lit(0)).alias("__cb"),
-        )
-        .repartitionByRange(num_ranges, F.col("__v"))
-        .withColumn("__pid", F.spark_partition_id())
+    m = va.join(vb, "__v", "full").select(
+        "__v",
+        F.coalesce(F.col("__ca"), F.lit(0)).alias("__ca"),
+        F.coalesce(F.col("__cb"), F.lit(0)).alias("__cb"),
     )
-    # the offsets, the totals and the cumulative pass read m; unfenced,
-    # e100's plan carried 6 source scans. Distinct-value-sized.
-    m = materialize(m, "analytics.ks_test")[0]
-    tot = m.groupBy("__pid").agg(
-        F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
+    scans = [("__cuma", "sum", "__ca", True), ("__cumb", "sum", "__cb", True)]
+    cum = _range_scan(m, ["__v"], scans, "analytics.ks_test", num_ranges)
+    totals = cum.agg(
+        F.sum("__ca").cast("double").alias("__na"),
+        F.sum("__cb").cast("double").alias("__nb"),
     )
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid",
-        F.coalesce(F.sum("__ta").over(woff), F.lit(0)).alias("__oa"),
-        F.coalesce(F.sum("__tb").over(woff), F.lit(0)).alias("__ob"),
-    )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    totals = tot.agg(
-        F.sum("__ta").cast("double").alias("__na"),
-        F.sum("__tb").cast("double").alias("__nb"),
-    )
-    cum = (
-        m.join(F.broadcast(offs), "__pid")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "__na",
-            "__nb",
-            (F.sum("__ca").over(w) + F.col("__oa")).alias("__cuma"),
-            (F.sum("__cb").over(w) + F.col("__ob")).alias("__cumb"),
-        )
-    )
-    stats = cum.agg(
+    stats = cum.crossJoin(F.broadcast(totals)).agg(
         F.max("__na").cast("long").alias("n_a"),
         F.max("__nb").cast("long").alias("n_b"),
         F.max(
@@ -1033,7 +1000,7 @@ def conformal_threshold(
     with the finite-sample correction k = ceil((n+1)(1-alpha)).
 
     The order statistic comes from the residual VALUE-COUNT frame with
-    a parallel-prefix cumulative count (no row-sized sort): q_hat =
+    a running count (``profile._range_scan``, no row-sized sort): q_hat =
     min r with cum_count(r) >= k. With ``test``, empirical coverage on
     the held-out split is appended (the conformal guarantee check).
     Output is ONE row: (n_calib, k, q_hat[, n_test, coverage])."""
@@ -1048,21 +1015,8 @@ def conformal_threshold(
         raise ValueError("empty calibration set")
     k = min(n, int(math.ceil((n + 1) * (1.0 - alpha))))
     vc = base.groupBy("__r").agg(F.count(F.lit(1)).alias("__c"))
-    part = _range_pids(vc, 32, [F.col("__r")], "analytics.conformal_threshold")
-    tot = part.groupBy("__pid").agg(F.sum("__c").alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0)).alias("__off")
-    )
-    wcum = (
-        Window.partitionBy("__pid")
-        .orderBy("__r")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("__c").over(wcum) + F.col("__off")
     qrow = (
-        part.join(F.broadcast(offs), "__pid")
-        .withColumn("__cum", cum)
+        _range_scan(vc, ["__r"], [("__cum", "sum", "__c", True)], "analytics.conformal_threshold")
         .filter(F.col("__cum") >= k)
         .agg(F.min("__r").alias("q_hat"))
     )

@@ -24,10 +24,11 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pivot_spark.operators._fence import pin
+from pivot_spark.operators.profile import row_rank
 
 
 def fuzzy_join(
@@ -198,31 +199,15 @@ def sorted_neighborhood_pairs(
     e73 prefix-block blind spot) still meet. With ``max_dist`` the
     pairs are verified with JVM ``levenshtein`` inside the join.
 
-    Distributed shape — NO global sort of the data: the (key, id)
-    frame is range-partitioned, each partition row_numbers itself
-    independently, and per-partition offsets (num_ranges scalars) are
-    broadcast back — the e81 parallel-prefix ranking applied to rows.
-    Candidates come from a rank-bucket equi-join (each row joins its
-    floor(rank/window) bucket and the next), volume <= 2*window per
-    row. Output: (id_a, id_b, key_a, key_b, rank_gap[, dist]) with
+    Distributed shape — NO global sort of the data: the rank is
+    ``profile.row_rank`` on (key, id). Candidates come from a
+    rank-bucket equi-join (each row joins its floor(rank/window) bucket
+    and the next), volume <= 2*window per row. Output: (id_a, id_b, key_a, key_b, rank_gap[, dist]) with
     rank_a < rank_b."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     base = df.select(F.col(id_col).alias("__id"), F.col(key_col).alias("__k"))
-    part = base.repartitionByRange(num_ranges, F.col("__k"), F.col("__id")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    tot = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0)).alias("__off")
-    )
-    wrn = Window.partitionBy("__pid").orderBy("__k", "__id")
-    ranked = (
-        part.withColumn("__rn", F.row_number().over(wrn))
-        .join(F.broadcast(offs), "__pid")
-        .select("__id", "__k", (F.col("__off") + F.col("__rn")).alias("__r"))
-    )
+    ranked = row_rank(base, ["__k", "__id"], "__r", num_ranges)
     ranked = pin(ranked, "fuzzy.sorted_neighborhood_pairs")  # 2 join sides
     b = F.floor(F.col("__r") / window)
     left = ranked.select(

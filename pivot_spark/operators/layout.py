@@ -23,10 +23,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pivot_spark.operators.profile import _range_pids
+from pivot_spark.operators.profile import _range_scan
 
 
 def interleave_bits(cols: Sequence[Column], bits: int) -> Column:
@@ -150,31 +150,19 @@ def plan_compaction(
     next-fit, within 2x of optimal bin count like any first-fit
     family, and replayable on any engine (no driver-side bin state).
 
-    The running sum uses the e81 range-partitioned parallel prefix
-    (per-partition cumsum + broadcast partition offsets) — file
-    listings are millions of rows at lake scale, so no global-sort
-    single-partition window. Output: (``id_col``, ``size_col``, bin,
-    bin_bytes — total of the file's bin)."""
+    The running size is a ``profile._range_scan`` — file listings are
+    millions of rows at lake scale, so no global-sort single-partition
+    window. Output: (``id_col``, ``size_col``, bin, bin_bytes — total of
+    the file's bin)."""
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be positive, got {target_bytes}")
     base = df.select(
         F.col(id_col).alias("__id"), F.col(size_col).cast("long").alias("__sz")
     ).filter(F.col("__sz").isNotNull())
     order = [F.col("__sz").desc(), F.col("__id")]
-    part = _range_pids(base, 32, order, "layout.plan_compaction")
-    tot = part.groupBy("__pid").agg(F.sum("__sz").alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0)).alias("__off")
-    )
-    wrn = (
-        Window.partitionBy("__pid")
-        .orderBy(F.col("__sz").desc(), F.col("__id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("__sz").over(wrn) + F.col("__off")
-    binned = part.join(F.broadcast(offs), "__pid").withColumn(
-        "bin", F.floor((cum - F.col("__sz")) / target_bytes)
+    cum = _range_scan(base, order, [("__cum", "sum", "__sz", True)], "layout.plan_compaction")
+    binned = cum.withColumn(
+        "bin", F.floor((F.col("__cum") - F.col("__sz")) / target_bytes)
     )
     sizes = binned.groupBy("bin").agg(F.sum("__sz").alias("bin_bytes"))
     return (

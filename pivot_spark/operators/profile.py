@@ -208,49 +208,93 @@ def quantiles(
     return wide.select(F.inline(F.array(*rows)))
 
 
-def _range_pids(df: DataFrame, num_ranges: int, cols: Sequence, label: str) -> DataFrame:
-    """``df`` range-partitioned on ``cols`` with each row's range id in
-    ``__pid``, pinned: RangePartitioner re-SAMPLES per evaluation, so two
-    computations can assign rows to different ranges, corrupting
-    per-range offsets (duplicate/gapped ranks). Its readers must run
-    while it is cached (see ``_fence.fence_scope``)."""
-    part = df.repartitionByRange(num_ranges, *cols)
-    return pin(part.withColumn("__pid", F.spark_partition_id()), label)
+def _range_scan(
+    df: DataFrame,
+    order: Sequence,
+    scans: Sequence[tuple],
+    label: str,
+    num_ranges: int = 32,
+) -> DataFrame:
+    """Running sums or maxima over the global ``order`` of ``df`` without
+    a global sort: the range-partitioned parallel prefix (first written
+    for e81's rank maps). Every ordered operator that needs a running
+    value over the whole frame calls this.
+
+    - **Ranges.** ``df`` is range-partitioned on ``order`` into
+      ``num_ranges`` ranges and each row's range id is kept in ``__pid``.
+      The frame is pinned (``_fence.pin``, labelled ``label``): a
+      RangePartitioner re-samples on each evaluation, so two reads could
+      put a row in different ranges and the offsets below would no
+      longer match the rows (duplicate or gapped ranks). Read the result
+      inside the caller's ``fence_scope``.
+    - **Totals.** One aggregate computes every scan's per-range total.
+      There are at most ``num_ranges`` totals; an empty range has none.
+    - **Offsets.** One window over the totals, ordered by ``__pid`` (the
+      RangePartitioner numbers ranges in ``order``), gives each range
+      the sum or max of all earlier ranges' totals (0 or -inf for the
+      first). The offsets are broadcast-joined back to the rows.
+    - **Scans.** ``scans`` holds ``(out_col, fn, col, inclusive)``:
+      ``fn`` is ``"sum"`` or ``"max"``, ``col`` a column name or Column.
+      One window per range, ordered by ``order``, folds ``col`` over the
+      rows before the row (``inclusive=False``) or up to and including
+      it (``inclusive=True``), and the range's offset is added (sum) or
+      taken into the max. An exclusive scan of the first row reads 0 or
+      -inf.
+
+    Returns ``df``'s columns plus one ``out_col`` per scan. ``order``
+    must be total when the scans must not depend on how ties fall.
+    """
+    order = [F.col(c) if isinstance(c, str) else c for c in order]
+    part = pin(
+        df.repartitionByRange(num_ranges, *order).withColumn(
+            "__pid", F.spark_partition_id()
+        ),
+        label,
+    )
+    folds = {
+        "sum": (F.sum, F.lit(0), lambda a, b: a + b),
+        "max": (F.max, F.lit(float("-inf")), F.greatest),
+    }
+    tot = part.groupBy("__pid").agg(
+        *[folds[fn][0](col).alias(f"__t{i}") for i, (_, fn, col, _) in enumerate(scans)]
+    )
+    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offs = tot.select(
+        "__pid",
+        *[
+            F.coalesce(folds[fn][0](f"__t{i}").over(woff), folds[fn][1]).alias(f"__o{i}")
+            for i, (_, fn, _, _) in enumerate(scans)
+        ],
+    )
+    w = Window.partitionBy("__pid").orderBy(*order)
+    outs = {}
+    for i, (out_col, fn, col, inclusive) in enumerate(scans):
+        agg, zero, add = folds[fn]
+        end = Window.currentRow if inclusive else -1
+        within = agg(col).over(w.rowsBetween(Window.unboundedPreceding, end))
+        if not inclusive:
+            within = F.coalesce(within, zero)
+        outs[out_col] = add(within, F.col(f"__o{i}"))
+    return (
+        part.join(F.broadcast(offs), "__pid")
+        .withColumns(outs)
+        .drop("__pid", *[f"__o{i}" for i in range(len(scans))])
+    )
 
 
 def _avg_rank_map(base: DataFrame, col: str, num_ranges: int = 32) -> DataFrame:
-    """(value, __r_<col>) average-rank lookup table for ``base[col]``,
-    computed DISTRIBUTED: the distinct-value frame is range-partitioned
-    by value, each partition prefix-sums its counts independently
-    (window partitioned by the range-partition id — parallel, never a
-    single global partition), and the per-partition offsets (one scalar
-    per range) are a prefix sum over the tiny per-range totals frame,
-    broadcast-joined back; the range-partitioned frame is pinned
-    (``_range_pids``). Average rank for a tie
-    group of size c starting after cum rows = cum + (c+1)/2 —
-    identical to SQL ``rank() + (count(*) OVER (PARTITION BY v)-1)/2``.
-    State: the map is distinct-value-sized; no row-sized global sort
-    anywhere."""
-    from pyspark.sql import Window
-
+    """(value, __r_<col>) average-rank lookup table for ``base[col]``:
+    the running row count over the distinct-value frame
+    (``_range_scan``). Average rank for a tie group of size c starting
+    after cum rows = cum + (c+1)/2 — identical to SQL
+    ``rank() + (count(*) OVER (PARTITION BY v)-1)/2``. State: the map is
+    distinct-value-sized; no row-sized global sort anywhere."""
     vc = base.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    # the offsets aggregate and the rank projection both read vcp
-    vcp = _range_pids(vc, num_ranges, [F.col(col)], "profile.avg_rank_map")
-    # RangePartitioner orders ranges by partition id: offset(p) = rows
-    # in all earlier ranges. num_ranges scalars — the single-partition
-    # window below is over ≤ num_ranges rows, not data.
-    tot = vcp.groupBy("__pid").agg(F.sum("__cnt").alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0)).alias("__off")
+    cum = _range_scan(
+        vc, [col], [("__cum", "sum", "__cnt", True)], "profile.avg_rank_map", num_ranges
     )
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_before = F.sum("__cnt").over(w) - F.col("__cnt") + F.col("__off")
-    return vcp.join(F.broadcast(offs), "__pid").select(
+    cum_before = F.col("__cum") - F.col("__cnt")
+    return cum.select(
         col, (cum_before + (F.col("__cnt") + 1) / 2.0).alias(f"__r_{col}")
     )
 
@@ -549,10 +593,8 @@ def pareto_frontier_2d(
     both axes): the rows no other row dominates (x' >= x AND y' >= y
     with one strict) — multi-objective selection (quality vs brevity,
     score vs cost). A point survives iff its y strictly exceeds the
-    running max y over all points with larger x — computed WITHOUT a
-    global sort: range-partition by (x DESC, tiebreaks), per-partition
-    running max, partition-prefix maxima broadcast back (the e81
-    parallel-prefix applied to max instead of sum).
+    max y over all points before it in (x DESC, y DESC, id) order — an
+    exclusive running max (``_range_scan``), no global sort.
 
     Dominated ties: among rows with identical (x, y) only the smallest
     ``id_col`` survives (deterministic). Output: the surviving rows
@@ -563,25 +605,10 @@ def pareto_frontier_2d(
         F.col(y_col).cast("double").alias("__y"),
     ).filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
     order = [F.col("__x").desc(), F.col("__y").desc(), F.col("__id")]
-    part = _range_pids(base, num_ranges, order, "profile.pareto_frontier_2d")
-    tot = part.groupBy("__pid").agg(F.max("__y").alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.max("__t").over(woff), F.lit(float("-inf"))).alias("__off")
-    )
-    wrn = (
-        Window.partitionBy("__pid")
-        .orderBy(F.col("__x").desc(), F.col("__y").desc(), F.col("__id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_max = F.greatest(
-        F.coalesce(F.max("__y").over(wrn), F.lit(float("-inf"))), F.col("__off")
-    )
-    out = (
-        part.join(F.broadcast(offs), "__pid")
-        .withColumn("__pm", prev_max)
-        .filter(F.col("__y") > F.col("__pm"))
-    )
+    out = _range_scan(
+        base, order, [("__pm", "max", "__y", False)], "profile.pareto_frontier_2d",
+        num_ranges,
+    ).filter(F.col("__y") > F.col("__pm"))
     return out.select(
         F.col("__id").alias(id_col),
         F.col("__x").alias(x_col),
@@ -596,25 +623,10 @@ def row_rank(
     num_ranges: int = 32,
 ) -> DataFrame:
     """Global 1-based row rank in ``order_cols`` order WITHOUT a global
-    sort: range-partition on the order columns, row_number each
-    partition independently, add broadcast per-partition offsets (the
-    e81 parallel prefix applied to rows — same machinery as
-    ``sorted_neighborhood_pairs``). ``order_cols`` must be a total
-    order (include a unique tiebreaker)."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    # the offsets aggregate and the final rank projection both read part
-    part = _range_pids(df, num_ranges, cols, "profile.row_rank")
-    tot = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0)).alias("__off")
-    )
-    wrn = Window.partitionBy("__pid").orderBy(*cols)
-    return (
-        part.withColumn("__rn", F.row_number().over(wrn))
-        .join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__rn"))
-        .drop("__pid", "__rn", "__off")
+    sort: the running row count (``_range_scan``, an inclusive sum of 1).
+    ``order_cols`` must be a total order (include a unique tiebreaker)."""
+    return _range_scan(
+        df, order_cols, [(out_col, "sum", F.lit(1), True)], "profile.row_rank", num_ranges
     )
 
 
@@ -681,8 +693,8 @@ def weighted_quantile(
     the smallest value whose cumulative weight reaches p of the total.
 
     Value-count collapse first (one value-keyed aggregate summing
-    weights), then the e81 parallel-prefix cumulative weight over the
-    DISTINCT-value frame, then one bounded filter+min per prob — no
+    weights), then the running weight over the DISTINCT-value frame
+    (``_range_scan``), then one bounded filter+min per prob — no
     row-sized sort anywhere. Output: (prob, value, cum_weight,
     total_weight) one row per prob."""
     ps = list(probs)
@@ -695,21 +707,11 @@ def weighted_quantile(
         .groupBy(v.alias("__v"))
         .agg(F.sum(w).alias("__w"))
     )
-    part = _range_pids(vc, num_ranges, [F.col("__v")], "profile.weighted_quantile")
-    tot = part.groupBy("__pid").agg(F.sum("__w").alias("__t"))
-    woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = tot.select(
-        "__pid", F.coalesce(F.sum("__t").over(woff), F.lit(0.0)).alias("__off")
-    )
-    wcum = (
-        Window.partitionBy("__pid")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     # the total and every per-prob probe read the running sums
     cum = pin(
-        part.join(F.broadcast(offs), "__pid").withColumn(
-            "__cum", F.sum("__w").over(wcum) + F.col("__off")
+        _range_scan(
+            vc, ["__v"], [("__cum", "sum", "__w", True)], "profile.weighted_quantile",
+            num_ranges,
         ),
         "profile.weighted_quantile",
     )

@@ -302,46 +302,6 @@ def test_psi_drift(spark):
     assert r2["psi"] > 0.25  # strong drift
 
 
-def test_ks_test(spark):
-    from pivot_spark.operators.analytics import ks_test
-
-    a = spark.createDataFrame([(float(i % 100),) for i in range(1000)], ["v"])
-    same = spark.createDataFrame([(float(i % 100),) for i in range(500)], ["v"])
-    r = ks_test(a, same, "v").collect()[0]
-    assert r["n_a"] == 1000 and r["n_b"] == 500
-    assert r["ks_d"] == pytest.approx(0.0)
-    assert r["p_value"] == pytest.approx(1.0)
-    # shifted distribution: D = 0.5, tiny p
-    shifted = spark.createDataFrame([(float(i % 100 + 50),) for i in range(1000)], ["v"])
-    r2 = ks_test(a, shifted, "v").collect()[0]
-    assert r2["ks_d"] == pytest.approx(0.5)
-    assert r2["p_value"] < 0.001
-
-
-def test_ks_matches_scipy_formula(spark):
-    from pivot_spark.operators.analytics import ks_test
-
-    a_vals = [1.0, 2.0, 2.0, 3.0, 7.0]
-    b_vals = [2.0, 3.0, 4.0, 9.0]
-    a = spark.createDataFrame([(v,) for v in a_vals], ["v"])
-    b = spark.createDataFrame([(v,) for v in b_vals], ["v"])
-    r = ks_test(a, b, "v", num_ranges=2).collect()[0]
-
-    # python ECDF replay
-    import bisect
-
-    sa, sb = sorted(a_vals), sorted(b_vals)
-    pts = sorted(set(sa + sb))
-    d = max(
-        abs(
-            bisect.bisect_right(sa, p) / len(sa)
-            - bisect.bisect_right(sb, p) / len(sb)
-        )
-        for p in pts
-    )
-    assert r["ks_d"] == pytest.approx(round(d, 4))
-
-
 def test_user_journeys(spark):
     from pivot_spark.operators.analytics import user_journeys
 

@@ -1,9 +1,9 @@
-"""Blocked fuzzy join (operators/fuzzy.py)."""
+"""Blocked fuzzy join and sorted-neighborhood blocking (operators/fuzzy.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pivot_spark.operators.fuzzy import best_fuzzy_match, fuzzy_join
+from pivot_spark.operators.fuzzy import best_fuzzy_match, fuzzy_join, sorted_neighborhood_pairs
 
 
 @pytest.fixture(scope="module")
@@ -185,3 +185,25 @@ def test_no_python_udf_in_plan(names):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_sorted_neighborhood_matches_window_semantics(spark):
+    rows = [(i, f"name{i:03d}") for i in range(20)]
+    rows.append((100, "name005X"))  # sorts right after name005
+    df = spark.createDataFrame(rows, "id long, k string")
+    out = sorted_neighborhood_pairs(df, "id", "k", window=2)
+    got = {(r.id_a, r.id_b): r.rank_gap for r in out.collect()}
+    # expected: every pair within 2 positions of the (k, id) order
+    ordered = sorted(rows, key=lambda r: (r[1], r[0]))
+    want = {}
+    for i in range(len(ordered)):
+        for j in range(i + 1, min(i + 3, len(ordered))):
+            want[(ordered[i][0], ordered[j][0])] = j - i
+    assert got == want
+    # with distance verify only the near-identical pair survives
+    v = sorted_neighborhood_pairs(df, "id", "k", window=2, max_dist=1).collect()
+    assert {(r.id_a, r.id_b) for r in v} >= {(5, 100)}
+    for r in v:
+        assert r.dist <= 1
+    with pytest.raises(ValueError):
+        sorted_neighborhood_pairs(df, "id", "k", window=0)

@@ -1,11 +1,16 @@
-"""Tests for Z-order layout, table diff, validation rules, inverted
-index."""
+"""Tests for Z-order layout, compaction planning, table diff, validation
+rules, inverted index."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from pivot_spark.operators.diff import table_diff
-from pivot_spark.operators.layout import cluster_by_zorder, interleave_bits, zorder_key
+from pivot_spark.operators.layout import (
+    cluster_by_zorder,
+    interleave_bits,
+    plan_compaction,
+    zorder_key,
+)
 from pivot_spark.operators.tfidf import inverted_index
 from pivot_spark.operators.validate import (
     accepted_values,
@@ -141,3 +146,19 @@ def test_inverted_index_truncation(spark):
     df = spark.createDataFrame([(i, "t") for i in range(10)], ["doc_id", "text"])
     r = inverted_index(df, max_postings=4).collect()[0]
     assert r["df"] == 10 and r["postings"] == [0, 1, 2, 3] and r["truncated"]
+
+
+def test_plan_compaction_bins(spark):
+    rows = [("a", 900), ("b", 800), ("c", 300), ("d", 200), ("e", 100)]
+    df = spark.createDataFrame(rows, "path string, size long")
+    out = {r.path: r for r in plan_compaction(df, "path", "size", 1000).collect()}
+    # order: a(900) b(800) c(300) d(200) e(100); cum-before: 0,900,1700,2000,2200
+    assert out["a"].bin == 0
+    assert out["b"].bin == 0
+    assert out["c"].bin == 1
+    assert out["d"].bin == 2
+    assert out["e"].bin == 2
+    assert out["d"].bin_bytes == 300
+    # every bin except possibly the last reaches the target once started
+    with pytest.raises(ValueError):
+        plan_compaction(df, "path", "size", 0)

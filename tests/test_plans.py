@@ -244,7 +244,7 @@ def test_spearman_no_global_sort(spark):
     n0 = sql.executionsCount()
     out = spearman_matrix(df, ["x", "y"], num_ranges=4)
     plan = plan_of(out)
-    # the range-partitioned frame is pinned (profile._range_pids), so its
+    # the range-partitioned frame is pinned (profile._range_scan), so its
     # exchange ran at build time, in an execution of its own
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     built = sql.executionsList(n0, 1000)

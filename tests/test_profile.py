@@ -1,9 +1,13 @@
-"""Column profiling, histogram and correlation-matrix unit tests
-(operators/profile.py)."""
+"""Column profiling, histogram, correlation-matrix, ranking and
+range-scan unit tests (operators/profile.py)."""
+
+import ast
+import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 
-from pivot_spark.operators.profile import corr_matrix, histogram, profile
+from pivot_spark.operators.profile import corr_matrix, histogram, pareto_frontier_2d, profile
 
 
 @pytest.fixture()
@@ -115,3 +119,194 @@ def test_corr_matrix_single_row_plan(num_df):
     # one scalar aggregate: single-partition exchange, no hashpartitioning
     assert "Exchange SinglePartition" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_pareto_frontier_small(spark):
+    pts = [
+        (1, 1.0, 9.0),   # frontier (max y)
+        (2, 5.0, 5.0),   # frontier
+        (3, 9.0, 1.0),   # frontier (max x)
+        (4, 4.0, 4.0),   # dominated by 2
+        (5, 5.0, 5.0),   # duplicate of 2 -> only smaller id survives
+        (6, 9.0, 1.0),   # duplicate of 3
+        (7, 0.5, 9.0),   # dominated by 1 (same y, smaller x)
+    ]
+    df = spark.createDataFrame(pts, "id long, x double, y double")
+    out = sorted(r.id for r in pareto_frontier_2d(df, "x", "y", "id").collect())
+    assert out == [1, 2, 3]
+
+
+def test_row_rank_is_permutation(spark):
+    from pivot_spark.operators.profile import row_rank
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(i, float(i % 17)) for i in range(2000)], "id long, v double")
+    ranked = row_rank(df, [F.col("v").desc(), F.col("id")], out_col="r")
+    rs = sorted(r.r for r in ranked.collect())
+    assert rs == list(range(1, 2001))
+
+
+def test_vocab_richness_hand_computed(spark):
+    from pivot_spark.operators.profile import vocab_richness
+
+    # corpus: a a a b b c d -> N=7, D=4, f1=2 (c,d), f2=1 (b)
+    df = spark.createDataFrame([("a a a b b",), ("c d",)], "text string")
+    r = vocab_richness(df, "text").first()
+    assert (r.n_tokens, r.n_types, r.f1, r.f2) == (7, 4, 2, 1)
+    assert r.chao1 == pytest.approx(4 + 4 / 2)
+    assert r.p_unseen == pytest.approx(2 / 7)
+    assert r.ttr == pytest.approx(4 / 7)
+    import math
+
+    assert r.herdan_c == pytest.approx(math.log(4) / math.log(7))
+    # f2 = 0 -> bias-corrected form
+    df2 = spark.createDataFrame([("x y z",)], "text string")
+    r2 = vocab_richness(df2, "text").first()
+    assert r2.chao1 == pytest.approx(3 + 3 * 2 / 2)
+
+
+def test_weighted_quantile_hand_computed(spark):
+    from pivot_spark.operators.profile import weighted_quantile
+
+    # values 1..4 with weights 1,1,1,7 -> half the mass sits on value 4
+    df = spark.createDataFrame(
+        [(1.0, 1.0), (2.0, 1.0), (3.0, 1.0), (4.0, 7.0)], "v double, w double"
+    )
+    out = {r.prob: r for r in weighted_quantile(df, "v", "w", [0.3, 0.5, 0.99]).collect()}
+    assert out[0.3].value == 3.0   # cum 3 >= 0.3*10
+    assert out[0.5].value == 4.0
+    assert out[0.99].value == 4.0
+    assert out[0.5].total_weight == pytest.approx(10.0)
+    import pytest as _pt
+
+    with _pt.raises(ValueError):
+        weighted_quantile(df, "v", "w", [0.0])
+
+
+# --- range scan (profile._range_scan) ---------------------------------------
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "pivot_spark"
+
+
+def _sites(match) -> "list[tuple[str, str]]":
+    """(module, enclosing function) of every ast node in the package
+    that ``match`` accepts."""
+    out = []
+
+    def visit(node, path, fn):
+        for child in ast.iter_child_nodes(node):
+            if match(child):
+                out.append((path, fn))
+            inner = child.name if isinstance(child, ast.FunctionDef) else fn
+            visit(child, path, inner)
+
+    for path in sorted(PKG.rglob("*.py")):
+        visit(ast.parse(path.read_text()), path.relative_to(PKG).as_posix(), None)
+    return out
+
+
+def _partition_id(node) -> bool:
+    return (
+        (isinstance(node, ast.Attribute) and node.attr == "spark_partition_id")
+        or (isinstance(node, ast.Name) and node.id == "spark_partition_id")
+        or (isinstance(node, ast.alias) and node.name == "spark_partition_id")
+        or (isinstance(node, ast.Constant) and "spark_partition_id" in str(node.value))
+    )
+
+
+def _pid_window(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "orderBy"
+        and any(isinstance(a, ast.Constant) and a.value == "__pid" for a in node.args)
+    )
+
+
+def test_range_scan_is_the_only_partition_id_reader():
+    """The range-partitioned prefix exists once: ``spark_partition_id``
+    and the ``__pid`` offset window appear only inside ``_range_scan``,
+    which pins the range-partitioned frame."""
+    helper = ("operators/profile.py", "_range_scan")
+    assert _sites(_partition_id) == [helper]
+    assert _sites(_pid_window) == [helper]
+
+
+# 14 rows over 4 distinct values: ties everywhere, and with 32 ranges
+# most ranges are empty. Weights and sizes are whole numbers, so running
+# sums are exact whatever the range boundaries.
+SCAN_ROWS = [
+    (i, float(i * 7 % 4), float(1 + i % 3), float(i * 5 % 3), f"k{i * 3 % 4}")
+    for i in range(14)
+]
+
+
+@pytest.fixture()
+def scan_df(spark):
+    return spark.createDataFrame(SCAN_ROWS, "id long, v double, w double, y double, k string")
+
+
+def _at(spark, partitions, build):
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(partitions))
+    try:
+        return sorted(tuple(r) for r in build().collect())
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_range_scan_operators_invariant_to_ranges_and_partitions(spark, scan_df):
+    """Each range-scan operator gives the same rows at 1 and 32 ranges
+    and at 1 and 4 shuffle partitions."""
+    from pivot_spark.operators.analytics import conformal_threshold, ks_test
+    from pivot_spark.operators.fuzzy import sorted_neighborhood_pairs
+    from pivot_spark.operators.layout import plan_compaction
+    from pivot_spark.operators.profile import row_rank, spearman_matrix, weighted_quantile
+
+    df = scan_df
+    even, odd = df.filter(F.col("id") % 2 == 0), df.filter(F.col("id") % 2 == 1)
+    builds = {
+        "row_rank": lambda n: row_rank(df, ["v", "id"], "r", n),
+        "pareto_frontier_2d": lambda n: pareto_frontier_2d(df, "v", "y", "id", n),
+        "weighted_quantile": lambda n: weighted_quantile(df, "v", "w", (0.25, 0.5, 1.0), n),
+        "ks_test": lambda n: ks_test(even, odd, "v", n),
+        "conformal_threshold": lambda n: conformal_threshold(df, "v", 0.2),
+        "plan_compaction": lambda n: plan_compaction(df, "id", "w", 4),
+        "sorted_neighborhood_pairs": lambda n: sorted_neighborhood_pairs(
+            df, "id", "k", 3, num_ranges=n
+        ),
+        "spearman_matrix": lambda n: spearman_matrix(df, ["v", "y"], n),
+    }
+    for name, build in builds.items():
+        runs = {
+            (n, p): _at(spark, p, lambda: build(n)) for n in (1, 32) for p in (1, 4)
+        }
+        first = runs[(1, 1)]
+        assert first, name
+        assert all(rows == first for rows in runs.values()), (name, runs)
+
+
+def test_range_scan_matches_single_partition_window(spark, scan_df):
+    """``row_rank``, an inclusive sum and an exclusive max equal the
+    single-partition ``Window.orderBy`` they replace."""
+    from pyspark.sql import Window
+
+    from pivot_spark.operators.profile import _range_scan, row_rank
+
+    df = scan_df
+    w = Window.orderBy("v", "id")
+    ref = df.select(
+        "id",
+        F.row_number().over(w).alias("r"),
+        F.sum("w").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).alias("c"),
+        F.coalesce(
+            F.max("y").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(float("-inf")),
+        ).alias("m"),
+    )
+    scans = [("c", "sum", "w", True), ("m", "max", "y", False)]
+    got = row_rank(
+        _range_scan(df, ["v", "id"], scans, "test.range_scan"), ["v", "id"], "r"
+    ).select("id", "r", "c", "m")
+    assert _at(spark, 4, lambda: got) == _at(spark, 4, lambda: ref)

@@ -1,9 +1,8 @@
-"""rake_weights + sorted_neighborhood_pairs + cdf_transform."""
+"""rake_weights + cdf_transform."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pivot_spark.operators.fuzzy import sorted_neighborhood_pairs
 from pivot_spark.operators.profile import cdf_transform
 from pivot_spark.operators.sample import rake_weights
 
@@ -36,28 +35,6 @@ def test_rake_hits_both_margins(spark):
         rake_weights(df, "lang", "src", {"en": 0.9}, {"web": 1.0})
     with pytest.raises(ValueError):
         rake_weights(df, "lang", "src", {"en": 1.0}, {"web": 1.0}, iterations=0)
-
-
-def test_sorted_neighborhood_matches_window_semantics(spark):
-    rows = [(i, f"name{i:03d}") for i in range(20)]
-    rows.append((100, "name005X"))  # sorts right after name005
-    df = spark.createDataFrame(rows, "id long, k string")
-    out = sorted_neighborhood_pairs(df, "id", "k", window=2)
-    got = {(r.id_a, r.id_b): r.rank_gap for r in out.collect()}
-    # expected: every pair within 2 positions of the (k, id) order
-    ordered = sorted(rows, key=lambda r: (r[1], r[0]))
-    want = {}
-    for i in range(len(ordered)):
-        for j in range(i + 1, min(i + 3, len(ordered))):
-            want[(ordered[i][0], ordered[j][0])] = j - i
-    assert got == want
-    # with distance verify only the near-identical pair survives
-    v = sorted_neighborhood_pairs(df, "id", "k", window=2, max_dist=1).collect()
-    assert {(r.id_a, r.id_b) for r in v} >= {(5, 100)}
-    for r in v:
-        assert r.dist <= 1
-    with pytest.raises(ValueError):
-        sorted_neighborhood_pairs(df, "id", "k", window=0)
 
 
 def test_cdf_transform_uniform_and_ties(spark):
